@@ -280,13 +280,6 @@ def main() -> None:
         "manifest walls + images/s — the headline design-regime number",
     )
     ap.add_argument(
-        "--e2e-metrics",
-        action="store_true",
-        help="run --e2e WITH the expensive manifest metrics (bucket "
-        "histogram + substring degree — a second exchange of the largest "
-        "intermediate); default is raw throughput (stage_metrics=False)",
-    )
-    ap.add_argument(
         "--ann",
         type=int,
         default=0,
@@ -575,9 +568,7 @@ def main() -> None:
         shutil.rmtree(out, ignore_errors=True)  # fresh catalog: no resume skips
         cfg_e = index_config_for(args.e2e)
         t0 = time.time()
-        res = run_pipeline(
-            spark, str(e2e_path), str(out), cfg=cfg_e, stage_metrics=args.e2e_metrics
-        )
+        res = run_pipeline(spark, str(e2e_path), str(out), cfg=cfg_e)
         n_labels = res.clusters.count()
         wall = time.time() - t0
         stage_walls = {}
@@ -587,7 +578,6 @@ def main() -> None:
         results["e2e"] = {
             "rows": args.e2e,
             "n_blocks": cfg_e.n_blocks,
-            "stage_metrics": args.e2e_metrics,
             "wall_s": round(wall, 1),
             "images_per_sec": round(args.e2e / wall, 1),
             "n_labels": n_labels,
@@ -719,7 +709,6 @@ def main() -> None:
                         str(ck),
                         cfg=cfg_b,
                         enable_substring=False,  # orthogonal to the funnel claim
-                        stage_metrics=False,
                         byte_exact=bx,
                     )
                     n_labels = res.clusters.count()

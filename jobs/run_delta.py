@@ -119,20 +119,14 @@ def main(argv: list[str] | None = None) -> int:
     if args.alignment_filter:
         # the increment's newly-KEPT rows only: per-row pure verdict, so
         # the base's existing alignment rows remain valid verbatim (the
-        # add-only argument in the flag's help text). Increment row sets
-        # are batch-sized, so the kept-id semi-join broadcasts.
-        from pyspark.sql import functions as F
-
+        # add-only argument in the flag's help text). keep_list spans
+        # base ∪ increment, so its kept-id set is not hinted to broadcast:
+        # the planner broadcasts it only under autoBroadcastJoinThreshold.
         from simhash_spark.operators.multimodal import caption_pixel_alignment
 
         keep_r = spark.read.parquet(str(out / "keep_list"))
-        inc_kept = (
-            spark.read.parquet(args.increment)
-            .join(
-                F.broadcast(keep_r.where("is_kept = 1").select("image_id")),
-                "image_id",
-                "left_semi",
-            )
+        inc_kept = spark.read.parquet(args.increment).join(
+            keep_r.where("is_kept = 1").select("image_id"), "image_id", "left_semi"
         )
         align = caption_pixel_alignment(inc_kept, tau_bp=args.alignment_tau)
         align.write.mode("overwrite").parquet(str(out / "alignment_delta"))

@@ -86,16 +86,6 @@ def main(argv: list[str] | None = None) -> int:
         "(image_id,w,h) re-scan + one cluster_id window exchange)",
     )
     ap.add_argument(
-        "--no-stage-metrics",
-        action="store_true",
-        help="skip the expensive manifest metrics (bucket histogram re-runs "
-        "the full packed key exchange; substring degree metrics re-generate "
-        "the candidate pairs — structurally a second exchange of the run's "
-        "largest intermediate). Use for throughput-critical runs and read "
-        "the same surfaces from the dedicated monitoring queries on a "
-        "sampled schedule instead",
-    )
-    ap.add_argument(
         "--byte-exact",
         action="store_true",
         help="run byte-exact dedup (md5 over the binary bytes column, keeper "
@@ -194,7 +184,6 @@ def main(argv: list[str] | None = None) -> int:
         include_phash=not args.no_phash,
         cc_ckpt_every=args.cc_ckpt_every,
         quality_filter=args.quality_filter,
-        stage_metrics=not args.no_stage_metrics,
         byte_exact=args.byte_exact,
     )
     from simhash_spark.operators.dedup import near_dup_keep_best, near_dup_keep_list

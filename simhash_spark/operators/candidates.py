@@ -19,6 +19,8 @@ downstream, in verify (dropDuplicates on the canonical pair).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -77,6 +79,19 @@ def _tagged(code: int, idx, key_col: F.Column) -> F.Column:
 def src_code() -> F.Column:
     """Recover the 2-bit source code from a packed key's low bits."""
     return F.col("k").bitwiseAND(F.lit(3))
+
+
+# packed-key source codes (``_tagged``) and the provenance name each decodes to
+SOURCES = {1: "minhash_lsh", 2: "simhash_rot", 3: "phash_rot"}
+
+
+def _decode(code: F.Column) -> F.Column:
+    return (
+        F.when(code == 1, SOURCES[1])
+        .when(code == 2, SOURCES[2])
+        .when(code == 3, SOURCES[3])
+        .otherwise("other")
+    )
 
 
 # above this combination count the key expressions move into a vectorized
@@ -187,7 +202,11 @@ def bucket_pairs(keyed: DataFrame, cfg: PipelineConfig) -> DataFrame:
     return bucket_pairs_packed(packed, cfg)
 
 
-def bucket_pairs_packed(packed: DataFrame, cfg: PipelineConfig) -> DataFrame:
+def bucket_pairs_packed(
+    packed: DataFrame,
+    cfg: PipelineConfig,
+    observe: Callable[..., DataFrame] | None = None,
+) -> DataFrame:
     """(k, id) packed bucket memberships -> candidate pairs (a, b, src).
 
     ONE exchange of the key table, total. Bucket size is a window count over
@@ -222,10 +241,19 @@ def bucket_pairs_packed(packed: DataFrame, cfg: PipelineConfig) -> DataFrame:
     agg sees them AFTER the _bsize filter, so per-group memory stays bounded
     by the cap at any corpus size and the sparse-index regime (~85%
     singleton buckets at 40-bit keys) never collects one-element arrays.
+
+    ``observe`` (``StageObservations.observe``) receives the per-source
+    bucket histogram (``bucket_stat_exprs``) off the same window: a
+    min(id) over it flags one head row per bucket (ids are unique within a
+    bucket), so the numbers cost no extra exchange or pass.
     """
-    with_size = packed.withColumn(
-        "_bsize", F.count(F.lit(1)).over(Window.partitionBy("k"))
-    )
+    w = Window.partitionBy("k")
+    with_size = packed.withColumn("_bsize", F.count(F.lit(1)).over(w))
+    if observe is not None:
+        with_size = observe(
+            with_size.withColumn("_head", F.col("id") == F.min("id").over(w)),
+            *bucket_stat_exprs(),
+        )
     cold = with_size.where(
         (F.col("_bsize") >= 2) & (F.col("_bsize") <= cfg.bucket_cap)
     )
@@ -272,31 +300,63 @@ def bucket_pairs_packed(packed: DataFrame, cfg: PipelineConfig) -> DataFrame:
         .select(F.col("_prev").alias("a"), F.col("id").alias("b"), "c")
     )
     pairs_big = pairs_chain.unionByName(pairs_heads)
-    decode = (
-        F.when(F.col("c") == 1, "minhash_lsh")
-        .when(F.col("c") == 2, "simhash_rot")
-        .when(F.col("c") == 3, "phash_rot")
-        .otherwise("other")
-    )
     return (
         pairs_small.unionByName(pairs_big)
-        .withColumn("src", decode)
+        .withColumn("src", _decode(F.col("c")))
         .select("a", "b", "src")
     )
 
 
+def bucket_stat_exprs() -> list[F.Column]:
+    """Aggregates over bucket_pairs_packed's window rows (k, id, _bsize,
+    _head) that ``bucket_stats_from_observed`` turns into the per-source
+    rows of ``bucket_stats_packed``."""
+    exprs = []
+    for c in SOURCES:
+        row = src_code() == c
+        head = row & F.col("_head")
+        exprs += [
+            F.count(F.when(row, 1)).alias(f"rows_{c}"),
+            F.count(F.when(head, 1)).alias(f"n_buckets_{c}"),
+            F.max(F.when(row, F.col("_bsize"))).alias(f"max_bucket_{c}"),
+            F.count(F.when(head & (F.col("_bsize") > 1), 1)).alias(f"n_colliding_{c}"),
+        ]
+    return exprs
+
+
+def bucket_stats_from_observed(m: dict) -> dict[str, dict]:
+    """``bucket_stat_exprs`` values -> {src: bucket_stats_packed row as a
+    dict}; sources without keys have no row, as in the groupBy."""
+    stats = {}
+    for c, name in SOURCES.items():
+        n = m.get(f"n_buckets_{c}") or 0
+        if n:
+            stats[name] = {
+                "src": name,
+                "n_buckets": n,
+                "max_bucket": m[f"max_bucket_{c}"],
+                "avg_bucket": m[f"rows_{c}"] / n,
+                "n_colliding": m[f"n_colliding_{c}"],
+            }
+    return stats
+
+
 def generate_candidates(
-    fp: DataFrame, cfg: PipelineConfig, id_col: str = "image_id", include_phash: bool = True
+    fp: DataFrame,
+    cfg: PipelineConfig,
+    id_col: str = "image_id",
+    include_phash: bool = True,
+    observe: Callable[..., DataFrame] | None = None,
 ) -> DataFrame:
     """All candidate sources unioned, canonicalized, deduplicated:
     MinHash-LSH ∪ SimHash-rotation ∪ pHash-rotation (SURVEY.md O9-O13).
 
     Keys for all three indexes come from ONE scan of the fingerprint table
     (explode_all_keys). The per-pair src survives as a comma-joined
-    provenance set.
+    provenance set. ``observe`` passes through to bucket_pairs_packed.
     """
     packed = explode_all_keys(fp, cfg, id_col, include_phash=include_phash)
-    pairs = bucket_pairs_packed(packed, cfg)
+    pairs = bucket_pairs_packed(packed, cfg, observe)
     return pairs.groupBy("a", "b").agg(
         F.array_join(F.array_sort(F.collect_set("src")), ",").alias("src")
     )
@@ -307,16 +367,10 @@ def bucket_stats_packed(packed: DataFrame) -> DataFrame:
     for every index config including the wide-UDF path (the per-branch
     explode would rebuild the key expressions per source). Source recovered
     from each key's low 2 bits."""
-    decode = (
-        F.when(src_code() == 1, "minhash_lsh")
-        .when(src_code() == 2, "simhash_rot")
-        .when(src_code() == 3, "phash_rot")
-        .otherwise("other")
-    )
     return (
         packed.groupBy("k")
         .agg(F.count(F.lit(1)).alias("bucket_size"))
-        .select(decode.alias("src"), "bucket_size")
+        .select(_decode(src_code()).alias("src"), "bucket_size")
         .groupBy("src")
         .agg(
             F.count(F.lit(1)).alias("n_buckets"),
@@ -344,16 +398,13 @@ def bucket_size_histogram(packed: DataFrame) -> DataFrame:
     key collision would merge two buckets' counts, the same accepted odds
     as candidate generation itself.
     """
-    decode = (
-        F.when(src_code() == 1, "minhash_lsh")
-        .when(src_code() == 2, "simhash_rot")
-        .when(src_code() == 3, "phash_rot")
-        .otherwise("other")
-    )
     return (
         packed.groupBy("k")
         .agg(F.count(F.lit(1)).alias("bucket_size"))
-        .select(decode.alias("src"), F.col("bucket_size").cast("int").alias("bucket_size"))
+        .select(
+            _decode(src_code()).alias("src"),
+            F.col("bucket_size").cast("int").alias("bucket_size"),
+        )
         .groupBy("src", "bucket_size")
         .agg(F.count(F.lit(1)).alias("n_buckets"))
     )

@@ -25,6 +25,8 @@ volume is observable in stage metrics (no silent truncation).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -258,7 +260,11 @@ def pairs_from_anchor_table(anchors: DataFrame, cfg: PipelineConfig) -> DataFram
 
 
 def _normed_pairs(
-    cand: DataFrame, df: DataFrame, id_col: str, caption_col: str
+    cand: DataFrame,
+    df: DataFrame,
+    id_col: str,
+    caption_col: str,
+    observe: Callable[..., DataFrame] | None = None,
 ) -> DataFrame:
     """Candidate (a, b) pairs with both sides' NORMALIZED text attached
     (_na/_nb) — the shared join plumbing of verify_substring_pairs and
@@ -266,21 +272,41 @@ def _normed_pairs(
     pairs: at web scale the pair set touches a small fraction of the
     corpus, and without this pre-filter the NFKC UDF would run over every
     doc TWICE (once per join side). The semi-join is on the id key both
-    sides already shuffle on."""
-    ids_in_pairs = (
+    sides already shuffle on.
+
+    ``observe`` (``StageObservations.observe``) collects the inputs of
+    ``substring_degree_summary`` from three nodes the join already has,
+    leaving the semi-join as it is (an inner join carrying the degree let
+    AQE coalesce the verify to one task): the degree aggregate that
+    replaces a plain distinct, the semi-joined docs, and the pair rows with
+    each side's raw caption length. Unobserved, column pruning drops the
+    degree and the lengths, and the plan is that of a plain distinct."""
+    observe = observe or (lambda d, *exprs: d)
+    deg = observe(
         cand.select(F.col("a").alias("id"))
         .unionByName(cand.select(F.col("b").alias("id")))
-        .distinct()
+        .groupBy("id")
+        .agg(F.count(F.lit(1)).alias("degree")),
+        F.sum("degree").alias("sum_degree"),
+        F.max("degree").alias("max_degree"),
+        F.percentile_approx("degree", 0.99).alias("p99_degree"),
     )
-    norm_df = (
-        df.select(F.col(id_col).alias("id"), F.col(caption_col).alias("_cap"))
-        .join(ids_in_pairs, "id", "left_semi")
-        .select("id", _normalize_col("_cap").alias("norm"))
+    docs = observe(
+        df.select(F.col(id_col).alias("id"), F.col(caption_col).alias("_cap")).join(
+            deg.select("id"), "id", "left_semi"
+        ),
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum(F.length("_cap")).alias("ideal"),
     )
-    return (
-        cand.join(norm_df.select(F.col("id").alias("a"), F.col("norm").alias("_na")), "a")
-        .join(norm_df.select(F.col("id").alias("b"), F.col("norm").alias("_nb")), "b")
+    norm_df = docs.select(
+        "id", _normalize_col("_cap").alias("norm"), F.length("_cap").alias("len")
     )
+    joined = cand.join(
+        norm_df.withColumnsRenamed({"id": "a", "norm": "_na", "len": "_la"}), "a"
+    ).join(norm_df.withColumnsRenamed({"id": "b", "norm": "_nb", "len": "_lb"}), "b")
+    # a doc's text ships once per pair slot: sum over docs of degree*len
+    shipped = F.sum(F.coalesce("_la", F.lit(0)) + F.coalesce("_lb", F.lit(0)))
+    return observe(joined, shipped.alias("shipped")).drop("_la", "_lb")
 
 
 def substring_degree_metrics(
@@ -290,23 +316,9 @@ def substring_degree_metrics(
     caption_col: str = "caption",
 ) -> dict:
     """Monitorable form of the substring stage's accepted 2.73x text
-    amplification (BENCH/SUBSTRING_AMPLIFICATION.md): the pair join ships
-    each doc's text once PER PAIR it appears in, which is fine while pair
-    degree stays small and constant — the documented revisit trigger is
-    "degree grows with corpus size". This emits that trigger as stage
-    manifest metrics instead of a doc sentence (r4 verdict #3):
-
-      n_pairs / n_docs_in_pairs  — candidate pair set size
-      mean_degree_x100, p99_degree, max_degree — pair degree distribution
-      shipped_text_chars — sum over pair slots of the doc's caption length
-                           (what the pair join materializes, raw-char proxy
-                           for the normalized text actually shipped)
-      ideal_text_chars   — each pair-participating doc's length ONCE (the
-                           ship-once lower bound)
-      amplification_x100 — shipped/ideal, the number to watch across runs
-
-    Exact integer arithmetic except percentile_approx (deterministic for
-    the small degree cardinalities this summarizes). One degree agg + one
+    amplification (BENCH/SUBSTRING_AMPLIFICATION.md) as a standalone pass
+    over the candidate pairs; ``verify_substring_pairs(observe=...)``
+    collects the same numbers while the verify runs. One degree agg + one
     slim length join + a single-row collect — bounded at any corpus size.
     """
     deg = (
@@ -330,7 +342,30 @@ def substring_degree_metrics(
         )
         .collect()[0]
     )
-    n_docs = row["n_docs"] or 0
+    return substring_degree_summary(row.asDict())
+
+
+def substring_degree_summary(m: dict) -> dict:
+    """The substring stage's pair-degree manifest keys. The pair join ships
+    each doc's text once PER PAIR it appears in, which is fine while pair
+    degree stays small and constant — the documented revisit trigger is
+    "degree grows with corpus size". These keys emit that trigger as stage
+    manifest metrics instead of a doc sentence (r4 verdict #3):
+
+      n_pairs / n_docs_in_pairs  — candidate pair set size
+      mean_degree_x100, p99_degree, max_degree — pair degree distribution
+      shipped_text_chars — sum over pair slots of the doc's caption length
+                           (what the pair join materializes, raw-char proxy
+                           for the normalized text actually shipped)
+      ideal_text_chars   — each pair-participating doc's length ONCE (the
+                           ship-once lower bound)
+      amplification_x100 — shipped/ideal, the number to watch across runs
+
+    Exact integer arithmetic except percentile_approx (deterministic for
+    the small degree cardinalities this summarizes). ``m`` holds n_docs,
+    sum_degree, max_degree, p99_degree, shipped and ideal; missing keys
+    (an observed node AQE pruned because no pair exists) read as none."""
+    n_docs = m.get("n_docs") or 0
     if n_docs == 0:
         return {
             "n_pairs": 0,
@@ -343,15 +378,15 @@ def substring_degree_metrics(
             "amplification_x100": 0,
         }
     return {
-        "n_pairs": int(row["sum_degree"]) // 2,
+        "n_pairs": int(m["sum_degree"]) // 2,
         "n_docs_in_pairs": int(n_docs),
-        "mean_degree_x100": 100 * int(row["sum_degree"]) // int(n_docs),
-        "p99_degree": int(row["p99_degree"]),
-        "max_degree": int(row["max_degree"]),
-        "shipped_text_chars": int(row["shipped"]),
-        "ideal_text_chars": int(row["ideal"]),
+        "mean_degree_x100": 100 * int(m["sum_degree"]) // int(n_docs),
+        "p99_degree": int(m["p99_degree"]),
+        "max_degree": int(m["max_degree"]),
+        "shipped_text_chars": int(m["shipped"]),
+        "ideal_text_chars": int(m["ideal"]),
         "amplification_x100": (
-            100 * int(row["shipped"]) // int(row["ideal"]) if row["ideal"] else 0
+            100 * int(m["shipped"]) // int(m["ideal"]) if m["ideal"] else 0
         ),
     }
 
@@ -362,11 +397,12 @@ def verify_substring_pairs(
     cfg: PipelineConfig,
     id_col: str = "image_id",
     caption_col: str = "caption",
+    observe: Callable[..., DataFrame] | None = None,
 ) -> DataFrame:
     """Exact shared-run >= L verification of candidate (a, b) pairs against
-    the docs table; returns the surviving (a, b) rows."""
-    joined = _normed_pairs(cand, df, id_col, caption_col)
-
+    the docs table; returns the surviving (a, b) rows. ``observe`` collects
+    the pair-degree metrics on the way (``_normed_pairs``)."""
+    joined = _normed_pairs(cand, df, id_col, caption_col, observe)
     min_len = cfg.substr_min_len
 
     def verify(batches):

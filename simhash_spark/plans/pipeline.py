@@ -18,6 +18,7 @@ explain assertion).
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -25,17 +26,26 @@ from pyspark.sql import functions as F
 
 from simhash_spark.config import DEFAULT_CONFIG, PipelineConfig
 from simhash_spark.functions.udfs import with_fingerprints
-from simhash_spark.operators.candidates import bucket_stats_packed, explode_all_keys, generate_candidates
+from simhash_spark.operators.candidates import (
+    bucket_stats_from_observed,
+    bucket_stats_packed,
+    explode_all_keys,
+    generate_candidates,
+)
 from simhash_spark.operators.connected_components import connected_components
 from simhash_spark.operators.substring import (
     pairs_from_anchor_table,
-    substring_degree_metrics,
+    substring_degree_summary,
     substring_pairs,
     verify_substring_pairs,
     winnow_anchor_table,
 )
 from simhash_spark.operators.verify import verify_pairs
-from simhash_spark.sources.catalog import CheckpointCatalog, input_fingerprint_of
+from simhash_spark.sources.catalog import (
+    CheckpointCatalog,
+    StageObservations,
+    input_fingerprint_of,
+)
 
 
 def fingerprint_job(spark: SparkSession, src: DataFrame, cfg: PipelineConfig) -> DataFrame:
@@ -49,9 +59,15 @@ def fingerprint_job(spark: SparkSession, src: DataFrame, cfg: PipelineConfig) ->
     return with_fingerprints(slim, cfg, emit_minhash=False).drop("caption")
 
 
-def candidate_job(fp: DataFrame, cfg: PipelineConfig, include_phash: bool = True) -> DataFrame:
-    """E2: fingerprints -> candidate pairs (a, b, src)."""
-    return generate_candidates(fp, cfg, include_phash=include_phash)
+def candidate_job(
+    fp: DataFrame,
+    cfg: PipelineConfig,
+    include_phash: bool = True,
+    observe: Callable[..., DataFrame] | None = None,
+) -> DataFrame:
+    """E2: fingerprints -> candidate pairs (a, b, src). ``observe`` collects
+    the per-source bucket histogram while the pairs are computed."""
+    return generate_candidates(fp, cfg, include_phash=include_phash, observe=observe)
 
 
 def substring_job(src: DataFrame, cfg: PipelineConfig) -> DataFrame:
@@ -275,7 +291,6 @@ def run_pipeline(
     bucket_fingerprints: bool = True,
     quality_filter: bool = False,
     quality_overrides: dict | None = None,
-    stage_metrics: bool = True,
     byte_exact: bool = False,
 ) -> PipelineResult:
     """The resumable end-to-end run: every stage lands in the catalog with a
@@ -287,7 +302,12 @@ def run_pipeline(
     the bucketed layout all three reads skip the exchange/sort on the big
     side, paying one clustered write instead of three shuffles of the
     largest intermediate. Bucket count follows the session's shuffle
-    parallelism (a real deployment sets both to ~2-3x total cores)."""
+    parallelism (a real deployment sets both to ~2-3x total cores).
+
+    Manifest metrics come from the stages' own writes: the candidates stage
+    observes its bucket histogram off the window that sizes the buckets,
+    the substring verify observes its pair degrees off its own joins. The
+    run starts no Spark job beyond the ones that compute and write stages."""
     cat = CheckpointCatalog(spark, checkpoint_path)
     in_fp = stage_fingerprint(
         input_path,
@@ -377,16 +397,13 @@ def run_pipeline(
         bucket_by=fp_buckets,
     )
 
-    def _cand() -> DataFrame:
-        return candidate_job(fp, cfg, include_phash=include_phash)
+    # skew/recall accounting in the stage manifest: bucket histogram per
+    # index + how many hot buckets were degraded to spanning chains — the
+    # "no silent truncation" rule (SURVEY.md §7.5.3)
+    cand_obs = StageObservations()
 
     def _cand_metrics() -> dict:
-        # skew/recall accounting in the stage manifest: bucket histogram per
-        # index + how many hot buckets were degraded to spanning chains —
-        # the "no silent truncation" rule (SURVEY.md §7.5.3). Computed from
-        # the packed key table so it works for every index config.
-        packed = explode_all_keys(fp, cfg, include_phash=include_phash)
-        stats = {r["src"]: r.asDict() for r in bucket_stats_packed(packed).collect()}
+        stats = bucket_stats_from_observed(cand_obs.get())
         hot = sum(1 for s in stats.values() if (s["max_bucket"] or 0) > cfg.bucket_cap)
         return {
             "bucket_stats": stats,
@@ -394,24 +411,11 @@ def run_pipeline(
             "indexes_with_hot_buckets": hot,
         }
 
-    # ``stage_metrics`` is the monitoring-cost dial: the two closures below
-    # re-run the stage's heaviest intermediate for their manifest numbers
-    # (the bucket histogram re-exchanges the FULL packed key table; the
-    # degree metrics re-generate the substring candidate pairs) —
-    # structurally a SECOND full exchange of the run's largest intermediate,
-    # which on a real cluster is real shuffle bandwidth. Measured at the
-    # 3M-row design regime (BENCH/INDEX_SCALING.md r5 refresh) this sandbox
-    # CONSERVES rather than adds the cost: metrics pass 288 s + warm
-    # candidates write 181 s vs a 488 s cold write in both raw draws — the
-    # syscall-serialized shuffle dominates either way. The dial's value is
-    # the structural claim; throughput-critical runs turn it off and read
-    # the same surfaces from the dedicated monitoring queries
-    # (lsh_bucket_stats, substring_run_report) on their own schedule.
     cand = cat.run_stage(
         "02_candidates",
         in_fp,
-        _cand,
-        extra_metrics=_cand_metrics if stage_metrics else None,
+        lambda: candidate_job(fp, cfg, include_phash=include_phash, observe=cand_obs.observe),
+        extra_metrics=_cand_metrics,
     )
 
     if enable_substring:
@@ -424,18 +428,16 @@ def run_pipeline(
             in_fp,
             lambda: winnow_anchor_table(src.select("image_id", "caption"), cfg),
         )
-        def _substr_metrics() -> dict:
-            # the accepted 2.73x pair-join text amplification's revisit
-            # trigger ("degree grows with corpus size") as manifest numbers
-            return substring_degree_metrics(pairs_from_anchor_table(anch, cfg), src)
-
+        # the accepted 2.73x pair-join text amplification's revisit trigger
+        # ("degree grows with corpus size") as manifest numbers
+        sub_obs = StageObservations()
         sub = cat.run_stage(
             "02b_substr",
             in_fp,
             lambda: verify_substring_pairs(
-                pairs_from_anchor_table(anch, cfg), src, cfg
+                pairs_from_anchor_table(anch, cfg), src, cfg, observe=sub_obs.observe
             ).withColumn("src", F.lit("substr")),
-            extra_metrics=_substr_metrics if stage_metrics else None,
+            extra_metrics=lambda: substring_degree_summary(sub_obs.get()),
         )
         all_cand = cand.unionByName(sub).groupBy("a", "b").agg(
             F.array_join(F.array_sort(F.flatten(F.collect_set(F.split("src", ",")))), ",").alias("src")

@@ -9,17 +9,47 @@ runtime, SURVEY.md O20); Arrow transfer is on for every pandas UDF boundary.
 from __future__ import annotations
 
 import os
+import pathlib
 
 from pyspark.sql import SparkSession
+
+# Share of the host's RAM given to the driver heap: in local mode the driver
+# JVM shares the host with one Python worker per core, the caller's own
+# process and (on tmpfs) the shuffle files.
+HEAP_SHARE = 0.4
+
+
+def host_ram_bytes() -> int:
+    """Physical RAM (the ``/proc/meminfo`` MemTotal figure) or the cgroup
+    memory limit, whichever is lower."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for limit_file in (
+        "/sys/fs/cgroup/memory.max",  # cgroup v2; "max" = unlimited
+        "/sys/fs/cgroup/memory/memory.limit_in_bytes",  # cgroup v1
+    ):
+        try:
+            limit = pathlib.Path(limit_file).read_text().strip()
+        except OSError:
+            continue
+        if limit.isdigit():
+            ram = min(ram, int(limit))
+    return ram
+
+
+def default_driver_memory() -> str:
+    """Driver heap sized from the host: HEAP_SHARE of RAM, whole GiB, >= 1g."""
+    return f"{max(1, int(host_ram_bytes() * HEAP_SHARE / 2**30))}g"
 
 
 def get_spark(
     parallelism: int | None = None,
     app_name: str = "simhash_spark",
     shuffle_partitions: int | None = None,
-    driver_memory: str = "48g",
+    driver_memory: str | None = None,
     arrow_batch_rows: int = 10_000,
 ) -> SparkSession:
+    if driver_memory is None:
+        driver_memory = default_driver_memory()
     if parallelism is None:
         parallelism = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     if shuffle_partitions is None:

@@ -14,6 +14,11 @@ catalog is an interface with two backends (SURVEY.md §7.6):
 
 Resume: ``run_stage`` recomputes nothing when a manifest exists whose
 input_fingerprint matches — it reads the checkpoint back (T5 test).
+
+Every manifest number comes from the execution that writes the stage: the
+per-file rows from the footers of the files just written, the stage's own
+metrics from ``StageObservations`` filled during that write. Publishing a
+manifest starts no Spark job.
 """
 
 from __future__ import annotations
@@ -26,11 +31,38 @@ import shutil
 import time
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow.parquet as pq
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MANIFEST_NAME = "_manifest.json"
+
+
+class StageObservations:
+    """Metrics a stage's plan collects while the stage's write runs.
+
+    ``observe`` is what an operator calls to attach aggregates to a node of
+    its plan; it takes a fresh Observation each time, because Spark binds an
+    Observation to one DataFrame. ``get`` merges what they collected once
+    the write has finished. A node that AQE pruned (it sat above an empty
+    shuffle stage, or beside one that emptied a join) never ran and
+    contributes no keys."""
+
+    def __init__(self) -> None:
+        self._obs: list[Observation] = []
+
+    def observe(self, df: DataFrame, *exprs: Column) -> DataFrame:
+        obs = Observation()
+        self._obs.append(obs)
+        return df.observe(obs, *exprs)
+
+    def get(self) -> dict:
+        out: dict = {}
+        for obs in self._obs:
+            # Observation.get cannot return the empty row of a pruned node
+            out.update(dict(obs._jo.getAsJava()))  # noqa: SLF001
+        return out
 
 
 class CheckpointCatalog:
@@ -109,11 +141,14 @@ class CheckpointCatalog:
         stage: str,
         df: DataFrame,
         input_fingerprint: str,
-        extra: dict | None = None,
+        extra: dict | Callable[[], dict] | None = None,
         bucket_by: tuple[int, list[str]] | None = None,
     ) -> DataFrame:
-        """Materialize a stage: write parquet, collect per-partition lineage
-        metrics from the files actually written, emit the manifest.
+        """Materialize a stage: write parquet, take per-partition lineage
+        from the footers of the files just written, emit the manifest. The
+        only Spark job is the write itself: the read-back takes the written
+        schema instead of inferring it, and a callable ``extra`` is called
+        after the write, so it can read metrics that write collected.
 
         ``bucket_by=(n, cols)`` writes the stage as a BUCKETED, sorted table
         (hash-clustered files + session-catalog metadata). Downstream
@@ -156,22 +191,18 @@ class CheckpointCatalog:
             out = self.spark.table(name)
         else:
             df.write.mode("overwrite").parquet(str(data_dir))
-            out = self.spark.read.parquet(str(data_dir))
+            # parquet read-back forces every field nullable, as inference would
+            out = self.spark.read.schema(df.schema).parquet(str(data_dir))
         wall_ms = int((time.time() - t0) * 1000)
         # per-partition (file) lineage: rows + bytes per parquet part file
         parts = [
-            {"file": f.name, "bytes": f.stat().st_size}
+            {
+                "file": f.name,
+                "bytes": f.stat().st_size,
+                "rows": pq.read_metadata(f).num_rows,
+            }
             for f in sorted(data_dir.glob("part-*.parquet"))
         ]
-        rows_by_file = {
-            r["_f"]: r["n"]
-            for r in out.groupBy(F.input_file_name().alias("_f"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        for p in parts:
-            full = next((k for k in rows_by_file if k.endswith("/" + p["file"])), None)
-            p["rows"] = rows_by_file.get(full, 0)
         manifest = {
             "stage": stage,
             "backend": self.backend,
@@ -188,7 +219,7 @@ class CheckpointCatalog:
                 if bucket_by is not None
                 else {}
             ),
-            **(extra or {}),
+            **((extra() if callable(extra) else extra) or {}),
         }
         # atomic publish: tmp file + rename, so a kill mid-write can never
         # leave truncated JSON that bricks every later manifest() call
@@ -207,12 +238,15 @@ class CheckpointCatalog:
     ) -> DataFrame:
         """Resume-aware stage execution: skip compute when a matching complete
         checkpoint exists (the reference's 'each article read exactly once'
-        discipline, /root/reference/README.md:19, lifted to stage level)."""
+        discipline, lifted to stage level).
+
+        ``extra_metrics`` runs after the stage's write and before its
+        manifest is published; it reads what the write collected (a
+        ``StageObservations`` the compute plan observed into) and starts no
+        Spark job of its own."""
         if self.is_complete(stage, input_fingerprint):
             return self.read(stage)
-        df = compute()
-        extra = extra_metrics() if extra_metrics else None
-        return self.write(stage, df, input_fingerprint, extra, bucket_by=bucket_by)
+        return self.write(stage, compute(), input_fingerprint, extra_metrics, bucket_by=bucket_by)
 
 
 def input_fingerprint_of(path: str) -> str:

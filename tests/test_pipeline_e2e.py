@@ -283,35 +283,57 @@ def test_cli_keep_rule_best_resolution(spark, fixture_dir, tmp_path):
         assert list(kept["image_id"]) == [expect], f"cluster {cid}: wrong survivor"
 
 
-def test_pipeline_stage_metrics_dial(spark, fixture_dir, tmp_path):
-    """stage_metrics=False (the raw-throughput configuration: the bucket
-    histogram and substring degree closures re-run the stage's heaviest
-    intermediate — structurally a second full exchange of the packed key
-    table) must change ONLY the manifest payload, never the data: cluster
-    labels identical to the metrics-on run, and the expensive keys absent
-    from the manifests."""
+def test_pipeline_manifest_metrics_match_standalone(spark, fixture_dir, tmp_path):
+    """The manifest numbers collected during each stage's own write equal
+    the standalone computations over the same run's checkpoints: the
+    candidates stage's bucket histogram (candidate_bucket_stats), the
+    substring stage's degree keys (substring_degree_metrics over the
+    anchor checkpoint's pairs) and every stage's per-file rows (an
+    input_file_name() count). Labels stay equal to the truth."""
     import json
     import pathlib
 
-    res = run_pipeline(
-        spark,
-        str(fixture_dir / "images.parquet"),
-        str(tmp_path / "ckpt_nm"),
-        CFG,
-        stage_metrics=False,
+    from simhash_spark.operators.substring import (
+        pairs_from_anchor_table,
+        substring_degree_metrics,
     )
+    from simhash_spark.plans.pipeline import candidate_bucket_stats
+    from simhash_spark.sources.catalog import CheckpointCatalog
+
+    inp = str(fixture_dir / "images.parquet")
+    ck = pathlib.Path(tmp_path) / "ckpt_obs"
+    res = run_pipeline(spark, inp, str(ck), CFG)
     got = {r["image_id"]: r["cluster_id"] for r in res.clusters.collect()}
     truth = pd.read_parquet(fixture_dir / "truth_clusters.parquet")
     assert got == dict(zip(truth["image_id"], truth["cluster_id"]))
-    cm = json.loads(
-        (pathlib.Path(tmp_path) / "ckpt_nm" / "02_candidates" / "_manifest.json").read_text()
+
+    cat = CheckpointCatalog(spark, ck)
+    cm = cat.manifest("02_candidates")
+    want = {r["src"]: r.asDict() for r in candidate_bucket_stats(res.fingerprints, CFG).collect()}
+    assert cm["bucket_stats"] == json.loads(json.dumps(want))
+    assert cm["indexes_with_hot_buckets"] == sum(
+        1 for s in want.values() if s["max_bucket"] > CFG.bucket_cap
     )
-    sm = json.loads(
-        (pathlib.Path(tmp_path) / "ckpt_nm" / "02b_substr" / "_manifest.json").read_text()
-    )
-    assert "bucket_stats" not in cm and "mean_degree_x100" not in sm
-    # the cheap lineage/manifest core is still there
-    assert cm["complete"] and cm["n_rows"] > 0 and sm["complete"]
+
+    sm = cat.manifest("02b_substr")
+    src = spark.read.parquet(inp)
+    deg = substring_degree_metrics(pairs_from_anchor_table(cat.read("02b_anchors"), CFG), src)
+    assert deg["n_pairs"] > 0
+    assert {k: sm[k] for k in deg} == deg
+
+    for stage in ("01_fingerprints", "02_candidates", "02b_anchors", "02b_substr",
+                  "03_verified", "04_clusters"):
+        m = cat.manifest(stage)
+        rows = {
+            r["f"].rsplit("/", 1)[-1]: r["n"]
+            for r in spark.read.parquet(str(ck / stage / "data"))
+            .groupBy(F.input_file_name().alias("f"))
+            .count()
+            .withColumnRenamed("count", "n")
+            .collect()
+        }
+        assert {p["file"]: p["rows"] for p in m["partitions"] if p["rows"]} == rows, stage
+        assert m["n_rows"] == sum(rows.values()), stage
 
 
 def test_include_phash_false_removes_phash_axis_end_to_end(spark, tmp_path):

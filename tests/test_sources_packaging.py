@@ -156,3 +156,64 @@ def test_catalog_write_invalidates_manifest_before_clobber(spark, tmp_path):
     # recovery: a rerun with a working compute completes normally
     out = cat.run_stage("s1", "fpB", lambda: df)
     assert out.count() == 5 and cat.is_complete("s1", "fpB")
+
+
+def _jobs_started(spark, fn) -> int:
+    """Number of Spark jobs ``fn()`` starts, counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_catalog_write_starts_only_the_write_jobs(spark, tmp_path):
+    """Tripwire against post-write metric passes: a stage written through
+    CheckpointCatalog (with observed metrics) starts exactly the jobs of a
+    bare parquet write of the same plan — lineage rows come from the file
+    footers, the read-back takes the written schema, and the extra metrics
+    come from an Observation filled by the write itself."""
+    from pyspark.sql import functions as F
+
+    from simhash_spark.sources.catalog import CheckpointCatalog, StageObservations
+
+    def plan(observe=None):
+        df = (
+            spark.range(0, 5000, numPartitions=4)
+            .select((F.col("id") % 97).alias("k"), F.col("id"))
+            .groupBy("k")
+            .agg(F.count(F.lit(1)).alias("n"), F.max("id").alias("top"))
+        )
+        return df if observe is None else observe(df, F.sum("n").alias("rows"))
+
+    bare = _jobs_started(spark, lambda: plan().write.parquet(str(tmp_path / "bare")))
+    cat = CheckpointCatalog(spark, tmp_path / "cat")
+    obs = StageObservations()
+    staged = _jobs_started(
+        spark,
+        lambda: cat.run_stage(
+            "s", "fp", lambda: plan(obs.observe), extra_metrics=lambda: obs.get()
+        ),
+    )
+    assert bare >= 1 and staged == bare
+    m = cat.manifest("s")
+    assert m["rows"] == 5000 and m["n_rows"] == 97
+    assert sum(p["rows"] for p in m["partitions"]) == 97
+
+
+def test_session_heap_within_host_budget(spark):
+    """get_spark sizes the driver heap from the host (RAM or the cgroup
+    limit, whichever is lower), never from a fixed figure that can exceed
+    it: the JVM's max heap is at most HEAP_SHARE of that RAM."""
+    from simhash_spark.session import HEAP_SHARE, default_driver_memory, host_ram_bytes
+
+    budget = host_ram_bytes() * HEAP_SHARE
+    assert int(default_driver_memory().rstrip("g")) * 2**30 <= max(budget, 2**30)
+    max_heap = spark.sparkContext._jvm.java.lang.Runtime.getRuntime().maxMemory()
+    assert max_heap <= max(budget, 2**30)
