@@ -1474,9 +1474,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # stored-phash variants do NOT (their bytes are fresh pixels) —
         # exactly the from-bytes semantics. Oracle: numpy mirror (decode +
         # brute-force O(n^2) Hamming + union-find; tests/gen_expected.py).
-        from simhash_spark.operators.connected_components import connected_components
         from simhash_spark.operators.multimodal import image_features
         from simhash_spark.operators.search import phash_search
+        from simhash_spark.plans.pipeline import cluster_job
         from simhash_spark.sources.fixtures import (
             INPUT_HINT_SCHEMA,
             make_images_pdf,
@@ -1500,13 +1500,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .where(F.col("probe_id") < F.col("image_id"))
             .select(F.col("probe_id").alias("a"), F.col("image_id").alias("b"))
         )
-        labels = connected_components(pairs)
-        singletons = src.select("image_id").join(
-            labels.select(F.col("id").alias("image_id")), "image_id", "left_anti"
-        )
-        return labels.select(F.col("id").alias("image_id"), "cluster_id").unionByName(
-            singletons.select("image_id", F.col("image_id").alias("cluster_id"))
-        )
+        return cluster_job(pairs, src, CFG)
 
     q["image_near_dup_from_bytes"] = image_near_dup_from_bytes
 
@@ -1574,6 +1568,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # completeness), so the oracle expects recall_bp = 10000; precision
         # < 10000 only because predicted pairs are the transitive closure
         # while the truth table holds direct edges.
+        from simhash_spark.operators.candidates import union_candidates
         from simhash_spark.operators.dedup import dedup_eval
         from simhash_spark.plans.pipeline import (
             candidate_job,
@@ -1592,11 +1587,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         src = spark.createDataFrame(pdf, schema=INPUT_HINT_SCHEMA)
         fp = fingerprint_job(spark, src, CFG).cache()
         cand = candidate_job(fp, CFG)
-        all_cand = (
-            cand.unionByName(substring_job(src, CFG))
-            .groupBy("a", "b")
-            .agg(F.array_join(F.array_sort(F.collect_set("src")), ",").alias("src"))
-        )
+        all_cand = union_candidates(cand, substring_job(src, CFG))
         clusters = cluster_job(verify_job(all_cand, fp, CFG), fp, CFG)
         truth_pairs, _ = compute_truth(pdf)
         truth = spark.createDataFrame(truth_pairs[["a", "b"]], schema="a string, b string")
@@ -1610,6 +1601,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # the fixture, so the report equals the truth-kind histogram —
         # which is the oracle (computed by the independent numpy brute
         # force, not the engine).
+        from simhash_spark.operators.candidates import union_candidates
         from simhash_spark.operators.verify import dup_kind_report as op
         from simhash_spark.plans.pipeline import (
             candidate_job,
@@ -1622,12 +1614,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         pdf = make_images_pdf(300, seed=42, with_bytes=False)
         src = spark.createDataFrame(pdf, schema=INPUT_HINT_SCHEMA)
         fp = fingerprint_job(spark, src, CFG).cache()
-        all_cand = (
-            candidate_job(fp, CFG)
-            .unionByName(substring_job(src, CFG))
-            .groupBy("a", "b")
-            .agg(F.array_join(F.array_sort(F.collect_set("src")), ",").alias("src"))
-        )
+        all_cand = union_candidates(candidate_job(fp, CFG), substring_job(src, CFG))
         return op(verify_job(all_cand, fp, CFG), fp, CFG)
 
     q["dup_kind_report"] = dup_kind_report

@@ -140,25 +140,14 @@ def main(argv: list[str] | None = None) -> int:
 
     cat = CheckpointCatalog(spark, args.checkpoint)
     if args.tier_labels:
-        from pyspark.sql import functions as F
-
         from simhash_spark.plans.delta import read_chain_stage
+        from simhash_spark.plans.pipeline import assemble_tiers, run_tier_drops
 
-        bx_all = read_chain_stage(
-            spark, args.checkpoint, "00b_bytes", "00b_bytes_delta"
+        corpus, drops = run_tier_drops(
+            read_chain_stage(spark, args.checkpoint, "00b_bytes", "00b_bytes_delta"),
+            res.clusters,
         )
-        exact_drops = bx_all.where("image_id != keep_id").select(
-            "image_id", F.lit("exact").alias("tier")
-        )
-        near_drops = res.clusters.where("image_id != cluster_id").select(
-            "image_id", F.lit("near").alias("tier")
-        )
-        from simhash_spark.plans.pipeline import assemble_tiers
-
-        corpus = res.clusters.select("image_id").unionByName(
-            exact_drops.select("image_id")
-        )
-        tiers = assemble_tiers(corpus, exact_drops.unionByName(near_drops))
+        tiers = assemble_tiers(corpus, drops)
         tiers.write.mode("overwrite").parquet(str(out / "tier_labels"))
     bx_stats = {}
     if cat.manifest("00b_bytes_delta"):

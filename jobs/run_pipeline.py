@@ -38,12 +38,29 @@ except ImportError:  # plain `python jobs/run_pipeline.py` from a checkout
     sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 
 
-# Survivor-id sets at or under this count broadcast to the semantic rung's
-# decode scan (~30 B/id -> ~150 MB at the ceiling, well inside executor
-# memory); above it the rung switches to scan-local decode over the whole
-# post-quality corpus + a slim embedding semi-join, because a sort-merge
-# semi-join would exchange every payload by image_id (bytes never shuffle).
+# Id sets at or under this count broadcast to the per-payload decode scans of
+# the semantic rung and the alignment filter (~30 B/id -> ~150 MB at the
+# ceiling, well inside executor memory); above it restrict_to_ids decodes
+# scan-locally and semi-joins the slim output rows instead.
 SEMANTIC_BROADCAST_MAX_IDS = 5_000_000
+
+
+def restrict_to_ids(src, ids, n_ids: int, per_row):
+    """``per_row(src)`` restricted to the rows whose image_id is in ``ids``
+    (``n_ids`` rows), without payload bytes ever riding an exchange (the
+    00b invariant). At or under SEMANTIC_BROADCAST_MAX_IDS the id set ships
+    to the scan, so the semi-join is a BroadcastHashJoin and bytes stay in
+    their input partitions; above it a sort-merge semi-join would exchange
+    every payload by image_id, so ``per_row`` runs scan-locally over all of
+    ``src`` and only its slim output rows semi-join down to ``ids`` —
+    paying per-row work on the extra rows, never a byte shuffle. ``per_row``
+    must be a per-row pure function of its input rows, so both plans yield
+    the same rows."""
+    from pyspark.sql import functions as F
+
+    if n_ids <= SEMANTIC_BROADCAST_MAX_IDS:
+        return per_row(src.join(F.broadcast(ids), "image_id", "left_semi"))
+    return per_row(src).join(ids, "image_id", "left_semi")
 
 
 def _quality_hist(spark, ckpt: str) -> dict:
@@ -219,16 +236,12 @@ def main(argv: list[str] | None = None) -> int:
         # over pixel embeddings of the NEAR tier's survivors only.
         from pyspark.sql import functions as F
 
+        from simhash_spark.plans.pipeline import assemble_tiers, run_tier_drops
         from simhash_spark.sources.catalog import CheckpointCatalog
 
-        bx = CheckpointCatalog(spark, ckpt).read("00b_bytes")
-        exact_drops = bx.where(F.col("image_id") != F.col("keep_id")).select(
-            "image_id", F.lit("exact").alias("tier")
+        corpus, drops = run_tier_drops(
+            CheckpointCatalog(spark, ckpt).read("00b_bytes"), res.clusters
         )
-        near_drops = res.clusters.where(
-            F.col("image_id") != F.col("cluster_id")
-        ).select("image_id", F.lit("near").alias("tier"))
-        drops = exact_drops.unionByName(near_drops)
         if args.pixel_embeddings:
             from simhash_spark.operators.ann import ivf_fit
             from simhash_spark.operators.dedup import semdedup_keep
@@ -237,26 +250,14 @@ def main(argv: list[str] | None = None) -> int:
             surv2 = res.clusters.where(
                 F.col("image_id") == F.col("cluster_id")
             ).select("image_id")
-            # Payload bytes must never ride an exchange (the 00b invariant).
-            # Under the id-broadcast ceiling the survivor set ships to the
-            # scan, so the semi-join is a BroadcastHashJoin and bytes stay
-            # in their input partitions; above it a sort-merge semi-join
-            # would exchange every payload by image_id, so instead decode
-            # scan-locally over the whole post-quality corpus and semi-join
-            # the slim (id, 384-byte embedding) rows — paying dup-fraction
-            # decode, never a byte shuffle. Byte-identical rows embed
-            # identically, so both plans yield the same embedding set.
-            n_surv = surv2.count()
-            src = spark.read.parquet(args.input)
-            if n_surv <= SEMANTIC_BROADCAST_MAX_IDS:
-                src = src.join(F.broadcast(surv2), "image_id", "left_semi")
-            emb = (
-                image_embeddings(src)
+            emb = restrict_to_ids(
+                spark.read.parquet(args.input),
+                surv2,
+                surv2.count(),
+                lambda src: image_embeddings(src)
                 .where(F.col("error").isNull())
-                .select("image_id", "embedding")
+                .select("image_id", "embedding"),
             )
-            if n_surv > SEMANTIC_BROADCAST_MAX_IDS:
-                emb = emb.join(surv2, "image_id", "left_semi")
             # pin the embeddings: the decode+embed pass is the run's most
             # expensive stage and feeds THREE actions (the emptiness probe,
             # ivf_fit's driver sample, the semdedup kernel) — unpinned, the
@@ -286,13 +287,6 @@ def main(argv: list[str] | None = None) -> int:
                         "image_id", F.lit("semantic").alias("tier")
                     )
                 )
-        # post-quality corpus = byte survivors (every cluster vertex) +
-        # byte-tier drops; NULL-bytes rows ride through as cluster vertices
-        from simhash_spark.plans.pipeline import assemble_tiers
-
-        corpus = res.clusters.select("image_id").unionByName(
-            exact_drops.select("image_id")
-        )
         tiers = assemble_tiers(corpus, drops)
         tiers.write.mode("overwrite").parquet(str(out / "tier_labels"))
         tier_counts = {
@@ -360,27 +354,15 @@ def main(argv: list[str] | None = None) -> int:
     align_stats: dict = {}
     if args.alignment_filter:
         # Alignment over the kept set only — the funnel order (the decode
-        # pass never touches rows dedup already dropped). Same byte-shuffle
-        # discipline as the semantic rung: under the id-broadcast ceiling
-        # the kept-id set ships to the scan (BroadcastHashJoin semi-join,
-        # bytes stay in their input partitions); above it the zero-exchange
-        # alignment pass runs scan-locally over the whole corpus and only
-        # its slim 5-scalar verdict rows join down to the kept set.
-        from pyspark.sql import functions as F
-
+        # pass never touches rows dedup already dropped).
         from simhash_spark.operators.multimodal import caption_pixel_alignment
 
-        kept_ids = keep.where("is_kept = 1").select("image_id")
-        src = spark.read.parquet(args.input)
-        if kept_n <= SEMANTIC_BROADCAST_MAX_IDS:
-            align = caption_pixel_alignment(
-                src.join(F.broadcast(kept_ids), "image_id", "left_semi"),
-                tau_bp=args.alignment_tau,
-            )
-        else:
-            align = caption_pixel_alignment(src, tau_bp=args.alignment_tau).join(
-                kept_ids, "image_id", "left_semi"
-            )
+        align = restrict_to_ids(
+            spark.read.parquet(args.input),
+            keep.where("is_kept = 1").select("image_id"),
+            kept_n,
+            lambda src: caption_pixel_alignment(src, tau_bp=args.alignment_tau),
+        )
         align.write.mode("overwrite").parquet(str(out / "alignment"))
         align = spark.read.parquet(str(out / "alignment"))
         align_stats = {

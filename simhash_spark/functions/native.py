@@ -11,7 +11,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from simhash_spark import spec
-from simhash_spark.config import PipelineConfig
 
 
 def hamming(a, b) -> Column:
@@ -26,7 +25,7 @@ def pigeonhole_key_cols(fp_col: str, n_blocks: int, radius: int) -> list[Column]
     Matches spec.pigeonhole_keys: block j = bits [64-b(j+1), 64-bj) of the
     uint64 fingerprint (logical shifts on the int64 carrier), key = combo
     index tag followed by the clean blocks. One Column per combination —
-    assembled into an array + posexplode by the candidate operator.
+    the candidate operator folds each into a packed bucket key.
     """
     bits = 64 // n_blocks
     mask = (1 << bits) - 1
@@ -42,14 +41,3 @@ def pigeonhole_key_cols(fp_col: str, n_blocks: int, radius: int) -> list[Column]
             k = F.shiftleft(k, bits).bitwiseOR(blocks[j])
         keys.append(k)
     return keys
-
-
-def pigeonhole_keys_array(fp_col: str, cfg: PipelineConfig, use_phash: bool = False) -> Column:
-    n_blocks = cfg.n_blocks
-    radius = cfg.phash_radius if use_phash else cfg.hamming_radius
-    return F.array(*pigeonhole_key_cols(fp_col, n_blocks, radius))
-
-
-def canonical_pair(a: Column, b: Column) -> tuple[Column, Column]:
-    """Order a pair so a < b — the frozen candidate canonicalization."""
-    return F.least(a, b), F.greatest(a, b)

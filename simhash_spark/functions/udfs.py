@@ -19,7 +19,6 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -385,10 +384,3 @@ def normalize_substring_udf(captions: pd.Series) -> pd.Series:
         .str.replace(r"[^a-z0-9]+", " ", regex=True)
         .str.strip()
     )
-
-
-def normalized_caption_col(caption_col: str = "caption") -> Column:
-    """Native-Spark equivalent of spec.normalize_for_substring? NO — NFKC has
-    no Catalyst builtin, so normalization lives in the UDFs; this helper exists
-    only for ASCII-safe test data where lower+regexp_replace coincides."""
-    return F.trim(F.regexp_replace(F.lower(F.col(caption_col)), "[^a-z0-9]+", " "))

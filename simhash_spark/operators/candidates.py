@@ -5,16 +5,18 @@ This operator replaces the reference's all-pairs fingerprint comparison
 on bucket keys: O(n^2) becomes O(sum of bucket^2), bounded by ``bucket_cap``.
 
 Skew strategy (SURVEY.md O11/O19/O20):
-- buckets <= bucket_cap: all-pairs via self-equi-join (AQE picks the physical
-  join; the key includes the bucket id so the shuffle spreads buckets).
+- buckets <= bucket_cap: all C(s,2) pairs from one collect of the bucket's
+  sorted ids, expanded by two native explodes (no self-join; the collect
+  is bounded by the cap).
 - buckets >  bucket_cap (hot bands — e.g. a viral caption repeated 10^6
   times): emit a CHAIN of consecutive ids instead of all pairs. Linear output,
   preserves connectivity through verification for identical/near-identical
   content (which is the only way buckets get hot). The drop is logged in the
   stage metrics, never silent (SURVEY.md §7.5.3).
 
-Dedup across the many key tables (32 bands + rotation combos) happens once,
-downstream, in verify (dropDuplicates on the canonical pair).
+A pair found in several key tables (32 bands + rotation combos) is
+deduplicated once, in candidate_pairs' groupBy(a, b), which keeps its
+provenance as a sorted, comma-joined source set.
 """
 
 from __future__ import annotations
@@ -25,42 +27,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from simhash_spark.config import PipelineConfig
-from simhash_spark.functions.native import pigeonhole_key_cols, pigeonhole_keys_array
-
-
-def explode_band_keys(fp: DataFrame, id_col: str = "image_id") -> DataFrame:
-    """fingerprints -> (id, key_kind, key_idx, key) for LSH bands.
-
-    Rows with no shingles are excluded: an empty caption's signature is the
-    constant fill and would form a giant fake bucket.
-    """
-    return (
-        fp.where(F.col("n_shingles") > 0)
-        .select(
-            F.col(id_col).alias("id"),
-            F.lit("minhash_lsh").alias("src"),
-            F.posexplode("bands").alias("key_idx", "key"),
-        )
-    )
-
-
-def explode_rotation_keys(
-    fp: DataFrame, cfg: PipelineConfig, fp_col: str = "simhash", id_col: str = "image_id"
-) -> DataFrame:
-    """fingerprints -> (id, src, key_idx, key) for the pigeonhole index over
-    ``fp_col`` (caption simhash or stored phash) — pure native bit exprs."""
-    src = "simhash_rot" if fp_col == "simhash" else "phash_rot"
-    use_phash = fp_col != "simhash"
-    base = fp
-    if fp_col == "simhash":
-        base = fp.where(F.col("n_shingles") > 0)  # empty captions all have fp=0
-    return base.select(
-        F.col(id_col).alias("id"),
-        F.lit(src).alias("src"),
-        F.posexplode(pigeonhole_keys_array(fp_col, cfg, use_phash=use_phash)).alias(
-            "key_idx", "key"
-        ),
-    )
+from simhash_spark.functions.native import pigeonhole_key_cols
 
 
 def _tagged(code: int, idx, key_col: F.Column) -> F.Column:
@@ -111,11 +78,11 @@ def explode_all_keys(
     """fingerprints -> (k, id): ALL index keys (LSH bands ∪ simhash
     pigeonhole ∪ phash pigeonhole) in ONE scan + ONE explode.
 
-    The per-branch explode (explode_band_keys ∪ explode_rotation_keys) reads
-    the fingerprint table once per index — three scans and three shuffle-map
-    stages. Here each row builds one flat ``array<long>`` of pre-hashed
-    packed keys and explodes once: at 10^12 rows this is the difference
-    between reading the fingerprint checkpoint three times and once.
+    One explode per index would read the fingerprint table once per index —
+    three scans and three shuffle-map stages. Here each row builds one flat
+    ``array<long>`` of pre-hashed packed keys and explodes once: at 10^12
+    rows this is the difference between reading the fingerprint checkpoint
+    three times and once.
 
     Deliberately flat: an earlier array-of-struct formulation disabled
     WholeStageCodegen for the whole projection (executedPlan showed zero
@@ -163,43 +130,12 @@ def explode_all_keys(
         # xxhash64 SKIPS null args (hash of the remaining ones), so a null
         # phash would give every null row the same constant key per table —
         # one giant cross-row bucket. Gate on isNotNull: null phash emits no
-        # phash keys, matching the unpacked path where null bit-expr keys
-        # never equi-join.
+        # phash keys, so null-phash rows never share a phash bucket.
         ph_keys = F.when(F.col("phash").isNotNull(), ph_keys).otherwise(
             F.array().cast("array<bigint>")
         )
         arr = F.concat(arr, ph_keys)
     return fp.select(F.col(id_col).alias("id"), F.explode(arr).alias("k")).select("k", "id")
-
-
-def bucket_pairs(keyed: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """(id, src, key_idx, key) -> candidate pairs (a, b, src), a < b.
-
-    Plan (scale-reasoned; details in bucket_pairs_packed):
-    1. ONE exchange clustering the packed key table by bucket key; bucket
-       size = window count over the clustered rows (no separate sizes agg,
-       no semi-joins — their differing column sets defeated exchange reuse);
-    2. SMALL buckets (size <= cap): groupBy + sort_array(collect_list(id)) —
-       bounded by the cap, so per-task memory is bounded at ANY corpus size —
-       then all C(s,2) pairs expanded NATIVELY (posexplode + slice-explode),
-       no self-join;
-    3. BIG buckets (hot bands, rare): a salted lag-window chain of
-       consecutive ids — linear output that preserves connectivity through
-       verification for the identical/near-identical content that makes
-       buckets hot; sort-based windows spill safely for pathological sizes.
-    """
-    # fold (src, key_idx, key) into ONE 8-byte key with the source code in
-    # the low 2 bits: shuffle rows shrink to (key:8B, id)
-    code = (
-        F.when(F.col("src") == "minhash_lsh", 1)
-        .when(F.col("src") == "simhash_rot", 2)
-        .when(F.col("src") == "phash_rot", 3)
-        .otherwise(0)
-        .cast("int")
-    )
-    k = F.xxhash64(code, "key_idx", "key").bitwiseAND(F.lit(~3)).bitwiseOR(code)
-    packed = keyed.select(k.alias("k"), F.col("id"))
-    return bucket_pairs_packed(packed, cfg)
 
 
 def bucket_pairs_packed(
@@ -341,6 +277,21 @@ def bucket_stats_from_observed(m: dict) -> dict[str, dict]:
     return stats
 
 
+def candidate_pairs(
+    packed: DataFrame,
+    cfg: PipelineConfig,
+    observe: Callable[..., DataFrame] | None = None,
+) -> DataFrame:
+    """(k, id) packed bucket memberships -> one row per candidate pair
+    (a, b, src), src the sorted comma-joined set of sources that bucketed
+    the pair. ``observe`` passes through to bucket_pairs_packed."""
+    return (
+        bucket_pairs_packed(packed, cfg, observe)
+        .groupBy("a", "b")
+        .agg(F.array_join(F.array_sort(F.collect_set("src")), ",").alias("src"))
+    )
+
+
 def generate_candidates(
     fp: DataFrame,
     cfg: PipelineConfig,
@@ -352,21 +303,32 @@ def generate_candidates(
     MinHash-LSH ∪ SimHash-rotation ∪ pHash-rotation (SURVEY.md O9-O13).
 
     Keys for all three indexes come from ONE scan of the fingerprint table
-    (explode_all_keys). The per-pair src survives as a comma-joined
-    provenance set. ``observe`` passes through to bucket_pairs_packed.
+    (explode_all_keys); candidate_pairs buckets and deduplicates them.
     """
     packed = explode_all_keys(fp, cfg, id_col, include_phash=include_phash)
-    pairs = bucket_pairs_packed(packed, cfg, observe)
-    return pairs.groupBy("a", "b").agg(
-        F.array_join(F.array_sort(F.collect_set("src")), ",").alias("src")
+    return candidate_pairs(packed, cfg, observe)
+
+
+def union_candidates(cand: DataFrame, more: DataFrame) -> DataFrame:
+    """Union two (a, b, src) candidate sets whose src columns are already
+    comma-joined source sets (e.g. index candidates ∪ substring pairs) ->
+    one row per pair with the merged, sorted set."""
+    return (
+        cand.unionByName(more)
+        .groupBy("a", "b")
+        .agg(
+            F.array_join(
+                F.array_sort(F.flatten(F.collect_set(F.split("src", ",")))), ","
+            ).alias("src")
+        )
     )
 
 
 def bucket_stats_packed(packed: DataFrame) -> DataFrame:
-    """Bucket-size histogram per source from the PACKED key table — works
-    for every index config including the wide-UDF path (the per-branch
-    explode would rebuild the key expressions per source). Source recovered
-    from each key's low 2 bits."""
+    """Bucket-size histogram per source from the PACKED key table — the
+    skew/recall accounting the stage manifest records (no silent
+    truncation); works for every index config including the wide-UDF path.
+    Source recovered from each key's low 2 bits."""
     return (
         packed.groupBy("k")
         .agg(F.count(F.lit(1)).alias("bucket_size"))
@@ -407,20 +369,4 @@ def bucket_size_histogram(packed: DataFrame) -> DataFrame:
         )
         .groupBy("src", "bucket_size")
         .agg(F.count(F.lit(1)).alias("n_buckets"))
-    )
-
-
-def bucket_stats(keyed: DataFrame) -> DataFrame:
-    """Bucket-size histogram per source — the skew/recall accounting that the
-    stage manifest records (no silent truncation)."""
-    return (
-        keyed.groupBy("src", "key_idx", "key")
-        .agg(F.count(F.lit(1)).alias("bucket_size"))
-        .groupBy("src")
-        .agg(
-            F.count(F.lit(1)).alias("n_buckets"),
-            F.max("bucket_size").alias("max_bucket"),
-            F.avg("bucket_size").alias("avg_bucket"),
-            F.sum(F.when(F.col("bucket_size") > 1, 1).otherwise(0)).alias("n_colliding"),
-        )
     )

@@ -15,8 +15,8 @@ uses (operators/candidates.py etc.); this module adds:
   (oracle-checked).
 - embedding_near_dup : cosine >= tau pairs. Cosine is one Arrow-batched
   numpy einsum per batch (Catalyst higher-order-function folds evaluate
-  their lambdas per element interpreted — measured ~20x slower; the native
-  formulation is kept as cosine_col_native); scale path buckets by
+  their lambdas per element interpreted — measured ~20x slower, see
+  cosine_col); scale path buckets by
   random-hyperplane LSH first (operators/ann.srp_signature) so the
   self-join is per-bucket, not n^2.
 """
@@ -548,30 +548,13 @@ def dedup_funnel_report(
 # ------------------------------------------------------- embedding near-dup
 
 
-def cosine_col_native(a, b) -> F.Column:
-    """JVM-side cosine via zip_with/aggregate. Kept as the no-Python
-    reference formulation, but NOT the default: Catalyst higher-order
-    functions evaluate their lambda per ELEMENT without codegen — for 64-dim
-    vectors that is ~400 interpreted lambda invocations per row, measured
-    ~20x slower than one Arrow-batched numpy pass (cosine_col)."""
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    na = F.sqrt(
-        F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double"))
-    )
-    nb = F.sqrt(
-        F.aggregate(b, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double"))
-    )
-    return dot / (na * nb)
-
-
 def cosine_col(a, b) -> F.Column:
     """Cosine similarity between two array<float/double> columns — one
     numpy einsum/norm pass per Arrow batch (the engine's vectorized-UDF
-    fast path; see cosine_col_native for why not Catalyst HOFs)."""
+    fast path). Not Catalyst higher-order functions: zip_with/aggregate
+    evaluate their lambda per ELEMENT without codegen — for 64-dim vectors
+    that is ~400 interpreted lambda invocations per row, measured ~20x
+    slower than this one Arrow-batched numpy pass."""
     @F.pandas_udf(T.DoubleType())
     def _cos(xa: pd.Series, xb: pd.Series) -> pd.Series:
         if not len(xa):

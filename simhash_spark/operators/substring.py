@@ -15,8 +15,8 @@ purpose). Spark-first decomposition:
 3. one exact verification per distinct pair (window-set shared-run check,
    equivalent to the LCP >= L predicate) in a batched mapInPandas. Hash
    collisions die here. The suffix-array/Kasai machinery (suffix_array /
-   lcp_kasai / _group_pairs) remains as the bulk per-group verifier and
-   stays unit-tested.
+   lcp_kasai / _group_pairs) remains as the bulk per-group verifier;
+   tests/test_properties.py checks its pair set against _shares_run.
 
 Hot anchors (boilerplate prefixes shared by millions of captions) are capped
 at ``bucket_cap`` docs per anchor with a deterministic keep rule; dropped
@@ -439,7 +439,7 @@ def substring_pairs(
     anchors, so at sf0.1 that was 7,422 group verifications for only 3,847
     distinct pairs (46 s -> ~3 s after the dedup). The SA/LCP machinery
     (suffix_array / lcp_kasai / _group_pairs) remains the bulk verifier for
-    grouped use and stays unit-tested.
+    grouped use, checked against _shares_run in tests/test_properties.py.
     """
     anchors = winnow_anchor_table(df, cfg, id_col, caption_col)
     cand = pairs_from_anchor_table(anchors, cfg)

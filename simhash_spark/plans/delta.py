@@ -34,21 +34,30 @@ from __future__ import annotations
 
 import json
 import pathlib
-from dataclasses import dataclass
+from dataclasses import asdict, dataclass
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from simhash_spark.config import DEFAULT_CONFIG, PipelineConfig, config_fingerprint
-from simhash_spark.operators.candidates import bucket_pairs_packed, explode_all_keys
+from simhash_spark.operators.candidates import (
+    candidate_pairs,
+    explode_all_keys,
+    union_candidates,
+)
 from simhash_spark.operators.connected_components import connected_components
 from simhash_spark.operators.substring import (
     pairs_from_anchor_table,
     verify_substring_pairs,
     winnow_anchor_table,
 )
-from simhash_spark.operators.verify import verify_pairs
+from simhash_spark.plans.pipeline import (
+    byte_keep_col,
+    fingerprint_job,
+    singleton_labels,
+    verify_job,
+)
 from simhash_spark.sources.catalog import CheckpointCatalog, input_fingerprint_of
 
 
@@ -70,11 +79,7 @@ def incremental_candidates(
     packed_new = explode_all_keys(fp_new, cfg, include_phash=include_phash)
     packed_all = explode_all_keys(fp_all, cfg, include_phash=include_phash)
     touched = packed_all.join(packed_new.select("k").distinct(), "k", "left_semi")
-    pairs = (
-        bucket_pairs_packed(touched, cfg)
-        .groupBy("a", "b")
-        .agg(F.array_join(F.array_sort(F.collect_set("src")), ",").alias("src"))
-    )
+    pairs = candidate_pairs(touched, cfg)
     new_ids = fp_new.select(F.col("image_id"))
     pa = pairs.join(new_ids.withColumnRenamed("image_id", "a"), "a", "left_semi")
     pb = pairs.join(new_ids.withColumnRenamed("image_id", "b"), "b", "left_semi")
@@ -116,9 +121,8 @@ def incremental_cluster_update(
     base_clusters: DataFrame,
     verified_new: DataFrame,
     fp_new: DataFrame,
-    id_col: str = "image_id",
 ) -> DataFrame:
-    """Merge new verified pairs into existing (id, cluster_id) labels.
+    """Merge new verified pairs into existing (image_id, cluster_id) labels.
 
     CC runs over new pairs ∪ star edges (member -> old label) of the old
     clusters ADJACENT to a new pair — a graph linear in |new pairs| +
@@ -127,28 +131,23 @@ def incremental_cluster_update(
     singletons labeled by themselves (the frozen representative rule).
     """
     pair_ids = (
-        verified_new.select(F.col("a").alias(id_col))
-        .unionByName(verified_new.select(F.col("b").alias(id_col)))
+        verified_new.select(F.col("a").alias("image_id"))
+        .unionByName(verified_new.select(F.col("b").alias("image_id")))
         .distinct()
     )
     touched_cids = (
-        base_clusters.join(pair_ids, id_col, "left_semi").select("cluster_id").distinct()
+        base_clusters.join(pair_ids, "image_id", "left_semi").select("cluster_id").distinct()
     )
     members = base_clusters.join(touched_cids, "cluster_id", "left_semi")
     # star edges replay the touched component: every member links to its old
     # label (itself the component's min member, so it is a member vertex too)
-    star = members.where(F.col(id_col) != F.col("cluster_id")).select(
-        F.col(id_col).alias("a"), F.col("cluster_id").alias("b")
+    star = members.where(F.col("image_id") != F.col("cluster_id")).select(
+        F.col("image_id").alias("a"), F.col("cluster_id").alias("b")
     )
     labels = connected_components(verified_new.select("a", "b").unionByName(star))
-    relabeled = labels.select(F.col("id").alias(id_col), "cluster_id")
+    relabeled = labels.select(F.col("id").alias("image_id"), "cluster_id")
     untouched = base_clusters.join(touched_cids, "cluster_id", "left_anti")
-    new_singletons = (
-        fp_new.select(F.col("image_id").alias(id_col))
-        .join(labels.select(F.col("id").alias(id_col)), id_col, "left_anti")
-        .select(F.col(id_col), F.col(id_col).alias("cluster_id"))
-    )
-    return relabeled.unionByName(untouched).unionByName(new_singletons)
+    return relabeled.unionByName(untouched).unionByName(singleton_labels(labels, fp_new))
 
 
 @dataclass
@@ -170,7 +169,7 @@ def incremental_near_dup_update(
     fp_new from fingerprint_job/text_fingerprints over the increment."""
     fp_all = base_fp.unionByName(fp_new)
     cand = incremental_candidates(fp_new, fp_all, cfg, include_phash=include_phash)
-    verified = verify_pairs(cand, fp_all, cfg, use_phash=include_phash)
+    verified = verify_job(cand, fp_all, cfg, use_phash=include_phash)
     clusters = incremental_cluster_update(base_clusters, verified, fp_new)
     return DeltaResult(fp_new, verified, clusters)
 
@@ -218,6 +217,32 @@ def read_chain_stage(
     dfs = [CheckpointCatalog(spark, chain[0]).read(root_stage)]
     dfs += [CheckpointCatalog(spark, c).read(delta_stage) for c in chain[1:]]
     return reduce(lambda a, b: a.unionByName(b), dfs)
+
+
+def run_metadata(
+    cfg: PipelineConfig,
+    input_path: str | list[str],
+    enable_substring: bool,
+    include_phash: bool,
+    quality_filter: bool,
+    quality_overrides: dict | None,
+    byte_exact: bool,
+) -> dict:
+    """The run record a catalog's fingerprint stage writes into its manifest
+    (01_fingerprints of a run_pipeline or compacted root, 01_fingerprints_delta
+    of a link); chain_run_metadata reads it back. The delta path rebuilds
+    the EXACT root config and stage flags from it — bucket keys depend on
+    them, so an increment folded in under a different config would silently
+    miss candidates; recording them makes config drift detectable."""
+    return {
+        "config": asdict(cfg),
+        "enable_substring": enable_substring,
+        "include_phash": include_phash,
+        "quality_filter": quality_filter,
+        "quality_overrides": quality_overrides or {},
+        "byte_exact": byte_exact,
+        "input_path": input_path,
+    }
 
 
 def chain_run_metadata(spark: SparkSession, ckpt_path: str | pathlib.Path) -> dict:
@@ -287,10 +312,6 @@ def run_delta(
     under a lineage fingerprint that embeds the base's, so a crashed delta
     rerun skips complete stages and a changed base/increment/config recomputes.
     """
-    from dataclasses import asdict
-
-    from simhash_spark.plans.pipeline import fingerprint_job
-
     if pathlib.Path(checkpoint_path).resolve() == pathlib.Path(base_checkpoint).resolve():
         # a self-pointing chain would make every catalog_chain walk raise
         # "delta chain cycle" forever AND let this run overwrite the base's
@@ -385,8 +406,6 @@ def run_delta(
                 .groupBy("digest")
                 .agg(F.min("keep_id").alias("base_keep_id"))
             )
-            from simhash_spark.plans.pipeline import byte_keep_col
-
             return (
                 inc_h.join(base_keep, "digest", "left")
                 .withColumn("inc_min", byte_keep_col("digest"))
@@ -416,14 +435,15 @@ def run_delta(
         "01_fingerprints_delta",
         in_fp,
         lambda: fingerprint_job(spark, src_new, cfg),
-        extra_metrics=lambda: {
-            "config": asdict(cfg),
-            "enable_substring": enable_substring,
-            "include_phash": include_phash,
-            "quality_filter": quality_filter,
-            "quality_overrides": quality_overrides,
-            "input_path": increment_path,
-        },
+        extra_metrics=lambda: run_metadata(
+            cfg,
+            increment_path,
+            enable_substring,
+            include_phash,
+            quality_filter,
+            quality_overrides,
+            byte_exact,
+        ),
     )
     fp_base = read_chain_stage(
         spark, base_checkpoint, "01_fingerprints", "01_fingerprints_delta"
@@ -452,21 +472,13 @@ def run_delta(
         if not enable_substring:
             return c
         sub = incremental_substring_pairs(anch_base, anch_new, docs_all, cfg)
-        return (
-            c.unionByName(sub)
-            .groupBy("a", "b")
-            .agg(
-                F.array_join(
-                    F.array_sort(F.flatten(F.collect_set(F.split("src", ",")))), ","
-                ).alias("src")
-            )
-        )
+        return union_candidates(c, sub)
 
     cand = cat.run_stage("02_candidates_delta", in_fp, _cand)
     verified = cat.run_stage(
         "03_verified_delta",
         in_fp,
-        lambda: verify_pairs(cand, fp_all, cfg, use_phash=include_phash),
+        lambda: verify_job(cand, fp_all, cfg, use_phash=include_phash),
     )
     base_clusters = base_cat.read("04_clusters")
     clusters = cat.run_stage(
@@ -501,8 +513,6 @@ def compact_chain(
     On the Iceberg production backend this is ``rewrite_data_files`` +
     snapshot expiry; here it is expressed over the parquet backend.
     """
-    from dataclasses import asdict
-
     meta = chain_run_metadata(spark, tip_checkpoint)
     cfg = PipelineConfig(**meta["config"])
     enable_substring = meta["enable_substring"]
@@ -533,15 +543,15 @@ def compact_chain(
             spark, tip_checkpoint, "01_fingerprints", "01_fingerprints_delta"
         ),
         extra_metrics=lambda: {
-            "config": asdict(cfg),
-            "enable_substring": enable_substring,
-            "include_phash": meta["include_phash"],
-            "quality_filter": meta["quality_filter"],
-            "quality_overrides": meta["quality_overrides"],
-            # without this key a compacted byte-exact root would silently
-            # drop the flag and every later delta would skip byte dedup
-            "byte_exact": meta["byte_exact"],
-            "input_path": meta["input_paths"],
+            **run_metadata(
+                cfg,
+                meta["input_paths"],
+                enable_substring,
+                meta["include_phash"],
+                meta["quality_filter"],
+                meta["quality_overrides"],
+                meta["byte_exact"],
+            ),
             "compacted_from": chain,
         },
         bucket_by=(n_buckets, ["image_id"]),

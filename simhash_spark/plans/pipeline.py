@@ -31,6 +31,7 @@ from simhash_spark.operators.candidates import (
     bucket_stats_packed,
     explode_all_keys,
     generate_candidates,
+    union_candidates,
 )
 from simhash_spark.operators.connected_components import connected_components
 from simhash_spark.operators.substring import (
@@ -115,10 +116,20 @@ def cluster_job(
         input_fingerprint=input_fingerprint,
         **cc_kwargs,
     )
-    all_ids = vertices.select(F.col("image_id"))
-    singletons = all_ids.join(labels.select(F.col("id").alias("image_id")), "image_id", "left_anti")
     return labels.select(F.col("id").alias("image_id"), "cluster_id").unionByName(
-        singletons.select("image_id", F.col("image_id").alias("cluster_id"))
+        singleton_labels(labels, vertices)
+    )
+
+
+def singleton_labels(labels: DataFrame, vertices: DataFrame) -> DataFrame:
+    """The frozen singleton rule: a vertex in no verified pair is its own
+    cluster. ``labels`` is connected_components' (id, cluster_id); returns
+    (image_id, cluster_id = image_id) for every ``vertices`` image_id that
+    ``labels`` does not cover."""
+    return (
+        vertices.select(F.col("image_id"))
+        .join(labels.select(F.col("id").alias("image_id")), "image_id", "left_anti")
+        .select("image_id", F.col("image_id").alias("cluster_id"))
     )
 
 
@@ -144,6 +155,22 @@ def assemble_tiers(corpus_ids: DataFrame, drops: DataFrame) -> DataFrame:
         F.coalesce(F.col("tier"), F.lit("kept")).alias("tier"),
         F.col("tier").isNull().cast("int").alias("is_kept"),
     )
+
+
+def run_tier_drops(byte_index: DataFrame, clusters: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(corpus ids, exact ∪ near drops) for assemble_tiers from a byte-exact
+    run's own stage outputs: the 00b byte index (image_id, keep_id) and the
+    04 labels (image_id, cluster_id). The corpus is every cluster vertex
+    (the byte survivors, NULL-bytes rows included) plus the byte tier's
+    drops. Shared by run_pipeline and run_delta --tier-labels."""
+    exact = byte_index.where(F.col("image_id") != F.col("keep_id")).select(
+        "image_id", F.lit("exact").alias("tier")
+    )
+    near = clusters.where(F.col("image_id") != F.col("cluster_id")).select(
+        "image_id", F.lit("near").alias("tier")
+    )
+    corpus = clusters.select("image_id").unionByName(exact.select("image_id"))
+    return corpus, exact.unionByName(near)
 
 
 def image_tier_labels(
@@ -308,6 +335,8 @@ def run_pipeline(
     observes its bucket histogram off the window that sizes the buckets,
     the substring verify observes its pair degrees off its own joins. The
     run starts no Spark job beyond the ones that compute and write stages."""
+    from simhash_spark.plans.delta import run_metadata
+
     cat = CheckpointCatalog(spark, checkpoint_path)
     in_fp = stage_fingerprint(
         input_path,
@@ -372,28 +401,19 @@ def run_pipeline(
         if bucket_fingerprints
         else None
     )
-    def _run_metadata() -> dict:
-        # the delta path (plans/delta.py) reconstructs the EXACT base config
-        # and stage flags from this manifest — bucket keys depend on them, so
-        # an increment folded in under a different config would silently miss
-        # candidates. Recording them here makes config drift detectable.
-        from dataclasses import asdict
-
-        return {
-            "config": asdict(cfg),
-            "enable_substring": enable_substring,
-            "include_phash": include_phash,
-            "quality_filter": quality_filter,
-            "quality_overrides": quality_overrides or {},
-            "byte_exact": byte_exact,
-            "input_path": input_path,
-        }
-
     fp = cat.run_stage(
         "01_fingerprints",
         in_fp,
         lambda: fingerprint_job(spark, src, cfg),
-        extra_metrics=_run_metadata,
+        extra_metrics=lambda: run_metadata(
+            cfg,
+            input_path,
+            enable_substring,
+            include_phash,
+            quality_filter,
+            quality_overrides,
+            byte_exact,
+        ),
         bucket_by=fp_buckets,
     )
 
@@ -439,9 +459,7 @@ def run_pipeline(
             ).withColumn("src", F.lit("substr")),
             extra_metrics=lambda: substring_degree_summary(sub_obs.get()),
         )
-        all_cand = cand.unionByName(sub).groupBy("a", "b").agg(
-            F.array_join(F.array_sort(F.flatten(F.collect_set(F.split("src", ",")))), ",").alias("src")
-        )
+        all_cand = union_candidates(cand, sub)
     else:
         all_cand = cand
 

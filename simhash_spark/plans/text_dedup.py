@@ -15,10 +15,9 @@ from pyspark.sql import functions as F
 
 from simhash_spark.config import DEFAULT_CONFIG, PipelineConfig
 from simhash_spark.functions.udfs import with_fingerprints
-from simhash_spark.operators.candidates import bucket_pairs_packed, explode_all_keys
-from simhash_spark.operators.connected_components import connected_components
+from simhash_spark.operators.candidates import union_candidates
 from simhash_spark.operators.substring import substring_pairs
-from simhash_spark.operators.verify import verify_pairs
+from simhash_spark.plans.pipeline import candidate_job, cluster_job, verify_job
 
 
 def text_fingerprints(
@@ -42,11 +41,7 @@ def text_fingerprints(
 def text_candidates(fp: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
     """MinHash-LSH ∪ SimHash-pigeonhole candidates (no phash source),
     all keys from one scan of the fingerprint table."""
-    packed = explode_all_keys(fp, cfg, include_phash=False)
-    pairs = bucket_pairs_packed(packed, cfg)
-    return pairs.groupBy("a", "b").agg(
-        F.array_join(F.array_sort(F.collect_set("src")), ",").alias("src")
-    )
+    return candidate_job(fp, cfg, include_phash=False)
 
 
 def text_near_dup_pairs(
@@ -78,12 +73,8 @@ def text_near_dup_pairs(
             ),
             cfg,
         )
-        cand = cand.unionByName(sub).groupBy("a", "b").agg(
-            F.array_join(
-                F.array_sort(F.flatten(F.collect_set(F.split("src", ",")))), ","
-            ).alias("src")
-        )
-    return verify_pairs(cand, fp, cfg, use_phash=False).drop("hamming_phash")
+        cand = union_candidates(cand, sub)
+    return verify_job(cand, fp, cfg, use_phash=False).drop("hamming_phash")
 
 
 def text_near_dup_clusters(
@@ -100,12 +91,5 @@ def text_near_dup_clusters(
     """
     if pairs is None:
         pairs = text_near_dup_pairs(df, id_col, text_col, cfg, enable_substring)
-    labels = connected_components(pairs.select("a", "b"))
     ids = df.select(F.col(id_col).cast("string").alias("image_id"))
-    singletons = ids.join(
-        labels.select(F.col("id").alias("image_id")), "image_id", "left_anti"
-    )
-    return (
-        labels.select(F.col("id").alias(id_col), "cluster_id")
-        .unionByName(singletons.select(F.col("image_id").alias(id_col), F.col("image_id").alias("cluster_id")))
-    )
+    return cluster_job(pairs, ids, cfg).withColumnRenamed("image_id", id_col)

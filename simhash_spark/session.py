@@ -41,6 +41,11 @@ def default_driver_memory() -> str:
     return f"{max(1, int(host_ram_bytes() * HEAP_SHARE / 2**30))}g"
 
 
+def default_parallelism() -> int:
+    """Local task slots: ``SPARK_GRAFT_CPUS``, else the host's CPU count."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+
+
 def get_spark(
     parallelism: int | None = None,
     app_name: str = "simhash_spark",
@@ -51,7 +56,7 @@ def get_spark(
     if driver_memory is None:
         driver_memory = default_driver_memory()
     if parallelism is None:
-        parallelism = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+        parallelism = default_parallelism()
     if shuffle_partitions is None:
         # ~2x cores: enough granularity for AQE to coalesce, not so many that
         # task overhead dominates at local scale. On a 1000-executor cluster

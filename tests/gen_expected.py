@@ -1474,12 +1474,15 @@ def main() -> None:
 
     # ---- caption_alignment_filter: cross-modal alignment scores -----------
     # Mirror of caption_pixel_alignment's FROZEN rules in plain python:
-    # whitespace-token color counts (first 1023 tokens of the lowercased
-    # caption), integer channel sums over decode_rgb'd pixels, and the
-    # frozen cosine formula evaluated in the operator's exact op order
+    # color counts over mirror.alignment_tokens (Spark's ASCII-whitespace
+    # split of the lowercased caption, first 1023 tokens), integer channel
+    # sums over decode_rgb'd pixels, and the frozen cosine formula
+    # evaluated in the operator's exact op order
     # (python float64 == JVM double for these correctly-rounded ops on
     # bit-equal integer inputs; floor stability additionally asserted below).
     import math as _math
+
+    from mirror import alignment_tokens
 
     from simhash_spark.operators.multimodal import ALIGNMENT_PALETTE
     from simhash_spark.sources.fixtures import plant_alignment_tints
@@ -1491,7 +1494,7 @@ def main() -> None:
     for iid, data, fmt, cap in zip(
         caf["image_id"], caf["bytes"], caf["fmt"], caf["caption"]
     ):
-        toks = (cap or "").lower().split()[:1023]
+        toks = alignment_tokens(cap)
         cnts = {n: toks.count(n) for n, _ in ALIGNMENT_PALETTE}
         cr = sum(cnts[n] * rgb[0] for n, rgb in ALIGNMENT_PALETTE)
         cg = sum(cnts[n] * rgb[1] for n, rgb in ALIGNMENT_PALETTE)

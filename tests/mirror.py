@@ -12,11 +12,13 @@ Mirrored semantics are kept in lockstep with the cited engine code:
   buckets would need the JVM salt hash and make the mirror invalid — we
   assert none exist);
 - verify mirrors operators/verify.py (use_phash=False);
-- clusters mirror connected_components + singleton labeling.
+- clusters mirror connected_components + singleton labeling;
+- alignment_tokens mirrors caption_pixel_alignment's caption tokenizer.
 """
 
 from __future__ import annotations
 
+import re
 from collections import defaultdict
 
 import numpy as np
@@ -25,6 +27,19 @@ import pandas as pd
 from simhash_spark import spec
 from simhash_spark.config import PipelineConfig
 from simhash_spark.functions.udfs import fingerprint_batch
+
+
+# Java's regex \s without UNICODE_CHARACTER_CLASS: ASCII whitespace only
+_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
+
+
+def alignment_tokens(caption: str | None) -> list[str]:
+    """caption_pixel_alignment's frozen tokenizer, Spark's
+    ``slice(split(lower(coalesce(caption, '')), '\\s+'), 1, 1023)``: splits
+    on ASCII whitespace only (NBSP and other Unicode spaces stay inside a
+    token), and a leading (or trailing) separator yields an empty token
+    that counts toward the 1023-token slice."""
+    return _JAVA_WS.split((caption or "").lower())[:1023]
 
 
 def text_kernel_mirror(docs: pd.DataFrame, cfg: PipelineConfig) -> dict:

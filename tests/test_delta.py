@@ -362,6 +362,9 @@ def test_run_delta_byte_exact_chain_equals_full_run(spark, tmp_path):
     d1 = run_delta(spark, str(tmp_path / "ck_base"), inc1_path, str(tmp_path / "ck_d1"))
     d2 = run_delta(spark, str(tmp_path / "ck_d1"), inc2_path, str(tmp_path / "ck_d2"))
     assert _rows(d2.clusters) == _rows(full.clusters)
+    # every link records the same run flags its root does
+    link01 = CheckpointCatalog(spark, tmp_path / "ck_d1").manifest("01_fingerprints_delta")
+    assert link01["byte_exact"] is True
 
     # suppressed re-uploads never reach the fingerprint stage; survivors all do
     bx1 = CheckpointCatalog(spark, tmp_path / "ck_d1").read("00b_bytes_delta")

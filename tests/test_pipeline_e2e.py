@@ -747,3 +747,62 @@ def test_cli_alignment_filter_output(spark, tmp_path):
     # the fixture must actually exercise a drop and a pass among kept rows
     reasons = {v[3] for v in got.values()}
     assert "misaligned" in reasons and "ok" in reasons
+
+
+def test_cli_above_id_ceiling_matches_broadcast_run(spark, tmp_path, monkeypatch):
+    """restrict_to_ids' above-ceiling branch (per-row pass over the whole
+    corpus, then a slim semi-join) yields the same alignment verdicts and
+    tier labels, semantic rung included, as the default broadcast
+    semi-join before the per-row pass."""
+    import pathlib
+    import sys
+
+    from simhash_spark.config import DEFAULT_CONFIG as CFG
+    from simhash_spark.sources.fixtures import (
+        INPUT_HINT_SCHEMA,
+        make_images_pdf,
+        plant_alignment_tints,
+        plant_byte_reuploads,
+        plant_semantic_rerenders,
+    )
+
+    repo = pathlib.Path(__file__).resolve().parents[1]
+    sys.path.insert(0, str(repo / "jobs"))
+    try:
+        import run_pipeline as cli
+    finally:
+        sys.path.pop(0)
+
+    pdf = plant_alignment_tints(
+        plant_semantic_rerenders(
+            plant_byte_reuploads(make_images_pdf(120, seed=42, with_bytes=True))
+        )
+    )
+    inp = tmp_path / "images.parquet"
+    spark.createDataFrame(pdf, schema=INPUT_HINT_SCHEMA).coalesce(1).write.parquet(str(inp))
+
+    def run(name: str) -> dict:
+        out = tmp_path / name
+        rc = cli.main(
+            [
+                "--input", str(inp),
+                "--output", str(out),
+                "--n-blocks", str(CFG.n_blocks),
+                "--byte-exact",
+                "--tier-labels",
+                "--pixel-embeddings",
+                "--semantic-centroids", "4",
+                "--alignment-filter",
+            ]
+        )
+        assert rc == 0
+        return {
+            t: sorted(tuple(r) for r in spark.read.parquet(str(out / t)).collect())
+            for t in ("alignment", "tier_labels")
+        }
+
+    default = run("default")
+    monkeypatch.setattr(cli, "SEMANTIC_BROADCAST_MAX_IDS", 0)
+    assert run("above_ceiling") == default
+    tiers = {r[1] for r in default["tier_labels"]}
+    assert {"exact", "kept"} <= tiers

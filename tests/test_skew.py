@@ -31,15 +31,16 @@ def _components(pairs: set[tuple[str, str]], nodes: list[str]) -> dict[str, str]
 def test_hot_bucket_salted_chain_spans_bucket(spark):
     """A bucket over the cap must yield exactly m-1 edges (a spanning tree:
     linear output, full connectivity) — not C(m,2), not disconnected."""
-    from simhash_spark.operators.candidates import bucket_pairs
+    from simhash_spark.operators.candidates import bucket_pairs_packed
 
     cfg = PipelineConfig(bucket_cap=50, salt_buckets=4)
     m = 500
-    rows = [(f"id{i:05d}", "minhash_lsh", 0, 42) for i in range(m)]
+    # packed keys carry the source code in their low 2 bits (1 = minhash_lsh)
+    rows = [((42 << 2) | 1, f"id{i:05d}") for i in range(m)]
     # a second, small bucket sanity-checks the cold path alongside
-    rows += [(f"cold{i}", "minhash_lsh", 0, 99) for i in range(7)]
-    keyed = spark.createDataFrame(rows, "id string, src string, key_idx int, key long")
-    pairs = [(r["a"], r["b"]) for r in bucket_pairs(keyed, cfg).collect()]
+    rows += [((99 << 2) | 1, f"cold{i}") for i in range(7)]
+    packed = spark.createDataFrame(rows, "k long, id string")
+    pairs = [(r["a"], r["b"]) for r in bucket_pairs_packed(packed, cfg).collect()]
 
     hot_ids = [f"id{i:05d}" for i in range(m)]
     hot_pairs = [(a, b) for a, b in pairs if a.startswith("id")]
@@ -103,11 +104,11 @@ def test_degenerate_corpus_end_to_end(spark, tmp_path):
 
 
 def test_bucket_stats_reports_hot_buckets(spark):
-    from simhash_spark.operators.candidates import bucket_stats
+    from simhash_spark.operators.candidates import bucket_stats_packed
 
-    rows = [(f"id{i}", "minhash_lsh", 0, 42) for i in range(300)]
-    keyed = spark.createDataFrame(rows, "id string, src string, key_idx int, key long")
-    stats = {r["src"]: r.asDict() for r in bucket_stats(keyed).collect()}
+    rows = [((42 << 2) | 1, f"id{i}") for i in range(300)]
+    packed = spark.createDataFrame(rows, "k long, id string")
+    stats = {r["src"]: r.asDict() for r in bucket_stats_packed(packed).collect()}
     assert stats["minhash_lsh"]["max_bucket"] == 300
     assert stats["minhash_lsh"]["n_buckets"] == 1
 

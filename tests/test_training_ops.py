@@ -862,10 +862,13 @@ def test_caption_pixel_alignment_rules_and_plan(spark):
     """Frozen cross-modal alignment rules on constructed rows: exact cosine
     on proportional vectors, rule order (pixel absence beats a present
     caption claim), the zero-norm and quarantine branches, lowercase token
-    counting with the 1023-token slice bound, and the zero-exchange plan."""
+    counting with the 1023-token slice bound, and the zero-exchange plan.
+    Every row's color count equals the python mirror's tokenizer, including
+    leading separators, tabs and NBSP (not a separator)."""
     import numpy as np
+    from mirror import alignment_tokens
 
-    from simhash_spark.operators.multimodal import caption_pixel_alignment
+    from simhash_spark.operators.multimodal import ALIGNMENT_PALETTE, caption_pixel_alignment
 
     def ppm(r, g, b, w=8, h=8):
         px = np.zeros((h, w, 3), np.uint8)
@@ -882,6 +885,9 @@ def test_caption_pixel_alignment_rules_and_plan(spark):
         ("zero_norm", ppm(0, 0, 0), "ppm", "claims blue anyway"),
         ("multi", ppm(255, 64, 0), "ppm", "red RED green"),
         ("sliced", ppm(255, 0, 0), "ppm", filler + " red"),
+        ("ws_edges", ppm(255, 0, 0), "ppm", "  \tred\tgreen\u00a0blue red\u00a0 "),
+        # the leading separator's empty token pushes 'red' to token 1024
+        ("ws_slice", ppm(255, 0, 0), "ppm", " " + " ".join(["x"] * 1022) + " red"),
     ]
     src = spark.createDataFrame(
         [(i, d, 8, 8, f, c, 0) for i, d, f, c in rows],
@@ -909,6 +915,12 @@ def test_caption_pixel_alignment_rules_and_plan(spark):
     assert (n_color, keep, reason) == (3, 1, "ok") and 9700 < bp < 9800
     # the 1023-token slice bound: a color word past it never counts
     assert got["sliced"] == (None, 0, 1, "no_caption_signal")
+    # ASCII-whitespace split: only the tab-delimited 'red' is a color token
+    assert got["ws_edges"] == (10000, 1, 1, "ok")
+    assert got["ws_slice"] == (None, 0, 1, "no_caption_signal")
+    for iid, _, _, cap in rows:
+        toks = alignment_tokens(cap)
+        assert got[iid][1] == sum(toks.count(n) for n, _ in ALIGNMENT_PALETTE), iid
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
 
