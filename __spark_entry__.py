@@ -1113,22 +1113,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # components -> (vec_id, cluster_id = min member); vectors in no
         # pair are singletons. The keep decision is then near_dup_keep_list
         # (cluster_id == vec_id), same frozen rule as the text/image paths.
-        from simhash_spark.operators.connected_components import connected_components
         from simhash_spark.operators.dedup import embedding_near_dup as op
+        from simhash_spark.plans.pipeline import cluster_job
 
         emb = spark.read.parquet(_t(sf, "embeddings"))
-        pairs = op(emb, threshold=0.4, use_lsh=True, n_planes=8, n_tables=4).select(
-            "a", "b"
-        )
-        labels = connected_components(pairs)
-        all_ids = emb.select(F.col("vec_id"))
-        singletons = all_ids.join(
-            labels.select(F.col("id").alias("vec_id")), "vec_id", "left_anti"
-        )
-        return (
-            labels.select(F.col("id").alias("vec_id"), "cluster_id")
-            .unionByName(singletons.select("vec_id", F.col("vec_id").alias("cluster_id")))
-        )
+        pairs = op(emb, threshold=0.4, use_lsh=True, n_planes=8, n_tables=4)
+        ids = emb.select(F.col("vec_id").alias("image_id"))
+        return cluster_job(pairs, ids, CFG).withColumnRenamed("image_id", "vec_id")
 
     q["embedding_near_dup_clusters"] = embedding_near_dup_clusters
 

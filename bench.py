@@ -16,9 +16,9 @@ scaling efficiency.
 
 The image corpus is the BASELINE `input_hint` shape, synthesized
 deterministically (sources/fixtures.make_images_pdf, seed 42) and cached as
-parquet under .bench_cache/ — no external data. Bytes are omitted: the
-pipeline prunes `bytes` at the scan anyway (tests assert it), so shipping
-them would only benchmark parquet IO of random blobs.
+parquet under $SPARK_GRAFT_CACHE (default .bench_cache/) — no external data.
+Bytes are omitted: the pipeline prunes `bytes` at the scan anyway (tests
+assert it), so shipping them would only benchmark parquet IO of random blobs.
 """
 
 from __future__ import annotations
@@ -32,7 +32,8 @@ import sys
 import time
 
 REPO = pathlib.Path(__file__).resolve().parent
-CACHE = REPO / ".bench_cache"
+# one cache root for this harness and jobs/design_regime.py
+CACHE = pathlib.Path(os.environ.get("SPARK_GRAFT_CACHE", REPO / ".bench_cache")).resolve()
 
 # images-corpus rows per unit sf (sf0.1 -> 60k rows ~ lineitem's scale there)
 IMAGES_PER_SF = 600_000
@@ -46,42 +47,99 @@ def _sf_of(sf_dir: str) -> float:
         return 0.1
 
 
-def _write_corpus_chunk(args: tuple) -> None:
+def best_of(spark, fn, reps: int = 1) -> tuple[float, object]:
+    """The one timing discipline: the best wall of ``reps`` runs of ``fn()``
+    and what that run returned. Before each run, outside its timer:
+
+    - ``clearCache``: several image-fixture queries cache their fingerprint
+      table and never unpersist (fine per call, poison across 55+
+      sequential stages: accumulated MemoryStore blocks inflated later
+      cheap stages 12-16x in a full r5-size run, text_stats 0.6 s isolated
+      vs 9.8 s late in session);
+    - a driver GC: the ContextCleaner releases shuffle files and broadcasts
+      only after one (default periodicGC.interval is 30 MIN), so without it
+      the first stage after earlier ones pays their debris (a 1.6%-rows
+      delta once read 2.4x the base wall)."""
+    best, best_out = float("inf"), None
+    for _ in range(max(1, reps)):
+        spark.catalog.clearCache()
+        spark.sparkContext._jvm.System.gc()
+        t0 = time.perf_counter()
+        out = fn()
+        wall = time.perf_counter() - t0
+        if wall < best:
+            best, best_out = wall, out
+    return best, best_out
+
+
+def sink(df) -> None:
+    """Run ``df`` to completion with nothing kept (count() would let
+    Catalyst prune UDF columns and skip their work)."""
+    df.write.format("noop").mode("overwrite").save()
+
+
+def _write_part(out: str, make_part, i: int, rows: int) -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    part = make_part(i, rows)
+    if not isinstance(part, pa.Table):
+        # image rows: the pyarrow twin of fixtures.INPUT_HINT_SCHEMA
+        schema = pa.schema(
+            [
+                ("image_id", pa.string()),
+                ("bytes", pa.binary()),
+                ("w", pa.int32()),
+                ("h", pa.int32()),
+                ("fmt", pa.string()),
+                ("caption", pa.string()),
+                ("phash", pa.int64()),
+            ]
+        )
+        part = pa.Table.from_pandas(part, schema=schema, preserve_index=False)
+    pq.write_table(part, pathlib.Path(out) / f"part-{i:04d}.parquet")
+
+
+def cached_corpus(name: str, n_rows: int, chunk: int, make_part) -> pathlib.Path:
+    """``CACHE/name``, built once: part ``i`` of ``n_rows`` in ``chunk``-row
+    parts is ``make_part(i, rows)``, a pyarrow table or image rows as a
+    pandas frame. Parts are built by a process pool of at most
+    ``session.default_parallelism()`` workers, so this MUST run before any
+    SparkSession exists (fork safety)."""
+    import multiprocessing as mp
+
+    from simhash_spark.session import default_parallelism
+
+    out = CACHE / name
+    if (out / "_SUCCESS").exists():
+        return out
+    out.mkdir(parents=True, exist_ok=True)
+    jobs = [
+        (str(out), make_part, i, min(chunk, n_rows - i * chunk))
+        for i in range(-(-n_rows // chunk))
+    ]
+    with mp.Pool(min(len(jobs), default_parallelism())) as pool:
+        pool.starmap(_write_part, jobs)
+    (out / "_SUCCESS").touch()
+    return out
+
+
+def images_part(i: int, rows: int, seed: int = 42, with_bytes: bool = False):
+    """Part ``i`` of a fixture images corpus: seed ``seed + i``, ids
+    suffixed by the part so parts never collide."""
     from simhash_spark.sources.fixtures import make_images_pdf
 
-    out, i, n = args
-    pdf = make_images_pdf(n, seed=42 + i, with_bytes=False, hot_frac=0.002)
+    pdf = make_images_pdf(rows, seed=seed + i, with_bytes=with_bytes, hot_frac=0.002)
     pdf["image_id"] = pdf["image_id"] + f"_c{i:03d}"
-    pq.write_table(
-        pa.Table.from_pandas(pdf, preserve_index=False),
-        pathlib.Path(out) / f"part-{i:04d}.parquet",
-    )
+    return pdf
 
 
 def ensure_images_corpus(n_rows: int) -> pathlib.Path:
-    """Deterministic synthetic image+caption corpus, cached across runs.
-    Chunks are generated by a process pool (pure-python row generator);
-    MUST be called before any SparkSession exists (fork safety)."""
-    out = CACHE / f"images_{n_rows}_v2"
-    done = out / "_SUCCESS"
-    if done.exists():
-        return out
-    import multiprocessing as mp
-
-    out.mkdir(parents=True, exist_ok=True)
-    # enough files that a local[32] scan has >=2 tasks per core
-    chunk = max(1_000, min(50_000, n_rows // 64))
-    n_chunks = (n_rows + chunk - 1) // chunk
-    jobs = [
-        (str(out), i, min(chunk, n_rows - i * chunk)) for i in range(n_chunks)
-    ]
-    with mp.Pool(min(16, os.cpu_count() or 8)) as pool:
-        pool.map(_write_corpus_chunk, jobs)
-    done.touch()
-    return out
+    """Deterministic synthetic image+caption corpus without payloads,
+    cached, in parts of n/64 rows (1k-50k): several scan tasks per core."""
+    return cached_corpus(
+        f"images_{n_rows}_v2", n_rows, max(1_000, min(50_000, n_rows // 64)), images_part
+    )
 
 
 def run_queries(
@@ -111,9 +169,6 @@ def run_queries(
     timings: dict[str, float] = {}
     meta: dict[str, float] = {}
 
-    def sink(df):
-        df.write.format("noop").mode("overwrite").save()
-
     # JVM + python-worker warmup (excluded from timings): one tiny pandas-UDF
     # pass forks the Arrow workers and imports numpy/pandas in each — a
     # one-time cluster cost that a real deployment amortizes over the corpus
@@ -124,7 +179,7 @@ def run_queries(
         [(str(i), f"warm up caption {i}", 0) for i in range(256)],
         "image_id string, caption string, phash long",
     ).repartition(cpus)
-    with_fingerprints(warm, CFG).write.format("noop").mode("overwrite").save()
+    sink(with_fingerprints(warm, CFG))
 
     # best-of-N per stage: this sandbox shows 2-3x run-to-run variance from
     # CPU steal (identical code measured 39-97 s total across draws), so a
@@ -133,27 +188,9 @@ def run_queries(
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2"))
 
     def timed(name, fn):
-        # drop cached blocks BEFORE the stage, outside its timer: several
-        # image-fixture queries cache their fingerprint table and never
-        # unpersist (fine per call, poison across 55+ sequential stages —
-        # accumulated MemoryStore blocks inflated later cheap stages 12-16x
-        # in a full r5-size run: text_stats 0.6 s isolated vs 9.8 s late in
-        # session; r4's 43-stage run didn't hit the cliff)
-        spark.catalog.clearCache()
-        # ContextCleaner releases shuffle files / broadcasts only after a
-        # driver GC (default periodicGC.interval is 30 MIN — longer than
-        # this whole bench); force one per stage, outside the timer
-        spark.sparkContext._jvm.System.gc()
-        # returns what the best (reported) repetition's fn() returned
-        best, best_out = float("inf"), None
-        for _ in range(max(1, reps)):
-            t0 = time.time()
-            out = fn()
-            wall = time.time() - t0
-            if wall < best:
-                best, best_out = wall, out
-        timings[name] = round(best, 3)
-        return best_out
+        wall, out = best_of(spark, fn, reps)
+        timings[name] = round(wall, 3)
+        return out
 
     # ---- image near-dup pipeline (the headline) ----
     # Stages materialize to tmpfs parquet between steps, mirroring the

@@ -270,28 +270,18 @@ def ngram_near_dup_clusters(
     weight/split decision operators apply unchanged on these labels).
 
     Plan: the audited ONE-exchange shared-counts core builds the pair set;
-    CC is the O(log n) star loop (bounded driver fast path under the edge
-    limit); the singleton union is a left-anti broadcast against the slim
-    label table. Nothing here is new machinery — the operator exists so a
-    pure n-gram dedup run composes from queries the driver checks.
+    ``pipeline.cluster_job`` labels it (the O(log n) star loop, bounded
+    driver fast path under the edge limit, and the frozen singleton rule).
+    Nothing here is new machinery — the operator exists so a pure n-gram
+    dedup run composes from queries the driver checks.
     """
-    from simhash_spark.operators.connected_components import connected_components
+    from simhash_spark.config import DEFAULT_CONFIG
+    from simhash_spark.plans.pipeline import cluster_job
 
     pairs = ngram_jaccard_pairs(df, id_col, text_col, n, threshold, shingle_doc_cap)
-    labels = connected_components(
-        pairs.select(
-            F.col("a").cast("string").alias("a"), F.col("b").cast("string").alias("b")
-        )
-    )
-    ids = df.select(F.col(id_col).cast("string").alias("_id"))
-    singletons = ids.join(
-        labels.select(F.col("id").alias("_id")), "_id", "left_anti"
-    )
-    return labels.select(F.col("id").alias(id_col), "cluster_id").unionByName(
-        singletons.select(
-            F.col("_id").alias(id_col), F.col("_id").alias("cluster_id")
-        )
-    )
+    pairs = pairs.select(F.col("a").cast("string").alias("a"), F.col("b").cast("string").alias("b"))
+    ids = df.select(F.col(id_col).cast("string").alias("image_id"))
+    return cluster_job(pairs, ids, DEFAULT_CONFIG).withColumnRenamed("image_id", id_col)
 
 
 def near_dup_keep_list(clusters: DataFrame, id_col: str = "doc_id") -> DataFrame:

@@ -217,3 +217,53 @@ def test_session_heap_within_host_budget(spark):
     assert int(default_driver_memory().rstrip("g")) * 2**30 <= max(budget, 2**30)
     max_heap = spark.sparkContext._jvm.java.lang.Runtime.getRuntime().maxMemory()
     assert max_heap <= max(budget, 2**30)
+
+
+def test_regime_harness_timing_and_ladder_table(monkeypatch):
+    """The harness without Spark: ``bench.best_of`` returns the minimum wall
+    and THAT repetition's output, with clearCache and a driver GC before
+    every repetition; the design_regime parser has one flag per ladder, and
+    every design_regime command quoted in the docs parses with it."""
+    import re
+    import shlex
+    import time
+    import types
+
+    import bench
+    from jobs import design_regime
+
+    calls = []
+    spark = types.SimpleNamespace(
+        catalog=types.SimpleNamespace(clearCache=lambda: calls.append("clear")),
+        sparkContext=types.SimpleNamespace(
+            _jvm=types.SimpleNamespace(
+                System=types.SimpleNamespace(gc=lambda: calls.append("gc"))
+            )
+        ),
+    )
+    # (start, end) per repetition: walls 5, 2, 3 -> the second one is best
+    clock = iter([0.0, 5.0, 10.0, 12.0, 20.0, 23.0])
+    monkeypatch.setattr(time, "perf_counter", lambda: next(clock))
+    outputs = iter(["first", "second", "third"])
+
+    def fn():
+        calls.append("run")
+        return next(outputs)
+
+    assert bench.best_of(spark, fn, 3) == (2.0, "second")
+    assert calls == ["clear", "gc", "run"] * 3
+
+    ap = design_regime.build_parser()
+    ladder_flags = {
+        s for a in ap._actions for s in a.option_strings if s not in ("-h", "--help", "--cpus")
+    }
+    assert ladder_flags == {f"--{flag}" for flag in design_regime.LADDERS}
+    assert all(ap.get_default(flag.replace("-", "_")) == 0 for flag in design_regime.LADDERS)
+
+    quoted = []
+    for doc in [REPO / "README.md", *sorted((REPO / "BENCH").glob("*.md"))]:
+        text = " ".join(doc.read_text().split())
+        quoted += re.findall(r"jobs/design_regime\.py((?: --?[\w-]+(?: \d+)?)*)", text)
+    assert quoted
+    for cmd in quoted:
+        ap.parse_args(shlex.split(cmd))
