@@ -32,7 +32,15 @@ from functools import partial
 
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 
-from bench import CACHE, best_of, cached_corpus, ensure_images_corpus, images_part, sink  # noqa: E402
+from bench import (  # noqa: E402
+    CACHE,
+    best_of,
+    cached_corpus,
+    ensure_images_corpus,
+    images_part,
+    sink,
+    warm_up,
+)
 from simhash_spark.config import DEFAULT_CONFIG as CFG  # noqa: E402
 
 DIM = 64  # embedding corpus dimension
@@ -102,6 +110,13 @@ def ensure_embeddings_corpus(n: int) -> pathlib.Path:
     return cached_corpus(f"embeddings_{n}_d{DIM}_v1", n, max(10_000, min(100_000, n // 32)), _vec_part)
 
 
+def _parquet_rows(d: pathlib.Path) -> int:
+    """Rows of a parquet directory, from its files' footers."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.read_metadata(f).num_rows for f in d.glob("*.parquet"))
+
+
 def _symlink_dir(out: pathlib.Path, links: dict) -> pathlib.Path:
     """``out`` as a directory of symlinks ``{name: target}``, built once."""
     if not (out / "_SUCCESS").exists():
@@ -114,18 +129,31 @@ def _symlink_dir(out: pathlib.Path, links: dict) -> pathlib.Path:
 
 
 def _delta_corpus(n: int) -> tuple:
-    """(full, base, increment) for --delta: a file-level split carving the
-    last ~1% of part files off as the increment — the corpus is written in
-    independent parts, so this is exactly the append-arrival shape."""
+    """(full, base, increment) for --delta: the increment is the last
+    ``max(1, n // 100)`` rows of the corpus (1% from 100 rows up), carved
+    off the tail of its last part files — the append-arrival shape. Whole
+    parts are symlinked; the one part the cut falls inside is split in two
+    files, so base ∪ increment is the full corpus row for row."""
+    import pyarrow.parquet as pq
+
     full = ensure_images_corpus(n)
-    parts = sorted(full.glob("part-*.parquet"))
-    k = max(1, len(parts) // 100)
-    split = CACHE / f"delta_split_{n}"
-    return (
-        full,
-        _symlink_dir(split / "base", {p.name: p for p in parts[:-k]}),
-        _symlink_dir(split / "inc", {p.name: p for p in parts[-k:]}),
-    )
+    split = CACHE / f"delta_split_{n}_v2"
+    if not (split / "_SUCCESS").exists():
+        shutil.rmtree(split, ignore_errors=True)
+        for side in ("base", "inc"):
+            (split / side).mkdir(parents=True)
+        need = max(1, n // 100)
+        for p in sorted(full.glob("part-*.parquet"), reverse=True):
+            rows = pq.read_metadata(p).num_rows
+            if 0 < need < rows:
+                t = pq.read_table(p)
+                pq.write_table(t.slice(0, rows - need), split / "base" / p.name)
+                pq.write_table(t.slice(rows - need), split / "inc" / p.name)
+            else:
+                os.symlink(p, split / ("inc" if need else "base") / p.name)
+            need -= min(need, rows)
+        (split / "_SUCCESS").touch()
+    return full, split / "base", split / "inc"
 
 
 def _inc_part(i: int, rows: int, base: pathlib.Path):
@@ -634,6 +662,7 @@ def _delta_fold(spark, n, paths, exp: pathlib.Path, byte_exact: bool) -> tuple:
     from simhash_spark.plans.pipeline import run_pipeline
 
     full_dir, base_dir, inc_dir = paths
+    inc_rows = _parquet_rows(inc_dir)
     shutil.rmtree(exp, ignore_errors=True)  # fresh catalogs: no resume skips
     # the adaptive index config on BOTH sides, as the production CLI picks it
     # — a 4-block full run at 1M rows would sit in the quadratic-collision
@@ -651,7 +680,8 @@ def _delta_fold(spark, n, paths, exp: pathlib.Path, byte_exact: bool) -> tuple:
     )
     return {
         "n_blocks": cfg.n_blocks,
-        "increment_rows": spark.read.parquet(str(inc_dir)).count(),
+        "inc_rows": inc_rows,
+        "inc_frac": round(inc_rows / _parquet_rows(full_dir), 6),
         "wall_full_s": round(full_s, 1),
         "wall_base_s": round(base_s, 1),
         "wall_delta_s": round(delta_s, 1),
@@ -662,7 +692,7 @@ def _delta_fold(spark, n, paths, exp: pathlib.Path, byte_exact: bool) -> tuple:
 
 def run_delta_maintenance(spark, n, paths) -> dict:
     """The batch-incremental maintenance experiment (plans/delta.py) at n
-    images with a file-level ~1% increment."""
+    images with a 1% increment carved by rows (``_delta_corpus``)."""
     rec, _ = _delta_fold(spark, n, paths, CACHE / f"delta_exp_{n}", byte_exact=False)
     return {"rows": n, **rec}
 
@@ -757,7 +787,8 @@ LADDERS = {
     ),
     "delta": dict(
         stage="delta_maintenance", corpus=_delta_corpus, rungs=single, run=run_delta_maintenance,
-        help="full pipeline at ROWS images vs base(~99%%) + run_delta(~1%% increment)",
+        help="full pipeline at ROWS images vs base (99%%) + run_delta folding the last "
+        "ROWS/100 rows (1%%; inc_rows/inc_frac in the record)",
     ),
     "delta-byte": dict(
         stage="delta_byte", corpus=_delta_byte_corpus, rungs=single, run=run_delta_byte,
@@ -787,8 +818,6 @@ def main(argv: list[str] | None = None) -> None:
     # corpora BEFORE the JVM (process-pool fork safety)
     paths = {(ladder["stage"], n): ladder["corpus"](n) for ladder, rungs in todo for n in rungs}
 
-    from pyspark.sql import functions as F
-
     from simhash_spark.session import get_spark
 
     big = any(ladder.get("big_shuffle") for ladder, _ in todo)
@@ -797,7 +826,7 @@ def main(argv: list[str] | None = None) -> None:
         app_name="design-regime",
         shuffle_partitions=max(256, args.cpus * 2) if big else None,
     )
-    spark.range(1_000_000).select(F.sum("id")).collect()  # JVM warmup
+    warm_up(spark)
 
     results: dict[str, list] = {}
     for ladder, rungs in todo:

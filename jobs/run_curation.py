@@ -38,18 +38,51 @@ holds the SCRUBBED text (the shipped artifact — the pre-scrub original is
 dropped, not retained), next to the PII audit counts and the rest of the
 input schema.
 
-Stage boundaries that feed 2+ downstream actions are MATERIALIZED to parquet
-under ``<output>/_stages/`` (the exact-dedup survivors and the slim cluster
-labels): Spark recomputes a lazy chain per action, and before the pins the
-fingerprint-UDF near-dup pipeline ran 3-4x per run (keep join, cluster
-count, final write) — measured 28 s -> ~8 s for the near-dup stage at
-sf0.1. The pins double as inspectable/resumable artifacts, exactly the
-CheckpointCatalog argument from the image pipeline. Stages 1-2 stay lazy
-(zero-shuffle scan projections; only the cheap audit collect re-runs them),
-so each stage's wall_s still includes its narrow upstream lineage — the
-numbers monitor drift run-over-run, not isolated stage cost.
+Each document is evaluated once. Stages 1-2 are one projection (quality
+reason -> keep filter -> PII scrub) that runs in exactly one write, pinned
+as ``<output>/_stages/02_scrubbed``; decontamination and exact dedup read
+the pin. ``quality_filter`` costs about 1-1.7 core-ms per doc (4-vCPU
+host), so every extra evaluation of it is a corpus-sized cost. The other stage
+boundaries that feed 2+ downstream actions are pinned to parquet under
+``<output>/_stages/`` too — the exact-dedup survivors (``03_exact``), the
+slim cluster labels (``04_clusters``), the dirty-id set (``02b_decontaminate_dirty``) and
+the semantic survivors (``04b_semantic``): Spark recomputes a lazy chain
+per action, and before the pins the fingerprint-UDF near-dup pipeline ran
+3-4x per run (keep join, cluster count, final write) — measured 28 s -> ~8 s
+for the near-dup stage at sf0.1. The pins double as inspectable/resumable
+artifacts, exactly the CheckpointCatalog argument from the image pipeline.
+A pin is read back with the schema it was written with, so the read-back
+starts no schema-inference job.
 
-Scale shape: stages 1-2 are zero-shuffle projections fused into the scan;
+Where each stat comes from — none starts a Spark job of its own:
+
+- ``rows_in``: the footers of the input parquet files;
+- quality ``rows_out`` / ``dropped`` and the PII ``redacted`` totals:
+  ``StageObservations`` on the ``02_scrubbed`` write (one
+  ``sum(reason = r)`` per rule in the frozen order plus ``ok``; only
+  non-zero reasons are reported, as a ``groupBy`` would);
+- exact ``rows_out`` (also the row count ``index_config_for`` sizes the
+  near-dup index from), decontamination ``dropped`` and semantic
+  ``rows_out``: the footers of the pinned files just written;
+- near-dup ``clusters``: observed on the ``04_clusters`` write, as the
+  label rows whose id equals their cluster_id (the frozen min-id rule
+  labels exactly one member per cluster with itself);
+- near-dup and sample ``rows_out`` and the split counts: observed on the
+  next write that consumes those rows (``04b_semantic`` or the output);
+- output ``rows_out`` and ``shard_counts``: the footers of the files
+  written.
+
+Walls: a stage's ``wall_s`` runs from its start to the end of its last
+action, so it includes the lazy lineage that action evaluates, and a lazy
+stage reports only the time to build its plan. The ``02_scrubbed`` write
+holds quality and PII together: its wall is the ``wall_s`` of the last
+stage in it (``pii_scrub`` when PII runs, else ``quality_filter``), and
+``quality_filter``'s ``wall_s`` then covers only building its plan. The
+near-dup keep join and the sample filter likewise run inside the next
+write, whose ``wall_s`` holds them. The numbers monitor drift run-over-run,
+not isolated stage cost.
+
+Scale shape: stages 1-2 are one zero-shuffle projection fused into the scan;
 stage 3 is one map-combined hash agg; stage 4 is the audited one-exchange
 candidate plan + CC; stage 5 is a pure projection. Nothing here collects
 unbounded data to the driver.
@@ -127,50 +160,78 @@ def run_curation(
         near_dup_keep_list,
         near_dup_sample_weights,
     )
-    from simhash_spark.operators.textops import quality_filter
+    from simhash_spark.operators.textops import _QUALITY_RULE_ORDER, quality_filter
     from simhash_spark.plans.text_dedup import text_near_dup_clusters
+    from simhash_spark.sources.catalog import StageObservations
 
     if near_dup_policy not in ("keep", "weight"):
         raise ValueError(f"near_dup_policy must be 'keep' or 'weight': {near_dup_policy!r}")
-
-    t0 = time.time()
-    df = spark.read.parquet(input_path)
-    stats: dict = {"rows_in": df.count(), "stages": []}
-
-    if quality:
-        ts = time.time()
-        q = quality_filter(df, text_col)
-        hist = {r["reason"]: r["n"] for r in
-                q.groupBy("reason").agg(F.count(F.lit(1)).alias("n")).collect()}
-        df = q.where(F.col("keep") == 1).drop("keep", "reason")
-        stats["stages"].append({"stage": "quality_filter",
-                                "rows_out": hist.get("ok", 0),
-                                "dropped": {k: v for k, v in hist.items() if k != "ok"},
-                                "wall_s": round(time.time() - ts, 2)})
-
-    if pii:
-        ts = time.time()
-        df = pii_scrub(df, text_col)
-        tot = df.agg(F.sum("n_email").alias("e"), F.sum("n_ipv4").alias("i"),
-                     F.sum("n_phone").alias("p")).collect()[0]
-        # downstream dedup runs on the SCRUBBED text (rows differing only in
-        # redacted PII are duplicates of the shipped artifact)
-        df = df.drop(text_col).withColumnRenamed("clean_text", text_col)
-        stats["stages"].append({"stage": "pii_scrub",
-                                "redacted": {"email": tot["e"] or 0,
-                                             "ipv4": tot["i"] or 0,
-                                             "phone": tot["p"] or 0},
-                                "wall_s": round(time.time() - ts, 2)})
 
     def _pin(d, name):
         # materialize a stage boundary that feeds 2+ downstream actions:
         # lazy recompute would otherwise re-run the whole upstream chain
         # (incl. the fingerprint UDF) per action. Parquet, not persist() —
         # MemoryStore contention at high parallelism (CLAUDE.md), and the
-        # file doubles as an inspectable artifact of the run.
-        p = str(pathlib.Path(output_path) / "_stages" / name)
-        d.write.mode("overwrite").parquet(p)
-        return spark.read.parquet(p)
+        # file doubles as an inspectable artifact of the run. Returns the
+        # read-back (written schema, no inference job) and its footer rows.
+        p = pathlib.Path(output_path) / "_stages" / name
+        d.write.mode("overwrite").parquet(str(p))
+        return spark.read.schema(d.schema).parquet(str(p)), _parquet_rows(p)
+
+    # (stage entry, observations) whose "rows_out" the next write that
+    # consumes the observed rows fills; that write's plan must hold the
+    # observed frame exactly once
+    observed_rows: list[tuple[dict, StageObservations]] = []
+
+    def _observe_rows(d, stage):
+        obs = StageObservations()
+        observed_rows.append((stage, obs))
+        return obs.observe(d, F.count(F.lit(1)).alias("rows"))
+
+    t0 = time.time()
+    df = spark.read.parquet(input_path)
+    stats: dict = {"rows_in": _parquet_rows(input_path), "stages": []}
+
+    # stages 1-2: one projection, evaluated once, in the 02_scrubbed write
+    # that also observes their stats
+    ts = time.time()
+    if quality:
+        q_obs = StageObservations()
+        reasons = (*_QUALITY_RULE_ORDER, "ok")
+        df = q_obs.observe(
+            quality_filter(df, text_col),
+            *[F.sum((F.col("reason") == r).cast("long")).alias(r) for r in reasons],
+        ).where(F.col("keep") == 1).drop("keep", "reason")
+        q_stage = {"stage": "quality_filter", "rows_out": 0, "dropped": {},
+                   "wall_s": round(time.time() - ts, 2)}
+        stats["stages"].append(q_stage)
+        ts = time.time()
+
+    if pii:
+        pii_obs = StageObservations()
+        df = pii_obs.observe(
+            pii_scrub(df, text_col),
+            *[F.sum(f"n_{k}").alias(k) for k in ("email", "ipv4", "phone")],
+        )
+        # downstream dedup runs on the SCRUBBED text (rows differing only in
+        # redacted PII are duplicates of the shipped artifact)
+        df = df.drop(text_col).withColumnRenamed("clean_text", text_col)
+        pii_stage = {"stage": "pii_scrub", "redacted": {}, "wall_s": 0.0}
+        stats["stages"].append(pii_stage)
+
+    if quality or pii:
+        df, _ = _pin(df, "02_scrubbed")
+        # the write's wall goes to the last stage it holds
+        stats["stages"][-1]["wall_s"] = round(time.time() - ts, 2)
+        if quality:
+            hist = q_obs.get()
+            q_stage["rows_out"] = hist.get("ok") or 0
+            q_stage["dropped"] = {
+                r: n for r in _QUALITY_RULE_ORDER if (n := hist.get(r) or 0)
+            }
+        if pii:
+            tot = pii_obs.get()
+            pii_stage["redacted"] = {k: tot.get(k) or 0 for k in ("email", "ipv4", "phone")}
 
     if decontaminate_path:
         # 2b — benchmark decontamination over the SCRUBBED text (the shipped
@@ -201,15 +262,12 @@ def run_curation(
                 df, bench, id_col=id_col, text_col=text_col,
                 bench_text_col=text_col, n=decontaminate_n,
             ).where(F.col("n_overlap") >= decontaminate_min_overlap)
-        # pin the SLIM dirty-id set: it feeds two actions (the count and the
-        # anti-join), and its lineage contains the whole quality+PII+bloom
-        # chain over the corpus — unpinned, that chain would run once per
-        # action (the CLAUDE.md recompute-per-branch rule); pinned, it runs
-        # once and the second action reads a dup-bounded parquet
-        dirty_ids = _pin(
+        # pin the SLIM dirty-id set: its lineage holds the Bloom/gram pass
+        # over the corpus, which the exact-dedup write would otherwise
+        # re-run in each of its branches; the count comes from its footers
+        dirty_ids, n_dirty = _pin(
             dirty.select(F.col("id").alias(id_col)), "02b_decontaminate_dirty"
         )
-        n_dirty = dirty_ids.count()
         df = df.join(dirty_ids, id_col, "left_anti")
         stats["stages"].append({
             "stage": "decontaminate",
@@ -224,8 +282,9 @@ def run_curation(
     # semi-join form keeps every audit column on the surviving row. Pinned:
     # feeds the near-dup fingerprint UDF, the keep join, and the final write.
     ts = time.time()
-    df = _pin(exact_dedup(df, id_col, text_col), "03_exact")
-    stats["stages"].append({"stage": "exact_dedup", "rows_out": df.count(),
+    df, n_exact = _pin(exact_dedup(df, id_col, text_col), "03_exact")
+    exact = survivors = df
+    stats["stages"].append({"stage": "exact_dedup", "rows_out": n_exact,
                             "wall_s": round(time.time() - ts, 2)})
 
     clusters = None
@@ -234,8 +293,8 @@ def run_curation(
         # corpus-size-adaptive pigeonhole width (the CLAUDE.md invariant:
         # scale paths pick blocks via index_config_for) — the 4-block/16-bit
         # DEFAULT_CONFIG goes quadratic in random candidate pairs past ~1e6
-        # rows, exactly like run_pipeline's sizing note. The count is over
-        # the ALREADY-PINNED exact-dedup survivors parquet (metadata-cheap).
+        # rows, exactly like run_pipeline's sizing note. The count is the
+        # exact-dedup pin's footer rows.
         from dataclasses import replace as _replace
 
         from simhash_spark.config import index_config_for
@@ -243,13 +302,16 @@ def run_curation(
         cfg = (
             _replace(DEFAULT_CONFIG, n_blocks=n_blocks)
             if n_blocks is not None
-            else index_config_for(df.count())
+            else index_config_for(n_exact)
         )
-        # pinned: the slim (id, cluster_id) labels feed BOTH the keep join
-        # and the cluster count — one near-dup pipeline run, not two
-        clusters = _pin(
-            text_near_dup_clusters(
-                df, id_col, text_col, cfg, enable_substring=substring
+        # pinned: the slim (id, cluster_id) labels feed the keep join, the
+        # split assignment and the resumable artifact — one near-dup
+        # pipeline run; the write observes the cluster count
+        c_obs = StageObservations()
+        clusters, _ = _pin(
+            c_obs.observe(
+                text_near_dup_clusters(df, id_col, text_col, cfg, enable_substring=substring),
+                F.sum((F.col(id_col) == F.col("cluster_id")).cast("long")).alias("clusters"),
             ),
             "04_clusters",
         )
@@ -270,14 +332,17 @@ def run_curation(
             keep = near_dup_keep_list(clusters, id_col=id_col).where("is_kept = 1")
             # cluster ids ride as strings; cast back to the input id type
             df = df.join(keep.select(F.col(id_col).cast(id_type).alias(id_col)), id_col)
-        stats["stages"].append({
+        nd_stage = {
             "stage": "near_dup",
             "policy": near_dup_policy,
-            "rows_out": df.count(),
-            "clusters": clusters.select("cluster_id").distinct().count(),
+            "rows_out": 0,
+            "clusters": c_obs.get().get("clusters") or 0,
             "substring_stage": bool(substring),
             "wall_s": round(time.time() - ts, 2),
-        })
+        }
+        stats["stages"].append(nd_stage)
+        survivors = df
+        df = _observe_rows(df, nd_stage)
 
     if embeddings_path:
         # 4b — semantic dedup (SemDeDup) over the CURRENT survivors'
@@ -293,21 +358,22 @@ def run_curation(
         from simhash_spark.operators.dedup import semdedup_keep
 
         emb = spark.read.parquet(embeddings_path)
-        n_cent = semantic_centroids or max(16, emb.count() // 1000)
+        n_cent = semantic_centroids or max(16, _parquet_rows(embeddings_path) // 1000)
         cent = ivf_fit(emb, n_centroids=n_cent)
         id_type = df.schema[id_col].dataType
         emb_surv = emb.select(
             F.col("vec_id").cast(id_type).alias(id_col),
             F.col("embedding").alias("vec"),
-        ).join(df.select(id_col), id_col, "left_semi")
+        ).join(survivors.select(id_col), id_col, "left_semi")
         sem = semdedup_keep(
             emb_surv, cent, threshold=semantic_tau, id_col=id_col, vec_col="vec"
         )
         sem_drops = sem.where("is_kept = 0").select(id_col)
         # pinned: the anti-joined survivors feed sample/split/write/pack —
-        # lazy recompute would re-run the semdedup kernel per action
-        df = _pin(df.join(sem_drops, id_col, "left_anti"), "04b_semantic")
-        n_out = df.count()
+        # lazy recompute would re-run the semdedup kernel per action. The
+        # id restriction above reads ``survivors``, not ``df``: ``df``
+        # carries the near-dup row observation, which this write fills.
+        df, n_out = _pin(df.join(sem_drops, id_col, "left_anti"), "04b_semantic")
         stats["stages"].append({
             "stage": "semantic_dedup",
             "rows_out": n_out,
@@ -326,51 +392,61 @@ def run_curation(
             df, id_col, stratum_col=stratum_col or id_col,
             rates=rates, default_rate=default_rate,
         )
-        stats["stages"].append({"stage": "sample", "rows_out": df.count(),
-                                "default_rate": default_rate, "rates": rates,
-                                "wall_s": round(time.time() - ts, 2)})
+        sample_stage = {"stage": "sample", "rows_out": 0,
+                        "default_rate": default_rate, "rates": rates,
+                        "wall_s": round(time.time() - ts, 2)}
+        stats["stages"].append(sample_stage)
+        df = _observe_rows(df, sample_stage)
 
     if splits:
         ts = time.time()
         # leakage-safe split: by near-dup cluster when the stage ran (the
-        # labels are pinned above), else each doc is its own cluster
-        lab = clusters if clusters is not None else df.select(
+        # labels are pinned above), else each doc is its own cluster. Both
+        # label sets cover the exact-dedup survivors, a superset of df.
+        lab = clusters if clusters is not None else exact.select(
             F.col(id_col).cast("string").alias(id_col),
             F.col(id_col).cast("string").alias("cluster_id"),
         )
         sp = assign_splits(lab, fractions=splits)
-        df = df.join(
-            sp.select(
-                F.col(id_col).cast(df.schema[id_col].dataType).alias(id_col), "split"
+        names = list(dict.fromkeys([*splits, "test"]))  # assign_splits' rest name
+        split_obs = StageObservations()
+        df = split_obs.observe(
+            df.join(
+                sp.select(
+                    F.col(id_col).cast(df.schema[id_col].dataType).alias(id_col), "split"
+                ),
+                id_col,
             ),
-            id_col,
+            *[F.sum((F.col("split") == n).cast("long")).alias(n) for n in names],
         )
-        counts = {r["split"]: r["n"] for r in
-                  df.groupBy("split").agg(F.count(F.lit(1)).alias("n")).collect()}
-        stats["stages"].append({"stage": "split", "fractions": splits,
-                                "split_counts": counts,
-                                "wall_s": round(time.time() - ts, 2)})
+        split_stage = {"stage": "split", "fractions": splits, "split_counts": {},
+                       "wall_s": round(time.time() - ts, 2)}
+        stats["stages"].append(split_stage)
 
     ts = time.time()
-    out_dir = str(pathlib.Path(output_path) / "documents")
+    out_dir = pathlib.Path(output_path) / "documents"
     if n_shards:
         df = df.withColumn(
             "shard",
             F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(n_shards)).cast("int"),
         )
-        df.write.mode("overwrite").partitionBy("shard").parquet(out_dir)
+        df.write.mode("overwrite").partitionBy("shard").parquet(str(out_dir))
     else:
-        df.write.mode("overwrite").parquet(out_dir)
-    out_df = spark.read.parquet(out_dir)
-    stats["rows_out"] = out_df.count()
+        df.write.mode("overwrite").parquet(str(out_dir))
+    stats["rows_out"] = _parquet_rows(out_dir)
     write_stage: dict = {"stage": "write", "rows_out": stats["rows_out"],
                          "wall_s": round(time.time() - ts, 2)}
     if n_shards:
         write_stage["shard_counts"] = {
-            int(r["shard"]): r["n"]
-            for r in out_df.groupBy("shard").agg(F.count(F.lit(1)).alias("n")).collect()
+            int(d.name.partition("=")[2]): _parquet_rows(d)
+            for d in out_dir.glob("shard=*")
         }
     stats["stages"].append(write_stage)
+    for stage, obs in observed_rows:
+        stage["rows_out"] = obs.get().get("rows", 0)
+    if splits:
+        got = split_obs.get()
+        split_stage["split_counts"] = {n: c for n in names if (c := got.get(n) or 0)}
 
     if pack_ctx:
         from simhash_spark.operators.curation import token_pack_plan
@@ -378,7 +454,8 @@ def run_curation(
         ts = time.time()
         pack_dir = str(pathlib.Path(output_path) / "pack_plan")
         token_pack_plan(
-            out_df, id_col, text_col, ctx_len=pack_ctx, shard_chars=pack_shard_chars
+            spark.read.parquet(str(out_dir)), id_col, text_col,
+            ctx_len=pack_ctx, shard_chars=pack_shard_chars,
         ).write.mode("overwrite").parquet(pack_dir)
         plan = spark.read.parquet(pack_dir)
         agg = plan.agg(
@@ -400,6 +477,16 @@ def run_curation(
 
     stats["wall_s"] = round(time.time() - t0, 2)
     return stats
+
+
+def _parquet_rows(path) -> int:
+    """Rows of a parquet file or directory, from its files' footers: starts
+    no Spark job, and is not fooled by a cached DataFrame over the same
+    path. pyarrow's discovery skips the ``_``/``.``-prefixed files (e.g.
+    ``_SUCCESS``) that Spark skips."""
+    import pyarrow.dataset as pads
+
+    return pads.dataset(str(path), format="parquet").count_rows()
 
 
 def main(argv: list[str] | None = None) -> int:

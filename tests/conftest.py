@@ -21,3 +21,23 @@ def spark():
     s = get_spark(parallelism=4, app_name="simhash-tests", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def jobs_started(spark):
+    """``jobs_started(fn)``: the number of Spark jobs ``fn()`` starts,
+    counted through a job group."""
+    import uuid
+
+    def count(fn) -> int:
+        sc = spark.sparkContext
+        group = f"jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

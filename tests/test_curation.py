@@ -578,28 +578,46 @@ def test_run_curation_cli_stage_accounting(spark, tmp_path, capsys):
 
     from jobs.run_curation import main as curation_main
     from simhash_spark.operators.curation import pii_scrub, stratified_sample
+    from simhash_spark.operators.dedup import exact_dedup, near_dup_keep_list
     from simhash_spark.operators.textops import quality_filter
 
     src = "/root/testdata/sf0.001/documents.parquet"
+    # a cached DataFrame over the input swaps the file scan out of every
+    # plan over that path; rows_in must still count the input's rows
+    docs = spark.read.parquet(src).cache()
+    n_docs = docs.count()
     rc = curation_main(
         ["--input", src, "--output", str(tmp_path / "out"),
          "--substring", "--sample-rate", "0.8"]
     )
     assert rc == 0
     stats = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    docs = spark.read.parquet(src)
-    assert stats["rows_in"] == docs.count()
+    docs.unpersist()
+    assert stats["rows_in"] == n_docs
 
     by_stage = {s["stage"]: s for s in stats["stages"]}
     q = quality_filter(docs, "text")
-    n_ok = q.where("keep = 1").count()
-    assert by_stage["quality_filter"]["rows_out"] == n_ok
-    assert sum(by_stage["quality_filter"]["dropped"].values()) == docs.count() - n_ok
+    hist = {r["reason"]: r["n"] for r in
+            q.groupBy("reason").agg(F.count(F.lit(1)).alias("n")).collect()}
+    assert by_stage["quality_filter"]["rows_out"] == hist.get("ok", 0)
+    assert by_stage["quality_filter"]["dropped"] == {
+        k: v for k, v in hist.items() if k != "ok"
+    }
 
     kept_q = q.where("keep = 1").drop("keep", "reason")
     scrubbed = pii_scrub(kept_q, "text")
-    want_email = scrubbed.agg(F.sum("n_email")).collect()[0][0] or 0
-    assert by_stage["pii_scrub"]["redacted"]["email"] == want_email
+    tot = scrubbed.agg(F.sum("n_email"), F.sum("n_ipv4"), F.sum("n_phone")).collect()[0]
+    assert by_stage["pii_scrub"]["redacted"] == {
+        "email": tot[0] or 0, "ipv4": tot[1] or 0, "phone": tot[2] or 0,
+    }
+    clean = scrubbed.drop("text").withColumnRenamed("clean_text", "text")
+    assert by_stage["exact_dedup"]["rows_out"] == exact_dedup(clean, "doc_id", "text").count()
+
+    labels = spark.read.parquet(str(tmp_path / "out" / "_stages" / "04_clusters"))
+    assert by_stage["near_dup"]["clusters"] == labels.select("cluster_id").distinct().count()
+    assert by_stage["near_dup"]["rows_out"] == (
+        near_dup_keep_list(labels, id_col="doc_id").where("is_kept = 1").count()
+    )
 
     out = spark.read.parquet(str(tmp_path / "out" / "documents"))
     assert stats["rows_out"] == out.count() == by_stage["sample"]["rows_out"]
@@ -610,6 +628,37 @@ def test_run_curation_cli_stage_accounting(spark, tmp_path, capsys):
     pre_sample_ids = {r["doc_id"] for r in out.collect()}
     resample = stratified_sample(out, "doc_id", "doc_id", {}, default_rate=0.8)
     assert {r["doc_id"] for r in resample.collect()} == pre_sample_ids  # idempotent
+
+
+def test_run_curation_evaluates_each_document_once(spark, tmp_path, jobs_started):
+    """Tripwire against second passes over the per-document projection:
+    with the near-dup stage off, turning quality + PII on adds exactly the
+    jobs of one bare parquet write of their plan. Their stats are observed
+    during that write, and exact dedup reads its pinned output, so no
+    histogram/totals collect and no count runs, and no later write
+    re-evaluates the quality rules."""
+    from pyspark.sql import functions as F
+
+    from jobs.run_curation import run_curation
+    from simhash_spark.operators.curation import pii_scrub
+    from simhash_spark.operators.textops import quality_filter
+
+    src = f"{SF}/documents.parquet"
+    off = jobs_started(
+        lambda: run_curation(
+            spark, src, str(tmp_path / "off"), quality=False, pii=False, near_dup=False
+        )
+    )
+    stats = {}
+    on = jobs_started(
+        lambda: stats.update(run_curation(spark, src, str(tmp_path / "on"), near_dup=False))
+    )
+    kept = quality_filter(spark.read.parquet(src), "text").where(F.col("keep") == 1)
+    plan = pii_scrub(kept.drop("keep", "reason"), "text")
+    bare = jobs_started(lambda: plan.write.parquet(str(tmp_path / "bare")))
+    assert bare >= 1 and on - off == bare
+    # and the stats that write observed are the real ones
+    assert stats["stages"][0]["rows_out"] == spark.read.parquet(str(tmp_path / "bare")).count()
 
 
 def test_run_curation_semantic_stage_is_the_tier_ladder(spark, tmp_path):

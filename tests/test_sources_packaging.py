@@ -158,22 +158,7 @@ def test_catalog_write_invalidates_manifest_before_clobber(spark, tmp_path):
     assert out.count() == 5 and cat.is_complete("s1", "fpB")
 
 
-def _jobs_started(spark, fn) -> int:
-    """Number of Spark jobs ``fn()`` starts, counted through a job group."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_catalog_write_starts_only_the_write_jobs(spark, tmp_path):
+def test_catalog_write_starts_only_the_write_jobs(spark, tmp_path, jobs_started):
     """Tripwire against post-write metric passes: a stage written through
     CheckpointCatalog (with observed metrics) starts exactly the jobs of a
     bare parquet write of the same plan — lineage rows come from the file
@@ -192,11 +177,10 @@ def test_catalog_write_starts_only_the_write_jobs(spark, tmp_path):
         )
         return df if observe is None else observe(df, F.sum("n").alias("rows"))
 
-    bare = _jobs_started(spark, lambda: plan().write.parquet(str(tmp_path / "bare")))
+    bare = jobs_started(lambda: plan().write.parquet(str(tmp_path / "bare")))
     cat = CheckpointCatalog(spark, tmp_path / "cat")
     obs = StageObservations()
-    staged = _jobs_started(
-        spark,
+    staged = jobs_started(
         lambda: cat.run_stage(
             "s", "fp", lambda: plan(obs.observe), extra_metrics=lambda: obs.get()
         ),
