@@ -1721,10 +1721,9 @@ _CHECK_LAST = [
     # exact pair core runs inside the new cluster query's checked plan;
     # still bit-exact-checked every session by the local sweep
     "ngram_jaccard",
-    # demoted for phash_distance_histogram: driver-green in r4, its frozen
-    # boundary rule additionally PROVEN equal to Spark's native
-    # session_window by the streaming differential (test_streaming), and
-    # still bit-exact-checked every session by the local sweep
+    # demoted for phash_distance_histogram: driver-green in r4, and its
+    # frozen boundary rule is still bit-exact-checked every session by the
+    # local sweep
     "events_sessionize",
     # demoted for lsh_bucket_stats: double-green (r3+r4); the contamination
     # family stays driver-covered by its span/excise/excise_raw rows (the

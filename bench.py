@@ -259,78 +259,11 @@ def run_queries(
             )
         shutil.rmtree(ck, ignore_errors=True)
 
-    # ---- operator queries over the driver tables ----
-    qs = entrymod.queries() if include_operator_queries else {}
-    for name in () if not include_operator_queries else (
-        "hash_agg",
-        "scan_filter_project",
-        "equi_join_topk",
-        "window_rank",
-        "events_hourly_agg",
-        "events_sessionize",
-        "exact_dedup_groups",
-        "ngram_jaccard",
-        "ngram_containment",
-        "ngram_near_dup_clusters",
-        "decontaminate_overlap",
-        "bloom_decontaminate",
-        "decontaminate_spans",
-        "decontaminate_excise",
-        "decontaminate_excise_raw",
-        "dedup_repeated_blocks",
-        "ann_recall_eval",
-        "vocab_stats",
-        "image_keep_best",
-        "image_exact_dup_bytes",
-        "image_near_dup_from_bytes",
-        "leakage_safe_split",
-        "dup_distance_histogram",
-        "phash_distance_histogram",
-        "lsh_bucket_stats",
-        "minhash_est_eval",
-        "bpe_merge_stats",
-        "tfidf_top_terms",
-        "token_pack_plan",
-        "token_pack_stats",
-        "dedup_pipeline_report",
-        "image_dedup_funnel",
-        "image_tier_labels",
-        "image_tier_labels_semantic",
-        "image_embedding_search",
-        "token_budget_sample_docs",
-        "text_stats",
-        "quality_filter_docs",
-        "pii_scrub_docs",
-        "ann_topk",
-        "ann_cosine_range",
-        "ann_srp_range",
-        "ann_ivf_topk",
-        "ann_ivf_range",
-        "srp_topk",
-        "embedding_near_dup_lsh",
-        "embedding_near_dup_clusters",
-        "semdedup_keep",
-        "semdedup_tau_sweep",
-        "semdedup_label_eval",
-        "dedup_tier_labels",
-        "source_mix_plan",
-        "simhash_fingerprints",
-        "substring_pairs_docs",
-        "substring_run_report",
-        "text_near_dup_clusters",
-        "cross_source_pairs",
-        "dedup_source_report",
-        "near_dup_sample_weights",
-        "image_near_dup_clusters",
-        "phash_reverse_search",
-        "image_quality_filter",
-        "caption_alignment_filter",
-        "dedup_truth_eval",
-        "dup_kind_report",
-        "image_features",
-        "audio_features",
-    ):
-        timed(name, lambda n=name: sink(qs[n](spark, sf_dir)))
+    # ---- operator queries over the driver tables: every query the entry
+    # module publishes ----
+    if include_operator_queries:
+        for name, fn in entrymod.queries().items():
+            timed(name, lambda fn=fn: sink(fn(spark, sf_dir)))
 
     # ---- composed curation CLI, end-to-end (r4 verdict #4) ----
     # the frozen 5-stage production composition (quality -> PII -> exact ->

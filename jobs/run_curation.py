@@ -8,8 +8,8 @@ rows, so the order is load-bearing and recorded in the stats output):
     2. PII scrub        (redact emails/IPv4/phones, curation.pii_scrub)
     2b. decontamination (optional --decontaminate-benchmark <parquet>: drop
                          docs sharing >= min-overlap word-n-grams with the
-                         eval set, over the SCRUBBED text — same order as
-                         the streaming gate; --decontaminate-mode picks the
+                         eval set, over the SCRUBBED text — the shipped
+                         artifact; --decontaminate-mode picks the
                          zero-exchange Bloom pass (default, one-sided) or
                          the exact broadcast gram join)
     3. exact dedup      (md5 groups, keep min id — on the SCRUBBED text,
@@ -235,7 +235,7 @@ def run_curation(
 
     if decontaminate_path:
         # 2b — benchmark decontamination over the SCRUBBED text (the shipped
-        # artifact; same stage order as the streaming curation gate). Bloom
+        # artifact). Bloom
         # mode is the 10^12 shape: the eval set compresses to a frozen-rule
         # filter and the corpus side is one zero-exchange vectorized pass —
         # one-sided, so contaminated docs can never survive (a ~5.6e-4/gram

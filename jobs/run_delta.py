@@ -49,7 +49,7 @@ def main(argv: list[str] | None = None) -> int:
         "Requires a byte-exact chain. The semantic rung is NOT offered here: "
         "SemDeDup's keep rule is not add-only (a new member can change a "
         "cell's keeper), so semantic attribution needs a full run_pipeline "
-        "--pixel-embeddings pass or the streaming online-SemDeDup door",
+        "--pixel-embeddings pass",
     )
     ap.add_argument(
         "--alignment-filter",
@@ -81,9 +81,12 @@ def main(argv: list[str] | None = None) -> int:
     )
     args = ap.parse_args(argv)
 
+    from pyspark.sql import functions as F
+
     from simhash_spark.operators.dedup import near_dup_keep_best, near_dup_keep_list
     from simhash_spark.plans.delta import chain_run_metadata, run_delta
     from simhash_spark.session import get_spark
+    from simhash_spark.sources.catalog import CheckpointCatalog, StageObservations
 
     spark = get_spark(parallelism=args.parallelism, app_name="simhash-delta")
     t0 = time.time()
@@ -97,12 +100,16 @@ def main(argv: list[str] | None = None) -> int:
         )
     res = run_delta(spark, args.base_checkpoint, args.increment, args.checkpoint)
 
+    # every stat is a delta-catalog manifest or observed by an output write
     out = pathlib.Path(args.output)
-    res.clusters.write.mode("overwrite").parquet(str(out / "clusters"))
+    obs = StageObservations()
+    obs.observe(
+        res.clusters,
+        # labels are min-id: one row per cluster carries its own id
+        F.sum((F.col("image_id") == F.col("cluster_id")).cast("long")).alias("clusters"),
+    ).write.mode("overwrite").parquet(str(out / "clusters"))
     res.verified_new.write.mode("overwrite").parquet(str(out / "verified_pairs_delta"))
     if args.keep_rule == "best-resolution":
-        from pyspark.sql import functions as F
-
         # the union corpus's (image_id, w, h): every chain link records its
         # input path in its 01 manifest, the increment is this run's input.
         # Column pruning keeps the re-scan to three columns.
@@ -114,8 +121,9 @@ def main(argv: list[str] | None = None) -> int:
         keep = near_dup_keep_best(res.clusters, scores, id_col="image_id", score_col="score")
     else:
         keep = near_dup_keep_list(res.clusters, id_col="image_id")
-    keep.write.mode("overwrite").parquet(str(out / "keep_list"))
-    align_stats = {}
+    obs.observe(keep, F.sum("is_kept").alias("kept")).write.mode("overwrite").parquet(
+        str(out / "keep_list")
+    )
     if args.alignment_filter:
         # the increment's newly-KEPT rows only: per-row pure verdict, so
         # the base's existing alignment rows remain valid verbatim (the
@@ -128,17 +136,11 @@ def main(argv: list[str] | None = None) -> int:
         inc_kept = spark.read.parquet(args.increment).join(
             keep_r.where("is_kept = 1").select("image_id"), "image_id", "left_semi"
         )
-        align = caption_pixel_alignment(inc_kept, tau_bp=args.alignment_tau)
-        align.write.mode("overwrite").parquet(str(out / "alignment_delta"))
-        align = spark.read.parquet(str(out / "alignment_delta"))
-        align_stats = {
-            "alignment_delta_rows": align.count(),
-            "misaligned_delta": align.where("keep = 0").count(),
-            "alignment_tau_bp": args.alignment_tau,
-        }
-    from simhash_spark.sources.catalog import CheckpointCatalog
-
-    cat = CheckpointCatalog(spark, args.checkpoint)
+        obs.observe(
+            caption_pixel_alignment(inc_kept, tau_bp=args.alignment_tau),
+            F.count(F.lit(1)).alias("alignment_delta_rows"),
+            F.sum((F.col("keep") == 0).cast("long")).alias("misaligned_delta"),
+        ).write.mode("overwrite").parquet(str(out / "alignment_delta"))
     if args.tier_labels:
         from simhash_spark.plans.delta import read_chain_stage
         from simhash_spark.plans.pipeline import assemble_tiers, run_tier_drops
@@ -149,24 +151,28 @@ def main(argv: list[str] | None = None) -> int:
         )
         tiers = assemble_tiers(corpus, drops)
         tiers.write.mode("overwrite").parquet(str(out / "tier_labels"))
-    bx_stats = {}
-    if cat.manifest("00b_bytes_delta"):
+    # an observed node that AQE pruned saw no rows and reports no key
+    seen = obs.get()
+    cat = CheckpointCatalog(spark, args.checkpoint)
+    stats = {}
+    bx = cat.manifest("00b_bytes_delta")
+    if bx:
         # byte-exact chain: how many increment rows the 00b index suppressed
         # (re-uploads that never paid the fingerprint UDF or any later stage)
-        bx_stats["byte_suppressed"] = (
-            cat.read("00b_bytes_delta").where("image_id != keep_id").count()
-        )
-    stats = {
-        **bx_stats,
-        **align_stats,
-        "increment_rows": res.fingerprints_new.count(),
-        "candidates_delta": res.candidates_new.count(),
-        "verified_delta": res.verified_new.count(),
-        "rows_total": res.clusters.count(),
-        "clusters": res.clusters.select("cluster_id").distinct().count(),
-        "kept": keep.where("is_kept = 1").count(),
-        "wall_s": round(time.time() - t0, 2),
-    }
+        stats["byte_suppressed"] = bx.get("byte_suppressed") or 0
+    if args.alignment_filter:
+        stats["alignment_delta_rows"] = seen.get("alignment_delta_rows") or 0
+        stats["misaligned_delta"] = seen.get("misaligned_delta") or 0
+        stats["alignment_tau_bp"] = args.alignment_tau
+    stats.update(
+        increment_rows=cat.manifest("01_fingerprints_delta")["n_rows"],
+        candidates_delta=cat.manifest("02_candidates_delta")["n_rows"],
+        verified_delta=cat.manifest("03_verified_delta")["n_rows"],
+        rows_total=cat.manifest("04_clusters")["n_rows"],
+        clusters=seen.get("clusters") or 0,
+        kept=seen.get("kept") or 0,
+        wall_s=round(time.time() - t0, 2),
+    )
     print(json.dumps(stats))
     return 0
 

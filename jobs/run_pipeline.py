@@ -111,7 +111,7 @@ def main(argv: list[str] | None = None) -> int:
         "never pays any downstream stage. run_delta folds increments into "
         "the 00b index under an exact per-digest add-only guard (raises if "
         "an increment row would demote a base keeper; out-of-order byte "
-        "arrivals belong to the streaming first-seen path)",
+        "arrivals need a fresh full run)",
     )
     ap.add_argument(
         "--tier-labels",

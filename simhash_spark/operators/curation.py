@@ -563,41 +563,6 @@ def repeated_blocks_oracle_sql(
 # ------------------------------------------------ Bloom-filter decontamination
 
 
-def build_benchmark_bloom(
-    benchmark: DataFrame,
-    bench_text_col: str = "text",
-    n: int = 5,
-    bits_per_key: int = 16,
-    k_probes: int = 8,
-    max_bench_grams: int = 5_000_000,
-) -> tuple[np.ndarray, int]:
-    """Build the benchmark-side Bloom filter ONCE -> (uint64 words, m_bits).
-
-    A bounded distinct-hash collect (the reference side is definitionally
-    small — an eval suite is 10^6-10^7 grams) feeding the frozen
-    functions/bloom.py sizing; shared by the batch operator and the
-    streaming curation gate, whose filter must be built at stream setup,
-    not per micro-batch."""
-    from simhash_spark.functions.bloom import bloom_build, make_gram_fnv_hashes_udf
-    from simhash_spark.spec import i64_to_u64
-
-    gh = make_gram_fnv_hashes_udf(n)
-    rows = (
-        benchmark.select(F.explode(gh(F.col(bench_text_col))).alias("h"))
-        .distinct()
-        .limit(max_bench_grams + 1)
-        .collect()
-    )
-    if len(rows) > max_bench_grams:
-        raise ValueError(
-            f"benchmark side exceeds max_bench_grams={max_bench_grams} distinct "
-            "n-grams — a Bloom reference set this large is almost certainly a "
-            "swapped corpus/benchmark argument; raise the cap explicitly if not"
-        )
-    hashes = i64_to_u64(np.array([r.h for r in rows], dtype=np.int64))
-    return bloom_build(hashes, bits_per_key, k_probes)
-
-
 def bloom_contamination_counts(
     corpus: DataFrame,
     benchmark: DataFrame,
@@ -632,11 +597,28 @@ def bloom_contamination_counts(
     All frozen rules (grams, FNV, sizing, probes) live in
     functions/bloom.py and are mirrored per-row by tests/gen_expected.py.
     """
-    from simhash_spark.functions.bloom import make_bloom_overlap_udf
-
-    words, m_bits = build_benchmark_bloom(
-        benchmark, bench_text_col, n, bits_per_key, k_probes, max_bench_grams
+    from simhash_spark.functions.bloom import (
+        bloom_build,
+        make_bloom_overlap_udf,
+        make_gram_fnv_hashes_udf,
     )
+    from simhash_spark.spec import i64_to_u64
+
+    gh = make_gram_fnv_hashes_udf(n)
+    rows = (
+        benchmark.select(F.explode(gh(F.col(bench_text_col))).alias("h"))
+        .distinct()
+        .limit(max_bench_grams + 1)
+        .collect()
+    )
+    if len(rows) > max_bench_grams:
+        raise ValueError(
+            f"benchmark side exceeds max_bench_grams={max_bench_grams} distinct "
+            "n-grams — a Bloom reference set this large is almost certainly a "
+            "swapped corpus/benchmark argument; raise the cap explicitly if not"
+        )
+    hashes = i64_to_u64(np.array([r.h for r in rows], dtype=np.int64))
+    words, m_bits = bloom_build(hashes, bits_per_key, k_probes)
     ov = make_bloom_overlap_udf(words, m_bits, k_probes, n)
     return corpus.select(
         F.col(id_col).alias("id"), ov(F.col(text_col)).alias("_b")
@@ -756,14 +738,6 @@ def _rate_threshold(rate: float) -> str:
     if rate >= 1.0:
         return "zzzz"
     return format(max(0, int(rate * 65536)), "04x")
-
-
-def keep_col(key_col, rate: float):
-    """Deterministic keep decision at ``rate``: first 4 hex chars of
-    md5(string(key)) compared lexicographically against the rate threshold.
-    Content-stable (same key -> same decision on any engine/cluster/run) and
-    uniform (md5 prefix is uniform over [0, 16^4))."""
-    return F.substring(F.md5(key_col.cast("string")), 1, 4) < F.lit(_rate_threshold(rate))
 
 
 def stratified_sample(

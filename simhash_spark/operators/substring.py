@@ -1,4 +1,4 @@
-"""Substring stage — winnowing anchors co-locate docs, suffix arrays verify.
+"""Substring stage — winnowing anchors co-locate docs, an exact run check verifies.
 
 Catches near-identical caption RUNS that shingle-based fingerprints miss
 (BASELINE.json:6; Lee et al., ACL 2022 use a corpus suffix array for the same
@@ -8,15 +8,14 @@ purpose). Spark-first decomposition:
    any two docs sharing a normalized substring of >= L chars share >= 1
    anchor hash (Schleimer'03 winnowing guarantee) — this turns the global
    substring-search problem into an equi-join key, so NO cross-partition
-   suffix array is ever needed.
+   suffix array is needed.
 2. anchor buckets -> C(s,2) candidate pairs, deduplicated ACROSS anchors
    (near-identical docs share dozens of anchors; verifying per pair instead
    of per anchor group was measured 3.7x faster at sf0.1).
 3. one exact verification per distinct pair (window-set shared-run check,
    equivalent to the LCP >= L predicate) in a batched mapInPandas. Hash
-   collisions die here. The suffix-array/Kasai machinery (suffix_array /
-   lcp_kasai / _group_pairs) remains as the bulk per-group verifier;
-   tests/test_properties.py checks its pair set against _shares_run.
+   collisions die here; tests/test_properties.py checks the predicate
+   against a brute-force substring search.
 
 Hot anchors (boilerplate prefixes shared by millions of captions) are capped
 at ``bucket_cap`` docs per anchor with a deterministic keep rule; dropped
@@ -28,100 +27,11 @@ from __future__ import annotations
 from collections.abc import Callable
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from simhash_spark.config import PipelineConfig
 from simhash_spark.functions.udfs import make_winnow_udf
-
-
-def suffix_array(codes: np.ndarray) -> np.ndarray:
-    """Suffix array by prefix doubling — O(n log^2 n) in numpy argsorts."""
-    n = len(codes)
-    rank = np.asarray(codes, dtype=np.int64)
-    idx = np.arange(n)
-    k = 1
-    sa = np.argsort(rank, kind="stable")
-    while True:
-        key2 = np.where(idx + k < n, np.concatenate([rank[k:], np.full(min(k, n), -1)])[:n], -1)
-        order = np.lexsort((key2, rank))
-        new_rank = np.zeros(n, dtype=np.int64)
-        r_o, k_o = rank[order], key2[order]
-        changed = np.ones(n, dtype=bool)
-        changed[1:] = (r_o[1:] != r_o[:-1]) | (k_o[1:] != k_o[:-1])
-        new_rank[order] = np.cumsum(changed) - 1
-        rank = new_rank
-        sa = order
-        if rank[order[-1]] == n - 1:
-            return sa
-        k *= 2
-
-
-def lcp_kasai(codes: np.ndarray, sa: np.ndarray) -> np.ndarray:
-    """Kasai LCP: lcp[i] = LCP(suffix sa[i-1], suffix sa[i]); lcp[0] = 0."""
-    n = len(codes)
-    rank = np.zeros(n, dtype=np.int64)
-    rank[sa] = np.arange(n)
-    lcp = np.zeros(n, dtype=np.int64)
-    h = 0
-    for i in range(n):
-        r = rank[i]
-        if r > 0:
-            j = sa[r - 1]
-            while i + h < n and j + h < n and codes[i + h] == codes[j + h]:
-                h += 1
-            lcp[r] = h
-            if h:
-                h -= 1
-        else:
-            h = 0
-    return lcp
-
-
-def _group_pairs(pdf: pd.DataFrame, min_len: int, max_pairs: int) -> pd.DataFrame:
-    """One anchor group: exact shared-substring >= min_len doc pairs via SA."""
-    ids = pdf["id"].tolist()
-    texts = pdf["norm"].tolist()
-    if len(ids) < 2:
-        return pd.DataFrame({"a": [], "b": []}, dtype=str)
-    # concatenate with unique negative sentinels between docs
-    codes_parts, doc_of_parts = [], []
-    for d, t in enumerate(texts):
-        codes_parts.append(np.frombuffer(t.encode("ascii", "replace"), dtype=np.uint8).astype(np.int64))
-        codes_parts.append(np.array([-(d + 1)], dtype=np.int64))
-        doc_of_parts.append(np.full(len(texts[d]) + 1, d, dtype=np.int64))
-    codes = np.concatenate(codes_parts)
-    doc_of = np.concatenate(doc_of_parts)
-    # shift to non-negative for ranking
-    sa = suffix_array(codes - codes.min())
-    lcp = lcp_kasai(codes, sa)
-    # maximal intervals with adjacent LCP >= min_len: all docs inside share a
-    # >= min_len prefix -> every distinct doc pair qualifies
-    hit = lcp >= min_len
-    pairs: set[tuple[str, str]] = set()
-    i = 0
-    n = len(hit)
-    while i < n:
-        if hit[i]:
-            j = i
-            while j < n and hit[j]:
-                j += 1
-            docs = np.unique(doc_of[sa[i - 1 : j]])
-            if len(docs) > 1:
-                for x in range(len(docs)):
-                    for y in range(x + 1, len(docs)):
-                        a, b = ids[docs[x]], ids[docs[y]]
-                        pairs.add((a, b) if a < b else (b, a))
-                        if len(pairs) >= max_pairs:
-                            break
-            i = j
-        else:
-            i += 1
-    if not pairs:
-        return pd.DataFrame({"a": [], "b": []}, dtype=str)
-    srt = sorted(pairs)
-    return pd.DataFrame({"a": [p[0] for p in srt], "b": [p[1] for p in srt]})
 
 
 def _shares_run(a: str, b: str, min_len: int) -> bool:
@@ -437,9 +347,7 @@ def substring_pairs(
     verification per pair. Earlier formulation ran the group suffix-array
     verify once per anchor GROUP — near-identical docs share dozens of
     anchors, so at sf0.1 that was 7,422 group verifications for only 3,847
-    distinct pairs (46 s -> ~3 s after the dedup). The SA/LCP machinery
-    (suffix_array / lcp_kasai / _group_pairs) remains the bulk verifier for
-    grouped use, checked against _shares_run in tests/test_properties.py.
+    distinct pairs (46 s -> ~3 s after the dedup).
     """
     anchors = winnow_anchor_table(df, cfg, id_col, caption_col)
     cand = pairs_from_anchor_table(anchors, cfg)

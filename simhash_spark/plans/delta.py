@@ -2,9 +2,8 @@
 
 At web scale the corpus is append-mostly: a daily increment arrives next to
 a fingerprinted + clustered base of 10^12 rows. Re-running the full pipeline
-re-pays fingerprinting AND candidate generation over the whole base; the
-streaming path (streaming/incremental.py) handles micro-batches, this module
-is the same idea at batch cadence against checkpointed state. Per update it
+re-pays fingerprinting AND candidate generation over the whole base; this
+module folds the increment in against checkpointed state. Per update it
 touches only:
 
 - the NEW rows' fingerprints (one UDF pass over the increment),
@@ -25,8 +24,8 @@ the only genuinely new information is pairs touching an increment row, and
 the star edges replay each touched component's membership into the merge
 CC (labels are min-id, and the star vertex set is the full old component,
 so the merged min is the true min). Buckets past the cap degrade to the
-same connectivity-preserving chain guarantee as the batch and streaming
-paths (chains may differ between a base+delta and a full run; clusters
+same connectivity-preserving chain guarantee as the batch path (chains
+may differ between a base+delta and a full run; clusters
 agree for content that actually verifies as duplicate).
 """
 
@@ -58,7 +57,11 @@ from simhash_spark.plans.pipeline import (
     singleton_labels,
     verify_job,
 )
-from simhash_spark.sources.catalog import CheckpointCatalog, input_fingerprint_of
+from simhash_spark.sources.catalog import (
+    CheckpointCatalog,
+    StageObservations,
+    input_fingerprint_of,
+)
 
 
 def incremental_candidates(
@@ -278,7 +281,6 @@ def chain_run_metadata(spark: SparkSession, ckpt_path: str | pathlib.Path) -> di
 @dataclass
 class DeltaRunResult:
     fingerprints_new: DataFrame
-    candidates_new: DataFrame
     verified_new: DataFrame
     clusters: DataFrame
 
@@ -304,9 +306,9 @@ def run_delta(
     within-increment min id — the full-run min, since the group lives
     wholly in the increment), under an exact per-digest add-only guard
     that raises if an increment row would DEMOTE a base keeper (the one
-    case batch folding cannot express; out-of-order byte arrivals belong
-    to the streaming first-seen rule). With the guard green, the delta
-    labels equal the full byte-exact run's (tests/test_delta.py).
+    case batch folding cannot express; out-of-order byte arrivals need a
+    fresh full run). With the guard green, the delta labels equal the full
+    byte-exact run's (tests/test_delta.py).
 
     Resumable like run_pipeline: every delta stage lands in the new catalog
     under a lineage fingerprint that embeds the base's, so a crashed delta
@@ -386,13 +388,12 @@ def run_delta(
         # undercuts the base keeper of a digest it shares — such a row
         # would DEMOTE an already-fingerprinted, already-clustered keeper,
         # which an add-only fold cannot express. That case raises with the
-        # offending rows; out-of-order arrivals need the streaming
-        # first-seen rule (streaming/incremental.py::stream_byte_first_seen)
-        # or a fresh full run.
+        # offending rows; out-of-order arrivals need a fresh full run.
         bx_base = read_chain_stage(
             spark, base_checkpoint, "00b_bytes", "00b_bytes_delta"
         )
         bx_src_new = src_new
+        bx_obs = StageObservations()
 
         def _bytes_delta() -> DataFrame:
             inc_h = bx_src_new.where(F.col("bytes").isNotNull()).select(
@@ -406,7 +407,7 @@ def run_delta(
                 .groupBy("digest")
                 .agg(F.min("keep_id").alias("base_keep_id"))
             )
-            return (
+            bx = (
                 inc_h.join(base_keep, "digest", "left")
                 .withColumn("inc_min", byte_keep_col("digest"))
                 .select(
@@ -415,16 +416,25 @@ def run_delta(
                     F.coalesce("base_keep_id", "inc_min").alias("keep_id"),
                 )
             )
+            # the manifest records how many increment rows the index
+            # suppressed, counted during the stage's own write
+            return bx_obs.observe(
+                bx,
+                F.sum((F.col("image_id") != F.col("keep_id")).cast("long")).alias(
+                    "byte_suppressed"
+                ),
+            )
 
-        bx_new = cat.run_stage("00b_bytes_delta", in_fp, _bytes_delta)
+        bx_new = cat.run_stage(
+            "00b_bytes_delta", in_fp, _bytes_delta, extra_metrics=bx_obs.get
+        )
         demoted = bx_new.where(F.col("image_id") < F.col("keep_id")).limit(3).collect()
         if demoted:
             raise ValueError(
                 "run_delta: increment rows undercut base byte-tier keepers "
                 "(min-id rule would demote an already-indexed row): "
                 + ", ".join(f"{r['image_id']} < {r['keep_id']}" for r in demoted)
-                + " — out-of-order byte arrivals need stream_byte_first_seen "
-                "or a fresh full run"
+                + " — out-of-order byte arrivals need a fresh full run"
             )
         src_new = src_new.join(
             bx_new.where(F.col("image_id") != F.col("keep_id")).select("image_id"),
@@ -486,7 +496,7 @@ def run_delta(
         in_fp,
         lambda: incremental_cluster_update(base_clusters, verified, fp_new),
     )
-    return DeltaRunResult(fp_new, cand, verified, clusters)
+    return DeltaRunResult(fp_new, verified, clusters)
 
 
 def compact_chain(

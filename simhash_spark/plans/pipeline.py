@@ -85,7 +85,7 @@ def verify_job(
 
     ``use_phash`` must match the run's ``include_phash``: the flag removes
     the phash AXIS (keys and verify criterion together), the same rule the
-    text/delta/streaming paths apply — a phash-only dup verified here but
+    text and delta paths apply — a phash-only dup verified here but
     not by a chained delta run would break the delta equality contract."""
     return verify_pairs(candidates, fp, cfg, use_phash=use_phash)
 

@@ -131,8 +131,6 @@ def spread_small_input(df, min_partitions: int | None = None):
     NO shuffle is added. The added exchange for small inputs moves the raw
     rows once, before any per-row expansion multiplies the volume.
     """
-    if df.isStreaming:  # .rdd is undefined for streaming plans
-        return df
     target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)

@@ -22,7 +22,6 @@ from simhash_spark.operators.curation import (
     contamination_counts,
     contamination_oracle_sql,
     decontaminate,
-    keep_col,
     stratified_sample,
     stratified_sample_oracle_sql,
 )
@@ -206,20 +205,6 @@ def test_budget_sample_oracle_dialect_matches(spark, docs):
     ora = sorted(con.sql(sql).df()["doc_id"].tolist())
     assert got == ora
 
-
-def test_keep_col_matches_python_md5(spark):
-    import hashlib
-
-    df = spark.range(0, 2000).select(F.col("id"))
-    kept = sorted(
-        r["id"] for r in df.where(keep_col(F.col("id"), 0.3)).collect()
-    )
-    expect = sorted(
-        i
-        for i in range(2000)
-        if hashlib.md5(str(i).encode()).hexdigest()[:4] < _rate_threshold(0.3)
-    )
-    assert kept == expect
 
 def test_budget_sample_null_stratum_follows_default_budget(spark):
     """r4 regression (ADVICE): NULL-stratum rows were silently DROPPED —

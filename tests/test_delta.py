@@ -509,3 +509,84 @@ def test_run_delta_cli_alignment_delta(spark, tmp_path):
     assert got == expect
     reasons = {v[3] for v in got.values()}
     assert "ok" in reasons and "misaligned" in reasons
+
+
+def test_run_delta_cli_stats_start_no_count_pass(spark, tmp_path, jobs_started, capsys):
+    """Tripwire against count passes after the fold: the delta CLI starts
+    exactly the jobs of run_delta plus bare writes of its outputs. Its stats
+    come from the delta catalog's manifests and from observations on those
+    writes, and equal the counts they replace."""
+    import json
+
+    from jobs.run_delta import main as delta_main
+    from simhash_spark.operators.dedup import near_dup_keep_list
+    from simhash_spark.operators.multimodal import caption_pixel_alignment
+    from simhash_spark.plans.delta import run_delta
+    from simhash_spark.plans.pipeline import run_pipeline
+    from simhash_spark.sources.catalog import CheckpointCatalog
+    from simhash_spark.sources.fixtures import (
+        INPUT_HINT_SCHEMA,
+        make_images_pdf,
+        plant_alignment_tints,
+        plant_byte_reuploads,
+    )
+
+    pdf = plant_byte_reuploads(
+        plant_alignment_tints(make_images_pdf(200, seed=11, with_bytes=True))
+    )
+    base_p, inc_p = str(tmp_path / "base.parquet"), str(tmp_path / "inc.parquet")
+    for p, part in ((base_p, pdf.iloc[:120]), (inc_p, pdf.iloc[120:])):
+        spark.createDataFrame(part, schema=INPUT_HINT_SCHEMA).coalesce(1).write.parquet(p)
+    base = str(tmp_path / "ck_base")
+    run_pipeline(spark, base_p, base, CFG, byte_exact=True)
+
+    res = {}
+    run = jobs_started(
+        lambda: res.update(d=run_delta(spark, base, inc_p, str(tmp_path / "ck_run")))
+    )
+
+    def bare_writes():
+        d, o = res["d"], tmp_path / "bare"
+        d.clusters.write.parquet(str(o / "clusters"))
+        d.verified_new.write.parquet(str(o / "verified_pairs_delta"))
+        near_dup_keep_list(d.clusters, id_col="image_id").write.parquet(str(o / "keep_list"))
+        kept = spark.read.parquet(str(o / "keep_list")).where("is_kept = 1")
+        inc_kept = spark.read.parquet(inc_p).join(
+            kept.select("image_id"), "image_id", "left_semi"
+        )
+        caption_pixel_alignment(inc_kept, tau_bp=8500).write.parquet(
+            str(o / "alignment_delta")
+        )
+
+    writes = jobs_started(bare_writes)
+    ck, out = tmp_path / "ck_cli", tmp_path / "out_cli"
+    argv = [
+        "--base-checkpoint", base,
+        "--increment", inc_p,
+        "--checkpoint", str(ck),
+        "--output", str(out),
+        "--alignment-filter",
+    ]
+    capsys.readouterr()
+    cli = jobs_started(lambda: delta_main(argv))
+    assert run >= 1 and writes >= 1 and cli == run + writes
+
+    stats = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    cat = CheckpointCatalog(spark, ck)
+    clusters = spark.read.parquet(str(out / "clusters"))
+    align = spark.read.parquet(str(out / "alignment_delta"))
+    want = {
+        "byte_suppressed": cat.read("00b_bytes_delta").where("image_id != keep_id").count(),
+        "alignment_delta_rows": align.count(),
+        "misaligned_delta": align.where("keep = 0").count(),
+        "alignment_tau_bp": 8500,
+        "increment_rows": cat.read("01_fingerprints_delta").count(),
+        "candidates_delta": cat.read("02_candidates_delta").count(),
+        "verified_delta": cat.read("03_verified_delta").count(),
+        "rows_total": clusters.count(),
+        "clusters": clusters.select("cluster_id").distinct().count(),
+        "kept": spark.read.parquet(str(out / "keep_list")).where("is_kept = 1").count(),
+        "wall_s": stats["wall_s"],
+    }
+    assert stats == want
+    assert want["byte_suppressed"] and want["misaligned_delta"] and want["verified_delta"]

@@ -338,7 +338,7 @@ def test_pipeline_manifest_metrics_match_standalone(spark, fixture_dir, tmp_path
 
 def test_include_phash_false_removes_phash_axis_end_to_end(spark, tmp_path):
     """include_phash=False must remove the phash AXIS (keys AND verify
-    criterion), the same rule the text/delta/streaming paths apply — a
+    criterion), the same rule the text and delta paths apply — a
     phash-only dup verified by the full run but not by a chained delta run
     would break the delta equality contract.
 
