@@ -880,8 +880,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["text_near_dup_clusters"] = text_near_dup_clusters
 
     def text_near_dup_clusters_substr(spark, sf):
-        # the flagship with the suffix-array substring stage composed in
-        # (SURVEY O15): substring candidates verify unconditionally
+        # the flagship with the substring stage composed in (SURVEY O15):
+        # winnow-anchor pairs verify unconditionally
         from simhash_spark.plans.text_dedup import text_near_dup_clusters as op
 
         return op(
@@ -1280,15 +1280,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # cluster's highest-RESOLUTION member (score = w*h, ties -> min
         # image_id) — the image-payload analog of near_dup_keep_best and
         # the keep rule a LAION-style curation run actually publishes.
-        # Reuses the generic operator (dedup.py) over the flagship
-        # pipeline's clusters; scores are a pure projection of the source
+        # The CLIs' keep rule (plans.pipeline.image_keep_list) over the
+        # flagship pipeline's clusters; scores are a pure projection of the source
         # (no bytes read), so the only new cost over the cluster job is
         # one slim score join + one cluster_id window exchange.
-        from simhash_spark.operators.dedup import near_dup_keep_best
         from simhash_spark.plans.pipeline import (
             candidate_job,
             cluster_job,
             fingerprint_job,
+            image_keep_list,
             verify_job,
         )
         from simhash_spark.sources.fixtures import INPUT_HINT_SCHEMA, make_images_pdf
@@ -1297,10 +1297,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         src = spark.createDataFrame(pdf, schema=INPUT_HINT_SCHEMA)
         fp = fingerprint_job(spark, src, CFG).cache()
         clusters = cluster_job(verify_job(candidate_job(fp, CFG), fp, CFG), fp, CFG)
-        scores = src.select(
-            "image_id", (F.col("w").cast("long") * F.col("h").cast("long")).alias("score")
-        )
-        return near_dup_keep_best(clusters, scores, id_col="image_id", score_col="score")
+        return image_keep_list(clusters, "best-resolution", lambda: src)
 
     q["image_keep_best"] = image_keep_best
 

@@ -110,13 +110,6 @@ def ensure_embeddings_corpus(n: int) -> pathlib.Path:
     return cached_corpus(f"embeddings_{n}_d{DIM}_v1", n, max(10_000, min(100_000, n // 32)), _vec_part)
 
 
-def _parquet_rows(d: pathlib.Path) -> int:
-    """Rows of a parquet directory, from its files' footers."""
-    import pyarrow.parquet as pq
-
-    return sum(pq.read_metadata(f).num_rows for f in d.glob("*.parquet"))
-
-
 def _symlink_dir(out: pathlib.Path, links: dict) -> pathlib.Path:
     """``out`` as a directory of symlinks ``{name: target}``, built once."""
     if not (out / "_SUCCESS").exists():
@@ -648,21 +641,22 @@ def run_bloom(spark, n, path) -> dict:
     }
 
 
-def _delta_fold(spark, n, paths, exp: pathlib.Path, byte_exact: bool) -> tuple:
+def _delta_fold(spark, n, paths, exp: pathlib.Path, byte_exact: bool) -> dict:
     """Full run_pipeline over base ∪ increment vs a base run + run_delta
     folding the increment into its catalog: walls, the recompute/delta
     ratio and label agreement (exact equality is the contract when no
     bucket exceeds the cap; the corpus's hot caption deliberately exceeds
     it, so agreement is reported, not asserted — the equality gate lives in
-    tests/test_delta.py). Returns (record, the run_delta result)."""
+    tests/test_delta.py)."""
     from pyspark.sql import functions as F
 
     from simhash_spark.config import index_config_for
     from simhash_spark.plans.delta import run_delta
     from simhash_spark.plans.pipeline import run_pipeline
+    from simhash_spark.sources.catalog import parquet_rows
 
     full_dir, base_dir, inc_dir = paths
-    inc_rows = _parquet_rows(inc_dir)
+    inc_rows = parquet_rows(inc_dir)
     shutil.rmtree(exp, ignore_errors=True)  # fresh catalogs: no resume skips
     # the adaptive index config on BOTH sides, as the production CLI picks it
     # — a 4-block full run at 1M rows would sit in the quadratic-collision
@@ -681,20 +675,19 @@ def _delta_fold(spark, n, paths, exp: pathlib.Path, byte_exact: bool) -> tuple:
     return {
         "n_blocks": cfg.n_blocks,
         "inc_rows": inc_rows,
-        "inc_frac": round(inc_rows / _parquet_rows(full_dir), 6),
+        "inc_frac": round(inc_rows / parquet_rows(full_dir), 6),
         "wall_full_s": round(full_s, 1),
         "wall_base_s": round(base_s, 1),
         "wall_delta_s": round(delta_s, 1),
         "recompute_over_delta": round(full_s / delta_s, 1),
         "label_agreement": round(labels.where(F.col("c_full") == F.col("c_delta")).count() / labels.count(), 6),
-    }, delta
+    }
 
 
 def run_delta_maintenance(spark, n, paths) -> dict:
     """The batch-incremental maintenance experiment (plans/delta.py) at n
     images with a 1% increment carved by rows (``_delta_corpus``)."""
-    rec, _ = _delta_fold(spark, n, paths, CACHE / f"delta_exp_{n}", byte_exact=False)
-    return {"rows": n, **rec}
+    return {"rows": n, **_delta_fold(spark, n, paths, CACHE / f"delta_exp_{n}", byte_exact=False)}
 
 
 def run_delta_byte(spark, n, paths) -> dict:
@@ -708,13 +701,15 @@ def run_delta_byte(spark, n, paths) -> dict:
     from simhash_spark.sources.catalog import CheckpointCatalog
 
     exp = CACHE / f"delta_byte_exp_{n}"
-    rec, delta = _delta_fold(spark, n, paths, exp, byte_exact=True)
-    sup = CheckpointCatalog(spark, exp / "delta").read("00b_bytes_delta").where("image_id != keep_id")
+    rec = _delta_fold(spark, n, paths, exp, byte_exact=True)
+    cat = CheckpointCatalog(spark, exp / "delta")
+    # no manifest holds the base-payload share of the suppressed rows
+    sup = cat.read("00b_bytes_delta").where("image_id != keep_id")
     return {
         "base_rows": n,
-        "byte_suppressed": sup.count(),
+        "byte_suppressed": cat.manifest("00b_bytes_delta").get("byte_suppressed") or 0,
         "byte_suppressed_vs_base": sup.where(~F.col("keep_id").endswith("_inc")).count(),
-        "increment_fingerprinted": delta.fingerprints_new.count(),
+        "increment_fingerprinted": cat.manifest("01_fingerprints_delta")["n_rows"],
         **rec,
     }
 

@@ -162,21 +162,13 @@ def run_curation(
     )
     from simhash_spark.operators.textops import _QUALITY_RULE_ORDER, quality_filter
     from simhash_spark.plans.text_dedup import text_near_dup_clusters
-    from simhash_spark.sources.catalog import StageObservations
+    from simhash_spark.sources.catalog import StageObservations, parquet_rows, pin
 
     if near_dup_policy not in ("keep", "weight"):
         raise ValueError(f"near_dup_policy must be 'keep' or 'weight': {near_dup_policy!r}")
 
-    def _pin(d, name):
-        # materialize a stage boundary that feeds 2+ downstream actions:
-        # lazy recompute would otherwise re-run the whole upstream chain
-        # (incl. the fingerprint UDF) per action. Parquet, not persist() —
-        # MemoryStore contention at high parallelism (CLAUDE.md), and the
-        # file doubles as an inspectable artifact of the run. Returns the
-        # read-back (written schema, no inference job) and its footer rows.
-        p = pathlib.Path(output_path) / "_stages" / name
-        d.write.mode("overwrite").parquet(str(p))
-        return spark.read.schema(d.schema).parquet(str(p)), _parquet_rows(p)
+    # pinned stage boundaries: each feeds 2+ downstream actions
+    stages = pathlib.Path(output_path) / "_stages"
 
     # (stage entry, observations) whose "rows_out" the next write that
     # consumes the observed rows fills; that write's plan must hold the
@@ -190,7 +182,7 @@ def run_curation(
 
     t0 = time.time()
     df = spark.read.parquet(input_path)
-    stats: dict = {"rows_in": _parquet_rows(input_path), "stages": []}
+    stats: dict = {"rows_in": parquet_rows(input_path), "stages": []}
 
     # stages 1-2: one projection, evaluated once, in the 02_scrubbed write
     # that also observes their stats
@@ -220,7 +212,7 @@ def run_curation(
         stats["stages"].append(pii_stage)
 
     if quality or pii:
-        df, _ = _pin(df, "02_scrubbed")
+        df = pin(df, stages / "02_scrubbed").df
         # the write's wall goes to the last stage it holds
         stats["stages"][-1]["wall_s"] = round(time.time() - ts, 2)
         if quality:
@@ -265,8 +257,8 @@ def run_curation(
         # pin the SLIM dirty-id set: its lineage holds the Bloom/gram pass
         # over the corpus, which the exact-dedup write would otherwise
         # re-run in each of its branches; the count comes from its footers
-        dirty_ids, n_dirty = _pin(
-            dirty.select(F.col("id").alias(id_col)), "02b_decontaminate_dirty"
+        dirty_ids, n_dirty, _ = pin(
+            dirty.select(F.col("id").alias(id_col)), stages / "02b_decontaminate_dirty"
         )
         df = df.join(dirty_ids, id_col, "left_anti")
         stats["stages"].append({
@@ -282,7 +274,7 @@ def run_curation(
     # semi-join form keeps every audit column on the surviving row. Pinned:
     # feeds the near-dup fingerprint UDF, the keep join, and the final write.
     ts = time.time()
-    df, n_exact = _pin(exact_dedup(df, id_col, text_col), "03_exact")
+    df, n_exact, _ = pin(exact_dedup(df, id_col, text_col), stages / "03_exact")
     exact = survivors = df
     stats["stages"].append({"stage": "exact_dedup", "rows_out": n_exact,
                             "wall_s": round(time.time() - ts, 2)})
@@ -307,13 +299,10 @@ def run_curation(
         # pinned: the slim (id, cluster_id) labels feed the keep join, the
         # split assignment and the resumable artifact — one near-dup
         # pipeline run; the write observes the cluster count
-        c_obs = StageObservations()
-        clusters, _ = _pin(
-            c_obs.observe(
-                text_near_dup_clusters(df, id_col, text_col, cfg, enable_substring=substring),
-                F.sum((F.col(id_col) == F.col("cluster_id")).cast("long")).alias("clusters"),
-            ),
-            "04_clusters",
+        clusters, _, c_seen = pin(
+            text_near_dup_clusters(df, id_col, text_col, cfg, enable_substring=substring),
+            stages / "04_clusters",
+            F.sum((F.col(id_col) == F.col("cluster_id")).cast("long")).alias("clusters"),
         )
         id_type = df.schema[id_col].dataType
         if near_dup_policy == "weight":
@@ -336,7 +325,7 @@ def run_curation(
             "stage": "near_dup",
             "policy": near_dup_policy,
             "rows_out": 0,
-            "clusters": c_obs.get().get("clusters") or 0,
+            "clusters": c_seen.get("clusters") or 0,
             "substring_stage": bool(substring),
             "wall_s": round(time.time() - ts, 2),
         }
@@ -358,7 +347,7 @@ def run_curation(
         from simhash_spark.operators.dedup import semdedup_keep
 
         emb = spark.read.parquet(embeddings_path)
-        n_cent = semantic_centroids or max(16, _parquet_rows(embeddings_path) // 1000)
+        n_cent = semantic_centroids or max(16, parquet_rows(embeddings_path) // 1000)
         cent = ivf_fit(emb, n_centroids=n_cent)
         id_type = df.schema[id_col].dataType
         emb_surv = emb.select(
@@ -373,7 +362,7 @@ def run_curation(
         # lazy recompute would re-run the semdedup kernel per action. The
         # id restriction above reads ``survivors``, not ``df``: ``df``
         # carries the near-dup row observation, which this write fills.
-        df, n_out = _pin(df.join(sem_drops, id_col, "left_anti"), "04b_semantic")
+        df, n_out, _ = pin(df.join(sem_drops, id_col, "left_anti"), stages / "04b_semantic")
         stats["stages"].append({
             "stage": "semantic_dedup",
             "rows_out": n_out,
@@ -433,12 +422,12 @@ def run_curation(
         df.write.mode("overwrite").partitionBy("shard").parquet(str(out_dir))
     else:
         df.write.mode("overwrite").parquet(str(out_dir))
-    stats["rows_out"] = _parquet_rows(out_dir)
+    stats["rows_out"] = parquet_rows(out_dir)
     write_stage: dict = {"stage": "write", "rows_out": stats["rows_out"],
                          "wall_s": round(time.time() - ts, 2)}
     if n_shards:
         write_stage["shard_counts"] = {
-            int(d.name.partition("=")[2]): _parquet_rows(d)
+            int(d.name.partition("=")[2]): parquet_rows(d)
             for d in out_dir.glob("shard=*")
         }
     stats["stages"].append(write_stage)
@@ -452,17 +441,15 @@ def run_curation(
         from simhash_spark.operators.curation import token_pack_plan
 
         ts = time.time()
-        pack_dir = str(pathlib.Path(output_path) / "pack_plan")
-        token_pack_plan(
-            spark.read.parquet(str(out_dir)), id_col, text_col,
-            ctx_len=pack_ctx, shard_chars=pack_shard_chars,
-        ).write.mode("overwrite").parquet(pack_dir)
-        plan = spark.read.parquet(pack_dir)
-        agg = plan.agg(
+        plan, rows_packed, seen = pin(
+            token_pack_plan(
+                spark.read.parquet(str(out_dir)), id_col, text_col,
+                ctx_len=pack_ctx, shard_chars=pack_shard_chars,
+            ),
+            pathlib.Path(output_path) / "pack_plan",
             F.sum("n_tokens").alias("toks"),
-            # packs per shard = max pack_last + 1; summed across shards
-            F.count(F.lit(1)).alias("rows"),
-        ).collect()[0]
+        )
+        # packs per shard = max pack_last + 1; summed across shards
         n_packs = (
             plan.groupBy("shard").agg(F.max("pack_last").alias("m"))
             .agg(F.sum(F.col("m") + 1).alias("p")).collect()[0]["p"]
@@ -470,23 +457,13 @@ def run_curation(
         stats["stages"].append({
             "stage": "pack_plan", "ctx_len": pack_ctx,
             "shards": 16 ** pack_shard_chars,
-            "rows_packed": agg["rows"], "n_tokens": agg["toks"] or 0,
+            "rows_packed": rows_packed, "n_tokens": seen.get("toks") or 0,
             "n_packs": int(n_packs or 0),
             "wall_s": round(time.time() - ts, 2),
         })
 
     stats["wall_s"] = round(time.time() - t0, 2)
     return stats
-
-
-def _parquet_rows(path) -> int:
-    """Rows of a parquet file or directory, from its files' footers: starts
-    no Spark job, and is not fooled by a cached DataFrame over the same
-    path. pyarrow's discovery skips the ``_``/``.``-prefixed files (e.g.
-    ``_SUCCESS``) that Spark skips."""
-    import pyarrow.dataset as pads
-
-    return pads.dataset(str(path), format="parquet").count_rows()
 
 
 def main(argv: list[str] | None = None) -> int:

@@ -83,10 +83,10 @@ def main(argv: list[str] | None = None) -> int:
 
     from pyspark.sql import functions as F
 
-    from simhash_spark.operators.dedup import near_dup_keep_best, near_dup_keep_list
     from simhash_spark.plans.delta import chain_run_metadata, run_delta
+    from simhash_spark.plans.pipeline import image_keep_list, restrict_to_ids
     from simhash_spark.session import get_spark
-    from simhash_spark.sources.catalog import CheckpointCatalog, StageObservations
+    from simhash_spark.sources.catalog import CheckpointCatalog, pin
 
     spark = get_spark(parallelism=args.parallelism, app_name="simhash-delta")
     t0 = time.time()
@@ -102,57 +102,27 @@ def main(argv: list[str] | None = None) -> int:
 
     # every stat is a delta-catalog manifest or observed by an output write
     out = pathlib.Path(args.output)
-    obs = StageObservations()
-    obs.observe(
-        res.clusters,
-        # labels are min-id: one row per cluster carries its own id
-        F.sum((F.col("image_id") == F.col("cluster_id")).cast("long")).alias("clusters"),
-    ).write.mode("overwrite").parquet(str(out / "clusters"))
-    res.verified_new.write.mode("overwrite").parquet(str(out / "verified_pairs_delta"))
-    if args.keep_rule == "best-resolution":
-        # the union corpus's (image_id, w, h): every chain link records its
-        # input path in its 01 manifest, the increment is this run's input.
-        # Column pruning keeps the re-scan to three columns.
-        paths = [*chain_run_metadata(spark, args.checkpoint)["input_paths"]]
-        scores = spark.read.parquet(*paths).select(
-            "image_id",
-            (F.col("w").cast("long") * F.col("h").cast("long")).alias("score"),
-        )
-        keep = near_dup_keep_best(res.clusters, scores, id_col="image_id", score_col="score")
-    else:
-        keep = near_dup_keep_list(res.clusters, id_col="image_id")
-    obs.observe(keep, F.sum("is_kept").alias("kept")).write.mode("overwrite").parquet(
-        str(out / "keep_list")
+    # labels are min-id: one row per cluster carries its own id
+    is_rep = F.col("image_id") == F.col("cluster_id")
+    n_clusters = (
+        pin(res.clusters, out / "clusters", F.sum(is_rep.cast("long")).alias("n"))
+        .seen.get("n") or 0
     )
-    if args.alignment_filter:
-        # the increment's newly-KEPT rows only: per-row pure verdict, so
-        # the base's existing alignment rows remain valid verbatim (the
-        # add-only argument in the flag's help text). keep_list spans
-        # base ∪ increment, so its kept-id set is not hinted to broadcast:
-        # the planner broadcasts it only under autoBroadcastJoinThreshold.
-        from simhash_spark.operators.multimodal import caption_pixel_alignment
-
-        keep_r = spark.read.parquet(str(out / "keep_list"))
-        inc_kept = spark.read.parquet(args.increment).join(
-            keep_r.where("is_kept = 1").select("image_id"), "image_id", "left_semi"
-        )
-        obs.observe(
-            caption_pixel_alignment(inc_kept, tau_bp=args.alignment_tau),
-            F.count(F.lit(1)).alias("alignment_delta_rows"),
-            F.sum((F.col("keep") == 0).cast("long")).alias("misaligned_delta"),
-        ).write.mode("overwrite").parquet(str(out / "alignment_delta"))
-    if args.tier_labels:
-        from simhash_spark.plans.delta import read_chain_stage
-        from simhash_spark.plans.pipeline import assemble_tiers, run_tier_drops
-
-        corpus, drops = run_tier_drops(
-            read_chain_stage(spark, args.checkpoint, "00b_bytes", "00b_bytes_delta"),
+    pin(res.verified_new, out / "verified_pairs_delta")
+    # best-resolution scores the union corpus: every chain link records its
+    # input path in its 01 manifest, the increment is this run's input
+    keep, _, seen = pin(
+        image_keep_list(
             res.clusters,
-        )
-        tiers = assemble_tiers(corpus, drops)
-        tiers.write.mode("overwrite").parquet(str(out / "tier_labels"))
-    # an observed node that AQE pruned saw no rows and reports no key
-    seen = obs.get()
+            args.keep_rule,
+            lambda: spark.read.parquet(
+                *chain_run_metadata(spark, args.checkpoint)["input_paths"]
+            ),
+        ),
+        out / "keep_list",
+        F.sum("is_kept").alias("kept"),
+    )
+    kept_n = seen.get("kept") or 0
     cat = CheckpointCatalog(spark, args.checkpoint)
     stats = {}
     bx = cat.manifest("00b_bytes_delta")
@@ -161,16 +131,40 @@ def main(argv: list[str] | None = None) -> int:
         # (re-uploads that never paid the fingerprint UDF or any later stage)
         stats["byte_suppressed"] = bx.get("byte_suppressed") or 0
     if args.alignment_filter:
-        stats["alignment_delta_rows"] = seen.get("alignment_delta_rows") or 0
-        stats["misaligned_delta"] = seen.get("misaligned_delta") or 0
+        # the increment's newly-KEPT rows only: per-row pure verdict, so
+        # the base's existing alignment rows remain valid verbatim (the
+        # add-only argument in the flag's help text)
+        from simhash_spark.operators.multimodal import caption_pixel_alignment
+
+        align = pin(
+            restrict_to_ids(
+                spark.read.parquet(args.increment),
+                keep.where("is_kept = 1").select("image_id"),
+                kept_n,
+                lambda src: caption_pixel_alignment(src, tau_bp=args.alignment_tau),
+            ),
+            out / "alignment_delta",
+            F.sum((F.col("keep") == 0).cast("long")).alias("misaligned"),
+        )
+        stats["alignment_delta_rows"] = align.rows
+        stats["misaligned_delta"] = align.seen.get("misaligned") or 0
         stats["alignment_tau_bp"] = args.alignment_tau
+    if args.tier_labels:
+        from simhash_spark.plans.delta import read_chain_stage
+        from simhash_spark.plans.pipeline import assemble_tiers, run_tier_drops
+
+        corpus, drops = run_tier_drops(
+            read_chain_stage(spark, args.checkpoint, "00b_bytes", "00b_bytes_delta"),
+            res.clusters,
+        )
+        pin(assemble_tiers(corpus, drops), out / "tier_labels")
     stats.update(
         increment_rows=cat.manifest("01_fingerprints_delta")["n_rows"],
         candidates_delta=cat.manifest("02_candidates_delta")["n_rows"],
         verified_delta=cat.manifest("03_verified_delta")["n_rows"],
         rows_total=cat.manifest("04_clusters")["n_rows"],
-        clusters=seen.get("clusters") or 0,
-        kept=seen.get("kept") or 0,
+        clusters=n_clusters,
+        kept=kept_n,
         wall_s=round(time.time() - t0, 2),
     )
     print(json.dumps(stats))

@@ -38,39 +38,6 @@ except ImportError:  # plain `python jobs/run_pipeline.py` from a checkout
     sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 
 
-# Id sets at or under this count broadcast to the per-payload decode scans of
-# the semantic rung and the alignment filter (~30 B/id -> ~150 MB at the
-# ceiling, well inside executor memory); above it restrict_to_ids decodes
-# scan-locally and semi-joins the slim output rows instead.
-SEMANTIC_BROADCAST_MAX_IDS = 5_000_000
-
-
-def restrict_to_ids(src, ids, n_ids: int, per_row):
-    """``per_row(src)`` restricted to the rows whose image_id is in ``ids``
-    (``n_ids`` rows), without payload bytes ever riding an exchange (the
-    00b invariant). At or under SEMANTIC_BROADCAST_MAX_IDS the id set ships
-    to the scan, so the semi-join is a BroadcastHashJoin and bytes stay in
-    their input partitions; above it a sort-merge semi-join would exchange
-    every payload by image_id, so ``per_row`` runs scan-locally over all of
-    ``src`` and only its slim output rows semi-join down to ``ids`` —
-    paying per-row work on the extra rows, never a byte shuffle. ``per_row``
-    must be a per-row pure function of its input rows, so both plans yield
-    the same rows."""
-    from pyspark.sql import functions as F
-
-    if n_ids <= SEMANTIC_BROADCAST_MAX_IDS:
-        return per_row(src.join(F.broadcast(ids), "image_id", "left_semi"))
-    return per_row(src).join(ids, "image_id", "left_semi")
-
-
-def _quality_hist(spark, ckpt: str) -> dict:
-    """Per-reason drop counts from the 00_quality stage checkpoint."""
-    from simhash_spark.sources.catalog import CheckpointCatalog
-
-    rows = CheckpointCatalog(spark, ckpt).read("00_quality").collect()
-    return {r["reason"]: r["n"] for r in rows if r["reason"] != "ok"}
-
-
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description="simhash_spark near-duplicate pipeline")
     ap.add_argument("--input", required=True, help="images parquet path")
@@ -177,11 +144,20 @@ def main(argv: list[str] | None = None) -> int:
     if args.pixel_embeddings and not args.tier_labels:
         ap.error("--pixel-embeddings requires --tier-labels")
 
+    import functools
     from dataclasses import replace
 
+    from pyspark.sql import functions as F
+
     from simhash_spark.config import DEFAULT_CONFIG, index_config_for
-    from simhash_spark.plans.pipeline import run_pipeline
+    from simhash_spark.plans.pipeline import (
+        image_keep_list,
+        restrict_to_ids,
+        run_pipeline,
+        semantic_keep_list,
+    )
     from simhash_spark.session import get_spark
+    from simhash_spark.sources.catalog import CheckpointCatalog, parquet_rows, pin
 
     spark = get_spark(parallelism=args.parallelism, app_name="simhash-pipeline")
     ckpt = args.checkpoint or str(pathlib.Path(args.output) / "_checkpoints")
@@ -189,9 +165,8 @@ def main(argv: list[str] | None = None) -> int:
     if args.n_blocks is not None:
         cfg = replace(DEFAULT_CONFIG, n_blocks=args.n_blocks)
     else:
-        # one metadata-cheap count picks the index scale class; at Iceberg/
-        # parquet this is a footer read, not a data scan
-        cfg = index_config_for(spark.read.parquet(args.input).count())
+        # the input's footer rows pick the index scale class: no Spark job
+        cfg = index_config_for(parquet_rows(args.input))
     res = run_pipeline(
         spark,
         args.input,
@@ -203,153 +178,93 @@ def main(argv: list[str] | None = None) -> int:
         quality_filter=args.quality_filter,
         byte_exact=args.byte_exact,
     )
-    from simhash_spark.operators.dedup import near_dup_keep_best, near_dup_keep_list
 
+    # every stat is a stage manifest or observed by an output write
+    cat = CheckpointCatalog(spark, ckpt)
     out = pathlib.Path(args.output)
-    res.clusters.write.mode("overwrite").parquet(str(out / "clusters"))
-    res.verified.write.mode("overwrite").parquet(str(out / "verified_pairs"))
+    # the input re-scans below share one read (its schema inference is a
+    # Spark job), made only when one of them runs
+    scan = functools.cache(lambda: spark.read.parquet(args.input))
+    # labels are min-id: one row per cluster carries its own id, and those
+    # rows are the near tier's survivors
+    is_rep = F.col("image_id") == F.col("cluster_id")
+    n_clusters = (
+        pin(res.clusters, out / "clusters", F.sum(is_rep.cast("long")).alias("n"))
+        .seen.get("n") or 0
+    )
+    pin(res.verified, out / "verified_pairs")
     # the dedup DECISION (one representative per cluster) — the artifact a
-    # downstream training job actually consumes
-    if args.keep_rule == "best-resolution":
-        from pyspark.sql import functions as F
-
-        # column pruning keeps this re-scan to (image_id, w, h); with
-        # --quality-filter on, clusters hold a subset of the input ids and
-        # the inner join inside keep_best drops the filtered rows
-        scores = spark.read.parquet(args.input).select(
-            "image_id",
-            (F.col("w").cast("long") * F.col("h").cast("long")).alias("score"),
-        )
-        keep = near_dup_keep_best(res.clusters, scores, id_col="image_id", score_col="score")
-    else:
-        keep = near_dup_keep_list(res.clusters, id_col="image_id")
-    # written AFTER the tier block: when the semantic rung runs it demotes
-    # whole clusters, and keep_list must agree with tier_labels on them
+    # downstream training job actually consumes. The semantic rung demotes
+    # whole clusters in it, so keep_list agrees with tier_labels on them
+    keep = image_keep_list(res.clusters, args.keep_rule, scan)
 
     tier_counts: dict = {}
-    sem = None
     if args.tier_labels:
         # Assemble the frozen-ladder attribution from this run's OWN stage
         # outputs — zero recompute: exact drops from the 00b_bytes
         # checkpoint, near drops from 04_clusters (which already ran on the
         # byte tier's survivors), semantic drops (optional) from SemDeDup
         # over pixel embeddings of the NEAR tier's survivors only.
-        from pyspark.sql import functions as F
-
         from simhash_spark.plans.pipeline import assemble_tiers, run_tier_drops
-        from simhash_spark.sources.catalog import CheckpointCatalog
 
-        corpus, drops = run_tier_drops(
-            CheckpointCatalog(spark, ckpt).read("00b_bytes"), res.clusters
-        )
+        corpus, drops = run_tier_drops(cat.read("00b_bytes"), res.clusters)
         if args.pixel_embeddings:
             from simhash_spark.operators.ann import ivf_fit
             from simhash_spark.operators.dedup import semdedup_keep
             from simhash_spark.operators.multimodal import image_embeddings
 
-            surv2 = res.clusters.where(
-                F.col("image_id") == F.col("cluster_id")
-            ).select("image_id")
-            emb = restrict_to_ids(
-                spark.read.parquet(args.input),
-                surv2,
-                surv2.count(),
-                lambda src: image_embeddings(src)
-                .where(F.col("error").isNull())
-                .select("image_id", "embedding"),
-            )
             # pin the embeddings: the decode+embed pass is the run's most
-            # expensive stage and feeds THREE actions (the emptiness probe,
-            # ivf_fit's driver sample, the semdedup kernel) — unpinned, the
-            # whole corpus decode would run once per action (the CLAUDE.md
+            # expensive stage and feeds two actions (ivf_fit's driver
+            # sample, the semdedup kernel) — unpinned, the whole corpus
+            # decode would run once per action (the CLAUDE.md
             # recompute-per-branch rule). Order-safety: ivf_fit
             # canonical-sorts its training sample, so the quantizer is a
             # pure function of the vector multiset, not the parquet layout.
-            emb.write.mode("overwrite").parquet(str(out / "_sem_embeddings"))
-            emb = spark.read.parquet(str(out / "_sem_embeddings"))
+            emb, n_emb, _ = pin(
+                restrict_to_ids(
+                    scan(),
+                    res.clusters.where(is_rep).select("image_id"),
+                    n_clusters,
+                    lambda src: image_embeddings(src)
+                    .where(F.col("error").isNull())
+                    .select("image_id", "embedding"),
+                ),
+                out / "_sem_embeddings",
+            )
             # a corpus whose every payload quarantines (or is NULL) has no
             # embeddings: the rung is a no-op, not an ivf_fit crash
-            if emb.take(1):
+            if n_emb:
                 cent = ivf_fit(
                     emb, n_centroids=args.semantic_centroids, n_iter=8,
                     vec_col="embedding",
                 )
-                sem = semdedup_keep(
-                    emb, cent, threshold=args.semantic_tau,
-                    id_col="image_id", vec_col="embedding",
-                )
                 # pin the slim decision too: it feeds the tier_labels write
                 # AND both sides of the keep_list rep-map self-join
-                sem.write.mode("overwrite").parquet(str(out / "_sem_keep"))
-                sem = spark.read.parquet(str(out / "_sem_keep"))
+                sem = pin(
+                    semdedup_keep(
+                        emb, cent, threshold=args.semantic_tau,
+                        id_col="image_id", vec_col="embedding",
+                    ),
+                    out / "_sem_keep",
+                ).df
                 drops = drops.unionByName(
                     sem.where(F.col("is_kept") == 0).select(
                         "image_id", F.lit("semantic").alias("tier")
                     )
                 )
-        tiers = assemble_tiers(corpus, drops)
-        tiers.write.mode("overwrite").parquet(str(out / "tier_labels"))
-        tier_counts = {
-            r["tier"]: r["n"]
-            for r in spark.read.parquet(str(out / "tier_labels"))
-            .groupBy("tier")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
+                keep = semantic_keep_list(keep, res.clusters, sem)
+        tiers = ("exact", "near", "semantic", "kept")
+        seen = pin(
+            assemble_tiers(corpus, drops),
+            out / "tier_labels",
+            *[F.sum((F.col("tier") == t).cast("long")).alias(t) for t in tiers],
+        ).seen
+        tier_counts = {t: n for t in tiers if (n := seen.get(t))}
 
-    if sem is not None:
-        # the keep decision must agree with the ladder: a near cluster whose
-        # representative the semantic rung dropped is a semantic duplicate of
-        # another cell member, so EVERY member of that cluster is demoted
-        # (is_kept=0) and keep_id points at the surviving side — for the
-        # min-id rule this makes keep_list's kept set identical to
-        # tier_labels' is_kept=1 set; for best-resolution it means "best
-        # member of each semantically surviving cluster". All joins are slim
-        # (id, id) tables; the rep map is semantic-drop-bounded.
-        from pyspark.sql import functions as F
-
-        # the rung's group keeper is a cluster REPRESENTATIVE (min-id rep);
-        # under --keep-rule best-resolution that rep may not be its own
-        # cluster's chosen keeper, so resolve one hop further through the
-        # pre-demotion keep decision — keep_id then always lands on a row
-        # that is itself is_kept=1 (its cluster survived the rung, so the
-        # demotion below never touches it): referential integrity holds for
-        # BOTH keep rules.
-        rep_keep = keep.select(
-            F.col("image_id").alias("sem_keep_id"),
-            F.col("keep_id").alias("sem_final_id"),
-        )
-        rep_map = (
-            sem.where(F.col("is_kept") == 0)
-            .join(
-                sem.where(F.col("is_kept") == 1).select(
-                    "group_id", F.col("image_id").alias("sem_keep_id")
-                ),
-                "group_id",
-            )
-            .join(rep_keep, "sem_keep_id")
-            .select(
-                F.col("image_id").alias("cluster_id"),
-                F.col("sem_final_id").alias("sem_keep_id"),
-            )
-        )
-        keep = (
-            keep.join(res.clusters.select("image_id", "cluster_id"), "image_id")
-            .join(rep_map, "cluster_id", "left")
-            .select(
-                "image_id",
-                F.coalesce("sem_keep_id", "keep_id").alias("keep_id"),
-                F.when(F.col("sem_keep_id").isNotNull(), F.lit(0))
-                .otherwise(F.col("is_kept"))
-                .alias("is_kept"),
-            )
-        )
-    keep.write.mode("overwrite").parquet(str(out / "keep_list"))
-    # the stats count below is a SECOND action on keep; with the semantic
-    # demotion its lineage includes the decode+embed rung — read the
-    # written artifact back instead of recomputing it
-    keep = spark.read.parquet(str(out / "keep_list"))
-    kept_n = keep.where("is_kept = 1").count()
+    # the alignment restriction below reads the written keep_list: with the
+    # semantic demotion its lineage includes the decode+embed rung
+    keep, _, seen = pin(keep, out / "keep_list", F.sum("is_kept").alias("kept"))
+    kept_n = seen.get("kept") or 0
 
     align_stats: dict = {}
     if args.alignment_filter:
@@ -358,31 +273,32 @@ def main(argv: list[str] | None = None) -> int:
         from simhash_spark.operators.multimodal import caption_pixel_alignment
 
         align = restrict_to_ids(
-            spark.read.parquet(args.input),
+            scan(),
             keep.where("is_kept = 1").select("image_id"),
             kept_n,
             lambda src: caption_pixel_alignment(src, tau_bp=args.alignment_tau),
         )
-        align.write.mode("overwrite").parquet(str(out / "alignment"))
-        align = spark.read.parquet(str(out / "alignment"))
+        seen = pin(
+            align, out / "alignment", F.sum((F.col("keep") == 0).cast("long")).alias("n")
+        ).seen
         align_stats = {
-            "misaligned": align.where("keep = 0").count(),
+            "misaligned": seen.get("n") or 0,
             "alignment_tau_bp": args.alignment_tau,
         }
 
-    stats = {
-        "rows": res.fingerprints.count(),
-        **(
-            {"quality_dropped": _quality_hist(spark, ckpt)} if args.quality_filter else {}
-        ),
-        "candidates": res.candidates.count(),
-        "verified": res.verified.count(),
-        "clusters": res.clusters.select("cluster_id").distinct().count(),
-        "kept": kept_n,
+    stats = {"rows": cat.manifest("01_fingerprints")["n_rows"]}
+    if args.quality_filter:
+        hist = cat.read_rows("00_quality")
+        stats["quality_dropped"] = {r["reason"]: r["n"] for r in hist if r["reason"] != "ok"}
+    stats.update(
+        candidates=cat.manifest("02_candidates")["n_rows"],
+        verified=cat.manifest("03_verified")["n_rows"],
+        clusters=n_clusters,
+        kept=kept_n,
         **align_stats,
         **({"tiers": tier_counts} if tier_counts else {}),
-        "wall_s": round(time.time() - t0, 2),
-    }
+        wall_s=round(time.time() - t0, 2),
+    )
     print(json.dumps(stats))
     return 0
 

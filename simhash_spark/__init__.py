@@ -8,7 +8,7 @@ idiomatically on the Spark DataFrame API:
 - MinHash + LSH band hashing, pigeonhole bit-rotation index (Hamming <= 3)
 - exact Hamming verification via native ``bit_count(a XOR b)`` (codegen'd)
 - clusters via iterative connected-components joins (large-star/small-star)
-- winnowing + suffix-array substring stage for near-identical caption runs
+- winnowing-anchor substring stage for near-identical caption runs
 - checkpoint-per-stage with per-partition lineage + metrics, resumable
 
 All Python-side inner loops are vectorized numpy inside pandas/Arrow UDFs;

@@ -28,7 +28,7 @@ class PipelineConfig:
     # Scale config for 10^12 rows: n_blocks=8 -> C(8,5)=56 tables of 40-bit
     # keys, expected bucket size n/2^40 (see operators/candidates.py).
     phash_radius: int = 3         # Hamming threshold on the stored pHash
-    # --- substring stage (winnowing anchors + per-group suffix array) ---
+    # --- substring stage (winnowing anchors + exact shared-run verify) ---
     substr_min_len: int = 48      # L: min shared-substring chars to report
     substr_window: int = 24       # w: char w-gram size (anchor unit)
     # winnowing guarantee: any shared run of >= w + s - 1 = L chars shares

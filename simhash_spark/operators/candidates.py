@@ -246,7 +246,7 @@ def bucket_pairs_packed(
 def bucket_stat_exprs() -> list[F.Column]:
     """Aggregates over bucket_pairs_packed's window rows (k, id, _bsize,
     _head) that ``bucket_stats_from_observed`` turns into the per-source
-    rows of ``bucket_stats_packed``."""
+    bucket histogram rows."""
     exprs = []
     for c in SOURCES:
         row = src_code() == c
@@ -261,8 +261,8 @@ def bucket_stat_exprs() -> list[F.Column]:
 
 
 def bucket_stats_from_observed(m: dict) -> dict[str, dict]:
-    """``bucket_stat_exprs`` values -> {src: bucket_stats_packed row as a
-    dict}; sources without keys have no row, as in the groupBy."""
+    """``bucket_stat_exprs`` values -> {src: {src, n_buckets, max_bucket,
+    avg_bucket, n_colliding}}; sources without keys have no row."""
     stats = {}
     for c, name in SOURCES.items():
         n = m.get(f"n_buckets_{c}") or 0
@@ -324,30 +324,11 @@ def union_candidates(cand: DataFrame, more: DataFrame) -> DataFrame:
     )
 
 
-def bucket_stats_packed(packed: DataFrame) -> DataFrame:
-    """Bucket-size histogram per source from the PACKED key table — the
-    skew/recall accounting the stage manifest records (no silent
-    truncation); works for every index config including the wide-UDF path.
-    Source recovered from each key's low 2 bits."""
-    return (
-        packed.groupBy("k")
-        .agg(F.count(F.lit(1)).alias("bucket_size"))
-        .select(_decode(src_code()).alias("src"), "bucket_size")
-        .groupBy("src")
-        .agg(
-            F.count(F.lit(1)).alias("n_buckets"),
-            F.max("bucket_size").alias("max_bucket"),
-            F.avg("bucket_size").alias("avg_bucket"),
-            F.sum(F.when(F.col("bucket_size") > 1, 1).otherwise(0)).alias("n_colliding"),
-        )
-    )
-
-
 def bucket_size_histogram(packed: DataFrame) -> DataFrame:
     """Full bucket-size histogram per index family from the PACKED key table
     -> (src, bucket_size, n_buckets), singleton buckets included.
 
-    The skew surface behind ``bucket_stats_packed``'s summary row: the whole
+    The skew surface behind the candidates manifest's summary rows: the whole
     size distribution is what a 10^12-row run inspects to pick bucket_cap /
     salting thresholds (one hot band at size 10^6 vs a thousand at 10^3
     produce the same avg but need different treatment). Integer-only output

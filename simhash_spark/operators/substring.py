@@ -219,42 +219,6 @@ def _normed_pairs(
     return observe(joined, shipped.alias("shipped")).drop("_la", "_lb")
 
 
-def substring_degree_metrics(
-    cand: DataFrame,
-    df: DataFrame,
-    id_col: str = "image_id",
-    caption_col: str = "caption",
-) -> dict:
-    """Monitorable form of the substring stage's accepted 2.73x text
-    amplification (BENCH/SUBSTRING_AMPLIFICATION.md) as a standalone pass
-    over the candidate pairs; ``verify_substring_pairs(observe=...)``
-    collects the same numbers while the verify runs. One degree agg + one
-    slim length join + a single-row collect — bounded at any corpus size.
-    """
-    deg = (
-        cand.select(F.col("a").alias("id"))
-        .unionByName(cand.select(F.col("b").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    )
-    lens = df.select(
-        F.col(id_col).alias("id"), F.length(caption_col).cast("bigint").alias("len")
-    )
-    row = (
-        deg.join(lens, "id")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("degree").alias("sum_degree"),
-            F.max("degree").alias("max_degree"),
-            F.percentile_approx("degree", 0.99).alias("p99_degree"),
-            F.sum(F.col("degree") * F.col("len")).alias("shipped"),
-            F.sum("len").alias("ideal"),
-        )
-        .collect()[0]
-    )
-    return substring_degree_summary(row.asDict())
-
-
 def substring_degree_summary(m: dict) -> dict:
     """The substring stage's pair-degree manifest keys. The pair join ships
     each doc's text once PER PAIR it appears in, which is fine while pair
@@ -357,7 +321,7 @@ def substring_pairs(
 
 def _normalize_col(caption_col: str):
     """The same NFKC normalization the winnow UDF applies, so anchor positions
-    and SA text agree bit-for-bit with spec.normalize_for_substring."""
+    and the verified text agree bit-for-bit with spec.normalize_for_substring."""
     from simhash_spark.functions.udfs import normalize_substring_udf
 
     return normalize_substring_udf(F.col(caption_col))

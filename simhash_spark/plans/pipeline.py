@@ -6,7 +6,7 @@ Stages (each checkpointed + resumable via CheckpointCatalog):
                     (simhash + minhash + bands), phash passthrough
   E2 candidates   : LSH bands ∪ simhash rotations ∪ phash rotations
                     -> bucket self-joins (capped/chained) -> union+dedup
-  E2b substr      : winnowing anchors -> per-anchor suffix-array verify
+  E2b substr      : winnowing anchors as join keys -> exact shared-run verify
   E3 verified     : native bit_count Hamming verify of all candidates
   E4 clusters     : large-star/small-star CC; isolated vertices = singletons
 
@@ -28,8 +28,6 @@ from simhash_spark.config import DEFAULT_CONFIG, PipelineConfig
 from simhash_spark.functions.udfs import with_fingerprints
 from simhash_spark.operators.candidates import (
     bucket_stats_from_observed,
-    bucket_stats_packed,
-    explode_all_keys,
     generate_candidates,
     union_candidates,
 )
@@ -171,6 +169,99 @@ def run_tier_drops(byte_index: DataFrame, clusters: DataFrame) -> tuple[DataFram
     )
     corpus = clusters.select("image_id").unionByName(exact.select("image_id"))
     return corpus, exact.unionByName(near)
+
+
+def image_keep_list(
+    clusters: DataFrame, keep_rule: str, scan: Callable[[], DataFrame]
+) -> DataFrame:
+    """The keep decision an image run publishes: (image_id, keep_id,
+    is_kept), one survivor per cluster. 'min-id' is the frozen
+    representative rule, a pure projection of the labels. 'best-resolution'
+    keeps each cluster's highest w*h member, ties min id
+    (dedup.near_dup_keep_best): ``scan()`` is read only for this rule,
+    column pruning keeps it to (image_id, w, h), and the cluster_id window
+    is one exchange. Labels with no row in ``scan()`` (e.g. rows the quality
+    filter dropped) fall out of the inner score join."""
+    from simhash_spark.operators.dedup import near_dup_keep_best, near_dup_keep_list
+
+    if keep_rule == "best-resolution":
+        scores = scan().select(
+            "image_id",
+            (F.col("w").cast("long") * F.col("h").cast("long")).alias("score"),
+        )
+        return near_dup_keep_best(clusters, scores, id_col="image_id", score_col="score")
+    return near_dup_keep_list(clusters, id_col="image_id")
+
+
+def semantic_keep_list(keep: DataFrame, clusters: DataFrame, sem: DataFrame) -> DataFrame:
+    """``keep`` (image_keep_list over ``clusters``) made to agree with the
+    semantic rung's decision ``sem`` (semdedup_keep over the cluster
+    representatives): a near cluster whose representative the rung dropped
+    is a semantic duplicate of another cell member, so EVERY member of that
+    cluster is demoted (is_kept=0) and keep_id points at the surviving side.
+    For the min-id rule this makes the kept set identical to tier_labels'
+    is_kept=1 set; for best-resolution it means "best member of each
+    semantically surviving cluster". All joins are slim (id, id) tables; the
+    rep map is semantic-drop-bounded.
+
+    The rung's group keeper is a cluster REPRESENTATIVE (min-id rep); under
+    best-resolution that rep may not be its own cluster's chosen keeper, so
+    resolve one hop further through the pre-demotion keep decision — keep_id
+    then always lands on a row that is itself is_kept=1 (its cluster
+    survived the rung, so the demotion never touches it): referential
+    integrity holds for BOTH keep rules."""
+    rep_keep = keep.select(
+        F.col("image_id").alias("sem_keep_id"),
+        F.col("keep_id").alias("sem_final_id"),
+    )
+    rep_map = (
+        sem.where(F.col("is_kept") == 0)
+        .join(
+            sem.where(F.col("is_kept") == 1).select(
+                "group_id", F.col("image_id").alias("sem_keep_id")
+            ),
+            "group_id",
+        )
+        .join(rep_keep, "sem_keep_id")
+        .select(
+            F.col("image_id").alias("cluster_id"),
+            F.col("sem_final_id").alias("sem_keep_id"),
+        )
+    )
+    return (
+        keep.join(clusters.select("image_id", "cluster_id"), "image_id")
+        .join(rep_map, "cluster_id", "left")
+        .select(
+            "image_id",
+            F.coalesce("sem_keep_id", "keep_id").alias("keep_id"),
+            F.when(F.col("sem_keep_id").isNotNull(), F.lit(0))
+            .otherwise(F.col("is_kept"))
+            .alias("is_kept"),
+        )
+    )
+
+
+# Id sets at or under this count broadcast to the per-payload decode scans of
+# the semantic rung and the alignment filter (~30 B/id -> ~150 MB at the
+# ceiling, well inside executor memory); above it restrict_to_ids decodes
+# scan-locally and semi-joins the slim output rows instead.
+SEMANTIC_BROADCAST_MAX_IDS = 5_000_000
+
+
+def restrict_to_ids(src: DataFrame, ids: DataFrame, n_ids: int, per_row) -> DataFrame:
+    """``per_row(src)`` restricted to the rows whose image_id is in ``ids``
+    (``n_ids`` rows), without payload bytes ever riding an exchange (the
+    00b invariant). At or under SEMANTIC_BROADCAST_MAX_IDS the id set ships
+    to the scan, so the semi-join is a BroadcastHashJoin and bytes stay in
+    their input partitions; above it a sort-merge semi-join would exchange
+    every payload by image_id, so ``per_row`` runs scan-locally over all of
+    ``src`` and only its slim output rows semi-join down to ``ids`` —
+    paying per-row work on the extra rows, never a byte shuffle. ``per_row``
+    must be a per-row pure function of its input rows, so both plans yield
+    the same rows."""
+    if n_ids <= SEMANTIC_BROADCAST_MAX_IDS:
+        return per_row(src.join(F.broadcast(ids), "image_id", "left_semi"))
+    return per_row(src).join(ids, "image_id", "left_semi")
 
 
 def image_tier_labels(
@@ -315,7 +406,6 @@ def run_pipeline(
     enable_substring: bool = True,
     include_phash: bool = True,
     cc_ckpt_every: int = 0,
-    bucket_fingerprints: bool = True,
     quality_filter: bool = False,
     quality_overrides: dict | None = None,
     byte_exact: bool = False,
@@ -323,12 +413,12 @@ def run_pipeline(
     """The resumable end-to-end run: every stage lands in the catalog with a
     manifest; rerunning after a crash skips complete stages (T5).
 
-    ``bucket_fingerprints`` writes the E1 checkpoint hash-clustered + sorted
-    on image_id (CheckpointCatalog.write bucket_by): E3 joins the fingerprint
-    table TWICE on that key and E4's singleton anti-join hits it again — with
-    the bucketed layout all three reads skip the exchange/sort on the big
-    side, paying one clustered write instead of three shuffles of the
-    largest intermediate. Bucket count follows the session's shuffle
+    The E1 checkpoint is written hash-clustered + sorted on image_id
+    (CheckpointCatalog.write bucket_by): E3 joins the fingerprint table
+    TWICE on that key and E4's singleton anti-join hits it again — with the
+    bucketed layout all three reads skip the exchange/sort on the big side,
+    paying one clustered write instead of three shuffles of the largest
+    intermediate. Bucket count follows the session's shuffle
     parallelism (a real deployment sets both to ~2-3x total cores).
 
     Manifest metrics come from the stages' own writes: the candidates stage
@@ -396,11 +486,6 @@ def run_pipeline(
             "left_anti",
         )
 
-    fp_buckets = (
-        (int(spark.conf.get("spark.sql.shuffle.partitions")), ["image_id"])
-        if bucket_fingerprints
-        else None
-    )
     fp = cat.run_stage(
         "01_fingerprints",
         in_fp,
@@ -414,7 +499,7 @@ def run_pipeline(
             quality_overrides,
             byte_exact,
         ),
-        bucket_by=fp_buckets,
+        bucket_by=(int(spark.conf.get("spark.sql.shuffle.partitions")), ["image_id"]),
     )
 
     # skew/recall accounting in the stage manifest: bucket histogram per
@@ -477,9 +562,3 @@ def run_pipeline(
     )
     return PipelineResult(fp, cand, verified, clusters)
 
-
-def candidate_bucket_stats(
-    fp: DataFrame, cfg: PipelineConfig, include_phash: bool = True
-) -> DataFrame:
-    """Skew observability: bucket histograms per candidate source."""
-    return bucket_stats_packed(explode_all_keys(fp, cfg, include_phash=include_phash))

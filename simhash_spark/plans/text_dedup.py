@@ -50,21 +50,10 @@ def text_near_dup_pairs(
     text_col: str = "text",
     cfg: PipelineConfig = DEFAULT_CONFIG,
     enable_substring: bool = False,
-    fp: DataFrame | None = None,
-    candidates: DataFrame | None = None,
 ) -> DataFrame:
-    """(id, text) -> verified near-dup pairs (a, b, hamming_caption, src).
-
-    ``fp``/``candidates`` let a caller inject already-built (and persisted /
-    checkpointed) stage DataFrames so a multi-branch consumer — e.g. the
-    dedup funnel report, which aggregates candidates AND verified AND
-    clusters — evaluates each stage once instead of once per branch
-    (production composes via CheckpointCatalog parquet pins; query faces
-    persist, cf. CLAUDE.md's branch-recompute note).
-    """
-    if fp is None:
-        fp = text_fingerprints(df, id_col, text_col, cfg)
-    cand = candidates if candidates is not None else text_candidates(fp, cfg)
+    """(id, text) -> verified near-dup pairs (a, b, hamming_caption, src)."""
+    fp = text_fingerprints(df, id_col, text_col, cfg)
+    cand = text_candidates(fp, cfg)
     if enable_substring:
         sub = substring_pairs(
             df.select(
@@ -83,13 +72,8 @@ def text_near_dup_clusters(
     text_col: str = "text",
     cfg: PipelineConfig = DEFAULT_CONFIG,
     enable_substring: bool = False,
-    pairs: DataFrame | None = None,
 ) -> DataFrame:
-    """(id, text) -> (doc_id, cluster_id); singletons labeled by themselves.
-
-    ``pairs`` injects an already-verified pair set (see text_near_dup_pairs).
-    """
-    if pairs is None:
-        pairs = text_near_dup_pairs(df, id_col, text_col, cfg, enable_substring)
+    """(id, text) -> (doc_id, cluster_id); singletons labeled by themselves."""
+    pairs = text_near_dup_pairs(df, id_col, text_col, cfg, enable_substring)
     ids = df.select(F.col(id_col).cast("string").alias("image_id"))
     return cluster_job(pairs, ids, cfg).withColumnRenamed("image_id", id_col)

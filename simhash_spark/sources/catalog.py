@@ -30,7 +30,9 @@ import re
 import shutil
 import time
 from collections.abc import Callable
+from typing import NamedTuple
 
+import pyarrow.dataset as pads
 import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -65,6 +67,39 @@ class StageObservations:
         return out
 
 
+def parquet_rows(path: str | pathlib.Path) -> int:
+    """Rows of a parquet file or directory, from its files' footers: starts
+    no Spark job, and is not fooled by a cached DataFrame over the same
+    path. pyarrow's discovery skips the ``_``/``.``-prefixed files (e.g.
+    ``_SUCCESS``) that Spark skips."""
+    return pads.dataset(str(path), format="parquet").count_rows()
+
+
+class Pinned(NamedTuple):
+    df: DataFrame  # the read-back of the written files
+    rows: int  # their footer row count
+    seen: dict  # the aggregates observed during the write
+
+
+def pin(df: DataFrame, path: str | pathlib.Path, *exprs: Column) -> Pinned:
+    """Write ``df`` to parquet at ``path`` once, observing ``exprs`` on the
+    written rows, and return the read-back, the footer rows and the
+    observed values. The write is the only Spark job: the read-back takes
+    the written schema instead of inferring it.
+
+    A CLI writes every output this way, and pins with it a frame that feeds
+    two or more actions, where lazy recompute would re-run the whole
+    upstream chain per action. Parquet, not persist(): no MemoryStore
+    contention at high parallelism, and the files double as an inspectable
+    artifact of the run."""
+    obs = StageObservations()
+    if exprs:
+        df = obs.observe(df, *exprs)
+    df.write.mode("overwrite").parquet(str(path))
+    back = df.sparkSession.read.schema(df.schema).parquet(str(path))
+    return Pinned(back, parquet_rows(path), obs.get())
+
+
 class CheckpointCatalog:
     def __init__(self, spark: SparkSession, base_path: str | pathlib.Path, backend: str = "parquet"):
         if backend == "iceberg":
@@ -94,6 +129,12 @@ class CheckpointCatalog:
         if p.exists():
             return json.loads(p.read_text())
         return None
+
+    def read_rows(self, stage: str) -> list[dict]:
+        """A small stage's rows as dicts, read from its files by pyarrow:
+        starts no Spark job."""
+        data = self._stage_dir(stage) / "data"
+        return pads.dataset(str(data), format="parquet").to_table().to_pylist()
 
     def is_complete(self, stage: str, input_fingerprint: str) -> bool:
         m = self.manifest(stage)
@@ -254,6 +295,4 @@ def input_fingerprint_of(path: str) -> str:
     p = pathlib.Path(path)
     files = sorted(p.rglob("*.parquet")) if p.is_dir() else [p]
     sig = ";".join(f"{f.name}:{f.stat().st_size}:{int(f.stat().st_mtime)}" for f in files)
-    import hashlib
-
     return hashlib.sha256(sig.encode()).hexdigest()[:16]

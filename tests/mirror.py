@@ -239,3 +239,72 @@ def image_kernel_mirror(img: pd.DataFrame, cfg: PipelineConfig) -> dict:
 
     clusters = union_find_min_labels(list(ids), verified)
     return {"ids": ids, "candidates": cand_rows, "verified": verified, "clusters": clusters}
+
+
+# ------------------------------------------------ standalone Spark references
+# The manifest metrics are collected in flight (Observations on the stages'
+# own writes); these recompute them as separate passes over the same data,
+# for the tests that compare the two.
+
+
+def bucket_stats_packed(packed):
+    """Bucket-size histogram per source from the PACKED key table (k, id):
+    one (src, n_buckets, max_bucket, avg_bucket, n_colliding) row per
+    source, the source recovered from each key's low 2 bits."""
+    from pyspark.sql import functions as F
+
+    from simhash_spark.operators.candidates import _decode, src_code
+
+    return (
+        packed.groupBy("k")
+        .agg(F.count(F.lit(1)).alias("bucket_size"))
+        .select(_decode(src_code()).alias("src"), "bucket_size")
+        .groupBy("src")
+        .agg(
+            F.count(F.lit(1)).alias("n_buckets"),
+            F.max("bucket_size").alias("max_bucket"),
+            F.avg("bucket_size").alias("avg_bucket"),
+            F.sum(F.when(F.col("bucket_size") > 1, 1).otherwise(0)).alias("n_colliding"),
+        )
+    )
+
+
+def candidate_bucket_stats(fp, cfg: PipelineConfig, include_phash: bool = True):
+    """The candidates stage's bucket histogram over a fingerprint table."""
+    from simhash_spark.operators.candidates import explode_all_keys
+
+    return bucket_stats_packed(explode_all_keys(fp, cfg, include_phash=include_phash))
+
+
+def substring_degree_metrics(
+    cand, df, id_col: str = "image_id", caption_col: str = "caption"
+) -> dict:
+    """The substring stage's pair-degree manifest keys as a standalone pass
+    over the candidate pairs: one degree agg, one slim length join and a
+    single-row collect."""
+    from pyspark.sql import functions as F
+
+    from simhash_spark.operators.substring import substring_degree_summary
+
+    deg = (
+        cand.select(F.col("a").alias("id"))
+        .unionByName(cand.select(F.col("b").alias("id")))
+        .groupBy("id")
+        .agg(F.count(F.lit(1)).alias("degree"))
+    )
+    lens = df.select(
+        F.col(id_col).alias("id"), F.length(caption_col).cast("bigint").alias("len")
+    )
+    row = (
+        deg.join(lens, "id")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("degree").alias("sum_degree"),
+            F.max("degree").alias("max_degree"),
+            F.percentile_approx("degree", 0.99).alias("p99_degree"),
+            F.sum(F.col("degree") * F.col("len")).alias("shipped"),
+            F.sum("len").alias("ideal"),
+        )
+        .collect()[0]
+    )
+    return substring_degree_summary(row.asDict())

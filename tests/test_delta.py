@@ -522,7 +522,7 @@ def test_run_delta_cli_stats_start_no_count_pass(spark, tmp_path, jobs_started, 
     from simhash_spark.operators.dedup import near_dup_keep_list
     from simhash_spark.operators.multimodal import caption_pixel_alignment
     from simhash_spark.plans.delta import run_delta
-    from simhash_spark.plans.pipeline import run_pipeline
+    from simhash_spark.plans.pipeline import restrict_to_ids, run_pipeline
     from simhash_spark.sources.catalog import CheckpointCatalog
     from simhash_spark.sources.fixtures import (
         INPUT_HINT_SCHEMA,
@@ -549,14 +549,17 @@ def test_run_delta_cli_stats_start_no_count_pass(spark, tmp_path, jobs_started, 
         d, o = res["d"], tmp_path / "bare"
         d.clusters.write.parquet(str(o / "clusters"))
         d.verified_new.write.parquet(str(o / "verified_pairs_delta"))
-        near_dup_keep_list(d.clusters, id_col="image_id").write.parquet(str(o / "keep_list"))
-        kept = spark.read.parquet(str(o / "keep_list")).where("is_kept = 1")
-        inc_kept = spark.read.parquet(inc_p).join(
-            kept.select("image_id"), "image_id", "left_semi"
-        )
-        caption_pixel_alignment(inc_kept, tau_bp=8500).write.parquet(
-            str(o / "alignment_delta")
-        )
+        keep = near_dup_keep_list(d.clusters, id_col="image_id")
+        keep.write.parquet(str(o / "keep_list"))
+        kept = spark.read.schema(keep.schema).parquet(str(o / "keep_list"))
+        # the chain's row count bounds its kept ids, under the broadcast
+        # ceiling as the CLI's observed count is
+        restrict_to_ids(
+            spark.read.parquet(inc_p),
+            kept.where("is_kept = 1").select("image_id"),
+            len(pdf),
+            lambda src: caption_pixel_alignment(src, tau_bp=8500),
+        ).write.parquet(str(o / "alignment_delta"))
 
     writes = jobs_started(bare_writes)
     ck, out = tmp_path / "ck_cli", tmp_path / "out_cli"

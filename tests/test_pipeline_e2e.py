@@ -293,11 +293,9 @@ def test_pipeline_manifest_metrics_match_standalone(spark, fixture_dir, tmp_path
     import json
     import pathlib
 
-    from simhash_spark.operators.substring import (
-        pairs_from_anchor_table,
-        substring_degree_metrics,
-    )
-    from simhash_spark.plans.pipeline import candidate_bucket_stats
+    from mirror import candidate_bucket_stats, substring_degree_metrics
+
+    from simhash_spark.operators.substring import pairs_from_anchor_table
     from simhash_spark.sources.catalog import CheckpointCatalog
 
     inp = str(fixture_dir / "images.parquet")
@@ -758,6 +756,7 @@ def test_cli_above_id_ceiling_matches_broadcast_run(spark, tmp_path, monkeypatch
     import sys
 
     from simhash_spark.config import DEFAULT_CONFIG as CFG
+    from simhash_spark.plans import pipeline
     from simhash_spark.sources.fixtures import (
         INPUT_HINT_SCHEMA,
         make_images_pdf,
@@ -802,7 +801,152 @@ def test_cli_above_id_ceiling_matches_broadcast_run(spark, tmp_path, monkeypatch
         }
 
     default = run("default")
-    monkeypatch.setattr(cli, "SEMANTIC_BROADCAST_MAX_IDS", 0)
+    monkeypatch.setattr(pipeline, "SEMANTIC_BROADCAST_MAX_IDS", 0)
     assert run("above_ceiling") == default
     tiers = {r[1] for r in default["tier_labels"]}
     assert {"exact", "kept"} <= tiers
+
+
+def test_run_pipeline_cli_stats_start_no_count_pass(spark, tmp_path, jobs_started, capsys):
+    """Tripwire against count passes after the run: the pipeline CLI with
+    every stage flag on starts exactly the jobs of run_pipeline plus bare
+    writes of its outputs, semantic rung included. Its stats come from the
+    stage manifests, the 00_quality files and observations on those
+    writes, and equal the counts they replace."""
+    import json
+    import pathlib
+    import sys
+
+    from simhash_spark.config import index_config_for
+    from simhash_spark.operators.ann import ivf_fit
+    from simhash_spark.operators.dedup import near_dup_keep_list, semdedup_keep
+    from simhash_spark.operators.multimodal import caption_pixel_alignment, image_embeddings
+    from simhash_spark.plans.pipeline import (
+        assemble_tiers,
+        restrict_to_ids,
+        run_tier_drops,
+        semantic_keep_list,
+    )
+    from simhash_spark.sources.catalog import CheckpointCatalog
+    from simhash_spark.sources.fixtures import (
+        INPUT_HINT_SCHEMA,
+        plant_alignment_tints,
+        plant_byte_reuploads,
+        plant_semantic_rerenders,
+    )
+
+    repo = pathlib.Path(__file__).resolve().parents[1]
+    sys.path.insert(0, str(repo / "jobs"))
+    try:
+        import run_pipeline as cli
+    finally:
+        sys.path.pop(0)
+
+    pdf = plant_alignment_tints(
+        plant_semantic_rerenders(
+            plant_byte_reuploads(make_images_pdf(200, seed=42, with_bytes=True))
+        )
+    )
+    inp = str(tmp_path / "images.parquet")
+    spark.createDataFrame(pdf, schema=INPUT_HINT_SCHEMA).coalesce(1).write.parquet(inp)
+    ck_run = str(tmp_path / "ck_run")
+
+    res = {}
+    run = jobs_started(
+        lambda: res.update(
+            p=run_pipeline(
+                spark, inp, ck_run, index_config_for(len(pdf)),
+                quality_filter=True, byte_exact=True,
+            )
+        )
+    )
+
+    def pinned(df, name):
+        df.write.parquet(str(tmp_path / "bare" / name))
+        return spark.read.schema(df.schema).parquet(str(tmp_path / "bare" / name))
+
+    def bare_writes():
+        # the row count bounds every id set, under the broadcast ceiling as
+        # the CLI's observed counts are
+        p, src, n = res["p"], spark.read.parquet(inp), len(pdf)
+        pinned(p.clusters, "clusters")
+        pinned(p.verified, "verified_pairs")
+        emb = pinned(
+            restrict_to_ids(
+                src,
+                p.clusters.where("image_id = cluster_id").select("image_id"),
+                n,
+                lambda s: image_embeddings(s)
+                .where(F.col("error").isNull())
+                .select("image_id", "embedding"),
+            ),
+            "_sem_embeddings",
+        )
+        cent = ivf_fit(emb, n_centroids=4, n_iter=8, vec_col="embedding")
+        sem = pinned(
+            semdedup_keep(emb, cent, threshold=0.9, id_col="image_id", vec_col="embedding"),
+            "_sem_keep",
+        )
+        corpus, drops = run_tier_drops(
+            CheckpointCatalog(spark, ck_run).read("00b_bytes"), p.clusters
+        )
+        drops = drops.unionByName(
+            sem.where("is_kept = 0").select("image_id", F.lit("semantic").alias("tier"))
+        )
+        pinned(assemble_tiers(corpus, drops), "tier_labels")
+        keep = near_dup_keep_list(p.clusters, id_col="image_id")
+        keep = pinned(semantic_keep_list(keep, p.clusters, sem), "keep_list")
+        pinned(
+            restrict_to_ids(
+                src,
+                keep.where("is_kept = 1").select("image_id"),
+                n,
+                lambda s: caption_pixel_alignment(s, tau_bp=8500),
+            ),
+            "alignment",
+        )
+
+    writes = jobs_started(bare_writes)
+    ck, out = tmp_path / "ck_cli", tmp_path / "out_cli"
+    argv = [
+        "--input", inp,
+        "--output", str(out),
+        "--checkpoint", str(ck),
+        "--quality-filter",
+        "--byte-exact",
+        "--tier-labels",
+        "--pixel-embeddings",
+        "--semantic-centroids", "4",
+        "--alignment-filter",
+    ]
+    capsys.readouterr()
+    n_cli = jobs_started(lambda: cli.main(argv))
+    assert run >= 1 and writes >= 1 and n_cli == run + writes
+
+    stats = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    cat = CheckpointCatalog(spark, ck)
+
+    def output(name):
+        return spark.read.parquet(str(out / name))
+
+    want = {
+        "rows": cat.read("01_fingerprints").count(),
+        "quality_dropped": {
+            r["reason"]: r["n"] for r in cat.read("00_quality").collect() if r["reason"] != "ok"
+        },
+        "candidates": cat.read("02_candidates").count(),
+        "verified": cat.read("03_verified").count(),
+        "clusters": output("clusters").select("cluster_id").distinct().count(),
+        "kept": output("keep_list").where("is_kept = 1").count(),
+        "misaligned": output("alignment").where("keep = 0").count(),
+        "alignment_tau_bp": 8500,
+        "tiers": {
+            r["tier"]: r["count"] for r in output("tier_labels").groupBy("tier").count().collect()
+        },
+        "wall_s": stats["wall_s"],
+    }
+    assert stats == want
+    # every stat is exercised: each tier fires, rows are dropped for
+    # quality and for misalignment
+    assert set(want["tiers"]) == {"exact", "near", "semantic", "kept"}
+    assert want["quality_dropped"] and want["misaligned"]

@@ -104,7 +104,7 @@ def test_degenerate_corpus_end_to_end(spark, tmp_path):
 
 
 def test_bucket_stats_reports_hot_buckets(spark):
-    from simhash_spark.operators.candidates import bucket_stats_packed
+    from mirror import bucket_stats_packed
 
     rows = [((42 << 2) | 1, f"id{i}") for i in range(300)]
     packed = spark.createDataFrame(rows, "k long, id string")

@@ -1246,10 +1246,11 @@ def test_bucket_size_histogram_mass_accounting(spark, docs):
     """The histogram partitions the key table: per src, sum(size * n_buckets)
     equals that src's key-row count, and the >1-size mass agrees with
     bucket_stats_packed's n_colliding / max_bucket summary."""
+    from mirror import bucket_stats_packed
+
     from simhash_spark.config import DEFAULT_CONFIG as CFG
     from simhash_spark.operators.candidates import (
         bucket_size_histogram,
-        bucket_stats_packed,
         explode_all_keys,
         src_code,
     )
