@@ -215,13 +215,12 @@ def _pipeline(spark, src, ck: pathlib.Path, reps: int = 1, **kw) -> tuple:
 
 def run_docs(spark, n, path) -> dict:
     """substring_pairs on n caption docs (the bench corpus's planted
-    substring dups + hot caption included): the winnow-anchor equi-join,
-    the hot-anchor cap and the per-batch rolling-hash verify. The plan is
-    run_pipeline's 02b stages, whose observed pair-degree keys are the
-    02b_substr manifest's."""
+    substring dups + hot caption included): the winnow-anchor equi-join
+    and verification at the anchor (cold all-pairs context test, hot
+    run-keyed chains). The plan is run_pipeline's 02b stages, whose
+    observed keys are the 02b_substr manifest's."""
     from simhash_spark.operators.substring import (
-        pairs_from_anchor_table,
-        substring_degree_summary,
+        substring_stage_summary,
         verify_substring_pairs,
         winnow_anchor_table,
     )
@@ -232,7 +231,7 @@ def run_docs(spark, n, path) -> dict:
     wall, pairs = best_of(
         spark,
         lambda: verify_substring_pairs(
-            pairs_from_anchor_table(winnow_anchor_table(docs, CFG), CFG), docs, CFG, observe=obs.observe
+            winnow_anchor_table(docs, CFG), CFG, observe=obs.observe
         ).count(),
     )
     return {
@@ -240,7 +239,7 @@ def run_docs(spark, n, path) -> dict:
         "wall_s": round(wall, 1),
         "pairs": pairs,
         "docs_per_sec": round(n / wall, 1),
-        **substring_degree_summary(obs.get()),
+        **substring_stage_summary(obs.get()),
     }
 
 
@@ -734,7 +733,7 @@ def single(n: int) -> list[int]:
 LADDERS = {
     "docs": dict(
         stage="substring_pairs", corpus=ensure_images_corpus, rungs=single, run=run_docs,
-        help="substring_pairs on ROWS caption docs, with the pair-degree keys",
+        help="substring_pairs on ROWS caption docs, with the stage's manifest keys",
     ),
     "vecs": dict(
         stage="embedding_near_dup_lsh", corpus=ensure_embeddings_corpus, rungs=single, run=run_vecs,

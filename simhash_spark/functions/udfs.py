@@ -345,12 +345,38 @@ def make_tagged_keys_udf(cfg: PipelineConfig, include_phash: bool):
 # --------------------------------------------------------------- substring UDF
 
 
+def winnow_contexts(texts: list[str], w: int, min_len: int) -> list[list[tuple[int, int, str]]]:
+    """Per ALREADY-normalized text, its winnowing anchors as (anchor, lo, ctx):
+    ``lo = min(pos, min_len - w)`` and ``ctx = text[pos - lo : pos + min_len]``
+    (at most 2*min_len - w chars, cut at the text's ends).
+
+    The winnow kernel picks the leftmost minimum of every window of
+    min_len - w + 1 w-grams, so two texts sharing a run >= min_len select
+    the same anchor at the same offset d in [0, min_len - w] inside it; the
+    run's first min_len chars then lie inside both ctx strings. A shared
+    anchor's two contexts therefore decide whether the texts share such a
+    run, without the rest of either text (operators/substring.py)."""
+    di, pos, ah = spec.winnow_anchors_batch(texts, w, min_len)
+    ah_i64 = spec.u64_to_i64(ah)
+    reach = min_len - w
+    out: list[list[tuple[int, int, str]]] = [[] for _ in texts]
+    for d, p, h in zip(di.tolist(), pos.tolist(), ah_i64.tolist()):
+        lo = min(p, reach)
+        out[d].append((h, lo, texts[d][p - lo : p + min_len]))
+    return out
+
+
 def make_winnow_udf(cfg: PipelineConfig):
-    """pandas_udf: caption -> array<struct<pos:int, anchor:long>> winnowing
-    anchors over the normalized caption (substring stage, SURVEY.md O15)."""
+    """pandas_udf: caption -> array<struct<anchor:long, lo:int, ctx:string>>,
+    the winnowing anchors of the normalized caption with the context that
+    verifies them (``winnow_contexts``; substring stage, SURVEY.md O15)."""
     schema = T.ArrayType(
         T.StructType(
-            [T.StructField("pos", T.IntegerType()), T.StructField("anchor", T.LongType())]
+            [
+                T.StructField("anchor", T.LongType()),
+                T.StructField("lo", T.IntegerType()),
+                T.StructField("ctx", T.StringType()),
+            ]
         )
     )
 
@@ -363,12 +389,10 @@ def make_winnow_udf(cfg: PipelineConfig):
             .str.replace(r"[^a-z0-9]+", " ", regex=True)
             .str.strip()
         )
-        di, pos, ah = spec.winnow_anchors_batch(norm.tolist(), cfg.substr_window, cfg.substr_min_len)
-        ah_i64 = spec.u64_to_i64(ah)
-        out: list[list] = [[] for _ in range(len(s))]
-        for d, p, h in zip(di.tolist(), pos.tolist(), ah_i64.tolist()):
-            out[d].append({"pos": p, "anchor": h})
-        return pd.Series(out)
+        occ = winnow_contexts(norm.tolist(), cfg.substr_window, cfg.substr_min_len)
+        return pd.Series(
+            [[{"anchor": h, "lo": lo, "ctx": c} for h, lo, c in doc] for doc in occ]
+        )
 
     return winnow
 

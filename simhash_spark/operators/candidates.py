@@ -211,36 +211,45 @@ def bucket_pairs_packed(
         ).alias("b"),
     )
 
-    # BIG buckets: salted spanning chain (O19). A hot bucket of m rows is
-    # split into salt_buckets sub-chains sorted independently (each task
-    # sorts m/S rows, not m), then the S chain heads are linked by one more
-    # tiny chain — together a spanning tree of the bucket (exactly m-1
-    # edges), so connectivity through verification is preserved while the
-    # output stays linear in m and no single task ever sorts the full
-    # hot bucket.
-    big = (
-        with_size.where(F.col("_bsize") > cfg.bucket_cap)
-        .withColumn("c", src_code())
-        .withColumn("_salt", F.pmod(F.xxhash64("id"), F.lit(cfg.salt_buckets)))
-    )
-    w_salt = Window.partitionBy("k", "_salt").orderBy("id")
-    chained = big.withColumn("_prev", F.lag("id").over(w_salt))
-    pairs_chain = chained.where(F.col("_prev").isNotNull()).select(
-        F.col("_prev").alias("a"), F.col("id").alias("b"), "c"
-    )
-    heads = chained.where(F.col("_prev").isNull()).select("k", "c", "id")
-    w_head = Window.partitionBy("k").orderBy("id")
-    pairs_heads = (
-        heads.withColumn("_prev", F.lag("id").over(w_head))
-        .where(F.col("_prev").isNotNull())
-        .select(F.col("_prev").alias("a"), F.col("id").alias("b"), "c")
-    )
-    pairs_big = pairs_chain.unionByName(pairs_heads)
+    # BIG buckets: the salted spanning chain
+    big = with_size.where(F.col("_bsize") > cfg.bucket_cap).withColumn("c", src_code())
+    pairs_big = salted_chain(big, ["k"], cfg.salt_buckets, carry=("c",))
     return (
         pairs_small.unionByName(pairs_big)
         .withColumn("src", _decode(F.col("c")))
         .select("a", "b", "src")
     )
+
+
+def salted_chain(
+    members: DataFrame, keys: list[str], salt_buckets: int, carry: tuple[str, ...] = ()
+) -> DataFrame:
+    """(*keys, id, *carry) members of hot buckets -> (a, b, *carry) edges, a < b:
+    a salted spanning chain per bucket (O19), the hot-bucket rule of both
+    indexes (bucket_pairs_packed; the substring stage's run-keyed buckets).
+
+    A hot bucket of m rows is split into ``salt_buckets`` sub-chains sorted
+    independently (each sorts m/S rows, not m), then the S chain heads are
+    linked by one more tiny chain — together a spanning tree of the bucket
+    (exactly m-1 edges for distinct ids), so connectivity is preserved while
+    the output stays linear in m and no single sort holds the full hot
+    bucket. An id repeated within a bucket yields (id, id) edges, which a
+    caller with repeats filters out. ``carry`` columns must be constant
+    within a bucket."""
+    salted = members.withColumn("_salt", F.pmod(F.xxhash64("id"), F.lit(salt_buckets)))
+    w_salt = Window.partitionBy(*keys, "_salt").orderBy("id")
+    chained = salted.withColumn("_prev", F.lag("id").over(w_salt))
+    pairs_chain = chained.where(F.col("_prev").isNotNull()).select(
+        F.col("_prev").alias("a"), F.col("id").alias("b"), *carry
+    )
+    heads = chained.where(F.col("_prev").isNull()).select(*keys, *carry, "id")
+    w_head = Window.partitionBy(*keys).orderBy("id")
+    pairs_heads = (
+        heads.withColumn("_prev", F.lag("id").over(w_head))
+        .where(F.col("_prev").isNotNull())
+        .select(F.col("_prev").alias("a"), F.col("id").alias("b"), *carry)
+    )
+    return pairs_chain.unionByName(pairs_heads)
 
 
 def bucket_stat_exprs() -> list[F.Column]:

@@ -8,18 +8,29 @@ purpose). Spark-first decomposition:
    any two docs sharing a normalized substring of >= L chars share >= 1
    anchor hash (Schleimer'03 winnowing guarantee) — this turns the global
    substring-search problem into an equi-join key, so NO cross-partition
-   suffix array is needed.
-2. anchor buckets -> C(s,2) candidate pairs, deduplicated ACROSS anchors
-   (near-identical docs share dozens of anchors; verifying per pair instead
-   of per anchor group was measured 3.7x faster at sf0.1).
-3. one exact verification per distinct pair (window-set shared-run check,
-   equivalent to the LCP >= L predicate) in a batched mapInPandas. Hash
-   collisions die here; tests/test_properties.py checks the predicate
-   against a brute-force substring search.
-
-Hot anchors (boilerplate prefixes shared by millions of captions) are capped
-at ``bucket_cap`` docs per anchor with a deterministic keep rule; dropped
-volume is observable in stage metrics (no silent truncation).
+   suffix array is needed. Each anchor occurrence carries its context
+   (``lo``, ``ctx``: the at most 2L-w chars around it, udfs.winnow_contexts),
+   so the anchor table is ALL the state verification needs.
+2. verification at the anchor: the kernel picks the leftmost minimum of
+   every window of L-w+1 w-grams, so two docs sharing a run >= L select the
+   same anchor at the same offset d in [0, L-w] inside it, and that run's
+   first L chars sit inside both contexts. Co-occupants of a cold anchor
+   (2..``bucket_cap`` docs) pair up and are kept when their contexts agree
+   on an L-run at some offset d (``_shared_runs``: Catalyst substring
+   tests, lambda-free); the pairs are then deduplicated ACROSS anchors. No
+   document text is joined to a pair: hash collisions die in the context
+   test, which tests/test_properties.py checks against a brute-force
+   substring search.
+3. hot anchors (more than ``bucket_cap`` docs — boilerplate shared by
+   millions of captions) are not truncated. Docs with equal (lo, ctx) form
+   a class (a context of >= L chars is a run they share); each class's
+   least id emits one key (anchor, the L-run at offset d) per in-bounds d,
+   and the members of each class and of each key become a salted spanning
+   chain (candidates.salted_chain). Members of a key share that exact run
+   (the grouping is on the string, so no hash can add an edge), every true
+   pair is connected through the key of its winnowing anchor, and the
+   output is linear in bucket size. The stage manifest records hot
+   anchors, the largest anchor and the chain edges (no silent truncation).
 """
 
 from __future__ import annotations
@@ -32,6 +43,7 @@ from pyspark.sql import functions as F
 
 from simhash_spark.config import PipelineConfig
 from simhash_spark.functions.udfs import make_winnow_udf
+from simhash_spark.operators.candidates import salted_chain
 
 
 def _shares_run(a: str, b: str, min_len: int) -> bool:
@@ -40,11 +52,9 @@ def _shares_run(a: str, b: str, min_len: int) -> bool:
     contains a window of length exactly L, so this is the LCP >= L
     predicate without building a suffix array.
 
-    This is the reference predicate (also the collision fallback of the
-    vectorized path below); the hot path is _window_hash_index +
-    _pair_shares_run, which computes the same answer with one numpy rolling
-    hash per DOC (reused across every pair the doc appears in) instead of a
-    Python set of string slices per PAIR."""
+    This is the reference predicate (also the collision fallback of
+    _pair_shares_run, which computes the same answer from one numpy rolling
+    hash per doc; substring_run_report probes run lengths with it)."""
     if len(a) < min_len or len(b) < min_len:
         return False
     if len(b) < len(a):
@@ -122,13 +132,16 @@ def _pair_shares_run(
 def winnow_anchor_table(
     df: DataFrame, cfg: PipelineConfig, id_col: str = "image_id", caption_col: str = "caption"
 ) -> DataFrame:
-    """(id, caption) -> distinct (id, anchor) winnowing-anchor rows.
+    """(id, caption) -> distinct (id, anchor, lo, ctx) anchor occurrences.
 
     Content-keyed like the fingerprint bucket keys: two docs sharing a
-    normalized run >= L always share >= 1 anchor, so the table doubles as
-    the substring stage's equi-join index AND the incremental-maintenance
+    normalized run >= L always share >= 1 anchor, and the occurrences'
+    contexts decide whether they do, so the table is the substring stage's
+    equi-join index, its verification state AND the incremental-maintenance
     state (plans/delta.py semi-joins a base anchor checkpoint against an
-    increment's anchors instead of re-winnowing the base corpus)."""
+    increment's anchors instead of re-winnowing or re-reading the base
+    corpus). A periodic text repeats one (anchor, lo, ctx) occurrence many
+    times; ``distinct`` keeps one."""
     from simhash_spark.session import spread_small_input
 
     df = spread_small_input(df)
@@ -136,187 +149,143 @@ def winnow_anchor_table(
     return (
         df.select(
             F.col(id_col).alias("id"),
-            F.explode(winnow(F.col(caption_col))).alias("anch"),
+            F.explode(winnow(F.col(caption_col))).alias("o"),
         )
-        .select("id", F.col("anch.anchor").alias("anchor"))
+        .select("id", "o.anchor", "o.lo", "o.ctx")
         .distinct()
     )
 
 
-def pairs_from_anchor_table(anchors: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """(id, anchor) -> distinct unverified (a, b) pairs, a < b.
-
-    Hot anchors (boilerplate prefixes) are capped deterministically at
-    ``bucket_cap`` docs per anchor (keep lowest ids); the cap is applied to
-    the FULL bucket contents, so a delta run feeding only touched buckets
-    reproduces the full run's keep decision exactly."""
-    w = Window.partitionBy("anchor").orderBy("id")
-    anchors = anchors.withColumn("_rn", F.row_number().over(w)).where(
-        F.col("_rn") <= cfg.bucket_cap
+def _shared_runs(pairs: DataFrame, min_len: int) -> DataFrame:
+    """(x, y) occurrence pairs of one anchor (structs of id, lo, ctx) ->
+    (a, b) rows, one per way x and y share an L-run covering the anchor at
+    the same offset d. Equal contexts of >= L chars are a shared run
+    outright (the common case of verbatim copies); otherwise every offset d
+    that keeps both runs inside both contexts is tested. The offsets are
+    exploded rather than unrolled: an OR of L-w+1 substring tests compiles
+    to a method too large for the JIT, and ran 1.5x slower on a 3,000-doc
+    benchmark corpus."""
+    L = min_len
+    first = f"greatest(0, {L} - least(length(x.ctx) - x.lo, length(y.ctx) - y.lo))"
+    last = "least(x.lo, y.lo)"
+    offsets = F.expr(
+        f"IF(x.ctx = y.ctx AND length(x.ctx) >= {L}, array(-1), "
+        f"IF({first} <= {last}, sequence({first}, {last}), array()))"
     )
-    # anchor buckets -> C(s,2) candidate pairs, deduped ACROSS anchors
-    grouped = (
-        anchors.groupBy("anchor")
-        .agg(F.sort_array(F.collect_list("id")).alias("_ids"))
-        .where(F.size("_ids") > 1)
+    same = F.expr(
+        f"_d < 0 OR substr(x.ctx, x.lo - _d + 1, {L}) = substr(y.ctx, y.lo - _d + 1, {L})"
     )
-    lefts = grouped.select("_ids", F.posexplode("_ids").alias("_i", "a"))
-    return lefts.select(
-        "a",
-        F.explode(
-            F.slice("_ids", F.col("_i") + 2, F.size("_ids") - F.col("_i") - 1)
-        ).alias("b"),
-    ).distinct()
-
-
-def _normed_pairs(
-    cand: DataFrame,
-    df: DataFrame,
-    id_col: str,
-    caption_col: str,
-    observe: Callable[..., DataFrame] | None = None,
-) -> DataFrame:
-    """Candidate (a, b) pairs with both sides' NORMALIZED text attached
-    (_na/_nb) — the shared join plumbing of verify_substring_pairs and
-    substring_run_report. Normalizes ONLY docs that appear in candidate
-    pairs: at web scale the pair set touches a small fraction of the
-    corpus, and without this pre-filter the NFKC UDF would run over every
-    doc TWICE (once per join side). The semi-join is on the id key both
-    sides already shuffle on.
-
-    ``observe`` (``StageObservations.observe``) collects the inputs of
-    ``substring_degree_summary`` from three nodes the join already has,
-    leaving the semi-join as it is (an inner join carrying the degree let
-    AQE coalesce the verify to one task): the degree aggregate that
-    replaces a plain distinct, the semi-joined docs, and the pair rows with
-    each side's raw caption length. Unobserved, column pruning drops the
-    degree and the lengths, and the plan is that of a plain distinct."""
-    observe = observe or (lambda d, *exprs: d)
-    deg = observe(
-        cand.select(F.col("a").alias("id"))
-        .unionByName(cand.select(F.col("b").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("degree")),
-        F.sum("degree").alias("sum_degree"),
-        F.max("degree").alias("max_degree"),
-        F.percentile_approx("degree", 0.99).alias("p99_degree"),
+    return (
+        pairs.select("x", "y", F.explode(offsets).alias("_d"))
+        .where(same)
+        .select(F.col("x.id").alias("a"), F.col("y.id").alias("b"))
     )
-    docs = observe(
-        df.select(F.col(id_col).alias("id"), F.col(caption_col).alias("_cap")).join(
-            deg.select("id"), "id", "left_semi"
-        ),
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.length("_cap")).alias("ideal"),
-    )
-    norm_df = docs.select(
-        "id", _normalize_col("_cap").alias("norm"), F.length("_cap").alias("len")
-    )
-    joined = cand.join(
-        norm_df.withColumnsRenamed({"id": "a", "norm": "_na", "len": "_la"}), "a"
-    ).join(norm_df.withColumnsRenamed({"id": "b", "norm": "_nb", "len": "_lb"}), "b")
-    # a doc's text ships once per pair slot: sum over docs of degree*len
-    shipped = F.sum(F.coalesce("_la", F.lit(0)) + F.coalesce("_lb", F.lit(0)))
-    return observe(joined, shipped.alias("shipped")).drop("_la", "_lb")
-
-
-def substring_degree_summary(m: dict) -> dict:
-    """The substring stage's pair-degree manifest keys. The pair join ships
-    each doc's text once PER PAIR it appears in, which is fine while pair
-    degree stays small and constant — the documented revisit trigger is
-    "degree grows with corpus size". These keys emit that trigger as stage
-    manifest metrics instead of a doc sentence (r4 verdict #3):
-
-      n_pairs / n_docs_in_pairs  — candidate pair set size
-      mean_degree_x100, p99_degree, max_degree — pair degree distribution
-      shipped_text_chars — sum over pair slots of the doc's caption length
-                           (what the pair join materializes, raw-char proxy
-                           for the normalized text actually shipped)
-      ideal_text_chars   — each pair-participating doc's length ONCE (the
-                           ship-once lower bound)
-      amplification_x100 — shipped/ideal, the number to watch across runs
-
-    Exact integer arithmetic except percentile_approx (deterministic for
-    the small degree cardinalities this summarizes). ``m`` holds n_docs,
-    sum_degree, max_degree, p99_degree, shipped and ideal; missing keys
-    (an observed node AQE pruned because no pair exists) read as none."""
-    n_docs = m.get("n_docs") or 0
-    if n_docs == 0:
-        return {
-            "n_pairs": 0,
-            "n_docs_in_pairs": 0,
-            "mean_degree_x100": 0,
-            "p99_degree": 0,
-            "max_degree": 0,
-            "shipped_text_chars": 0,
-            "ideal_text_chars": 0,
-            "amplification_x100": 0,
-        }
-    return {
-        "n_pairs": int(m["sum_degree"]) // 2,
-        "n_docs_in_pairs": int(n_docs),
-        "mean_degree_x100": 100 * int(m["sum_degree"]) // int(n_docs),
-        "p99_degree": int(m["p99_degree"]),
-        "max_degree": int(m["max_degree"]),
-        "shipped_text_chars": int(m["shipped"]),
-        "ideal_text_chars": int(m["ideal"]),
-        "amplification_x100": (
-            100 * int(m["shipped"]) // int(m["ideal"]) if m["ideal"] else 0
-        ),
-    }
 
 
 def verify_substring_pairs(
-    cand: DataFrame,
-    df: DataFrame,
+    anchors: DataFrame,
     cfg: PipelineConfig,
-    id_col: str = "image_id",
-    caption_col: str = "caption",
     observe: Callable[..., DataFrame] | None = None,
 ) -> DataFrame:
-    """Exact shared-run >= L verification of candidate (a, b) pairs against
-    the docs table; returns the surviving (a, b) rows. ``observe`` collects
-    the pair-degree metrics on the way (``_normed_pairs``)."""
-    joined = _normed_pairs(cand, df, id_col, caption_col, observe)
-    min_len = cfg.substr_min_len
+    """(id, anchor, lo, ctx) occurrences -> distinct (a, b) pairs, a < b,
+    sharing a normalized run >= L, verified at the anchor (module steps 2-3).
 
-    def verify(batches):
-        # one rolling-hash window index per DOC per batch (docs recur across
-        # many pairs; the old per-pair Python window set re-hashed the whole
-        # doc for every pair — measured 28.7 s for 5k docs at sf0.1, r2)
-        for pdf in batches:
-            index_of: dict[str, tuple[np.ndarray, np.ndarray]] = {}
+    One exchange of the anchor table: the anchor-partitioned window that
+    sizes each anchor by its distinct ids feeds both the cold all-pairs
+    branch (a collect of at most ``bucket_cap`` docs' occurrences) and the
+    hot class and run-keyed chains, which need no further exchange. A cold
+    pair is every pair of documents an anchor verifies; a hot anchor
+    contributes chain edges, each a true pair, that connect its
+    run-sharing docs. Collapsing equal contexts first keeps near-identical
+    docs from keying the same runs hundreds of times.
 
-            def idx(doc_id: str, text: str) -> tuple[np.ndarray, np.ndarray]:
-                got = index_of.get(doc_id)
-                if got is None:
-                    got = _window_hash_index(text, min_len)
-                    index_of[doc_id] = got
-                return got
+    ``observe`` (``StageObservations.observe``) collects the manifest
+    accounting (``substring_stage_summary``) off the same rows: anchor
+    sizes off the window, the co-occupant pairs examined and the chain
+    edges. Unobserved, the plan is the same minus the CollectMetrics."""
+    observe = observe or (lambda d, *exprs: d)
+    w = Window.partitionBy("anchor").orderBy("id")
+    sized = (
+        anchors.withColumn("_rank", F.dense_rank().over(w))
+        .withColumn("_rn", F.row_number().over(w))
+        .withColumn("_nids", F.max("_rank").over(Window.partitionBy("anchor")))
+    )
+    hot = F.col("_nids") > cfg.bucket_cap
+    sized = observe(
+        sized,
+        F.count(F.when((F.col("_rn") == 1) & hot, 1)).alias("hot_anchors"),
+        F.max("_nids").alias("max_anchor_ids"),
+    )
 
-            keep = [
-                _pair_shares_run(na, nb, idx(a, na), idx(b, nb), min_len)
-                for a, b, na, nb in zip(pdf["a"], pdf["b"], pdf["_na"], pdf["_nb"])
-            ]
-            yield pdf.loc[keep, ["a", "b"]]
+    grouped = (
+        sized.where((F.col("_nids") >= 2) & ~hot)
+        .groupBy("anchor")
+        .agg(F.sort_array(F.collect_list(F.struct("id", "lo", "ctx"))).alias("_occ"))
+    )
+    # occurrence pairs by two chained explodes, as in bucket_pairs_packed;
+    # the sort puts x.id <= y.id, and a doc's own occurrences never pair
+    lefts = grouped.select("_occ", F.posexplode("_occ").alias("_i", "x"))
+    examined = observe(
+        lefts.select(
+            "x",
+            F.explode(
+                F.slice("_occ", F.col("_i") + 2, F.size("_occ") - F.col("_i") - 1)
+            ).alias("y"),
+        ).where(F.col("x.id") < F.col("y.id")),
+        F.count(F.lit(1)).alias("cold_pairs"),
+    )
+    cold = _shared_runs(examined, cfg.substr_min_len)
 
-    return joined.mapInPandas(verify, schema="a string, b string")
+    # hot anchors: docs with one (lo, ctx) form a class — a context of >= L
+    # chars is a run they share — and each class's least id keys the
+    # context's L-runs through the anchor; the members of each class and of
+    # each run key are chained. A context under L chars holds no run. A
+    # class key holds ':', which no normalized run does, so one chain call
+    # serves both; keys stay per anchor, so no exchange beyond the window's.
+    L = cfg.substr_min_len
+    hot_occ = sized.where(hot & (F.length("ctx") >= L))
+    offsets = F.explode(F.expr(f"sequence(greatest(0, {L} - length(ctx) + lo), lo)"))
+    runs = (
+        hot_occ.groupBy("anchor", "lo", "ctx")
+        .agg(F.min("id").alias("id"))
+        .select("anchor", "id", "lo", "ctx", offsets.alias("_d"))
+        .select("anchor", "id", F.expr(f"substr(ctx, lo - _d + 1, {L})").alias("_key"))
+    )
+    classes = hot_occ.select("anchor", "id", F.concat_ws(":", "lo", "ctx").alias("_key"))
+    chain = observe(
+        salted_chain(classes.unionByName(runs), ["anchor", "_key"], cfg.salt_buckets).where(
+            F.col("a") != F.col("b")
+        ),
+        F.count(F.lit(1)).alias("chain_edges"),
+    )
+    return cold.unionByName(chain).distinct()
+
+
+def substring_stage_summary(m: dict) -> dict:
+    """The 02b_substr manifest keys from ``verify_substring_pairs``'
+    observations — the stage's work and its hot-anchor accounting:
+
+      n_pairs        — co-occupant pairs examined: cold occurrence pairs
+                       of distinct docs put to the context test, plus hot
+                       chain edges
+      hot_anchors    — anchors with more than bucket_cap distinct docs
+      max_anchor_ids — the largest anchor's distinct docs
+      chain_edges    — edges the hot anchors' run-keyed chains emitted
+
+    Missing keys (a node AQE pruned because its input was empty) read as 0."""
+    got = {k: int(m.get(k) or 0) for k in ("hot_anchors", "max_anchor_ids", "chain_edges")}
+    return {"n_pairs": int(m.get("cold_pairs") or 0) + got["chain_edges"], **got}
 
 
 def substring_pairs(
     df: DataFrame, cfg: PipelineConfig, id_col: str = "image_id", caption_col: str = "caption"
 ) -> DataFrame:
-    """documents -> (a, b, src='substr') pairs sharing a normalized run >= L.
-
-    Shape: anchors co-locate docs -> DISTINCT candidate pairs -> one exact
-    verification per pair. Earlier formulation ran the group suffix-array
-    verify once per anchor GROUP — near-identical docs share dozens of
-    anchors, so at sf0.1 that was 7,422 group verifications for only 3,847
-    distinct pairs (46 s -> ~3 s after the dedup).
-    """
+    """documents -> (a, b, src='substr') pairs sharing a normalized run >= L:
+    the anchor table, then verification at the anchor. With no anchor over
+    ``bucket_cap`` the rows are every such pair; a hot anchor's docs are
+    connected by chain edges instead of all their pairs."""
     anchors = winnow_anchor_table(df, cfg, id_col, caption_col)
-    cand = pairs_from_anchor_table(anchors, cfg)
-    pairs = verify_substring_pairs(cand, df, cfg, id_col, caption_col)
-    return pairs.withColumn("src", F.lit("substr"))
+    return verify_substring_pairs(anchors, cfg).withColumn("src", F.lit("substr"))
 
 
 def _normalize_col(caption_col: str):
@@ -331,8 +300,8 @@ def _normalize_col(caption_col: str):
 
 
 def _shares_at(na: str, nb: str, length: int) -> bool:
-    """Exact 'do na and nb share a run of exactly >= length chars' via the
-    same hash-index + string-confirm machinery as the fixed-L verify."""
+    """Exact 'do na and nb share a run of >= length chars' via the
+    rolling-hash window index + string confirm (_pair_shares_run)."""
     return _pair_shares_run(
         na, nb, _window_hash_index(na, length), _window_hash_index(nb, length), length
     )
@@ -369,15 +338,21 @@ def substring_run_report(
     quoted-fragment pairs from wholesale mirrors, and the input to an
     excision policy keyed on duplicated mass rather than pair existence).
 
-    Same anchor-candidate shape as substring_pairs; verification upgrades
-    the fixed-L predicate to a binary search over the run length — an
-    O((n+m) log n) exact computation per pair, reusing the rolling-hash
-    window index + string-confirm kernel (so run_len >= substr_min_len
-    rows here are EXACTLY the substring_pairs rows: the report is a
-    strict refinement, differentially tested)."""
-    anchors = winnow_anchor_table(df, cfg, id_col, caption_col)
-    cand = pairs_from_anchor_table(anchors, cfg)
-    joined = _normed_pairs(cand, df, id_col, caption_col)
+    The rows are substring_pairs' rows (a strict refinement, differentially
+    tested); the length needs both texts, so only this report joins the
+    normalized text of the docs in pairs to them and binary-searches the
+    run length — an O((n+m) log n) exact computation per pair, reusing the
+    rolling-hash window index + string-confirm kernel."""
+    pairs = verify_substring_pairs(winnow_anchor_table(df, cfg, id_col, caption_col), cfg)
+    ids = pairs.select(F.col("a").alias("id")).unionByName(pairs.select(F.col("b").alias("id")))
+    norm = (
+        df.select(F.col(id_col).alias("id"), F.col(caption_col).alias("_cap"))
+        .join(ids.distinct(), "id", "left_semi")
+        .select("id", _normalize_col("_cap").alias("norm"))
+    )
+    joined = pairs.join(norm.withColumnsRenamed({"id": "a", "norm": "_na"}), "a").join(
+        norm.withColumnsRenamed({"id": "b", "norm": "_nb"}), "b"
+    )
     min_len = cfg.substr_min_len
 
     def report(batches):

@@ -7,7 +7,8 @@ The frozen duplicate predicate (SURVEY.md §5.2 / fixtures.compute_truth):
 
     dup(a,b) := (hamming(simhash) <= r AND both captions have shingles)
              OR  hamming(phash)   <= r_p
-             OR  shared normalized caption substring >= L chars (substr stage)
+             OR  shared normalized caption substring >= L chars (verified
+                 at the anchor by the substr stage; a 'substr' pair passes)
 
 Candidates from ANY index are checked against ALL criteria — a MinHash-LSH
 candidate that happens to be a pixel dup still verifies.

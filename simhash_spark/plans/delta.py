@@ -23,10 +23,12 @@ exactly the base run's — connectivity the base labels already summarize;
 the only genuinely new information is pairs touching an increment row, and
 the star edges replay each touched component's membership into the merge
 CC (labels are min-id, and the star vertex set is the full old component,
-so the merged min is the true min). Buckets past the cap degrade to the
-same connectivity-preserving chain guarantee as the batch path (chains
-may differ between a base+delta and a full run; clusters
-agree for content that actually verifies as duplicate).
+so the merged min is the true min). Candidate buckets past the cap
+degrade to the same connectivity-preserving chain guarantee as the batch
+path (chains may differ between a base+delta and a full run; clusters
+agree for content that actually verifies as duplicate). Substring anchors
+past the cap are no exception to the contract: every chain edge there is
+a true pair (incremental_substring_pairs).
 """
 
 from __future__ import annotations
@@ -46,15 +48,12 @@ from simhash_spark.operators.candidates import (
     union_candidates,
 )
 from simhash_spark.operators.connected_components import connected_components
-from simhash_spark.operators.substring import (
-    pairs_from_anchor_table,
-    verify_substring_pairs,
-    winnow_anchor_table,
-)
+from simhash_spark.operators.substring import verify_substring_pairs, winnow_anchor_table
 from simhash_spark.plans.pipeline import (
     byte_keep_col,
     fingerprint_job,
     singleton_labels,
+    substring_tag,
     verify_job,
 )
 from simhash_spark.sources.catalog import (
@@ -92,32 +91,30 @@ def incremental_candidates(
 def incremental_substring_pairs(
     anchors_base: DataFrame,
     anchors_new: DataFrame,
-    docs_all: DataFrame,
     cfg: PipelineConfig,
-    id_col: str = "image_id",
-    caption_col: str = "caption",
 ) -> DataFrame:
     """Substring-stage delta: verified (a, b, src='substr') pairs touching
-    >= 1 increment doc, without re-winnowing the base corpus.
+    >= 1 increment doc, without re-winnowing or re-reading the base corpus:
+    the anchor occurrences carry the contexts that verify them.
 
     Anchors are content hashes, so the same semi-join trick as the bucket
-    index applies: only anchor buckets CONTAINING a new doc are expanded,
-    and the hot-anchor cap sees the full bucket contents (base ∪ new), so
-    its keep decision matches the full run's. Old–old pairs inside touched
-    buckets are dropped before verification — the base run already emitted
-    them (equality caveat: buckets past the cap, as everywhere else).
+    index applies: only anchors CONTAINING a new doc are expanded, over
+    their full contents (base ∪ new), so the cold/hot split matches the
+    full run's. Old–old pairs are dropped: the base labels already connect
+    them. A hot anchor's chain edges touching a new doc then connect it to
+    every doc it shares a run with, since the old docs of one context class
+    or run key share a run and so are one base component — the labels
+    equal the full run's either side of the cap.
     """
     anchors_all = anchors_base.unionByName(anchors_new)
     touched = anchors_all.join(
         anchors_new.select("anchor").distinct(), "anchor", "left_semi"
     )
-    cand = pairs_from_anchor_table(touched, cfg)
+    pairs = verify_substring_pairs(touched, cfg)
     new_ids = anchors_new.select("id").distinct()
-    pa = cand.join(new_ids.withColumnRenamed("id", "a"), "a", "left_semi")
-    pb = cand.join(new_ids.withColumnRenamed("id", "b"), "b", "left_semi")
-    cand = pa.unionByName(pb).dropDuplicates(["a", "b"])
-    verified = verify_substring_pairs(cand, docs_all, cfg, id_col, caption_col)
-    return verified.withColumn("src", F.lit("substr"))
+    pa = pairs.join(new_ids.withColumnRenamed("id", "a"), "a", "left_semi")
+    pb = pairs.join(new_ids.withColumnRenamed("id", "b"), "b", "left_semi")
+    return pa.unionByName(pb).dropDuplicates(["a", "b"]).withColumn("src", F.lit("substr"))
 
 
 def incremental_cluster_update(
@@ -278,6 +275,22 @@ def chain_run_metadata(spark: SparkSession, ckpt_path: str | pathlib.Path) -> di
     }
 
 
+def _require_anchor_contexts(spark: SparkSession, ckpt_path: str | pathlib.Path) -> None:
+    """Raise unless every anchor table of the chain carries the occurrence
+    contexts (``ctx``) the substring stage verifies from: a catalog written
+    before anchors carried them holds bare (id, anchor) rows. Reads the
+    manifests' recorded schemas only."""
+    chain = catalog_chain(ckpt_path)
+    for link, stage in [(chain[0], "02b_anchors")] + [(c, "02b_anchors_delta") for c in chain[1:]]:
+        m = CheckpointCatalog(spark, link).manifest(stage) or {}
+        if "ctx" not in {f["name"] for f in m.get("schema", {}).get("fields", [])}:
+            raise RuntimeError(
+                f"{link} has no {stage} table with anchor contexts (ctx): it was "
+                "written before the anchor table carried them, so the substring "
+                "stage cannot verify against it — rebuild the base with run_pipeline"
+            )
+
+
 @dataclass
 class DeltaRunResult:
     fingerprints_new: DataFrame
@@ -336,6 +349,8 @@ def run_delta(
     include_phash = meta["include_phash"]
     quality_filter = meta["quality_filter"]
     quality_overrides = meta["quality_overrides"]
+    if enable_substring:
+        _require_anchor_contexts(spark, base_checkpoint)
 
     cat = CheckpointCatalog(spark, checkpoint_path)
     ptr = pathlib.Path(checkpoint_path) / DELTA_POINTER
@@ -354,7 +369,7 @@ def run_delta(
     )
     in_fp = (
         f"{base01['input_fingerprint']}+{input_fingerprint_of(increment_path)}"
-        f"-{config_fingerprint(cfg)}-ss{int(enable_substring)}-ph{int(include_phash)}"
+        f"-{config_fingerprint(cfg)}{substring_tag(enable_substring)}-ph{int(include_phash)}"
         + ("-qf1" if quality_filter else "")
         + ("-bx1" if byte_exact else "")
     )
@@ -477,19 +492,12 @@ def run_delta(
         anch_base = read_chain_stage(
             spark, base_checkpoint, "02b_anchors", "02b_anchors_delta"
         )
-        docs_all = reduce(
-            lambda a, b: a.unionByName(b),
-            [
-                spark.read.parquet(p).select("image_id", "caption")
-                for p in [*meta["input_paths"], increment_path]
-            ],
-        )
 
     def _cand() -> DataFrame:
         c = incremental_candidates(fp_new, fp_all, cfg, include_phash=include_phash)
         if not enable_substring:
             return c
-        sub = incremental_substring_pairs(anch_base, anch_new, docs_all, cfg)
+        sub = incremental_substring_pairs(anch_base, anch_new, cfg)
         return union_candidates(c, sub)
 
     cand = cat.run_stage("02_candidates_delta", in_fp, _cand)

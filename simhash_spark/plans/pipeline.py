@@ -33,9 +33,8 @@ from simhash_spark.operators.candidates import (
 )
 from simhash_spark.operators.connected_components import connected_components
 from simhash_spark.operators.substring import (
-    pairs_from_anchor_table,
-    substring_degree_summary,
     substring_pairs,
+    substring_stage_summary,
     verify_substring_pairs,
     winnow_anchor_table,
 )
@@ -72,7 +71,8 @@ def candidate_job(
 def substring_job(src: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """E2b one-shot form: captions -> substring pairs (a, b, src='substr').
     run_pipeline instead splits this into the 02b_anchors checkpoint +
-    verify so the anchor table persists as incremental-maintenance state."""
+    verify so the anchor table persists as verification and
+    incremental-maintenance state."""
     return substring_pairs(src.select("image_id", "caption"), cfg)
 
 
@@ -386,8 +386,16 @@ def stage_fingerprint(
     bx = "-bx1" if byte_exact else ""
     return (
         f"{input_fingerprint_of(input_path)}-{config_fingerprint(cfg)}"
-        f"-ss{int(enable_substring)}-ph{int(include_phash)}{qf}{bx}"
+        f"{substring_tag(enable_substring)}-ph{int(include_phash)}{qf}{bx}"
     )
+
+
+def substring_tag(enable_substring: bool) -> str:
+    """The substring flag's part of a stage identity. ``-ss2``: the
+    02b_anchors table carries each occurrence's (lo, ctx) context; a
+    catalog tagged ``-ss1`` holds bare (id, anchor) rows that cannot be
+    verified at the anchor, so its stages are never resumed."""
+    return "-ss2" if enable_substring else "-ss0"
 
 
 @dataclass
@@ -423,7 +431,7 @@ def run_pipeline(
 
     Manifest metrics come from the stages' own writes: the candidates stage
     observes its bucket histogram off the window that sizes the buckets,
-    the substring verify observes its pair degrees off its own joins. The
+    the substring verify its pairs examined and hot anchors. The
     run starts no Spark job beyond the ones that compute and write stages."""
     from simhash_spark.plans.delta import run_metadata
 
@@ -524,25 +532,25 @@ def run_pipeline(
     )
 
     if enable_substring:
-        # the anchor table is checkpointed as its own stage: it is BOTH a
-        # resume point for the substring stage and the incremental-
-        # maintenance state (a delta run semi-joins it against the
-        # increment's anchors instead of re-winnowing the base corpus)
+        # the anchor table is checkpointed as its own stage: it is the
+        # resume point for the substring stage, the whole of its
+        # verification state (each occurrence carries its context, so no
+        # caption is read again) and the incremental-maintenance state (a
+        # delta run semi-joins it against the increment's anchors instead
+        # of re-winnowing the base corpus)
         anch = cat.run_stage(
             "02b_anchors",
             in_fp,
             lambda: winnow_anchor_table(src.select("image_id", "caption"), cfg),
         )
-        # the accepted 2.73x pair-join text amplification's revisit trigger
-        # ("degree grows with corpus size") as manifest numbers
         sub_obs = StageObservations()
         sub = cat.run_stage(
             "02b_substr",
             in_fp,
-            lambda: verify_substring_pairs(
-                pairs_from_anchor_table(anch, cfg), src, cfg, observe=sub_obs.observe
-            ).withColumn("src", F.lit("substr")),
-            extra_metrics=lambda: substring_degree_summary(sub_obs.get()),
+            lambda: verify_substring_pairs(anch, cfg, observe=sub_obs.observe).withColumn(
+                "src", F.lit("substr")
+            ),
+            extra_metrics=lambda: substring_stage_summary(sub_obs.get()),
         )
         all_cand = union_candidates(cand, sub)
     else:

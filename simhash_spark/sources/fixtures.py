@@ -133,6 +133,46 @@ def make_images_pdf(
     return pd.DataFrame(rows)
 
 
+def make_hot_anchor_pdf(n_family: int, n_other: int = 0, seed: int = 5) -> pd.DataFrame:
+    """A substring family over one hot anchor, then ``n_other`` unrelated
+    captions (no bytes; random phash, so no pixel pairs).
+
+    Each family caption wraps a cut of one passage in its own random words.
+    Every cut holds the passage's 40-char core and extends it to each side
+    (by 0-39 chars, or by 0-3 for a quarter of them), so the family shares
+    the core's winnowing anchors (anchor buckets of up to ``n_family``
+    docs), while two members share a run of 48 chars only when their cuts
+    overlap by 8 more chars: the short cuts share the hot anchors with the
+    family and a run with nobody."""
+    rng = np.random.default_rng(seed)
+    vocab = _vocab(rng)[:1900]
+
+    def words(n: int) -> str:
+        return " ".join(str(v) for v in vocab[rng.integers(0, len(vocab), n)])
+
+    passage = words(40)
+    core = len(passage) // 2 - 20
+    captions = []
+    for _ in range(n_family):
+        left, right = (int(x) for x in rng.integers(0, 4 if rng.random() < 0.25 else 40, 2))
+        cut = passage[core - left : core + 40 + right]
+        captions.append(f"{words(int(rng.integers(4, 9)))} {cut} {words(int(rng.integers(4, 9)))}")
+    captions += [words(int(rng.integers(8, 40))) for _ in range(n_other)]
+    return pd.DataFrame(
+        {
+            "image_id": [f"img{i:09d}" for i in range(len(captions))],
+            "bytes": [None] * len(captions),
+            "w": 32,
+            "h": 32,
+            "fmt": "ppm",
+            "caption": captions,
+            "phash": spec.u64_to_i64(
+                rng.integers(0, 2**63, len(captions), dtype=np.uint64)
+            ).astype(np.int64),
+        }
+    )
+
+
 def plant_byte_reuploads(
     pdf: pd.DataFrame, every: int = 7, offset: int = 3
 ) -> pd.DataFrame:

@@ -10,7 +10,8 @@ Mirrored semantics are kept in lockstep with the cited engine code:
   the raw (code, index, key) triple);
 - pairs mirror bucket_pairs_packed for buckets of 2..cap members (hot
   buckets would need the JVM salt hash and make the mirror invalid — we
-  assert none exist);
+  assert none exist); substring hot anchors chain in id order instead
+  (substring_pairs_mirror);
 - verify mirrors operators/verify.py (use_phash=False);
 - clusters mirror connected_components + singleton labeling;
 - alignment_tokens mirrors caption_pixel_alignment's caption tokenizer.
@@ -108,29 +109,27 @@ def text_kernel_mirror(docs: pd.DataFrame, cfg: PipelineConfig) -> dict:
 
 def substring_pairs_mirror(docs: pd.DataFrame, cfg: PipelineConfig) -> set[tuple[str, str]]:
     """Expected (a, b) substring pairs: winnowing completeness means every
-    pair sharing a normalized run >= L shares an anchor; candidates are
-    anchor co-occupants, verified by the exact shared-run predicate —
-    mirrors operators/substring.py::substring_pairs."""
-    from collections import defaultdict as _dd
+    pair sharing a normalized run >= L shares an anchor; co-occupants of an
+    anchor with 2..cap docs are verified by the exact shared-run predicate
+    over the whole texts — mirrors operators/substring.py::substring_pairs.
 
+    An anchor over the cap follows the run-keyed hot rule in its plain
+    form: each occurrence keys its in-bounds L-runs through the anchor, and
+    a key's docs are chained in id order. The engine first collapses equal
+    contexts into classes and salts its chains with the JVM hash, so the
+    edge sets differ but connect the same docs: only the components are
+    comparable."""
     ids = docs["doc_id"].astype(str).tolist()
     norm = [spec.normalize_for_substring(t) for t in docs["text"].tolist()]
-    di, _pos, ah = spec.winnow_anchors_batch(norm, cfg.substr_window, cfg.substr_min_len)
-    by_anchor: dict[int, set[int]] = _dd(set)
+    L, w = cfg.substr_min_len, cfg.substr_window
+    di, pos, ah = spec.winnow_anchors_batch(norm, w, L)
+    by_anchor: dict[int, set[int]] = defaultdict(set)
     for d, h in zip(di.tolist(), ah.tolist()):
         by_anchor[h].add(d)
-    # the engine caps each anchor bucket at bucket_cap ids (keep-lowest,
-    # operators/substring.py) — an over-cap anchor would make this mirror
-    # expect pairs the engine deterministically dropped, so refuse loudly
-    biggest = max((len(m) for m in by_anchor.values()), default=0)
-    assert biggest <= cfg.bucket_cap, (
-        f"hot anchor bucket ({biggest} > cap {cfg.bucket_cap}) — the engine's "
-        "keep-lowest truncation is not mirrored; corpus unusable here"
-    )
     cand = {
         tuple(sorted((ids[x], ids[y])))
         for members in by_anchor.values()
-        if len(members) > 1
+        if 1 < len(members) <= cfg.bucket_cap
         for x in members
         for y in members
         if x < y
@@ -139,7 +138,6 @@ def substring_pairs_mirror(docs: pd.DataFrame, cfg: PipelineConfig) -> set[tuple
 
     def shares(a: str, b: str) -> bool:
         na, nb = norm[by_id[a]], norm[by_id[b]]
-        L = cfg.substr_min_len
         if len(na) < L or len(nb) < L:
             return False
         if len(nb) < len(na):
@@ -147,7 +145,31 @@ def substring_pairs_mirror(docs: pd.DataFrame, cfg: PipelineConfig) -> set[tuple
         wins = {na[i : i + L] for i in range(len(na) - L + 1)}
         return any(nb[i : i + L] in wins for i in range(len(nb) - L + 1))
 
-    return {p for p in cand if shares(*p)}
+    pairs = {p for p in cand if shares(*p)}
+    run_keys: dict[tuple[int, str], set[str]] = defaultdict(set)
+    for d, p, h in zip(di.tolist(), pos.tolist(), ah.tolist()):
+        if len(by_anchor[h]) > cfg.bucket_cap:
+            for off in range(min(p, L - w) + 1):
+                if p - off + L <= len(norm[d]):
+                    run_keys[(h, norm[d][p - off : p - off + L])].add(ids[d])
+    for members in run_keys.values():
+        chain = sorted(members)
+        pairs.update(zip(chain, chain[1:]))
+    return pairs
+
+
+def context_shares_run(lo_a: int, ctx_a: str, lo_b: int, ctx_b: str, min_len: int) -> bool:
+    """Python twin of operators/substring._shared_runs over two occurrences
+    of one anchor (udfs.winnow_contexts' lo, ctx): equal contexts of >= L
+    chars, or an L-run at the same offset d before both anchors, inside
+    both contexts."""
+    if ctx_a == ctx_b and len(ctx_a) >= min_len:
+        return True
+    for d in range(min(lo_a, lo_b) + 1):
+        run = ctx_a[lo_a - d : lo_a - d + min_len]
+        if len(run) == min_len and run == ctx_b[lo_b - d : lo_b - d + min_len]:
+            return True
+    return False
 
 
 def union_find_min_labels(
@@ -276,35 +298,37 @@ def candidate_bucket_stats(fp, cfg: PipelineConfig, include_phash: bool = True):
     return bucket_stats_packed(explode_all_keys(fp, cfg, include_phash=include_phash))
 
 
-def substring_degree_metrics(
-    cand, df, id_col: str = "image_id", caption_col: str = "caption"
-) -> dict:
-    """The substring stage's pair-degree manifest keys as a standalone pass
-    over the candidate pairs: one degree agg, one slim length join and a
-    single-row collect."""
-    from pyspark.sql import functions as F
-
-    from simhash_spark.operators.substring import substring_degree_summary
-
-    deg = (
-        cand.select(F.col("a").alias("id"))
-        .unionByName(cand.select(F.col("b").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    )
-    lens = df.select(
-        F.col(id_col).alias("id"), F.length(caption_col).cast("bigint").alias("len")
-    )
-    row = (
-        deg.join(lens, "id")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("degree").alias("sum_degree"),
-            F.max("degree").alias("max_degree"),
-            F.percentile_approx("degree", 0.99).alias("p99_degree"),
-            F.sum(F.col("degree") * F.col("len")).alias("shipped"),
-            F.sum("len").alias("ideal"),
-        )
-        .collect()[0]
-    )
-    return substring_degree_summary(row.asDict())
+def substring_stage_metrics(anchors, cfg: PipelineConfig) -> dict:
+    """The substring stage's manifest keys recomputed in Python from the
+    anchor table (id, anchor, lo, ctx): co-occupant pairs of distinct docs
+    in cold anchors, hot anchors, the largest anchor's docs, and the chain
+    edges of a hot anchor — one fewer than the docs of each context class
+    (equal lo and ctx of >= L chars) and of each L-run key over the
+    classes' least ids."""
+    pdf = anchors.toPandas()
+    L = cfg.substr_min_len
+    cold_pairs = hot = chain = max_ids = 0
+    for _, g in pdf.groupby("anchor"):
+        n_ids = g["id"].nunique()
+        max_ids = max(max_ids, n_ids)
+        if n_ids > cfg.bucket_cap:
+            hot += 1
+            classes: dict[tuple[int, str], set] = defaultdict(set)
+            for i, lo, ctx in zip(g["id"], g["lo"], g["ctx"]):
+                if len(ctx) >= L:
+                    classes[(lo, ctx)].add(i)
+            keys: dict[str, set] = defaultdict(set)
+            for (lo, ctx), members in classes.items():
+                for d in range(lo + 1):
+                    if len(ctx) - lo >= L - d:
+                        keys[ctx[lo - d : lo - d + L]].add(min(members))
+            chain += sum(len(m) - 1 for m in [*classes.values(), *keys.values()])
+        elif n_ids >= 2:
+            per_id = g["id"].value_counts()
+            cold_pairs += len(g) * (len(g) - 1) // 2 - int((per_id * (per_id - 1) // 2).sum())
+    return {
+        "n_pairs": cold_pairs + chain,
+        "hot_anchors": hot,
+        "max_anchor_ids": max_ids,
+        "chain_edges": chain,
+    }

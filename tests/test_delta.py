@@ -593,3 +593,92 @@ def test_run_delta_cli_stats_start_no_count_pass(spark, tmp_path, jobs_started, 
     }
     assert stats == want
     assert want["byte_suppressed"] and want["misaligned_delta"] and want["verified_delta"]
+
+
+def test_run_delta_hot_anchor_push_equals_full_run(spark, tmp_path):
+    """An increment that pushes substring anchors from cold (base: at most
+    24 docs each, under the cap of 32) to hot (60 docs) folds in exactly:
+    the delta labels equal the full run's, which equal compute_truth's."""
+    import pandas as pd
+
+    from simhash_spark.config import PipelineConfig
+    from simhash_spark.plans.delta import run_delta
+    from simhash_spark.plans.pipeline import run_pipeline
+    from simhash_spark.sources.catalog import CheckpointCatalog
+    from simhash_spark.sources.fixtures import (
+        INPUT_HINT_SCHEMA,
+        compute_truth,
+        make_hot_anchor_pdf,
+    )
+
+    cfg = PipelineConfig(bucket_cap=32, salt_buckets=4)
+    pdf = make_hot_anchor_pdf(60, 40)
+    family, other = pdf.iloc[:60], pdf.iloc[60:]
+    parts = {
+        "full": pdf,
+        "base": pd.concat([family.iloc[:24], other.iloc[:20]]),
+        "inc": pd.concat([family.iloc[24:], other.iloc[20:]]),
+    }
+    paths = {}
+    for name, part in parts.items():
+        paths[name] = str(tmp_path / f"{name}.parquet")
+        spark.createDataFrame(part, INPUT_HINT_SCHEMA).coalesce(1).write.parquet(paths[name])
+
+    full = run_pipeline(spark, paths["full"], str(tmp_path / "ck_full"), cfg)
+    run_pipeline(spark, paths["base"], str(tmp_path / "ck_base"), cfg)
+    d = run_delta(spark, str(tmp_path / "ck_base"), paths["inc"], str(tmp_path / "ck_d"))
+
+    def hot_anchors(ck: str) -> int:
+        return CheckpointCatalog(spark, tmp_path / ck).manifest("02b_substr")["hot_anchors"]
+
+    assert hot_anchors("ck_base") == 0 and hot_anchors("ck_full") >= 1
+    _, truth = compute_truth(pdf, cfg)
+    assert _rows(full.clusters) == sorted(zip(truth["image_id"], truth["cluster_id"]))
+    assert _rows(d.clusters) == _rows(full.clusters)
+
+
+def test_run_delta_refuses_anchor_table_without_contexts(spark, tmp_path):
+    """A base whose 02b_anchors predates the occurrence contexts (bare id,
+    anchor rows) cannot verify substring pairs: run_delta refuses it from
+    the manifests alone, before it writes anything, and the stage identity
+    no longer carries the tag such catalogs were written under."""
+    import json
+    from dataclasses import asdict
+
+    import pytest
+
+    from simhash_spark.plans.delta import run_delta
+    from simhash_spark.plans.pipeline import stage_fingerprint
+    from simhash_spark.sources.catalog import MANIFEST_NAME
+
+    base = tmp_path / "ck_old"
+    manifests = {
+        "01_fingerprints": {
+            "complete": True,
+            "config": asdict(CFG),
+            "enable_substring": True,
+            "include_phash": True,
+            "input_path": str(tmp_path / "old.parquet"),
+        },
+        "02b_anchors": {
+            "complete": True,
+            "schema": {
+                "type": "struct",
+                "fields": [
+                    {"name": "id", "type": "string", "nullable": True, "metadata": {}},
+                    {"name": "anchor", "type": "long", "nullable": True, "metadata": {}},
+                ],
+            },
+        },
+    }
+    for stage, m in manifests.items():
+        (base / stage).mkdir(parents=True)
+        (base / stage / MANIFEST_NAME).write_text(json.dumps(m))
+    out = tmp_path / "ck_new"
+    with pytest.raises(RuntimeError, match="anchor contexts"):
+        run_delta(spark, str(base), str(tmp_path / "inc.parquet"), str(out))
+    assert not out.exists()
+
+    inp = tmp_path / "inc.parquet"
+    inp.write_bytes(b"")
+    assert "-ss1" not in stage_fingerprint(str(inp), CFG, True, True)

@@ -111,25 +111,14 @@ def test_resume_skips_complete_stages(spark, fixture_dir, tmp_path):
     assert "bucket_stats" in cm and "minhash_lsh" in cm["bucket_stats"]
     assert cm["bucket_cap"] > 0 and "indexes_with_hot_buckets" in cm
 
-    # substring stage records its pair-degree / amplification revisit
-    # trigger (r4 verdict #3: a monitorable metric, not a doc sentence)
+    # substring stage records its work and hot-anchor accounting (no
+    # silent truncation); this fixture has no anchor over the cap
     sm = cat.manifest("02b_substr")
-    for k in (
-        "n_pairs",
-        "n_docs_in_pairs",
-        "mean_degree_x100",
-        "p99_degree",
-        "max_degree",
-        "shipped_text_chars",
-        "ideal_text_chars",
-        "amplification_x100",
-    ):
+    for k in ("n_pairs", "hot_anchors", "max_anchor_ids", "chain_edges"):
         assert k in sm, k
-    assert sm["n_pairs"] > 0 and sm["n_docs_in_pairs"] > 0
-    # shipped >= ideal by construction (degree >= 1 for every doc in pairs)
-    assert sm["shipped_text_chars"] >= sm["ideal_text_chars"] > 0
-    assert sm["amplification_x100"] >= 100 and sm["mean_degree_x100"] >= 100
-    assert sm["max_degree"] >= sm["p99_degree"] >= 1
+    assert sm["n_pairs"] >= sm["n_rows"] > 0
+    assert sm["hot_anchors"] == sm["chain_edges"] == 0
+    assert 2 <= sm["max_anchor_ids"] <= CFG.bucket_cap
 
     # second run must not recompute: poison compute to prove it is skipped
     boom = lambda: (_ for _ in ()).throw(AssertionError("stage recomputed"))
@@ -287,15 +276,14 @@ def test_pipeline_manifest_metrics_match_standalone(spark, fixture_dir, tmp_path
     """The manifest numbers collected during each stage's own write equal
     the standalone computations over the same run's checkpoints: the
     candidates stage's bucket histogram (candidate_bucket_stats), the
-    substring stage's degree keys (substring_degree_metrics over the
-    anchor checkpoint's pairs) and every stage's per-file rows (an
+    substring stage's keys (substring_stage_metrics over the anchor
+    checkpoint) and every stage's per-file rows (an
     input_file_name() count). Labels stay equal to the truth."""
     import json
     import pathlib
 
-    from mirror import candidate_bucket_stats, substring_degree_metrics
+    from mirror import candidate_bucket_stats, substring_stage_metrics
 
-    from simhash_spark.operators.substring import pairs_from_anchor_table
     from simhash_spark.sources.catalog import CheckpointCatalog
 
     inp = str(fixture_dir / "images.parquet")
@@ -314,10 +302,9 @@ def test_pipeline_manifest_metrics_match_standalone(spark, fixture_dir, tmp_path
     )
 
     sm = cat.manifest("02b_substr")
-    src = spark.read.parquet(inp)
-    deg = substring_degree_metrics(pairs_from_anchor_table(cat.read("02b_anchors"), CFG), src)
-    assert deg["n_pairs"] > 0
-    assert {k: sm[k] for k in deg} == deg
+    want = substring_stage_metrics(cat.read("02b_anchors"), CFG)
+    assert want["n_pairs"] > 0
+    assert {k: sm[k] for k in want} == want
 
     for stage in ("01_fingerprints", "02_candidates", "02b_anchors", "02b_substr",
                   "03_verified", "04_clusters"):

@@ -183,6 +183,47 @@ def test_pair_shares_run_matches_setwise(a, b, min_len):
     assert _pair_shares_run(a, b, ia, ib, min_len) == _shares_run(a, b, min_len)
 
 
+@st.composite
+def _run_sharing_docs(draw):
+    """Two texts over a small alphabet that often share a cut of one common
+    string — anywhere, including flush with either end — plus (min_len, w).
+    Small alphabets make periodic texts, so one anchor repeats in a doc;
+    texts may be shorter than min_len."""
+    alphabet = draw(st.sampled_from(["a", "ab", "ab ", "abc d"]))
+    shared = draw(st.text(alphabet=alphabet, max_size=60))
+
+    def doc() -> str:
+        i = draw(st.integers(0, len(shared)))
+        j = draw(st.integers(i, len(shared)))
+        pad = st.text(alphabet=alphabet, max_size=20)
+        return draw(pad) + shared[i:j] + draw(pad)
+
+    min_len = draw(st.integers(min_value=2, max_value=14))
+    return doc(), doc(), min_len, draw(st.integers(min_value=1, max_value=min_len - 1))
+
+
+@given(_run_sharing_docs())
+@settings(max_examples=400, deadline=None)
+def test_anchor_context_predicate_matches_shares_run(docs):
+    """Verification at the anchor is exact: two texts share a run >= L iff
+    some anchor they share has occurrences whose contexts (udfs.
+    winnow_contexts) pass the context predicate (mirror.context_shares_run,
+    the twin of substring._shared_runs)."""
+    from mirror import context_shares_run
+
+    from simhash_spark.functions.udfs import winnow_contexts
+    from simhash_spark.operators.substring import _shares_run
+
+    a, b, min_len, w = docs
+    occ_a, occ_b = winnow_contexts([a, b], w, min_len)
+    at_anchor = any(
+        ha == hb and context_shares_run(la, ca, lb, cb, min_len)
+        for ha, la, ca in occ_a
+        for hb, lb, cb in occ_b
+    )
+    assert at_anchor == _shares_run(a, b, min_len)
+
+
 @given(
     st.integers(min_value=1, max_value=3),
     st.integers(min_value=1, max_value=500),

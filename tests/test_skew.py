@@ -215,3 +215,93 @@ def test_design_point_16_blocks_uses_udf_keygen(spark):
     wall = time.time() - t0
     assert n > 0
     assert wall < 150, f"16-block candidates took {wall:.0f}s — expression path?"
+
+
+HOT_ANCHOR_CFG = PipelineConfig(bucket_cap=24, salt_buckets=4)
+
+
+def test_hot_anchor_family_clusters_equal_truth(spark, tmp_path):
+    """An anchor family above bucket_cap loses no substring pair: the
+    pipeline's clusters equal compute_truth's components, the run-keyed
+    chains connect no co-occupants that share no run (the fixture's short
+    cuts sit in the hot anchors and stay apart), every chain edge is a true
+    pair, and the manifest's hot-anchor accounting equals a standalone
+    recount."""
+    from mirror import substring_pairs_mirror, substring_stage_metrics, union_find_min_labels
+
+    from simhash_spark import spec
+    from simhash_spark.operators.substring import _shares_run
+    from simhash_spark.plans.pipeline import run_pipeline
+    from simhash_spark.sources.catalog import CheckpointCatalog
+    from simhash_spark.sources.fixtures import (
+        INPUT_HINT_SCHEMA,
+        compute_truth,
+        make_hot_anchor_pdf,
+    )
+
+    pdf = make_hot_anchor_pdf(60, 40)
+    inp = str(tmp_path / "hot.parquet")
+    spark.createDataFrame(pdf, INPUT_HINT_SCHEMA).coalesce(1).write.parquet(inp)
+    ck = tmp_path / "ck"
+    res = run_pipeline(spark, inp, str(ck), HOT_ANCHOR_CFG)
+    _, truth = compute_truth(pdf, HOT_ANCHOR_CFG)
+    want = dict(zip(truth["image_id"], truth["cluster_id"]))
+    assert {r["image_id"]: r["cluster_id"] for r in res.clusters.collect()} == want
+
+    cat = CheckpointCatalog(spark, ck)
+    sm = cat.manifest("02b_substr")
+    assert sm["hot_anchors"] >= 1 and sm["chain_edges"] > 0
+    assert sm["max_anchor_ids"] > HOT_ANCHOR_CFG.bucket_cap
+    assert {k: sm[k] for k in ("n_pairs", "hot_anchors", "max_anchor_ids", "chain_edges")} == (
+        substring_stage_metrics(cat.read("02b_anchors"), HOT_ANCHOR_CFG)
+    )
+    # the largest anchor holds docs of more than one truth component
+    hot = (
+        cat.read("02b_anchors")
+        .groupBy("anchor")
+        .agg(F.collect_set("id").alias("ids"))
+        .orderBy(F.size("ids").desc())
+        .first()["ids"]
+    )
+    assert len({want[i] for i in hot}) > 1
+
+    norm = dict(zip(pdf["image_id"], map(spec.normalize_for_substring, pdf["caption"])))
+    edges = [(r["a"], r["b"]) for r in cat.read("02b_substr").collect()]
+    assert all(_shares_run(norm[a], norm[b], HOT_ANCHOR_CFG.substr_min_len) for a, b in edges)
+    docs = pdf.rename(columns={"image_id": "doc_id", "caption": "text"})
+    mirror = substring_pairs_mirror(docs, HOT_ANCHOR_CFG)
+    ids = list(pdf["image_id"])
+    assert union_find_min_labels(ids, sorted(mirror)) == union_find_min_labels(ids, edges)
+
+
+def test_shared_runs_equals_python_twin(spark):
+    """substring._shared_runs (the Catalyst offset tests) keeps exactly the
+    occurrence pairs its Python twin accepts, on random pairs: small
+    alphabets, contexts cut at either end of the text, equal contexts and
+    equal lo."""
+    import random
+
+    from mirror import context_shares_run
+
+    from simhash_spark.operators.substring import _shared_runs
+
+    L, w = CFG.substr_min_len, CFG.substr_window
+    rng = random.Random(3)
+
+    def occ(name: str, alphabet: str) -> tuple[str, int, str]:
+        lo = rng.randint(0, L - w)
+        ctx = "".join(rng.choice(alphabet) for _ in range(rng.randint(lo + w - 4, lo + L)))
+        return (name, lo, ctx)
+
+    rows = []
+    for i in range(2000):
+        alphabet = rng.choice(["a", "ab", "ab "])
+        x, y = occ(f"x{i}", alphabet), occ(f"y{i}", alphabet)
+        if rng.random() < 0.3:
+            y = (y[0], x[1], x[2])
+        rows.append((x, y))
+    occ_t = "struct<id:string, lo:int, ctx:string>"
+    df = spark.createDataFrame(rows, f"x {occ_t}, y {occ_t}")
+    got = {(r["a"], r["b"]) for r in _shared_runs(df, L).collect()}
+    want = {(x[0], y[0]) for x, y in rows if context_shares_run(x[1], x[2], y[1], y[2], L)}
+    assert len(want) > 100 and got == want
