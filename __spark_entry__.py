@@ -808,8 +808,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def lsh_bucket_stats(spark, sf):
         # the skew surface: full bucket-size histogram per index family
         # (band LSH vs simhash pigeonhole, singletons included) — what a
-        # 10^12-row run reads before picking bucket_cap / salting
-        # thresholds. Same groupBy(k) exchange the candidates stage runs.
+        # 10^12-row run reads before picking bucket_cap. Same groupBy(k)
+        # exchange the candidates stage runs.
         # Oracle = the mirror's raw (code, table, key) buckets (engine
         # folds the triple through xxhash64; merge odds 2^-62).
         from simhash_spark.operators.candidates import (

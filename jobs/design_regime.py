@@ -283,7 +283,7 @@ def run_wide(spark, n, path) -> dict:
                production key set (32 bands + 560 simhash + 560 phash
                combos per row); count() forces every key.
       cand   — the full candidate operator (one packed-key exchange, window
-               bucket count, capped collect / salted chains, pair dedup) in
+               bucket count, capped collect / id-order chains, pair dedup) in
                the text-corpus shape (no phash index: 592 keys/row; the
                phash rotation index is structurally identical and only
                doubles constant shuffle volume).

@@ -34,8 +34,8 @@ class PipelineConfig:
     # winnowing guarantee: any shared run of >= w + s - 1 = L chars shares
     # an anchor, s = L - w + 1
     # --- skew / hot-bucket handling ---
-    bucket_cap: int = 256         # max rows per candidate bucket before salt-split
-    salt_buckets: int = 16        # salt fan-out for capped buckets
+    bucket_cap: int = 256         # max rows per bucket (candidate key, anchor) expanded
+                                  # to all pairs; larger buckets chain in id order
     # execution-level knobs (shuffle partitions, Arrow batch size) live on
     # the SparkSession (session.get_spark), not here: they tune a deployment,
     # not the frozen algorithm contract.

@@ -382,13 +382,7 @@ def make_winnow_udf(cfg: PipelineConfig):
 
     @F.pandas_udf(schema)
     def winnow(captions: pd.Series) -> pd.Series:
-        s = captions.reset_index(drop=True).fillna("")
-        norm = (
-            s.str.normalize("NFKC")
-            .str.lower()
-            .str.replace(r"[^a-z0-9]+", " ", regex=True)
-            .str.strip()
-        )
+        norm = normalize_for_substring(captions)
         occ = winnow_contexts(norm.tolist(), cfg.substr_window, cfg.substr_min_len)
         return pd.Series(
             [[{"anchor": h, "lo": lo, "ctx": c} for h, lo, c in doc] for doc in occ]
@@ -397,14 +391,23 @@ def make_winnow_udf(cfg: PipelineConfig):
     return winnow
 
 
-@F.pandas_udf(T.StringType())
-def normalize_substring_udf(captions: pd.Series) -> pd.Series:
-    """spec.normalize_for_substring as a vectorized column: NFKC + lower +
-    non-alnum runs collapsed to single spaces, stripped."""
+def normalize_for_substring(captions: pd.Series) -> pd.Series:
+    """spec.normalize_for_substring over a batch, vectorized: NFKC + lower +
+    non-alnum runs collapsed to single spaces, stripped; a null caption
+    reads as the empty one. The winnow UDF and ``normalize_substring_udf``
+    both normalize through it, so anchor positions and verified text agree
+    bit-for-bit."""
     return (
-        captions.fillna("")
+        captions.reset_index(drop=True)
+        .fillna("")
         .str.normalize("NFKC")
         .str.lower()
         .str.replace(r"[^a-z0-9]+", " ", regex=True)
         .str.strip()
     )
+
+
+@F.pandas_udf(T.StringType())
+def normalize_substring_udf(captions: pd.Series) -> pd.Series:
+    """``normalize_for_substring`` as a column."""
+    return normalize_for_substring(captions)

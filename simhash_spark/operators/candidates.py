@@ -4,15 +4,20 @@ This operator replaces the reference's all-pairs fingerprint comparison
 (/root/reference/README.md:16, the cache-tuned O(n^2) loops) with equi-joins
 on bucket keys: O(n^2) becomes O(sum of bucket^2), bounded by ``bucket_cap``.
 
-Skew strategy (SURVEY.md O11/O19/O20):
-- buckets <= bucket_cap: all C(s,2) pairs from one collect of the bucket's
-  sorted ids, expanded by two native explodes (no self-join; the collect
-  is bounded by the cap).
-- buckets >  bucket_cap (hot bands — e.g. a viral caption repeated 10^6
-  times): emit a CHAIN of consecutive ids instead of all pairs. Linear output,
-  preserves connectivity through verification for identical/near-identical
-  content (which is the only way buckets get hot). The drop is logged in the
-  stage metrics, never silent (SURVEY.md §7.5.3).
+It also holds the bucket rule every key table here follows (the candidate
+keys, the substring stage's anchors, the n-gram shingles; SURVEY.md
+O11/O19/O20), in three parts over the key table's one exchange:
+- sizing (``sized_buckets``): each bucket's rows and one head row per
+  bucket, from one unordered window;
+- buckets of 2..cap rows (``cold_pairs``): all C(s,2) pairs from one
+  collect of the bucket's sorted items, expanded by two native explodes
+  (no self-join; the collect is bounded by the cap);
+- buckets over the cap (``id_chain``, hot bands — e.g. a viral caption
+  repeated 10^6 times): a CHAIN of consecutive ids in id order instead of
+  all pairs, m-1 edges. Linear output, preserves connectivity through
+  verification for identical/near-identical content (which is the only
+  way buckets get hot). The hot buckets are counted in the stage metrics,
+  never silent (SURVEY.md §7.5.3).
 
 A pair found in several key tables (32 bands + rotation combos) is
 deduplicated once, in candidate_pairs' groupBy(a, b), which keeps its
@@ -138,12 +143,80 @@ def explode_all_keys(
     return fp.select(F.col(id_col).alias("id"), F.explode(arr).alias("k")).select("k", "id")
 
 
+def sized_buckets(members: DataFrame, keys: list[str]) -> DataFrame:
+    """Bucket sizing, the first part of the bucket rule: adds ``_bsize``
+    (the rows of each bucket) and ``_head`` (true on exactly one row per
+    bucket, the least by its other columns; the key tables' rows are
+    distinct) from ONE unordered window over ``keys``.
+
+    The window's ClusteredDistribution(keys) is the key table's one
+    exchange (none at all if the input is already clustered on the keys,
+    e.g. the delta path's bucketed checkpoints); the cold and hot parts
+    read the same sized rows, so AQE reuses the one materialized shuffle
+    stage. The window buffers one bucket per task slot (sort-based, spills
+    via ExternalAppendOnlyUnsafeRowArray), so a viral 10^6-member bucket
+    spills to disk instead of OOMing. A window, unlike a join, cannot be
+    AQE-skew-split, so one pathological bucket is one slow task; the
+    production funnel runs exact_dedup first, so identical content — the
+    only thing that makes buckets truly enormous — arrives as one row."""
+    w = Window.partitionBy(*keys)
+    row = F.struct(*[c for c in members.columns if c not in keys])
+    return members.withColumns(
+        {"_bsize": F.count(F.lit(1)).over(w), "_head": row == F.min(row).over(w)}
+    )
+
+
+def cold_pairs(
+    sized: DataFrame, keys: list[str], cap: int, item: str | F.Column = "id"
+) -> DataFrame:
+    """Buckets of 2..``cap`` rows (``sized_buckets`` rows) -> (*keys, a, b)
+    for every pair of the bucket's items, a before b in sorted order.
+
+    The collect sees only capped buckets, so per-group memory is bounded
+    by the cap at any corpus size and singleton buckets (~85% at 40-bit
+    keys) never collect. Two chained explodes (pipelined, no shuffle
+    between them) expand each sorted list into its C(s,2) ordered pairs;
+    deliberately lambda-free — NamedLambdaVariable expressions in this
+    position break localCheckpoint plan re-resolution downstream (Spark
+    4.1)."""
+    grouped = (
+        sized.where((F.col("_bsize") >= 2) & (F.col("_bsize") <= cap))
+        .groupBy(*keys)
+        .agg(F.sort_array(F.collect_list(item)).alias("_items"))
+    )
+    lefts = grouped.select(*keys, "_items", F.posexplode("_items").alias("_i", "a"))
+    return lefts.select(
+        *keys,
+        "a",
+        F.explode(
+            F.slice("_items", F.col("_i") + 2, F.size("_items") - F.col("_i") - 1)
+        ).alias("b"),
+    )
+
+
+def id_chain(members: DataFrame, keys: list[str]) -> DataFrame:
+    """(*keys, id) members of hot buckets -> (*keys, a, b) edges: each
+    member linked to the previous id of its bucket in id order, a
+    spanning chain of m-1 edges for m distinct ids. Connectivity is kept
+    while the output stays linear in m. One lag window over the keys, so
+    it needs no exchange beyond the key table's. An id repeated within a
+    bucket yields (id, id) edges, which a caller with repeats filters
+    out."""
+    w = Window.partitionBy(*keys).orderBy("id")
+    return (
+        members.withColumn("_prev", F.lag("id").over(w))
+        .where(F.col("_prev").isNotNull())
+        .select(*keys, F.col("_prev").alias("a"), F.col("id").alias("b"))
+    )
+
+
 def bucket_pairs_packed(
     packed: DataFrame,
     cfg: PipelineConfig,
     observe: Callable[..., DataFrame] | None = None,
 ) -> DataFrame:
-    """(k, id) packed bucket memberships -> candidate pairs (a, b, src).
+    """(k, id) packed bucket memberships -> candidate pairs (a, b, src), by
+    the bucket rule (module docstring).
 
     ONE exchange of the key table, total. Bucket size is a window count over
     the k-clustered rows, not a separate groupBy + semi-join: the previous
@@ -151,109 +224,28 @@ def bucket_pairs_packed(
     DIFFERENT column sets, so Catalyst's column pruning made the three
     exchange subplans non-identical and exchange reuse never fired — three
     full shuffles (and three fingerprint scans + keygen passes) of a table
-    with ~40 keys/row. Here the window's required ClusteredDistribution(k)
-    inserts the single exchange (none at all if the input is already
-    k-clustered, e.g. the delta path's bucketed checkpoints); the cold and
-    hot branches then read the SAME (k, id, _bsize) rows, so AQE reuses the
-    one materialized shuffle stage at runtime, and the downstream groupBy(k)
-    / lag windows are exchange-free (k ⊆ their clustering keys). Local
-    measurement at 60k images/2.4M keys: ~2x faster best-case and far lower
-    run variance than the semi-join shape (fewer shuffles = less of this
-    sandbox's syscall-bound shuffle term); at 10^12 rows it also removes two
-    O(n_buckets) join builds that could never broadcast.
-
-    The window count buffers one bucket per task slot (sort-based, spills via
-    ExternalAppendOnlyUnsafeRowArray), so a viral 10^6-member bucket spills
-    to disk instead of OOMing — same guarantee the old sort-window chain path
-    already relied on. Skew note: a window (unlike a join) cannot be
-    AQE-skew-split, so one pathological bucket = one slow (spilled) task.
-    This is an accepted trade for -2 full exchanges per run because the
-    production funnel runs exact_dedup FIRST (dedup.py): identical content —
-    the only thing that makes buckets truly enormous — collapses to one row
-    before any index key is built, leaving hot buckets at near-identical
-    scale (bounded by cfg.bucket_cap accounting, chained after the count).
-
-    Only buckets with 2..cap members produce all-pairs output; the collect
-    agg sees them AFTER the _bsize filter, so per-group memory stays bounded
-    by the cap at any corpus size and the sparse-index regime (~85%
-    singleton buckets at 40-bit keys) never collects one-element arrays.
+    with ~40 keys/row. Local measurement at 60k images/2.4M keys: ~2x faster
+    best-case and far lower run variance than the semi-join shape; at 10^12
+    rows it also removes two O(n_buckets) join builds that could never
+    broadcast.
 
     ``observe`` (``StageObservations.observe``) receives the per-source
-    bucket histogram (``bucket_stat_exprs``) off the same window: a
-    min(id) over it flags one head row per bucket (ids are unique within a
-    bucket), so the numbers cost no extra exchange or pass.
+    bucket histogram (``bucket_stat_exprs``) off the sizing window's rows
+    and head flags, so the numbers cost no extra exchange or pass.
     """
-    w = Window.partitionBy("k")
-    with_size = packed.withColumn("_bsize", F.count(F.lit(1)).over(w))
+    sized = sized_buckets(packed, ["k"])
     if observe is not None:
-        with_size = observe(
-            with_size.withColumn("_head", F.col("id") == F.min("id").over(w)),
-            *bucket_stat_exprs(),
-        )
-    cold = with_size.where(
-        (F.col("_bsize") >= 2) & (F.col("_bsize") <= cfg.bucket_cap)
-    )
-    grouped = (
-        cold.groupBy("k")
-        .agg(F.sort_array(F.collect_list("id")).alias("_ids"))
-        .select(src_code().alias("c"), "_ids")
-    )
-    # two chained explodes (pipelined, no shuffle between them) expand each
-    # bucket's sorted id list into its C(s,2) ordered pairs; deliberately
-    # lambda-free — NamedLambdaVariable expressions in this position break
-    # localCheckpoint plan re-resolution downstream (Spark 4.1)
-    lefts = grouped.select("c", "_ids", F.posexplode("_ids").alias("_i", "a"))
-    pairs_small = lefts.select(
-        "c",
-        "a",
-        F.explode(
-            F.slice("_ids", F.col("_i") + 2, F.size("_ids") - F.col("_i") - 1)
-        ).alias("b"),
-    )
-
-    # BIG buckets: the salted spanning chain
-    big = with_size.where(F.col("_bsize") > cfg.bucket_cap).withColumn("c", src_code())
-    pairs_big = salted_chain(big, ["k"], cfg.salt_buckets, carry=("c",))
+        sized = observe(sized, *bucket_stat_exprs())
+    hot = id_chain(sized.where(F.col("_bsize") > cfg.bucket_cap), ["k"])
     return (
-        pairs_small.unionByName(pairs_big)
-        .withColumn("src", _decode(F.col("c")))
-        .select("a", "b", "src")
+        cold_pairs(sized, ["k"], cfg.bucket_cap)
+        .unionByName(hot)
+        .select("a", "b", _decode(src_code()).alias("src"))
     )
-
-
-def salted_chain(
-    members: DataFrame, keys: list[str], salt_buckets: int, carry: tuple[str, ...] = ()
-) -> DataFrame:
-    """(*keys, id, *carry) members of hot buckets -> (a, b, *carry) edges, a < b:
-    a salted spanning chain per bucket (O19), the hot-bucket rule of both
-    indexes (bucket_pairs_packed; the substring stage's run-keyed buckets).
-
-    A hot bucket of m rows is split into ``salt_buckets`` sub-chains sorted
-    independently (each sorts m/S rows, not m), then the S chain heads are
-    linked by one more tiny chain — together a spanning tree of the bucket
-    (exactly m-1 edges for distinct ids), so connectivity is preserved while
-    the output stays linear in m and no single sort holds the full hot
-    bucket. An id repeated within a bucket yields (id, id) edges, which a
-    caller with repeats filters out. ``carry`` columns must be constant
-    within a bucket."""
-    salted = members.withColumn("_salt", F.pmod(F.xxhash64("id"), F.lit(salt_buckets)))
-    w_salt = Window.partitionBy(*keys, "_salt").orderBy("id")
-    chained = salted.withColumn("_prev", F.lag("id").over(w_salt))
-    pairs_chain = chained.where(F.col("_prev").isNotNull()).select(
-        F.col("_prev").alias("a"), F.col("id").alias("b"), *carry
-    )
-    heads = chained.where(F.col("_prev").isNull()).select(*keys, *carry, "id")
-    w_head = Window.partitionBy(*keys).orderBy("id")
-    pairs_heads = (
-        heads.withColumn("_prev", F.lag("id").over(w_head))
-        .where(F.col("_prev").isNotNull())
-        .select(F.col("_prev").alias("a"), F.col("id").alias("b"), *carry)
-    )
-    return pairs_chain.unionByName(pairs_heads)
 
 
 def bucket_stat_exprs() -> list[F.Column]:
-    """Aggregates over bucket_pairs_packed's window rows (k, id, _bsize,
+    """Aggregates over bucket_pairs_packed's sized rows (k, id, _bsize,
     _head) that ``bucket_stats_from_observed`` turns into the per-source
     bucket histogram rows."""
     exprs = []
@@ -338,9 +330,8 @@ def bucket_size_histogram(packed: DataFrame) -> DataFrame:
     -> (src, bucket_size, n_buckets), singleton buckets included.
 
     The skew surface behind the candidates manifest's summary rows: the whole
-    size distribution is what a 10^12-row run inspects to pick bucket_cap /
-    salting thresholds (one hot band at size 10^6 vs a thousand at 10^3
-    produce the same avg but need different treatment). Integer-only output
+    size distribution is what a 10^12-row run inspects to pick bucket_cap
+    (one hot band at size 10^6 vs a thousand at 10^3 produce the same avg but need different treatment). Integer-only output
     so the driver oracle compares bit-exactly.
 
     Plan: the SAME map-side-combined groupBy(k) exchange the candidates

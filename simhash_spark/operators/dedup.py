@@ -148,16 +148,17 @@ def _ngram_shared_counts(
     LOWER the similarity estimates for pairs that share such mega-shingles;
     the cap is recorded by the caller's manifest, never silent.
     """
-    from pyspark.sql import Window
-
+    from simhash_spark.operators.candidates import cold_pairs, sized_buckets
     from simhash_spark.session import spread_small_input
 
-    # ONE exchange of the shingle table, total (the bucket_pairs_packed
-    # pattern): shingle frequency is a window count over the shingle-
-    # clustered rows, not a separate groupBy + semi-join — the old shape
-    # (freq agg / semi-join / sizes agg over a persisted table) paid an
-    # extra full exchange for the frequency pre-agg plus a broadcast build
-    # of the kept-shingle list that could never broadcast at web scale.
+    # ONE exchange of the shingle table, total (the bucket rule of
+    # operators/candidates.py without its hot chain: a shared count cannot
+    # be chained, so stop-shingles are dropped): shingle frequency is a
+    # window count over the shingle-clustered rows, not a separate groupBy
+    # + semi-join — the old shape (freq agg / semi-join / sizes agg over a
+    # persisted table) paid an extra full exchange for the frequency
+    # pre-agg plus a broadcast build of the kept-shingle list that could
+    # never broadcast at web scale.
     # ngram_shingles itself is now shuffle-free (per-doc array_distinct),
     # so the window's ClusteredDistribution(shingle) inserts the single
     # exchange; the stop-shingle filter runs before the collect agg, which
@@ -165,19 +166,8 @@ def _ngram_shared_counts(
     # memory bounded by the cap at ANY corpus size — the window count
     # itself spills via the sort-based window buffer).
     sh = ngram_shingles(spread_small_input(df), id_col, text_col, n, hashed=True)
-    with_df = sh.withColumn("df_", F.count(F.lit(1)).over(Window.partitionBy("shingle")))
-    grouped = (
-        with_df.where((F.col("df_") >= 2) & (F.col("df_") <= shingle_doc_cap))
-        .groupBy("shingle")
-        .agg(F.sort_array(F.collect_list("id")).alias("_ids"))
-    )
-    lefts = grouped.select("_ids", F.posexplode("_ids").alias("_i", "a"))
-    pairs = lefts.select(
-        "a",
-        F.explode(
-            F.slice("_ids", F.col("_i") + 2, F.size("_ids") - F.col("_i") - 1)
-        ).alias("b"),
-    )
+    sized = sized_buckets(sh, ["shingle"])
+    pairs = cold_pairs(sized, ["shingle"], shingle_doc_cap)
     shared = pairs.groupBy("a", "b").agg(F.count(F.lit(1)).alias("n_shared"))
     # per-doc shingle counts over the FULL corpus, computed from the SAME
     # shingle-clustered rows (identical subplan incl. the window -> AQE
@@ -186,7 +176,7 @@ def _ngram_shared_counts(
     # Deliberately NOT semi-joined down to pair-participating docs — that
     # variant chains sizes behind the whole pair pipeline and serializes
     # the plan (measured 2.17 s vs 14-35 s at sf0.1).
-    sizes = with_df.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
+    sizes = sized.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
     sa = sizes.select(F.col("id").alias("a"), F.col("n_sh").alias("n_a"))
     sb = sizes.select(F.col("id").alias("b"), F.col("n_sh").alias("n_b"))
     return shared.join(sa, "a").join(sb, "b").select("a", "b", "n_shared", "n_a", "n_b")

@@ -14,23 +14,24 @@ purpose). Spark-first decomposition:
 2. verification at the anchor: the kernel picks the leftmost minimum of
    every window of L-w+1 w-grams, so two docs sharing a run >= L select the
    same anchor at the same offset d in [0, L-w] inside it, and that run's
-   first L chars sit inside both contexts. Co-occupants of a cold anchor
-   (2..``bucket_cap`` docs) pair up and are kept when their contexts agree
-   on an L-run at some offset d (``_shared_runs``: Catalyst substring
-   tests, lambda-free); the pairs are then deduplicated ACROSS anchors. No
-   document text is joined to a pair: hash collisions die in the context
-   test, which tests/test_properties.py checks against a brute-force
-   substring search.
-3. hot anchors (more than ``bucket_cap`` docs — boilerplate shared by
+   first L chars sit inside both contexts. Anchors are buckets under the
+   bucket rule of operators/candidates.py, sized by their occurrence rows:
+   co-occupants of a cold anchor (2..``bucket_cap`` rows) pair up and are
+   kept when their contexts agree on an L-run at some offset d
+   (``_shared_runs``: Catalyst substring tests, lambda-free); the pairs are
+   then deduplicated ACROSS anchors. No document text is joined to a pair:
+   hash collisions die in the context test, which tests/test_properties.py
+   checks against a brute-force substring search.
+3. hot anchors (more than ``bucket_cap`` rows — boilerplate shared by
    millions of captions) are not truncated. Docs with equal (lo, ctx) form
    a class (a context of >= L chars is a run they share); each class's
    least id emits one key (anchor, the L-run at offset d) per in-bounds d,
-   and the members of each class and of each key become a salted spanning
-   chain (candidates.salted_chain). Members of a key share that exact run
-   (the grouping is on the string, so no hash can add an edge), every true
-   pair is connected through the key of its winnowing anchor, and the
-   output is linear in bucket size. The stage manifest records hot
-   anchors, the largest anchor and the chain edges (no silent truncation).
+   and the members of each class and of each key are chained in id order
+   (candidates.id_chain). Members of a key share that exact run (the
+   grouping is on the string, so no hash can add an edge), every true pair
+   is connected through the key of its winnowing anchor, and the output is
+   linear in bucket size. The stage manifest records hot anchors, the
+   largest anchor and the chain edges (no silent truncation).
 """
 
 from __future__ import annotations
@@ -38,12 +39,12 @@ from __future__ import annotations
 from collections.abc import Callable
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from simhash_spark.config import PipelineConfig
-from simhash_spark.functions.udfs import make_winnow_udf
-from simhash_spark.operators.candidates import salted_chain
+from simhash_spark.functions.udfs import make_winnow_udf, normalize_substring_udf
+from simhash_spark.operators.candidates import cold_pairs, id_chain, sized_buckets
 
 
 def _shares_run(a: str, b: str, min_len: int) -> bool:
@@ -191,47 +192,33 @@ def verify_substring_pairs(
     sharing a normalized run >= L, verified at the anchor (module steps 2-3).
 
     One exchange of the anchor table: the anchor-partitioned window that
-    sizes each anchor by its distinct ids feeds both the cold all-pairs
-    branch (a collect of at most ``bucket_cap`` docs' occurrences) and the
-    hot class and run-keyed chains, which need no further exchange. A cold
-    pair is every pair of documents an anchor verifies; a hot anchor
-    contributes chain edges, each a true pair, that connect its
-    run-sharing docs. Collapsing equal contexts first keeps near-identical
-    docs from keying the same runs hundreds of times.
+    sizes each anchor by its rows feeds both the cold all-pairs branch (a
+    collect of at most ``bucket_cap`` occurrences) and the hot class and
+    run-keyed chains, which need no further exchange. A cold pair is every
+    pair of documents an anchor verifies; a hot anchor contributes chain
+    edges, each a true pair, that connect its run-sharing docs. Collapsing
+    equal contexts first keeps near-identical docs from keying the same
+    runs hundreds of times.
 
     ``observe`` (``StageObservations.observe``) collects the manifest
     accounting (``substring_stage_summary``) off the same rows: anchor
     sizes off the window, the co-occupant pairs examined and the chain
     edges. Unobserved, the plan is the same minus the CollectMetrics."""
     observe = observe or (lambda d, *exprs: d)
-    w = Window.partitionBy("anchor").orderBy("id")
-    sized = (
-        anchors.withColumn("_rank", F.dense_rank().over(w))
-        .withColumn("_rn", F.row_number().over(w))
-        .withColumn("_nids", F.max("_rank").over(Window.partitionBy("anchor")))
-    )
-    hot = F.col("_nids") > cfg.bucket_cap
+    sized = sized_buckets(anchors, ["anchor"])
+    hot = F.col("_bsize") > cfg.bucket_cap
     sized = observe(
         sized,
-        F.count(F.when((F.col("_rn") == 1) & hot, 1)).alias("hot_anchors"),
-        F.max("_nids").alias("max_anchor_ids"),
+        F.count(F.when(F.col("_head") & hot, 1)).alias("hot_anchors"),
+        F.max("_bsize").alias("max_anchor_rows"),
     )
 
-    grouped = (
-        sized.where((F.col("_nids") >= 2) & ~hot)
-        .groupBy("anchor")
-        .agg(F.sort_array(F.collect_list(F.struct("id", "lo", "ctx"))).alias("_occ"))
-    )
-    # occurrence pairs by two chained explodes, as in bucket_pairs_packed;
-    # the sort puts x.id <= y.id, and a doc's own occurrences never pair
-    lefts = grouped.select("_occ", F.posexplode("_occ").alias("_i", "x"))
+    # occurrence pairs of a cold anchor; the sort puts x.id <= y.id, and a
+    # doc's own occurrences never pair
     examined = observe(
-        lefts.select(
-            "x",
-            F.explode(
-                F.slice("_occ", F.col("_i") + 2, F.size("_occ") - F.col("_i") - 1)
-            ).alias("y"),
-        ).where(F.col("x.id") < F.col("y.id")),
+        cold_pairs(sized, ["anchor"], cfg.bucket_cap, F.struct("id", "lo", "ctx"))
+        .select(F.col("a").alias("x"), F.col("b").alias("y"))
+        .where(F.col("x.id") < F.col("y.id")),
         F.count(F.lit(1)).alias("cold_pairs"),
     )
     cold = _shared_runs(examined, cfg.substr_min_len)
@@ -253,9 +240,9 @@ def verify_substring_pairs(
     )
     classes = hot_occ.select("anchor", "id", F.concat_ws(":", "lo", "ctx").alias("_key"))
     chain = observe(
-        salted_chain(classes.unionByName(runs), ["anchor", "_key"], cfg.salt_buckets).where(
-            F.col("a") != F.col("b")
-        ),
+        id_chain(classes.unionByName(runs), ["anchor", "_key"])
+        .where(F.col("a") != F.col("b"))
+        .select("a", "b"),
         F.count(F.lit(1)).alias("chain_edges"),
     )
     return cold.unionByName(chain).distinct()
@@ -265,15 +252,15 @@ def substring_stage_summary(m: dict) -> dict:
     """The 02b_substr manifest keys from ``verify_substring_pairs``'
     observations — the stage's work and its hot-anchor accounting:
 
-      n_pairs        — co-occupant pairs examined: cold occurrence pairs
-                       of distinct docs put to the context test, plus hot
-                       chain edges
-      hot_anchors    — anchors with more than bucket_cap distinct docs
-      max_anchor_ids — the largest anchor's distinct docs
-      chain_edges    — edges the hot anchors' run-keyed chains emitted
+      n_pairs         — co-occupant pairs examined: cold occurrence pairs
+                        of distinct docs put to the context test, plus hot
+                        chain edges
+      hot_anchors     — anchors with more than bucket_cap rows
+      max_anchor_rows — the largest anchor's rows (occurrences)
+      chain_edges     — edges the hot anchors' run-keyed chains emitted
 
     Missing keys (a node AQE pruned because its input was empty) read as 0."""
-    got = {k: int(m.get(k) or 0) for k in ("hot_anchors", "max_anchor_ids", "chain_edges")}
+    got = {k: int(m.get(k) or 0) for k in ("hot_anchors", "max_anchor_rows", "chain_edges")}
     return {"n_pairs": int(m.get("cold_pairs") or 0) + got["chain_edges"], **got}
 
 
@@ -286,14 +273,6 @@ def substring_pairs(
     connected by chain edges instead of all their pairs."""
     anchors = winnow_anchor_table(df, cfg, id_col, caption_col)
     return verify_substring_pairs(anchors, cfg).withColumn("src", F.lit("substr"))
-
-
-def _normalize_col(caption_col: str):
-    """The same NFKC normalization the winnow UDF applies, so anchor positions
-    and the verified text agree bit-for-bit with spec.normalize_for_substring."""
-    from simhash_spark.functions.udfs import normalize_substring_udf
-
-    return normalize_substring_udf(F.col(caption_col))
 
 
 # ------------------------------------------------------- shared-run report
@@ -348,7 +327,7 @@ def substring_run_report(
     norm = (
         df.select(F.col(id_col).alias("id"), F.col(caption_col).alias("_cap"))
         .join(ids.distinct(), "id", "left_semi")
-        .select("id", _normalize_col("_cap").alias("norm"))
+        .select("id", normalize_substring_udf("_cap").alias("norm"))
     )
     joined = pairs.join(norm.withColumnsRenamed({"id": "a", "norm": "_na"}), "a").join(
         norm.withColumnsRenamed({"id": "b", "norm": "_nb"}), "b"

@@ -24,18 +24,20 @@ the only genuinely new information is pairs touching an increment row, and
 the star edges replay each touched component's membership into the merge
 CC (labels are min-id, and the star vertex set is the full old component,
 so the merged min is the true min). Candidate buckets past the cap
-degrade to the same connectivity-preserving chain guarantee as the batch
-path (chains may differ between a base+delta and a full run; clusters
-agree for content that actually verifies as duplicate). Substring anchors
-past the cap are no exception to the contract: every chain edge there is
-a true pair (incremental_substring_pairs).
+degrade to the same id-order chain as the batch path, over the bucket's
+full contents; the delta keeps the chain edges touching a new row and
+relies on the base labels for the old ones, so clusters agree for content
+that actually verifies as duplicate. Substring anchors past the cap are
+no exception to the contract: every chain edge there is a true pair
+(incremental_substring_pairs).
 """
 
 from __future__ import annotations
 
 import json
 import pathlib
-from dataclasses import asdict, dataclass
+from collections.abc import Callable
+from dataclasses import asdict, dataclass, fields
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
@@ -63,29 +65,42 @@ from simhash_spark.sources.catalog import (
 )
 
 
+def _pairs_touching_new(
+    rows_all: DataFrame,
+    rows_new: DataFrame,
+    key: str,
+    expand: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """(a, b, ...) pairs touching >= 1 increment id, from the (key, id, ...)
+    rows of a key table: only buckets CONTAINING a new member are expanded
+    — the full table is scanned once and semi-joined against the
+    increment's (distinct) keys, so the cost is linear in |base rows| +
+    |touched-bucket contents|, NOT in the base's pair volume — and each is
+    expanded over its full contents (base ∪ new), so the cold/hot split
+    matches the full run's. Old–old pairs inside touched buckets are
+    dropped: the base labels already connect them."""
+    touched = rows_all.join(rows_new.select(key).distinct(), key, "left_semi")
+    pairs = expand(touched)
+    new_ids = rows_new.select("id").distinct()
+    pa = pairs.join(new_ids.withColumnRenamed("id", "a"), "a", "left_semi")
+    pb = pairs.join(new_ids.withColumnRenamed("id", "b"), "b", "left_semi")
+    return pa.unionByName(pb).dropDuplicates(["a", "b"])
+
+
 def incremental_candidates(
     fp_new: DataFrame,
     fp_all: DataFrame,
     cfg: PipelineConfig,
     include_phash: bool = True,
 ) -> DataFrame:
-    """Candidate pairs (a, b, src) touching >= 1 increment row.
-
-    Only buckets containing a new member are expanded: the full key table is
-    scanned once and semi-joined against the increment's (distinct) keys —
-    cost linear in |base keys| + |touched-bucket contents|, NOT in the
-    base's pair volume. Old–old pairs inside touched buckets are generated
-    and then dropped by the touching-new filter; their volume is bounded by
-    bucket_cap x |touched buckets|.
-    """
-    packed_new = explode_all_keys(fp_new, cfg, include_phash=include_phash)
-    packed_all = explode_all_keys(fp_all, cfg, include_phash=include_phash)
-    touched = packed_all.join(packed_new.select("k").distinct(), "k", "left_semi")
-    pairs = candidate_pairs(touched, cfg)
-    new_ids = fp_new.select(F.col("image_id"))
-    pa = pairs.join(new_ids.withColumnRenamed("image_id", "a"), "a", "left_semi")
-    pb = pairs.join(new_ids.withColumnRenamed("image_id", "b"), "b", "left_semi")
-    return pa.unionByName(pb).dropDuplicates(["a", "b"])
+    """Candidate pairs (a, b, src) touching >= 1 increment row, from the
+    buckets of the packed key table that hold a new row."""
+    return _pairs_touching_new(
+        explode_all_keys(fp_all, cfg, include_phash=include_phash),
+        explode_all_keys(fp_new, cfg, include_phash=include_phash),
+        "k",
+        lambda touched: candidate_pairs(touched, cfg),
+    )
 
 
 def incremental_substring_pairs(
@@ -97,24 +112,18 @@ def incremental_substring_pairs(
     >= 1 increment doc, without re-winnowing or re-reading the base corpus:
     the anchor occurrences carry the contexts that verify them.
 
-    Anchors are content hashes, so the same semi-join trick as the bucket
-    index applies: only anchors CONTAINING a new doc are expanded, over
-    their full contents (base ∪ new), so the cold/hot split matches the
-    full run's. Old–old pairs are dropped: the base labels already connect
-    them. A hot anchor's chain edges touching a new doc then connect it to
-    every doc it shares a run with, since the old docs of one context class
-    or run key share a run and so are one base component — the labels
-    equal the full run's either side of the cap.
+    Anchors are content hashes, so the bucket index's touched-bucket rule
+    applies. A hot anchor's chain edges touching a new doc connect it to
+    every doc it shares a run with, since the old docs of one context
+    class or run key share a run and so are one base component — the
+    labels equal the full run's either side of the cap.
     """
-    anchors_all = anchors_base.unionByName(anchors_new)
-    touched = anchors_all.join(
-        anchors_new.select("anchor").distinct(), "anchor", "left_semi"
-    )
-    pairs = verify_substring_pairs(touched, cfg)
-    new_ids = anchors_new.select("id").distinct()
-    pa = pairs.join(new_ids.withColumnRenamed("id", "a"), "a", "left_semi")
-    pb = pairs.join(new_ids.withColumnRenamed("id", "b"), "b", "left_semi")
-    return pa.unionByName(pb).dropDuplicates(["a", "b"]).withColumn("src", F.lit("substr"))
+    return _pairs_touching_new(
+        anchors_base.unionByName(anchors_new),
+        anchors_new,
+        "anchor",
+        lambda touched: verify_substring_pairs(touched, cfg),
+    ).withColumn("src", F.lit("substr"))
 
 
 def incremental_cluster_update(
@@ -254,6 +263,13 @@ def chain_run_metadata(spark: SparkSession, ckpt_path: str | pathlib.Path) -> di
             f"{chain[0]} has no 01_fingerprints manifest with a recorded config — "
             "the delta path needs a base produced by run_pipeline (current version)"
         )
+    stale = sorted(set(root["config"]) - {f.name for f in fields(PipelineConfig)})
+    if stale:
+        raise RuntimeError(
+            f"{chain[0]} records config keys {stale} that PipelineConfig no longer "
+            "has: its stages were built by an earlier version of the engine — "
+            "rebuild the base with run_pipeline"
+        )
     # a run_pipeline root records one input path; a compacted root records
     # the list of every path its chain folded in
     rp = root["input_path"]
@@ -291,20 +307,13 @@ def _require_anchor_contexts(spark: SparkSession, ckpt_path: str | pathlib.Path)
             )
 
 
-@dataclass
-class DeltaRunResult:
-    fingerprints_new: DataFrame
-    verified_new: DataFrame
-    clusters: DataFrame
-
-
 def run_delta(
     spark: SparkSession,
     base_checkpoint: str,
     increment_path: str,
     checkpoint_path: str,
     cfg: PipelineConfig | None = None,
-) -> DeltaRunResult:
+) -> DeltaResult:
     """Fold one increment into a completed run's checkpoint state.
 
     ``base_checkpoint`` is a run_pipeline catalog OR a previous run_delta
@@ -512,7 +521,7 @@ def run_delta(
         in_fp,
         lambda: incremental_cluster_update(base_clusters, verified, fp_new),
     )
-    return DeltaRunResult(fp_new, verified, clusters)
+    return DeltaResult(fp_new, verified, clusters)
 
 
 def compact_chain(

@@ -231,9 +231,7 @@ class CheckpointCatalog:
             )
             out = self.spark.table(name)
         else:
-            df.write.mode("overwrite").parquet(str(data_dir))
-            # parquet read-back forces every field nullable, as inference would
-            out = self.spark.read.schema(df.schema).parquet(str(data_dir))
+            out = pin(df, data_dir).df
         wall_ms = int((time.time() - t0) * 1000)
         # per-partition (file) lineage: rows + bytes per parquet part file
         parts = [

@@ -30,9 +30,8 @@ Mirrored engine semantics (kept in lockstep with the cited code):
   (code, index, key) triple — the engine folds it through xxhash64, which
   only merges buckets with probability 2^-64.
 - pairs (bucket_pairs_packed): all C(s,2) per bucket, a < b in STRING order
-  (ids are cast to string by text_fingerprints); buckets over bucket_cap
-  would become salted chains whose exact edges depend on JVM xxhash64 —
-  this script asserts no such bucket exists at sf0.01.
+  (ids are cast to string by text_fingerprints); a bucket over bucket_cap
+  chains its consecutive ids in the same order (mirror.bucket_pairs).
 - verify (operators/verify.py, use_phash=False): hamming(simhash) <= radius
   and both sides have shingles.
 - clusters (connected_components): component label = lexicographic min id;
@@ -124,7 +123,7 @@ def main() -> None:
 
     # lsh_bucket_stats: bucket-size histogram per index family (singletons
     # included) from the mirror's raw (code, table, key) buckets — the skew
-    # surface a production run reads before picking bucket_cap / salting.
+    # surface a production run reads before picking bucket_cap.
     from collections import Counter
 
     bh = Counter(m["bucket_sizes"])  # (src, size) -> n_buckets

@@ -8,10 +8,10 @@ Mirrored semantics are kept in lockstep with the cited engine code:
 - candidate buckets mirror operators/candidates.explode_all_keys (band keys
   + pigeonhole combination keys for rows with shingles; bucket identity =
   the raw (code, index, key) triple);
-- pairs mirror bucket_pairs_packed for buckets of 2..cap members (hot
-  buckets would need the JVM salt hash and make the mirror invalid — we
-  assert none exist); substring hot anchors chain in id order instead
-  (substring_pairs_mirror);
+- pairs mirror bucket_pairs_packed: every pair of a bucket of 2..cap
+  members, and a chain of consecutive ids in id order over a hot bucket
+  (``id_chain``); substring anchors follow the same rule, sized by their
+  occurrence rows (substring_pairs_mirror, hot_anchor_edges);
 - verify mirrors operators/verify.py (use_phash=False);
 - clusters mirror connected_components + singleton labeling;
 - alignment_tokens mirrors caption_pixel_alignment's caption tokenizer.
@@ -43,6 +43,22 @@ def alignment_tokens(caption: str | None) -> list[str]:
     return _JAVA_WS.split((caption or "").lower())[:1023]
 
 
+def id_chain(members: list[str]) -> list[tuple[str, str]]:
+    """candidates.id_chain over one hot bucket: each distinct member linked
+    to the previous one in id order."""
+    chain = sorted(set(members))
+    return list(zip(chain, chain[1:]))
+
+
+def bucket_pairs(members: list[str], cap: int) -> list[tuple[str, str]]:
+    """candidates' bucket rule over one bucket's members (one per row):
+    every pair of 2..cap rows, the id-order chain above the cap."""
+    if len(members) > cap:
+        return id_chain(members)
+    names = sorted(members)
+    return [(names[x], names[y]) for x in range(len(names)) for y in range(x + 1, len(names))]
+
+
 def text_kernel_mirror(docs: pd.DataFrame, cfg: PipelineConfig) -> dict:
     """documents (doc_id, text) -> expected fingerprints / candidate pairs /
     verified pairs / cluster labels, all computed without Spark."""
@@ -67,17 +83,9 @@ def text_kernel_mirror(docs: pd.DataFrame, cfg: PipelineConfig) -> dict:
 
     pair_srcs: dict[tuple[str, str], set[str]] = defaultdict(set)
     for (code, _i, _k), members in buckets.items():
-        if len(members) < 2:
-            continue
-        assert len(members) <= cfg.bucket_cap, (
-            "hot bucket — salted-chain edges depend on the JVM hash and are "
-            "not mirrored; this corpus cannot be used for the differential"
-        )
         src = "minhash_lsh" if code == 1 else "simhash_rot"
-        names = sorted(ids[m] for m in members)
-        for x in range(len(names)):
-            for y in range(x + 1, len(names)):
-                pair_srcs[(names[x], names[y])].add(src)
+        for p in bucket_pairs(sorted(ids[m] for m in members), cfg.bucket_cap):
+            pair_srcs[p].add(src)
 
     cand_rows = sorted(pair_srcs)
     by_id = {ids[i]: i for i in range(n)}
@@ -107,33 +115,62 @@ def text_kernel_mirror(docs: pd.DataFrame, cfg: PipelineConfig) -> dict:
     }
 
 
+def hot_anchor_chains(occ: set[tuple[str, int, str]], min_len: int) -> list[list[str]]:
+    """The members, in id order, of each chain of one hot anchor's
+    (id, lo, ctx) occurrences (operators/substring.py step 3): docs with
+    one (lo, ctx) of >= L chars form a class, and each class's least id
+    keys every in-bounds L-run of its context through the anchor."""
+    classes: dict[tuple[int, str], set[str]] = defaultdict(set)
+    for i, lo, ctx in occ:
+        if len(ctx) >= min_len:
+            classes[(lo, ctx)].add(i)
+    keys: dict[str, set[str]] = defaultdict(set)
+    for (lo, ctx), members in classes.items():
+        for d in range(lo + 1):
+            if len(ctx) - lo >= min_len - d:
+                keys[ctx[lo - d : lo - d + min_len]].add(min(members))
+    return [sorted(m) for m in [*classes.values(), *keys.values()]]
+
+
+def _occurrences_by_anchor(anchors) -> dict[int, set[tuple[str, int, str]]]:
+    """An anchor table (id, anchor, lo, ctx) -> {anchor: its rows}."""
+    pdf = anchors.toPandas() if hasattr(anchors, "toPandas") else anchors
+    by_anchor: dict[int, set[tuple[str, int, str]]] = defaultdict(set)
+    for i, h, lo, ctx in zip(pdf["id"], pdf["anchor"], pdf["lo"], pdf["ctx"]):
+        by_anchor[h].add((i, int(lo), ctx))
+    return by_anchor
+
+
+def hot_anchor_edges(anchors, cfg: PipelineConfig) -> set[tuple[str, str]]:
+    """The chain edges verify_substring_pairs emits for the anchors of an
+    anchor table that have more than bucket_cap rows."""
+    return {
+        e
+        for occ in _occurrences_by_anchor(anchors).values()
+        if len(occ) > cfg.bucket_cap
+        for chain in hot_anchor_chains(occ, cfg.substr_min_len)
+        for e in id_chain(chain)
+    }
+
+
 def substring_pairs_mirror(docs: pd.DataFrame, cfg: PipelineConfig) -> set[tuple[str, str]]:
     """Expected (a, b) substring pairs: winnowing completeness means every
     pair sharing a normalized run >= L shares an anchor; co-occupants of an
-    anchor with 2..cap docs are verified by the exact shared-run predicate
-    over the whole texts — mirrors operators/substring.py::substring_pairs.
+    anchor with 2..cap occurrence rows are verified by the exact shared-run
+    predicate over the whole texts, and an anchor over the cap contributes
+    its class and run-key chains (hot_anchor_chains) — mirrors
+    operators/substring.py::substring_pairs.
 
-    An anchor over the cap follows the run-keyed hot rule in its plain
-    form: each occurrence keys its in-bounds L-runs through the anchor, and
-    a key's docs are chained in id order. The engine first collapses equal
-    contexts into classes and salts its chains with the JVM hash, so the
-    edge sets differ but connect the same docs: only the components are
-    comparable."""
+    The anchors come from one winnowing batch, and the engine's batches
+    can select other anchors near a document's end, so only the
+    components are comparable with the engine's pairs."""
     ids = docs["doc_id"].astype(str).tolist()
     norm = [spec.normalize_for_substring(t) for t in docs["text"].tolist()]
     L, w = cfg.substr_min_len, cfg.substr_window
-    di, pos, ah = spec.winnow_anchors_batch(norm, w, L)
-    by_anchor: dict[int, set[int]] = defaultdict(set)
-    for d, h in zip(di.tolist(), ah.tolist()):
-        by_anchor[h].add(d)
-    cand = {
-        tuple(sorted((ids[x], ids[y])))
-        for members in by_anchor.values()
-        if 1 < len(members) <= cfg.bucket_cap
-        for x in members
-        for y in members
-        if x < y
-    }
+    by_anchor: dict[int, set[tuple[str, int, str]]] = defaultdict(set)
+    for d, p, h in zip(*(a.tolist() for a in spec.winnow_anchors_batch(norm, w, L))):
+        lo = min(p, L - w)
+        by_anchor[h].add((ids[d], lo, norm[d][p - lo : p + L]))
     by_id = {ids[i]: i for i in range(len(ids))}
 
     def shares(a: str, b: str) -> bool:
@@ -145,16 +182,16 @@ def substring_pairs_mirror(docs: pd.DataFrame, cfg: PipelineConfig) -> set[tuple
         wins = {na[i : i + L] for i in range(len(na) - L + 1)}
         return any(nb[i : i + L] in wins for i in range(len(nb) - L + 1))
 
-    pairs = {p for p in cand if shares(*p)}
-    run_keys: dict[tuple[int, str], set[str]] = defaultdict(set)
-    for d, p, h in zip(di.tolist(), pos.tolist(), ah.tolist()):
-        if len(by_anchor[h]) > cfg.bucket_cap:
-            for off in range(min(p, L - w) + 1):
-                if p - off + L <= len(norm[d]):
-                    run_keys[(h, norm[d][p - off : p - off + L])].add(ids[d])
-    for members in run_keys.values():
-        chain = sorted(members)
-        pairs.update(zip(chain, chain[1:]))
+    pairs: set[tuple[str, str]] = set()
+    for occ in by_anchor.values():
+        if len(occ) > cfg.bucket_cap:
+            for chain in hot_anchor_chains(occ, L):
+                pairs.update(id_chain(chain))
+        elif len(occ) >= 2:
+            members = sorted({i for i, _, _ in occ})
+            pairs.update(
+                (x, y) for k, x in enumerate(members) for y in members[k + 1 :] if shares(x, y)
+            )
     return pairs
 
 
@@ -233,16 +270,7 @@ def image_kernel_mirror(img: pd.DataFrame, cfg: PipelineConfig) -> dict:
 
     pairs: set[tuple[str, str]] = set()
     for members in buckets.values():
-        if len(members) < 2:
-            continue
-        assert len(members) <= cfg.bucket_cap, (
-            "hot bucket — salted-chain edges depend on the JVM hash and are "
-            "not mirrored; this corpus cannot be used for the differential"
-        )
-        names = sorted({ids[m] for m in members})
-        for x in range(len(names)):
-            for y in range(x + 1, len(names)):
-                pairs.add((names[x], names[y]))
+        pairs.update(bucket_pairs(sorted(ids[m] for m in members), cfg.bucket_cap))
 
     cand_rows = sorted(pairs)
     by_id = {ids[i]: i for i in range(n)}
@@ -301,34 +329,22 @@ def candidate_bucket_stats(fp, cfg: PipelineConfig, include_phash: bool = True):
 def substring_stage_metrics(anchors, cfg: PipelineConfig) -> dict:
     """The substring stage's manifest keys recomputed in Python from the
     anchor table (id, anchor, lo, ctx): co-occupant pairs of distinct docs
-    in cold anchors, hot anchors, the largest anchor's docs, and the chain
-    edges of a hot anchor — one fewer than the docs of each context class
-    (equal lo and ctx of >= L chars) and of each L-run key over the
-    classes' least ids."""
-    pdf = anchors.toPandas()
-    L = cfg.substr_min_len
-    cold_pairs = hot = chain = max_ids = 0
-    for _, g in pdf.groupby("anchor"):
-        n_ids = g["id"].nunique()
-        max_ids = max(max_ids, n_ids)
-        if n_ids > cfg.bucket_cap:
+    in cold anchors, hot anchors, the largest anchor's rows, and the chain
+    edges of hot anchors (hot_anchor_chains: one fewer than the members of
+    each chain)."""
+    cold_pairs = hot = chain = max_rows = 0
+    for occ in _occurrences_by_anchor(anchors).values():
+        max_rows = max(max_rows, len(occ))
+        if len(occ) > cfg.bucket_cap:
             hot += 1
-            classes: dict[tuple[int, str], set] = defaultdict(set)
-            for i, lo, ctx in zip(g["id"], g["lo"], g["ctx"]):
-                if len(ctx) >= L:
-                    classes[(lo, ctx)].add(i)
-            keys: dict[str, set] = defaultdict(set)
-            for (lo, ctx), members in classes.items():
-                for d in range(lo + 1):
-                    if len(ctx) - lo >= L - d:
-                        keys[ctx[lo - d : lo - d + L]].add(min(members))
-            chain += sum(len(m) - 1 for m in [*classes.values(), *keys.values()])
-        elif n_ids >= 2:
-            per_id = g["id"].value_counts()
-            cold_pairs += len(g) * (len(g) - 1) // 2 - int((per_id * (per_id - 1) // 2).sum())
+            chain += sum(len(m) - 1 for m in hot_anchor_chains(occ, cfg.substr_min_len))
+        else:
+            per_id = pd.Series([i for i, _, _ in occ]).value_counts()
+            n = len(occ)
+            cold_pairs += n * (n - 1) // 2 - int((per_id * (per_id - 1) // 2).sum())
     return {
         "n_pairs": cold_pairs + chain,
         "hot_anchors": hot,
-        "max_anchor_ids": max_ids,
+        "max_anchor_rows": max_rows,
         "chain_edges": chain,
     }

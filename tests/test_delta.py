@@ -611,7 +611,7 @@ def test_run_delta_hot_anchor_push_equals_full_run(spark, tmp_path):
         make_hot_anchor_pdf,
     )
 
-    cfg = PipelineConfig(bucket_cap=32, salt_buckets=4)
+    cfg = PipelineConfig(bucket_cap=32)
     pdf = make_hot_anchor_pdf(60, 40)
     family, other = pdf.iloc[:60], pdf.iloc[60:]
     parts = {
@@ -682,3 +682,40 @@ def test_run_delta_refuses_anchor_table_without_contexts(spark, tmp_path):
     inp = tmp_path / "inc.parquet"
     inp.write_bytes(b"")
     assert "-ss1" not in stage_fingerprint(str(inp), CFG, True, True)
+
+
+def test_run_delta_refuses_base_with_retired_config_keys(spark, tmp_path):
+    """A base whose recorded config still holds a key PipelineConfig no
+    longer has (``salt_buckets``, the fan-out of the retired salted chain)
+    is refused with an error that names the rebuild, before anything is
+    written: no TypeError from rebuilding the config escapes, neither from
+    run_delta nor from compact_chain."""
+    import json
+    from dataclasses import asdict
+
+    import pytest
+
+    from simhash_spark.plans.delta import compact_chain, run_delta
+    from simhash_spark.sources.catalog import MANIFEST_NAME
+
+    base = tmp_path / "ck_old"
+    (base / "01_fingerprints").mkdir(parents=True)
+    (base / "01_fingerprints" / MANIFEST_NAME).write_text(
+        json.dumps(
+            {
+                "complete": True,
+                "config": {**asdict(CFG), "salt_buckets": 16},
+                "enable_substring": False,
+                "include_phash": True,
+                "input_path": str(tmp_path / "old.parquet"),
+            }
+        )
+    )
+    out = tmp_path / "ck_new"
+    with pytest.raises(RuntimeError, match=r"salt_buckets.*rebuild the base"):
+        run_delta(spark, str(base), str(tmp_path / "inc.parquet"), str(out))
+    assert not out.exists()
+    compacted = tmp_path / "ck_compact"
+    with pytest.raises(RuntimeError, match="rebuild the base"):
+        compact_chain(spark, str(base), str(compacted))
+    assert not compacted.exists()

@@ -114,11 +114,11 @@ def test_resume_skips_complete_stages(spark, fixture_dir, tmp_path):
     # substring stage records its work and hot-anchor accounting (no
     # silent truncation); this fixture has no anchor over the cap
     sm = cat.manifest("02b_substr")
-    for k in ("n_pairs", "hot_anchors", "max_anchor_ids", "chain_edges"):
+    for k in ("n_pairs", "hot_anchors", "max_anchor_rows", "chain_edges"):
         assert k in sm, k
     assert sm["n_pairs"] >= sm["n_rows"] > 0
     assert sm["hot_anchors"] == sm["chain_edges"] == 0
-    assert 2 <= sm["max_anchor_ids"] <= CFG.bucket_cap
+    assert 2 <= sm["max_anchor_rows"] <= CFG.bucket_cap
 
     # second run must not recompute: poison compute to prove it is skipped
     boom = lambda: (_ for _ in ()).throw(AssertionError("stage recomputed"))

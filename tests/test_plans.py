@@ -198,26 +198,47 @@ def test_candidates_single_key_exchange(spark):
     sets, so column pruning defeated exchange reuse and each branch
     re-shuffled (and re-scanned the fingerprints). The window-count shape
     materializes one k-exchange; the hot-bucket branches must read it via
-    ReusedExchange, and no LeftSemi may reappear."""
+    ReusedExchange, and no LeftSemi may reappear.
+
+    The substring stage follows the same bucket rule over its anchor
+    table: with one anchor above a small cap (so the cold pairs and both
+    hot chain inputs all read the sized rows), verify_substring_pairs
+    materializes one anchor exchange and reads it back through
+    ReusedExchange. Each reader recomputes the sizing window over the
+    reused exchange, so the plans hold at most one sizing window per
+    reader: two for candidates (cold, hot), three for the substring stage
+    (cold, classes, run keys)."""
     import re
+    from dataclasses import replace
 
     from simhash_spark.operators.candidates import generate_candidates
+    from simhash_spark.operators.substring import verify_substring_pairs
 
     fp = spark.createDataFrame(
         [(f"id{i}", i % 7, 3, [i % 5, i % 3], i % 11) for i in range(200)],
         "image_id string, simhash long, n_shingles int, bands array<long>, phash long",
     )
-    df = generate_candidates(fp, CFG)
-    df.collect()  # finalize the adaptive plan
-    final = _plan(df).split("== Initial Plan ==")[0]
-    assert "LeftSemi" not in final, "semi-join candidate shape reintroduced"
-    materialized = re.findall(
-        r"\+- Exchange hashpartitioning\(k#\d+L", final
+    run = "the quick brown fox jumps over the lazy dog and keeps running far away"
+    anchors = spark.createDataFrame(
+        [(f"d{i:03d}", 7, 10, run[:58]) for i in range(12)]
+        + [(f"e{i}", 8 + i % 2, 0, run[i : i + 48]) for i in range(6)],
+        "id string, anchor long, lo int, ctx string",
     )
-    assert len(materialized) == 1, (
-        f"packed key table shuffled {len(materialized)}x, want 1:\n{materialized}"
-    )
-    assert "ReusedExchange" in final, "hot-bucket branches must reuse the k-exchange"
+    cases = {
+        "k": (generate_candidates(fp, CFG), 2),
+        "anchor": (verify_substring_pairs(anchors, replace(CFG, bucket_cap=4)), 3),
+    }
+    for key, (df, max_sizings) in cases.items():
+        df.collect()  # finalize the adaptive plan
+        final = _plan(df).split("== Initial Plan ==")[0]
+        assert "LeftSemi" not in final, "semi-join candidate shape reintroduced"
+        materialized = re.findall(rf"\+- Exchange hashpartitioning\({key}#\d+L", final)
+        assert len(materialized) == 1, (
+            f"{key} table shuffled {len(materialized)}x, want 1:\n{materialized}"
+        )
+        assert "ReusedExchange" in final, f"hot-bucket branches must reuse the {key}-exchange"
+        sizings = re.findall(r"Window \[count\(1\)", final)
+        assert 1 <= len(sizings) <= max_sizings, (key, len(sizings))
 
 
 def test_no_cartesian_product_on_any_scale_path(spark):

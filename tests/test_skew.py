@@ -1,5 +1,5 @@
-"""T4: hot-bucket / skew handling — the salted spanning-chain path for
-buckets over the cap, and the full pipeline on the degenerate corpus
+"""T4: hot-bucket / skew handling — the id-order chain for buckets over
+the cap, and the full pipeline on the degenerate corpus
 (the reference's dev-ex lesson: scalable version crashed on SMALL data,
 /root/reference/README.md:11)."""
 
@@ -28,12 +28,13 @@ def _components(pairs: set[tuple[str, str]], nodes: list[str]) -> dict[str, str]
     return {n: find(n) for n in nodes}
 
 
-def test_hot_bucket_salted_chain_spans_bucket(spark):
+def test_hot_bucket_chain_spans_bucket(spark):
     """A bucket over the cap must yield exactly m-1 edges (a spanning tree:
-    linear output, full connectivity) — not C(m,2), not disconnected."""
+    linear output, full connectivity) — not C(m,2), not disconnected — and
+    they are its consecutive ids in sorted order."""
     from simhash_spark.operators.candidates import bucket_pairs_packed
 
-    cfg = PipelineConfig(bucket_cap=50, salt_buckets=4)
+    cfg = PipelineConfig(bucket_cap=50)
     m = 500
     # packed keys carry the source code in their low 2 bits (1 = minhash_lsh)
     rows = [((42 << 2) | 1, f"id{i:05d}") for i in range(m)]
@@ -46,6 +47,7 @@ def test_hot_bucket_salted_chain_spans_bucket(spark):
     hot_pairs = [(a, b) for a, b in pairs if a.startswith("id")]
     cold_pairs = [(a, b) for a, b in pairs if a.startswith("cold")]
     assert len(hot_pairs) == m - 1, "hot bucket must emit a spanning tree"
+    assert sorted(hot_pairs) == list(zip(hot_ids, hot_ids[1:]))
     assert len(cold_pairs) == 21  # C(7,2) — the all-pairs cold path
     comp = _components(set(hot_pairs), hot_ids)
     assert len(set(comp[i] for i in hot_ids)) == 1, "hot bucket not fully connected"
@@ -217,7 +219,7 @@ def test_design_point_16_blocks_uses_udf_keygen(spark):
     assert wall < 150, f"16-block candidates took {wall:.0f}s — expression path?"
 
 
-HOT_ANCHOR_CFG = PipelineConfig(bucket_cap=24, salt_buckets=4)
+HOT_ANCHOR_CFG = PipelineConfig(bucket_cap=24)
 
 
 def test_hot_anchor_family_clusters_equal_truth(spark, tmp_path):
@@ -225,12 +227,18 @@ def test_hot_anchor_family_clusters_equal_truth(spark, tmp_path):
     pipeline's clusters equal compute_truth's components, the run-keyed
     chains connect no co-occupants that share no run (the fixture's short
     cuts sit in the hot anchors and stay apart), every chain edge is a true
-    pair, and the manifest's hot-anchor accounting equals a standalone
-    recount."""
-    from mirror import substring_pairs_mirror, substring_stage_metrics, union_find_min_labels
+    pair, the hot anchors' chain edges equal the mirror's hot rule over the
+    same anchor table, and the manifest's hot-anchor accounting equals a
+    standalone recount."""
+    from mirror import (
+        hot_anchor_edges,
+        substring_pairs_mirror,
+        substring_stage_metrics,
+        union_find_min_labels,
+    )
 
     from simhash_spark import spec
-    from simhash_spark.operators.substring import _shares_run
+    from simhash_spark.operators.substring import _shares_run, verify_substring_pairs
     from simhash_spark.plans.pipeline import run_pipeline
     from simhash_spark.sources.catalog import CheckpointCatalog
     from simhash_spark.sources.fixtures import (
@@ -251,10 +259,21 @@ def test_hot_anchor_family_clusters_equal_truth(spark, tmp_path):
     cat = CheckpointCatalog(spark, ck)
     sm = cat.manifest("02b_substr")
     assert sm["hot_anchors"] >= 1 and sm["chain_edges"] > 0
-    assert sm["max_anchor_ids"] > HOT_ANCHOR_CFG.bucket_cap
-    assert {k: sm[k] for k in ("n_pairs", "hot_anchors", "max_anchor_ids", "chain_edges")} == (
+    assert sm["max_anchor_rows"] > HOT_ANCHOR_CFG.bucket_cap
+    assert {k: sm[k] for k in ("n_pairs", "hot_anchors", "max_anchor_rows", "chain_edges")} == (
         substring_stage_metrics(cat.read("02b_anchors"), HOT_ANCHOR_CFG)
     )
+    # the engine's hot edges: verify the hot anchors' rows alone
+    anchors = cat.read("02b_anchors")
+    hot_rows = anchors.join(
+        anchors.groupBy("anchor").count().where(F.col("count") > HOT_ANCHOR_CFG.bucket_cap),
+        "anchor",
+        "left_semi",
+    )
+    engine_hot = {
+        (r["a"], r["b"]) for r in verify_substring_pairs(hot_rows, HOT_ANCHOR_CFG).collect()
+    }
+    assert engine_hot and engine_hot == hot_anchor_edges(anchors, HOT_ANCHOR_CFG)
     # the largest anchor holds docs of more than one truth component
     hot = (
         cat.read("02b_anchors")

@@ -116,3 +116,24 @@ def test_shingle_hash_sets_match_spec_per_row():
         assert sorted(got.tolist()) == want
     empty = fingerprint_batch(pd.Series([], dtype=object), CFG, emit_shingle_hashes=True)
     assert len(empty) == 0 and "shingle_hashes" in empty.columns
+
+
+def test_substring_normalization_matches_spec():
+    """The one vectorized substring normalization (the winnow UDF's and
+    normalize_substring_udf's) equals spec.normalize_for_substring row by
+    row; a null caption reads as the empty one."""
+    from simhash_spark.functions.udfs import normalize_for_substring
+
+    texts = [
+        "ﬁne ﬂour ﬀ",  # NFKC ligatures
+        "ＦＵＬＬ－ＷＩＤＴＨ　Ｔｅｘｔ １２３",  # full-width letters, digits, space
+        "Café naïve ÉCOLE Ångström",  # accented (NFKC keeps the accents)
+        "a!!!b...c---d   e???",  # punctuation runs
+        "  --Hello,   World!!  ",
+        " \t\n  ",  # whitespace only
+        "",
+        None,
+    ]
+    got = normalize_for_substring(pd.Series(texts)).tolist()
+    assert got == [spec.normalize_for_substring(t or "") for t in texts]
+    assert got[0] == "fine flour ff" and got[5] == got[7] == ""
