@@ -7,8 +7,9 @@ on bucket keys: O(n^2) becomes O(sum of bucket^2), bounded by ``bucket_cap``.
 It also holds the bucket rule every key table here follows (the candidate
 keys, the substring stage's anchors, the n-gram shingles; SURVEY.md
 O11/O19/O20), in three parts over the key table's one exchange:
-- sizing (``sized_buckets``): each bucket's rows and one head row per
-  bucket, from one unordered window;
+- sizing (``sized_buckets``): each bucket's rows, from one unordered
+  window; the stage metrics also flag one head row per bucket
+  (``bucket_heads``);
 - buckets of 2..cap rows (``cold_pairs``): all C(s,2) pairs from one
   collect of the bucket's sorted items, expanded by two native explodes
   (no self-join; the collect is bounded by the cap);
@@ -21,7 +22,8 @@ O11/O19/O20), in three parts over the key table's one exchange:
 
 A pair found in several key tables (32 bands + rotation combos) is
 deduplicated once, in candidate_pairs' groupBy(a, b), which keeps its
-provenance as a sorted, comma-joined source set.
+provenance as a bit per source (``bit_or``, a native hash aggregate),
+decoded once per pair to the comma-joined source names in name order.
 """
 
 from __future__ import annotations
@@ -63,6 +65,37 @@ def _decode(code: F.Column) -> F.Column:
         .when(code == 2, SOURCES[2])
         .when(code == 3, SOURCES[3])
         .otherwise("other")
+    )
+
+
+# provenance mask bit of each source: a packed key's source code c sets
+# bit 1 << c, a substring pair bit 1
+SOURCE_BITS = {"substr": 1, **{name: 1 << c for c, name in SOURCES.items()}}
+
+
+def _sources_of(mask: F.Column) -> F.Column:
+    """A provenance mask -> its source names, comma-joined in name order."""
+    return F.concat_ws(
+        ",",
+        *[F.when(mask.bitwiseAND(SOURCE_BITS[n]) != 0, F.lit(n)) for n in sorted(SOURCE_BITS)],
+    )
+
+
+def _mask_of(src: F.Column) -> F.Column:
+    """A comma-joined source set -> its provenance mask."""
+    names = F.split(src, ",")
+    return sum(
+        F.when(F.array_contains(names, n), bit).otherwise(0) for n, bit in SOURCE_BITS.items()
+    )
+
+
+def _merged_sources(pairs: DataFrame, mask: F.Column) -> DataFrame:
+    """One row per (a, b) of ``pairs``, src the sources of the OR of
+    ``mask`` over the pair's rows."""
+    return (
+        pairs.groupBy("a", "b")
+        .agg(F.bit_or(mask).alias("_mask"))
+        .select("a", "b", _sources_of(F.col("_mask")).alias("src"))
     )
 
 
@@ -145,9 +178,7 @@ def explode_all_keys(
 
 def sized_buckets(members: DataFrame, keys: list[str]) -> DataFrame:
     """Bucket sizing, the first part of the bucket rule: adds ``_bsize``
-    (the rows of each bucket) and ``_head`` (true on exactly one row per
-    bucket, the least by its other columns; the key tables' rows are
-    distinct) from ONE unordered window over ``keys``.
+    (the rows of each bucket) from ONE unordered window over ``keys``.
 
     The window's ClusteredDistribution(keys) is the key table's one
     exchange (none at all if the input is already clustered on the keys,
@@ -159,11 +190,18 @@ def sized_buckets(members: DataFrame, keys: list[str]) -> DataFrame:
     AQE-skew-split, so one pathological bucket is one slow task; the
     production funnel runs exact_dedup first, so identical content — the
     only thing that makes buckets truly enormous — arrives as one row."""
-    w = Window.partitionBy(*keys)
-    row = F.struct(*[c for c in members.columns if c not in keys])
-    return members.withColumns(
-        {"_bsize": F.count(F.lit(1)).over(w), "_head": row == F.min(row).over(w)}
-    )
+    return members.withColumn("_bsize", F.count(F.lit(1)).over(Window.partitionBy(*keys)))
+
+
+def bucket_heads(sized: DataFrame, keys: list[str]) -> DataFrame:
+    """``sized_buckets`` rows -> the same rows plus ``_head``, true on
+    exactly one row per bucket: the least by its other columns (the key
+    tables' rows are distinct). A second window over the same keys, so no
+    exchange beyond the sizing's. Only the reader that the stage metrics
+    observe takes it: the struct it compares is projected below the key
+    exchange, so readers with and without it would not share one."""
+    row = F.struct(*[c for c in sized.columns if c not in (*keys, "_bsize")])
+    return sized.withColumn("_head", row == F.min(row).over(Window.partitionBy(*keys)))
 
 
 def cold_pairs(
@@ -210,13 +248,13 @@ def id_chain(members: DataFrame, keys: list[str]) -> DataFrame:
     )
 
 
-def bucket_pairs_packed(
+def _bucket_edges(
     packed: DataFrame,
     cfg: PipelineConfig,
     observe: Callable[..., DataFrame] | None = None,
 ) -> DataFrame:
-    """(k, id) packed bucket memberships -> candidate pairs (a, b, src), by
-    the bucket rule (module docstring).
+    """(k, id) packed bucket memberships -> candidate pairs (k, a, b), by
+    the bucket rule (module docstring); k's low bits carry the source.
 
     ONE exchange of the key table, total. Bucket size is a window count over
     the k-clustered rows, not a separate groupBy + semi-join: the previous
@@ -231,23 +269,23 @@ def bucket_pairs_packed(
 
     ``observe`` (``StageObservations.observe``) receives the per-source
     bucket histogram (``bucket_stat_exprs``) off the sizing window's rows
-    and head flags, so the numbers cost no extra exchange or pass.
+    and head flags, so the numbers cost no extra exchange or pass. Only
+    the cold reader is observed, before its 2..cap filter: it sees every
+    sized row, and each reader of the reused exchange would otherwise
+    evaluate its own copy of the aggregates.
     """
     sized = sized_buckets(packed, ["k"])
-    if observe is not None:
-        sized = observe(sized, *bucket_stat_exprs())
-    hot = id_chain(sized.where(F.col("_bsize") > cfg.bucket_cap), ["k"])
-    return (
-        cold_pairs(sized, ["k"], cfg.bucket_cap)
-        .unionByName(hot)
-        .select("a", "b", _decode(src_code()).alias("src"))
+    observed = (
+        sized if observe is None else observe(bucket_heads(sized, ["k"]), *bucket_stat_exprs())
     )
+    hot = id_chain(sized.where(F.col("_bsize") > cfg.bucket_cap), ["k"])
+    return cold_pairs(observed, ["k"], cfg.bucket_cap).unionByName(hot)
 
 
 def bucket_stat_exprs() -> list[F.Column]:
-    """Aggregates over bucket_pairs_packed's sized rows (k, id, _bsize,
-    _head) that ``bucket_stats_from_observed`` turns into the per-source
-    bucket histogram rows."""
+    """Aggregates over the sized rows (k, id, _bsize, _head) of
+    ``_bucket_edges``' observed reader that ``bucket_stats_from_observed``
+    turns into the per-source bucket histogram rows."""
     exprs = []
     for c in SOURCES:
         row = src_code() == c
@@ -285,12 +323,9 @@ def candidate_pairs(
 ) -> DataFrame:
     """(k, id) packed bucket memberships -> one row per candidate pair
     (a, b, src), src the sorted comma-joined set of sources that bucketed
-    the pair. ``observe`` passes through to bucket_pairs_packed."""
-    return (
-        bucket_pairs_packed(packed, cfg, observe)
-        .groupBy("a", "b")
-        .agg(F.array_join(F.array_sort(F.collect_set("src")), ",").alias("src"))
-    )
+    the pair. ``observe`` passes through to ``_bucket_edges``."""
+    bit = F.call_function("shiftleft", F.lit(1), src_code().cast("int"))
+    return _merged_sources(_bucket_edges(packed, cfg, observe), bit)
 
 
 def generate_candidates(
@@ -312,17 +347,9 @@ def generate_candidates(
 
 def union_candidates(cand: DataFrame, more: DataFrame) -> DataFrame:
     """Union two (a, b, src) candidate sets whose src columns are already
-    comma-joined source sets (e.g. index candidates ∪ substring pairs) ->
-    one row per pair with the merged, sorted set."""
-    return (
-        cand.unionByName(more)
-        .groupBy("a", "b")
-        .agg(
-            F.array_join(
-                F.array_sort(F.flatten(F.collect_set(F.split("src", ",")))), ","
-            ).alias("src")
-        )
-    )
+    comma-joined sets of ``SOURCE_BITS`` names (e.g. index candidates ∪
+    substring pairs) -> one row per pair with the merged, sorted set."""
+    return _merged_sources(cand.unionByName(more), _mask_of(F.col("src")))
 
 
 def bucket_size_histogram(packed: DataFrame) -> DataFrame:

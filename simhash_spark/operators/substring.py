@@ -44,7 +44,12 @@ from pyspark.sql import functions as F
 
 from simhash_spark.config import PipelineConfig
 from simhash_spark.functions.udfs import make_winnow_udf, normalize_substring_udf
-from simhash_spark.operators.candidates import cold_pairs, id_chain, sized_buckets
+from simhash_spark.operators.candidates import (
+    bucket_heads,
+    cold_pairs,
+    id_chain,
+    sized_buckets,
+)
 
 
 def _shares_run(a: str, b: str, min_len: int) -> bool:
@@ -203,12 +208,14 @@ def verify_substring_pairs(
     ``observe`` (``StageObservations.observe``) collects the manifest
     accounting (``substring_stage_summary``) off the same rows: anchor
     sizes off the window, the co-occupant pairs examined and the chain
-    edges. Unobserved, the plan is the same minus the CollectMetrics."""
+    edges; the anchor sizes on the cold reader only, before its 2..cap
+    filter, which sees every sized row. Unobserved, the plan is the same
+    minus the CollectMetrics and the head window only they read."""
     observe = observe or (lambda d, *exprs: d)
     sized = sized_buckets(anchors, ["anchor"])
     hot = F.col("_bsize") > cfg.bucket_cap
-    sized = observe(
-        sized,
+    observed = observe(
+        bucket_heads(sized, ["anchor"]),
         F.count(F.when(F.col("_head") & hot, 1)).alias("hot_anchors"),
         F.max("_bsize").alias("max_anchor_rows"),
     )
@@ -216,7 +223,7 @@ def verify_substring_pairs(
     # occurrence pairs of a cold anchor; the sort puts x.id <= y.id, and a
     # doc's own occurrences never pair
     examined = observe(
-        cold_pairs(sized, ["anchor"], cfg.bucket_cap, F.struct("id", "lo", "ctx"))
+        cold_pairs(observed, ["anchor"], cfg.bucket_cap, F.struct("id", "lo", "ctx"))
         .select(F.col("a").alias("x"), F.col("b").alias("y"))
         .where(F.col("x.id") < F.col("y.id")),
         F.count(F.lit(1)).alias("cold_pairs"),

@@ -33,7 +33,6 @@ from collections.abc import Callable
 from typing import NamedTuple
 
 import pyarrow.dataset as pads
-import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -67,12 +66,29 @@ class StageObservations:
         return out
 
 
+def parquet_files(path: str | pathlib.Path) -> list[dict]:
+    """Per-file lineage of a parquet file or directory, one footer read per
+    file: ``{file, bytes, rows}`` in file-name order. Starts no Spark job,
+    and is not fooled by a cached DataFrame over the same path. pyarrow's
+    discovery skips the ``_``/``.``-prefixed files (e.g. ``_SUCCESS``) that
+    Spark skips."""
+    frags = pads.dataset(str(path), format="parquet").get_fragments()
+    return sorted(
+        (
+            {
+                "file": pathlib.Path(f.path).name,
+                "bytes": pathlib.Path(f.path).stat().st_size,
+                "rows": f.metadata.num_rows,
+            }
+            for f in frags
+        ),
+        key=lambda p: p["file"],
+    )
+
+
 def parquet_rows(path: str | pathlib.Path) -> int:
-    """Rows of a parquet file or directory, from its files' footers: starts
-    no Spark job, and is not fooled by a cached DataFrame over the same
-    path. pyarrow's discovery skips the ``_``/``.``-prefixed files (e.g.
-    ``_SUCCESS``) that Spark skips."""
-    return pads.dataset(str(path), format="parquet").count_rows()
+    """Rows of a parquet file or directory, from its files' footers."""
+    return sum(f["rows"] for f in parquet_files(path))
 
 
 class Pinned(NamedTuple):
@@ -92,12 +108,21 @@ def pin(df: DataFrame, path: str | pathlib.Path, *exprs: Column) -> Pinned:
     upstream chain per action. Parquet, not persist(): no MemoryStore
     contention at high parallelism, and the files double as an inspectable
     artifact of the run."""
+    return _pin_files(df, path, *exprs)[0]
+
+
+def _pin_files(
+    df: DataFrame, path: str | pathlib.Path, *exprs: Column
+) -> tuple[Pinned, list[dict]]:
+    """``pin``, plus the written files' ``parquet_files`` lineage: the
+    footer rows come from that one footer pass."""
     obs = StageObservations()
     if exprs:
         df = obs.observe(df, *exprs)
     df.write.mode("overwrite").parquet(str(path))
     back = df.sparkSession.read.schema(df.schema).parquet(str(path))
-    return Pinned(back, parquet_rows(path), obs.get())
+    files = parquet_files(path)
+    return Pinned(back, sum(f["rows"] for f in files), obs.get()), files
 
 
 class CheckpointCatalog:
@@ -230,18 +255,12 @@ class CheckpointCatalog:
                 .saveAsTable(name)
             )
             out = self.spark.table(name)
+            # per-partition (file) lineage: rows + bytes per parquet part file
+            parts = parquet_files(data_dir)
         else:
-            out = pin(df, data_dir).df
+            pinned, parts = _pin_files(df, data_dir)
+            out = pinned.df
         wall_ms = int((time.time() - t0) * 1000)
-        # per-partition (file) lineage: rows + bytes per parquet part file
-        parts = [
-            {
-                "file": f.name,
-                "bytes": f.stat().st_size,
-                "rows": pq.read_metadata(f).num_rows,
-            }
-            for f in sorted(data_dir.glob("part-*.parquet"))
-        ]
         manifest = {
             "stage": stage,
             "backend": self.backend,

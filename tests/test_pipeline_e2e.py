@@ -937,3 +937,38 @@ def test_run_pipeline_cli_stats_start_no_count_pass(spark, tmp_path, jobs_starte
     # quality and for misalignment
     assert set(want["tiers"]) == {"exact", "near", "semantic", "kept"}
     assert want["quality_dropped"] and want["misaligned"]
+
+
+def _compiles(spark) -> int:
+    """Classes Janino has compiled in this JVM: the codegen compile-time
+    histogram counts one sample per compile, none per cache hit."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics  # noqa: SLF001
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_second_pipeline_run_compiles_no_class(spark, fixture_dir, tmp_path):
+    """Tripwire for the codegen cache: get_spark sizes it to hold several
+    runs' worth of generated classes, so a second run_pipeline over the
+    same input in the same session compiles nothing. With Spark's default
+    100 entries, the ~140 classes of one run cycle through the LRU and
+    every run recompiles over 100 of them."""
+    from simhash_spark.session import CODEGEN_CACHE_ENTRIES
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(CODEGEN_CACHE_ENTRIES)
+    inp = str(fixture_dir / "images.parquet")
+    run_pipeline(spark, inp, str(tmp_path / "ck1"), CFG)
+    before = _compiles(spark)
+    run_pipeline(spark, inp, str(tmp_path / "ck2"), CFG)
+    assert _compiles(spark) - before == 0
+
+
+def test_second_curation_run_compiles_no_class(spark, tmp_path):
+    """The same tripwire for run_curation with its default stages."""
+    from jobs.run_curation import run_curation
+    from test_curation import SF
+
+    src = f"{SF}/documents.parquet"
+    run_curation(spark, src, str(tmp_path / "out1"))
+    before = _compiles(spark)
+    run_curation(spark, src, str(tmp_path / "out2"))
+    assert _compiles(spark) - before == 0

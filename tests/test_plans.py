@@ -207,12 +207,17 @@ def test_candidates_single_key_exchange(spark):
     ReusedExchange. Each reader recomputes the sizing window over the
     reused exchange, so the plans hold at most one sizing window per
     reader: two for candidates (cold, hot), three for the substring stage
-    (cold, classes, run keys)."""
+    (cold, classes, run keys). Each observation is collected by one
+    CollectMetrics node, on one reader, not once per reader of the reused
+    exchange: one for candidates (the bucket histogram), three for the
+    substring stage (anchor sizes, cold pairs, chain edges)."""
     import re
+    from collections import Counter
     from dataclasses import replace
 
     from simhash_spark.operators.candidates import generate_candidates
     from simhash_spark.operators.substring import verify_substring_pairs
+    from simhash_spark.sources.catalog import StageObservations
 
     fp = spark.createDataFrame(
         [(f"id{i}", i % 7, 3, [i % 5, i % 3], i % 11) for i in range(200)],
@@ -225,10 +230,16 @@ def test_candidates_single_key_exchange(spark):
         "id string, anchor long, lo int, ctx string",
     )
     cases = {
-        "k": (generate_candidates(fp, CFG), 2),
-        "anchor": (verify_substring_pairs(anchors, replace(CFG, bucket_cap=4)), 3),
+        "k": (generate_candidates(fp, CFG, observe=StageObservations().observe), 2, 1),
+        "anchor": (
+            verify_substring_pairs(
+                anchors, replace(CFG, bucket_cap=4), StageObservations().observe
+            ),
+            3,
+            3,
+        ),
     }
-    for key, (df, max_sizings) in cases.items():
+    for key, (df, max_sizings, n_observations) in cases.items():
         df.collect()  # finalize the adaptive plan
         final = _plan(df).split("== Initial Plan ==")[0]
         assert "LeftSemi" not in final, "semi-join candidate shape reintroduced"
@@ -239,6 +250,11 @@ def test_candidates_single_key_exchange(spark):
         assert "ReusedExchange" in final, f"hot-bucket branches must reuse the {key}-exchange"
         sizings = re.findall(r"Window \[count\(1\)", final)
         assert 1 <= len(sizings) <= max_sizings, (key, len(sizings))
+        collects = Counter(re.findall(r"CollectMetrics (\S+),", final))
+        assert len(collects) == n_observations and set(collects.values()) == {1}, (
+            key,
+            collects,
+        )
 
 
 def test_no_cartesian_product_on_any_scale_path(spark):
