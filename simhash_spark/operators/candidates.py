@@ -22,8 +22,7 @@ O11/O19/O20), in three parts over the key table's one exchange:
 
 A pair found in several key tables (32 bands + rotation combos) is
 deduplicated once, in candidate_pairs' groupBy(a, b), which keeps its
-provenance as a bit per source (``bit_or``, a native hash aggregate),
-decoded once per pair to the comma-joined source names in name order.
+provenance as a sorted, comma-joined source set.
 """
 
 from __future__ import annotations
@@ -65,37 +64,6 @@ def _decode(code: F.Column) -> F.Column:
         .when(code == 2, SOURCES[2])
         .when(code == 3, SOURCES[3])
         .otherwise("other")
-    )
-
-
-# provenance mask bit of each source: a packed key's source code c sets
-# bit 1 << c, a substring pair bit 1
-SOURCE_BITS = {"substr": 1, **{name: 1 << c for c, name in SOURCES.items()}}
-
-
-def _sources_of(mask: F.Column) -> F.Column:
-    """A provenance mask -> its source names, comma-joined in name order."""
-    return F.concat_ws(
-        ",",
-        *[F.when(mask.bitwiseAND(SOURCE_BITS[n]) != 0, F.lit(n)) for n in sorted(SOURCE_BITS)],
-    )
-
-
-def _mask_of(src: F.Column) -> F.Column:
-    """A comma-joined source set -> its provenance mask."""
-    names = F.split(src, ",")
-    return sum(
-        F.when(F.array_contains(names, n), bit).otherwise(0) for n, bit in SOURCE_BITS.items()
-    )
-
-
-def _merged_sources(pairs: DataFrame, mask: F.Column) -> DataFrame:
-    """One row per (a, b) of ``pairs``, src the sources of the OR of
-    ``mask`` over the pair's rows."""
-    return (
-        pairs.groupBy("a", "b")
-        .agg(F.bit_or(mask).alias("_mask"))
-        .select("a", "b", _sources_of(F.col("_mask")).alias("src"))
     )
 
 
@@ -248,13 +216,13 @@ def id_chain(members: DataFrame, keys: list[str]) -> DataFrame:
     )
 
 
-def _bucket_edges(
+def bucket_pairs_packed(
     packed: DataFrame,
     cfg: PipelineConfig,
     observe: Callable[..., DataFrame] | None = None,
 ) -> DataFrame:
-    """(k, id) packed bucket memberships -> candidate pairs (k, a, b), by
-    the bucket rule (module docstring); k's low bits carry the source.
+    """(k, id) packed bucket memberships -> candidate pairs (a, b, src), by
+    the bucket rule (module docstring).
 
     ONE exchange of the key table, total. Bucket size is a window count over
     the k-clustered rows, not a separate groupBy + semi-join: the previous
@@ -279,12 +247,16 @@ def _bucket_edges(
         sized if observe is None else observe(bucket_heads(sized, ["k"]), *bucket_stat_exprs())
     )
     hot = id_chain(sized.where(F.col("_bsize") > cfg.bucket_cap), ["k"])
-    return cold_pairs(observed, ["k"], cfg.bucket_cap).unionByName(hot)
+    return (
+        cold_pairs(observed, ["k"], cfg.bucket_cap)
+        .unionByName(hot)
+        .select("a", "b", _decode(src_code()).alias("src"))
+    )
 
 
 def bucket_stat_exprs() -> list[F.Column]:
     """Aggregates over the sized rows (k, id, _bsize, _head) of
-    ``_bucket_edges``' observed reader that ``bucket_stats_from_observed``
+    bucket_pairs_packed's observed reader that ``bucket_stats_from_observed``
     turns into the per-source bucket histogram rows."""
     exprs = []
     for c in SOURCES:
@@ -323,9 +295,12 @@ def candidate_pairs(
 ) -> DataFrame:
     """(k, id) packed bucket memberships -> one row per candidate pair
     (a, b, src), src the sorted comma-joined set of sources that bucketed
-    the pair. ``observe`` passes through to ``_bucket_edges``."""
-    bit = F.call_function("shiftleft", F.lit(1), src_code().cast("int"))
-    return _merged_sources(_bucket_edges(packed, cfg, observe), bit)
+    the pair. ``observe`` passes through to bucket_pairs_packed."""
+    return (
+        bucket_pairs_packed(packed, cfg, observe)
+        .groupBy("a", "b")
+        .agg(F.array_join(F.array_sort(F.collect_set("src")), ",").alias("src"))
+    )
 
 
 def generate_candidates(
@@ -347,9 +322,17 @@ def generate_candidates(
 
 def union_candidates(cand: DataFrame, more: DataFrame) -> DataFrame:
     """Union two (a, b, src) candidate sets whose src columns are already
-    comma-joined sets of ``SOURCE_BITS`` names (e.g. index candidates ∪
-    substring pairs) -> one row per pair with the merged, sorted set."""
-    return _merged_sources(cand.unionByName(more), _mask_of(F.col("src")))
+    comma-joined source sets (e.g. index candidates ∪ substring pairs) ->
+    one row per pair with the merged, sorted set."""
+    return (
+        cand.unionByName(more)
+        .groupBy("a", "b")
+        .agg(
+            F.array_join(
+                F.array_sort(F.flatten(F.collect_set(F.split("src", ",")))), ","
+            ).alias("src")
+        )
+    )
 
 
 def bucket_size_histogram(packed: DataFrame) -> DataFrame:

@@ -211,14 +211,18 @@ def verify_substring_pairs(
     edges; the anchor sizes on the cold reader only, before its 2..cap
     filter, which sees every sized row. Unobserved, the plan is the same
     minus the CollectMetrics and the head window only they read."""
-    observe = observe or (lambda d, *exprs: d)
     sized = sized_buckets(anchors, ["anchor"])
     hot = F.col("_bsize") > cfg.bucket_cap
-    observed = observe(
-        bucket_heads(sized, ["anchor"]),
-        F.count(F.when(F.col("_head") & hot, 1)).alias("hot_anchors"),
-        F.max("_bsize").alias("max_anchor_rows"),
+    observed = (
+        sized
+        if observe is None
+        else observe(
+            bucket_heads(sized, ["anchor"]),
+            F.count(F.when(F.col("_head") & hot, 1)).alias("hot_anchors"),
+            F.max("_bsize").alias("max_anchor_rows"),
+        )
     )
+    observe = observe or (lambda d, *exprs: d)
 
     # occurrence pairs of a cold anchor; the sort puts x.id <= y.id, and a
     # doc's own occurrences never pair

@@ -26,8 +26,12 @@ HEAP_SHARE = 0.4
 # (measured on 4 vCPU: 12.1 CPU-s of HotSpot compiler threads and 9.0 of
 # executor threads per repeated run; with this cache, 0 compiles after the
 # first run and 8.7 / 6.2 CPU-s). 1,000 holds several runs' worth of both
-# workloads with headroom. A static conf: a session that get_spark did not
-# build keeps Spark's default.
+# workloads with headroom. Only a session that runs the same plans again
+# gains (perfbench's timed call after its warm-up, the test session,
+# design_regime's ladders); a one-shot CLI run (jobs/run_pipeline,
+# jobs/run_curation: one run per process) compiles each class once either
+# way. A static conf: a session that get_spark did not build keeps Spark's
+# default.
 CODEGEN_CACHE_ENTRIES = 1000
 
 

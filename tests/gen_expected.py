@@ -29,7 +29,7 @@ Mirrored engine semantics (kept in lockstep with the cited code):
   for rows with n_shingles > 0; bucket identity here is the raw
   (code, index, key) triple — the engine folds it through xxhash64, which
   only merges buckets with probability 2^-64.
-- pairs (candidate_pairs): all C(s,2) per bucket, a < b in STRING order
+- pairs (bucket_pairs_packed): all C(s,2) per bucket, a < b in STRING order
   (ids are cast to string by text_fingerprints); a bucket over bucket_cap
   chains its consecutive ids in the same order (mirror.bucket_pairs).
 - verify (operators/verify.py, use_phash=False): hamming(simhash) <= radius

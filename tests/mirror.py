@@ -8,7 +8,7 @@ Mirrored semantics are kept in lockstep with the cited engine code:
 - candidate buckets mirror operators/candidates.explode_all_keys (band keys
   + pigeonhole combination keys for rows with shingles; bucket identity =
   the raw (code, index, key) triple);
-- pairs mirror candidate_pairs: every pair of a bucket of 2..cap
+- pairs mirror bucket_pairs_packed: every pair of a bucket of 2..cap
   members, and a chain of consecutive ids in id order over a hot bucket
   (``id_chain``); substring anchors follow the same rule, sized by their
   occurrence rows (substring_pairs_mirror, hot_anchor_edges);

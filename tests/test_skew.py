@@ -32,7 +32,7 @@ def test_hot_bucket_chain_spans_bucket(spark):
     """A bucket over the cap must yield exactly m-1 edges (a spanning tree:
     linear output, full connectivity) — not C(m,2), not disconnected — and
     they are its consecutive ids in sorted order."""
-    from simhash_spark.operators.candidates import candidate_pairs
+    from simhash_spark.operators.candidates import bucket_pairs_packed
 
     cfg = PipelineConfig(bucket_cap=50)
     m = 500
@@ -41,7 +41,7 @@ def test_hot_bucket_chain_spans_bucket(spark):
     # a second, small bucket sanity-checks the cold path alongside
     rows += [((99 << 2) | 1, f"cold{i}") for i in range(7)]
     packed = spark.createDataFrame(rows, "k long, id string")
-    pairs = [(r["a"], r["b"]) for r in candidate_pairs(packed, cfg).collect()]
+    pairs = [(r["a"], r["b"]) for r in bucket_pairs_packed(packed, cfg).collect()]
 
     hot_ids = [f"id{i:05d}" for i in range(m)]
     hot_pairs = [(a, b) for a, b in pairs if a.startswith("id")]
@@ -122,7 +122,7 @@ def test_udf_keygen_pairs_match_native(spark):
     cannot."""
     from dataclasses import replace
 
-    from simhash_spark.operators.candidates import candidate_pairs, explode_all_keys
+    from simhash_spark.operators.candidates import bucket_pairs_packed, explode_all_keys
     from simhash_spark.plans.pipeline import fingerprint_job
     from simhash_spark.sources.fixtures import INPUT_HINT_SCHEMA, make_images_pdf
 
@@ -134,7 +134,13 @@ def test_udf_keygen_pairs_match_native(spark):
 
     def pairs(force_udf):
         packed = explode_all_keys(fp, cfg8, force_udf_keys=force_udf)
-        return {(r["a"], r["b"], r["src"]) for r in candidate_pairs(packed, cfg8).collect()}
+        return {
+            (r["a"], r["b"], r["src"])
+            for r in bucket_pairs_packed(packed, cfg8)
+            .groupBy("a", "b")
+            .agg(F.array_join(F.array_sort(F.collect_set("src")), ",").alias("src"))
+            .collect()
+        }
 
     native = pairs(False)
     via_udf = pairs(True)
@@ -148,7 +154,7 @@ def test_udf_keygen_tolerates_null_phash(spark):
     equi-join (ADVICE r2)."""
     from dataclasses import replace
 
-    from simhash_spark.operators.candidates import candidate_pairs, explode_all_keys
+    from simhash_spark.operators.candidates import bucket_pairs_packed, explode_all_keys
     from simhash_spark.plans.pipeline import fingerprint_job
     from simhash_spark.sources.fixtures import INPUT_HINT_SCHEMA, make_images_pdf
 
@@ -163,7 +169,9 @@ def test_udf_keygen_tolerates_null_phash(spark):
 
     def pairs(force_udf):
         packed = explode_all_keys(fp, cfg8, force_udf_keys=force_udf)
-        return {(r["a"], r["b"]) for r in candidate_pairs(packed, cfg8).collect()}
+        return {
+            (r["a"], r["b"]) for r in bucket_pairs_packed(packed, cfg8).collect()
+        }
 
     via_udf = pairs(True)  # crashed with TypeError before the null mask
     native = pairs(False)
