@@ -830,16 +830,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # north rule's "metrics" face as one driver-checkable table
         # (production reads the same numbers from stage manifests)
         from simhash_spark.operators.dedup import dedup_funnel_report
-        from simhash_spark.plans.text_dedup import (
-            text_candidates,
-            text_fingerprints,
-            text_near_dup_clusters,
-            text_near_dup_pairs,
-        )
+        from simhash_spark.plans.pipeline import cluster_job, verify_job
+        from simhash_spark.plans.text_dedup import text_candidates, text_fingerprints
 
         d = spark.read.parquet(_t(sf, "documents"))
-        # deliberately UNPINNED: branch recompute lets all stage copies run
-        # concurrently on idle cores and beats persist() pins at bench scale
+        # ONE chain fp -> candidates -> verified -> clusters, each stage
+        # handed to the report once (image_dedup_funnel's shape). fp stays
+        # deliberately UNPINNED: branch recompute lets the stage copies run
+        # concurrently on idle cores and beat persist() pins at bench scale
         # (isolated best-of-2 A/B, local[32]: sf0.1 5.7 s unpinned vs 37.1 s
         # pinned — serialized cache fills + MemoryStore churn, the CLAUDE.md
         # persist caveat; sf0.01 is the one regime where pins win, 3.2 vs
@@ -849,16 +847,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # outlive the returned DataFrame — wrong shape for a pure query
         # face, and under the sandbox's 2-3x cross-session steal variance
         # the gain is not distinguishable from draw luck. Production reads
-        # these numbers from stage manifests instead, and text_near_dup_
-        # pairs/clusters accept injected stages for callers holding pins
+        # these numbers from stage manifests instead.
         fp = text_fingerprints(d, "doc_id", "text", CFG)
+        cand = text_candidates(fp, CFG)
+        ver = verify_job(cand, fp, CFG, use_phash=False)
+        ids = d.select(F.col("doc_id").cast("string").alias("image_id"))
         return dedup_funnel_report(
-            d,
-            "doc_id",
-            "text",
-            text_candidates(fp, CFG),
-            text_near_dup_pairs(d, "doc_id", "text", CFG),
-            text_near_dup_clusters(d, "doc_id", "text", CFG),
+            d, "doc_id", "text", cand, ver, cluster_job(ver, ids, CFG)
         )
 
     q["dedup_pipeline_report"] = dedup_pipeline_report
@@ -1415,11 +1410,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # that slim table alone — semantics identical to dedup-first (the
         # keeper is chosen among ALL non-null-bytes rows, decodable or not,
         # exactly as 00b does it) — and decode+embed runs SCAN-LOCALLY over
-        # every row, semi-joined down to the keepers afterwards. Pays
+        # every row, anti-joined against the byte drops afterwards. Pays
         # dup-fraction decode, never exchanges a payload.
         from simhash_spark.operators.ann import cosine_topk
+        from simhash_spark.operators.dedup import exact_keep, exact_survivors
         from simhash_spark.operators.multimodal import image_embeddings
-        from simhash_spark.plans.pipeline import byte_keep_col
         from simhash_spark.sources.fixtures import (
             INPUT_HINT_SCHEMA,
             make_images_pdf,
@@ -1431,18 +1426,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             plant_byte_reuploads(make_images_pdf(300, seed=42, with_bytes=True))
         )
         src = spark.createDataFrame(pdf, schema=INPUT_HINT_SCHEMA)
-        keepers = (
-            src.where(F.col("bytes").isNotNull())
-            .select("image_id", F.md5("bytes").alias("_md5"))
-            .withColumn("_keep", byte_keep_col("_md5"))
-            .where(F.col("image_id") == F.col("_keep"))
-            .select("image_id")
-        )
-        emb = (
+        emb = exact_survivors(
             image_embeddings(src)
             .where(F.col("error").isNull())
-            .select("image_id", "embedding")
-            .join(keepers, "image_id", "left_semi")
+            .select("image_id", "embedding"),
+            exact_keep(src, "image_id", "bytes"),
+            "image_id",
         )
         probes = emb.where(F.col("image_id") < "img000000040")
         return cosine_topk(
@@ -1558,11 +1547,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # while the truth table holds direct edges.
         from simhash_spark.operators.candidates import union_candidates
         from simhash_spark.operators.dedup import dedup_eval
+        from simhash_spark.operators.substring import substring_pairs
         from simhash_spark.plans.pipeline import (
             candidate_job,
             cluster_job,
             fingerprint_job,
-            substring_job,
             verify_job,
         )
         from simhash_spark.sources.fixtures import (
@@ -1575,7 +1564,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         src = spark.createDataFrame(pdf, schema=INPUT_HINT_SCHEMA)
         fp = fingerprint_job(spark, src, CFG).cache()
         cand = candidate_job(fp, CFG)
-        all_cand = union_candidates(cand, substring_job(src, CFG))
+        all_cand = union_candidates(cand, substring_pairs(src.select("image_id", "caption"), CFG))
         clusters = cluster_job(verify_job(all_cand, fp, CFG), fp, CFG)
         truth_pairs, _ = compute_truth(pdf)
         truth = spark.createDataFrame(truth_pairs[["a", "b"]], schema="a string, b string")
@@ -1590,11 +1579,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # which is the oracle (computed by the independent numpy brute
         # force, not the engine).
         from simhash_spark.operators.candidates import union_candidates
+        from simhash_spark.operators.substring import substring_pairs
         from simhash_spark.operators.verify import dup_kind_report as op
         from simhash_spark.plans.pipeline import (
             candidate_job,
             fingerprint_job,
-            substring_job,
             verify_job,
         )
         from simhash_spark.sources.fixtures import INPUT_HINT_SCHEMA, make_images_pdf
@@ -1602,7 +1591,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         pdf = make_images_pdf(300, seed=42, with_bytes=False)
         src = spark.createDataFrame(pdf, schema=INPUT_HINT_SCHEMA)
         fp = fingerprint_job(spark, src, CFG).cache()
-        all_cand = union_candidates(candidate_job(fp, CFG), substring_job(src, CFG))
+        all_cand = union_candidates(
+            candidate_job(fp, CFG), substring_pairs(src.select("image_id", "caption"), CFG)
+        )
         return op(verify_job(all_cand, fp, CFG), fp, CFG)
 
     q["dup_kind_report"] = dup_kind_report

@@ -127,7 +127,6 @@ def run_curation(
     n_shards: int | None = None,
     pack_ctx: int | None = None,
     pack_shard_chars: int = 1,
-    n_blocks: int | None = None,
 ) -> dict:
     """The composed 5-stage curation run on an existing session; returns the
     stats manifest (per-stage rows out + wall seconds). bench.py calls this
@@ -153,7 +152,7 @@ def run_curation(
     """
     from pyspark.sql import functions as F
 
-    from simhash_spark.config import DEFAULT_CONFIG
+    from simhash_spark.config import index_config_for
     from simhash_spark.operators.curation import assign_splits, pii_scrub, stratified_sample
     from simhash_spark.operators.dedup import (
         exact_dedup,
@@ -287,15 +286,7 @@ def run_curation(
         # DEFAULT_CONFIG goes quadratic in random candidate pairs past ~1e6
         # rows, exactly like run_pipeline's sizing note. The count is the
         # exact-dedup pin's footer rows.
-        from dataclasses import replace as _replace
-
-        from simhash_spark.config import index_config_for
-
-        cfg = (
-            _replace(DEFAULT_CONFIG, n_blocks=n_blocks)
-            if n_blocks is not None
-            else index_config_for(n_exact)
-        )
+        cfg = index_config_for(n_exact)
         # pinned: the slim (id, cluster_id) labels feed the keep join, the
         # split assignment and the resumable artifact — one near-dup
         # pipeline run; the write observes the cluster count
@@ -344,20 +335,14 @@ def run_curation(
         # corpus-size-adaptive at the IVF family's fixed target list size.
         ts = time.time()
         from simhash_spark.operators.ann import ivf_fit
-        from simhash_spark.operators.dedup import semdedup_keep
+        from simhash_spark.operators.dedup import semantic_drops
 
         emb = spark.read.parquet(embeddings_path)
         n_cent = semantic_centroids or max(16, parquet_rows(embeddings_path) // 1000)
         cent = ivf_fit(emb, n_centroids=n_cent)
-        id_type = df.schema[id_col].dataType
-        emb_surv = emb.select(
-            F.col("vec_id").cast(id_type).alias(id_col),
-            F.col("embedding").alias("vec"),
-        ).join(survivors.select(id_col), id_col, "left_semi")
-        sem = semdedup_keep(
-            emb_surv, cent, threshold=semantic_tau, id_col=id_col, vec_col="vec"
-        )
-        sem_drops = sem.where("is_kept = 0").select(id_col)
+        sem_drops = semantic_drops(
+            emb, survivors.select(id_col), cent, semantic_tau, id_col, "vec_id"
+        ).select(id_col)
         # pinned: the anti-joined survivors feed sample/split/write/pack —
         # lazy recompute would re-run the semdedup kernel per action. The
         # id restriction above reads ``survivors``, not ``df``: ``df``
@@ -519,11 +504,6 @@ def main(argv: list[str] | None = None) -> int:
                     "(token_pack_plan, this context length) to <output>/pack_plan")
     ap.add_argument("--pack-shard-chars", type=int, default=1,
                     help="md5-hex chars per packing shard (16^k shards)")
-    ap.add_argument("--n-blocks", type=int, default=None,
-                    help="pigeonhole block count override for the near-dup "
-                    "stage; default: corpus-size-adaptive "
-                    "(config.index_config_for — 16-bit keys go quadratic "
-                    "past ~1e6 rows)")
     args = ap.parse_args(argv)
 
     splits = None
@@ -561,7 +541,6 @@ def main(argv: list[str] | None = None) -> int:
         n_shards=args.shards,
         pack_ctx=args.pack_ctx,
         pack_shard_chars=args.pack_shard_chars,
-        n_blocks=args.n_blocks,
     )
     print(json.dumps(stats))
     return 0

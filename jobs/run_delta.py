@@ -150,8 +150,9 @@ def main(argv: list[str] | None = None) -> int:
         stats["misaligned_delta"] = align.seen.get("misaligned") or 0
         stats["alignment_tau_bp"] = args.alignment_tau
     if args.tier_labels:
+        from simhash_spark.operators.dedup import assemble_tiers
         from simhash_spark.plans.delta import read_chain_stage
-        from simhash_spark.plans.pipeline import assemble_tiers, run_tier_drops
+        from simhash_spark.plans.pipeline import run_tier_drops
 
         corpus, drops = run_tier_drops(
             read_chain_stage(spark, args.checkpoint, "00b_bytes", "00b_bytes_delta"),

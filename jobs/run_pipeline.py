@@ -131,13 +131,6 @@ def main(argv: list[str] | None = None) -> int:
         help="alignment threshold in basis points of cosine (align_bp < tau "
         "drops as 'misaligned')",
     )
-    ap.add_argument(
-        "--n-blocks",
-        type=int,
-        default=None,
-        help="pigeonhole block count override; default: corpus-size-adaptive "
-        "(config.index_config_for — 16-bit keys go quadratic past ~1e5 rows)",
-    )
     args = ap.parse_args(argv)
     if args.tier_labels and not args.byte_exact:
         ap.error("--tier-labels requires --byte-exact (the ladder's first rung)")
@@ -145,11 +138,10 @@ def main(argv: list[str] | None = None) -> int:
         ap.error("--pixel-embeddings requires --tier-labels")
 
     import functools
-    from dataclasses import replace
 
     from pyspark.sql import functions as F
 
-    from simhash_spark.config import DEFAULT_CONFIG, index_config_for
+    from simhash_spark.config import index_config_for
     from simhash_spark.plans.pipeline import (
         image_keep_list,
         restrict_to_ids,
@@ -162,11 +154,8 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark(parallelism=args.parallelism, app_name="simhash-pipeline")
     ckpt = args.checkpoint or str(pathlib.Path(args.output) / "_checkpoints")
     t0 = time.time()
-    if args.n_blocks is not None:
-        cfg = replace(DEFAULT_CONFIG, n_blocks=args.n_blocks)
-    else:
-        # the input's footer rows pick the index scale class: no Spark job
-        cfg = index_config_for(parquet_rows(args.input))
+    # the input's footer rows pick the index scale class: no Spark job
+    cfg = index_config_for(parquet_rows(args.input))
     res = run_pipeline(
         spark,
         args.input,
@@ -205,7 +194,8 @@ def main(argv: list[str] | None = None) -> int:
         # checkpoint, near drops from 04_clusters (which already ran on the
         # byte tier's survivors), semantic drops (optional) from SemDeDup
         # over pixel embeddings of the NEAR tier's survivors only.
-        from simhash_spark.plans.pipeline import assemble_tiers, run_tier_drops
+        from simhash_spark.operators.dedup import assemble_tiers
+        from simhash_spark.plans.pipeline import run_tier_drops
 
         corpus, drops = run_tier_drops(cat.read("00b_bytes"), res.clusters)
         if args.pixel_embeddings:

@@ -60,7 +60,7 @@ DEFAULT_CONFIG = PipelineConfig()
 
 def config_fingerprint(cfg: PipelineConfig) -> str:
     """Short stable hash of the full config — goes into stage checkpoint
-    fingerprints so a rerun with a DIFFERENT config (e.g. --n-blocks 8)
+    fingerprints so a rerun with a DIFFERENT config (e.g. n_blocks=8)
     cannot silently reuse stages computed under the old one."""
     import hashlib
     from dataclasses import asdict

@@ -6,8 +6,12 @@ The near-dup machinery (SimHash pigeonhole index, MinHash LSH banding,
 verify, connected components) is the SAME code the image+caption pipeline
 uses (operators/candidates.py etc.); this module adds:
 
-- exact_dedup / exact_dedup_groups : hash-groupBy on md5(text) — one shuffle,
-  map-side partial agg, fully SQL-expressible (oracle-checked).
+- exact_keep : the frozen exact keeper rule (min id per md5 digest, NULL
+  content never groups) that exact_dedup, both tier ladders and the
+  byte-exact stage compose from; exact_dedup_groups reports the groups
+  (one map-combined hash agg, oracle-checked).
+- tier_ladder : the exact -> near -> semantic dedup ladder behind the text
+  and image tier-label faces.
 - ngram_jaccard_pairs : exact n-gram-shingle Jaccard via per-shingle doc-id
   lists + native pair expansion — one shuffle on the shingle key; the
   frequent-shingle cap keeps output linear and per-group memory bounded at
@@ -22,6 +26,8 @@ uses (operators/candidates.py etc.); this module adds:
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
@@ -46,25 +52,40 @@ def exact_dedup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """The deduplicated corpus: keep exactly the min-id row per content hash.
-    Implemented as a window-free semi-join (groups are tiny; no sort).
+def exact_keep(df: DataFrame, id_col: str, content_col: str) -> DataFrame:
+    """The FROZEN exact keeper rule, defined once for every exact tier:
+    (id_col, digest, keep_id) for each row whose content is not NULL, with
+    digest = unhex(md5(content)) (16 bytes) and keep_id = the min id over
+    the rows sharing that digest.
 
-    FROZEN NULL-text rule: a NULL text is ABSENT content, not equal content —
-    NULL-text rows never group and always survive this stage (the same rule
-    dedup_tier_labels' tier 1 applies, so the curation CLI and the tier
-    ladder agree on every corpus). Note the funnel REPORT's
+    NULL content is absent, not equal: such rows get no row here, so they
+    never group and pass every exact tier. The window reads only the slim
+    (id, digest) projection — md5 reduces the payload inside the scan, so
+    it never rides the one digest-keyed exchange. This is also the
+    ``00b_bytes`` checkpoint schema."""
+    return (
+        df.where(F.col(content_col).isNotNull())
+        .select(id_col, F.unhex(F.md5(F.col(content_col))).alias("digest"))
+        .withColumn("keep_id", F.min(id_col).over(Window.partitionBy("digest")))
+    )
+
+
+def exact_survivors(df: DataFrame, keep: DataFrame, id_col: str) -> DataFrame:
+    """``df`` without the rows an exact_keep table ``keep`` drops (id !=
+    keep_id): the NULL-content rows plus one keeper per digest. The
+    anti-join's build side is the drop set alone, not the corpus."""
+    return df.join(
+        keep.where(F.col(id_col) != F.col("keep_id")).select(id_col), id_col, "left_anti"
+    )
+
+
+def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """The deduplicated corpus: the exact tier's survivors (exact_keep's
+    rule; NULL-text rows always survive). Note the funnel REPORT's
     n_exact_dup_extra counter (dedup_funnel_report) still counts NULL rows
     as extras because countDistinct skips NULLs — that is a monitoring
-    count, not this decision surface.
-    """
-    nn = df.where(F.col(text_col).isNotNull())
-    keep = exact_dedup_groups(nn, id_col, text_col).select(
-        F.col("keep_id").alias(id_col)
-    )
-    return df.where(F.col(text_col).isNull()).unionByName(
-        nn.join(keep, id_col, "left_semi")
-    )
+    count, not this decision surface."""
+    return exact_survivors(df, exact_keep(df, id_col, text_col), id_col)
 
 
 # --------------------------------------------------------- n-gram Jaccard
@@ -327,6 +348,117 @@ def near_dup_keep_best(
     )
 
 
+def tier_drops(
+    rows: DataFrame, tier: str, keep_col: str, id_col: str = "image_id", id_type=None
+) -> DataFrame:
+    """(id_col, tier) for the rows of a keeper table whose id is not its
+    keeper ``keep_col`` — the drop set of one ladder rung (exact_keep's
+    keep_id, or a near-dup label's cluster_id). ``id_type`` casts ids back
+    to the corpus id type (near labels ride as strings)."""
+    ids = F.col(id_col) if id_type is None else F.col(id_col).cast(id_type)
+    return rows.where(F.col(id_col) != F.col(keep_col)).select(
+        ids.alias(id_col), F.lit(tier).alias("tier")
+    )
+
+
+def assemble_tiers(corpus_ids: DataFrame, drops: DataFrame, id_col: str = "image_id") -> DataFrame:
+    """The ladder's FROZEN label assembly, shared by every face that
+    publishes tier attribution (tier_ladder, run_pipeline / run_delta
+    --tier-labels): left-join the (id_col, tier) drop set onto the corpus
+    ids; unlabeled rows are 'kept' / is_kept=1. Disjointness of the drop
+    tiers is the caller's funnel invariant."""
+    return corpus_ids.join(drops, id_col, "left").select(
+        id_col,
+        F.coalesce(F.col("tier"), F.lit("kept")).alias("tier"),
+        F.col("tier").isNull().cast("int").alias("is_kept"),
+    )
+
+
+def tier_ladder(
+    corpus: DataFrame,
+    id_col: str,
+    content_col: str,
+    near_clusters: Callable[[DataFrame], DataFrame],
+    emb: DataFrame | None = None,
+    centroids: np.ndarray | None = None,
+    tau: float = 0.95,
+    vec_id_col: str | None = None,
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Tiered dedup attribution — the production dedup LADDER as one table,
+    the one definition behind the text (dedup_tier_labels) and image
+    (pipeline.image_tier_labels) faces: exact -> near -> optionally
+    semantic, each tier running ONLY on the survivors of the previous one
+    (the curation CLI's frozen stage order), and every dropped row labeled
+    with the ONE tier that removed it.
+
+    Output: one row per corpus row, (id_col, tier, is_kept) with tier in
+    {'exact','near','semantic'} for dropped rows and 'kept' for survivors
+    (is_kept = 1 iff tier = 'kept').
+
+    FROZEN per-tier rules:
+    - exact: exact_keep over ``content_col``; NULL content passes.
+    - near: ``near_clusters(survivors)`` -> (id_col, cluster_id) with min
+      string-id labels; keeper = the member whose id IS its label.
+    - semantic (only when ``emb`` is given, with ``centroids``):
+      semdedup_keep's lowest-centroid-cosine rule at cosine >= ``tau`` over
+      the embedding rows (``vec_id_col`` default id_col, ``vec_col``) of the
+      remaining survivors; a row with a NULL or no embedding passes.
+    Tiers are disjoint by construction (each runs on the prior survivors),
+    so the assembly is a union of drop sets + one left join.
+
+    Scale shape: tier 1 is one digest-keyed window over slim (id, digest)
+    rows; tier 2 is the caller's near-dup pipeline on the (smaller)
+    survivor set; tier 3 is the one-exchange SemDeDup group kernel on the
+    yet-smaller remainder — the funnel ordering exists so the expensive
+    tiers see the fewest rows. Query-face caveat: the cheap survivor
+    filters feed several branches and recompute per branch; production
+    runs materialize tier boundaries through the CheckpointCatalog.
+    """
+    id_type = corpus.schema[id_col].dataType
+    keep = exact_keep(corpus, id_col, content_col)
+    exact = tier_drops(keep, "exact", "keep_id", id_col)
+    surv1 = exact_survivors(corpus, keep, id_col)
+    near = tier_drops(near_clusters(surv1), "near", "cluster_id", id_col, id_type)
+    drops = exact.unionByName(near)
+    if emb is not None:
+        if centroids is None:
+            raise ValueError("semantic tier needs both emb and centroids")
+        surv2 = surv1.select(id_col).join(near.select(id_col), id_col, "left_anti")
+        drops = drops.unionByName(
+            semantic_drops(emb, surv2, centroids, tau, id_col, vec_id_col, vec_col)
+        )
+    return assemble_tiers(corpus.select(id_col), drops, id_col)
+
+
+def semantic_drops(
+    emb: DataFrame,
+    surv_ids: DataFrame,
+    centroids: np.ndarray,
+    tau: float,
+    id_col: str,
+    vec_id_col: str | None = None,
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """(id_col, tier='semantic') for the rows semdedup_keep drops among the
+    embedding rows of ``surv_ids``: the ladder's semantic rung, shared with
+    run_curation's semantic stage. ``emb``'s ids (``vec_id_col``, default
+    id_col) are cast to the survivors' id type. FROZEN absent-signal rule:
+    a row with a NULL or no embedding never enters the kernel, so it
+    passes."""
+    id_type = surv_ids.schema[id_col].dataType
+    vecs = (
+        emb.select(
+            F.col(vec_id_col or id_col).cast(id_type).alias(id_col),
+            F.col(vec_col).alias("vec"),
+        )
+        .where(F.col("vec").isNotNull())
+        .join(surv_ids, id_col, "left_semi")
+    )
+    sem = semdedup_keep(vecs, centroids, threshold=tau, id_col=id_col, vec_col="vec")
+    return sem.where(F.col("is_kept") == 0).select(id_col, F.lit("semantic").alias("tier"))
+
+
 def dedup_tier_labels(
     docs: DataFrame,
     emb: DataFrame,
@@ -338,94 +470,25 @@ def dedup_tier_labels(
     vec_id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Tiered dedup attribution — the production dedup LADDER as one table:
-    exact (md5) -> near (SimHash/MinHash pipeline) -> semantic (SemDeDup),
-    each tier running ONLY on the survivors of the previous one (the
-    curation CLI's frozen stage order), and every dropped doc labeled with
-    the ONE tier that removed it. This is what a 100 TB curation run
-    publishes to answer "which mechanism removed how much, and which doc
-    fell to which rule" — the per-doc face of the funnel report.
-
-    Output: one row per input doc, (id_col, tier, is_kept) with tier in
-    {'exact','near','semantic'} for dropped docs and 'kept' for survivors
-    (is_kept = 1 iff tier = 'kept').
-
-    FROZEN per-tier rules (each tier's own frozen rule, unchanged):
-    - exact: keeper = min id per md5(text) group; NULL-text rows never
-      group (they pass this tier).
-    - near: the shared text_near_dup_clusters min-STRING-id label rule;
-      keeper = the member whose string id IS the cluster label.
-    - semantic: semdedup_keep's lowest-centroid-cosine rule over the
-      embedding rows of the remaining survivors; docs with no embedding
-      row pass this tier.
-    Tiers are disjoint by construction (each runs on the prior survivors),
-    so the final assembly is a union of drop sets + one left join.
-
-    Scale shape: tier 1 is one md5-keyed window exchange; tier 2 is the
-    audited one-exchange candidates pipeline on the (smaller) survivor set;
-    tier 3 is the one-exchange SemDeDup group kernel on the yet-smaller
-    remainder — the funnel ordering exists precisely so the expensive
-    tiers see the fewest rows. Query-face caveat (same reasoning as
-    dedup_pipeline_report): the cheap md5-window/survivor filters feed 2-3
-    branches and recompute per branch, while the expensive near-tier labels
-    are checkpoint-severed inside connected_components and materialize
-    once; production runs materialize tier boundaries through the
-    CheckpointCatalog instead of this composed query face.
-    """
+    """The TEXT face of tier_ladder: exact (md5 of ``text_col``) -> near
+    (text_near_dup_clusters, the SimHash/MinHash pipeline) -> semantic
+    (SemDeDup over ``emb``'s (vec_id_col, vec_col) rows). The per-doc
+    face of the funnel report: "which mechanism removed how much, and
+    which doc fell to which rule"."""
     from simhash_spark.config import DEFAULT_CONFIG
     from simhash_spark.plans.text_dedup import text_near_dup_clusters
 
     cfg = cfg or DEFAULT_CONFIG
-    base = docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("t"))
-
-    # tier 1 — exact: min id per md5 group via one window min; NULL-text
-    # rows are SPLIT OUT before the window (the frozen absent-content rule:
-    # they never group and always survive) — routing them through
-    # partitionBy(h) would funnel every null row into one wasted hot
-    # partition just to discard its min
-    w = Window.partitionBy("h")
-    nulls = base.where(F.col("t").isNull())
-    ex = (
-        base.where(F.col("t").isNotNull())
-        .withColumn("h", F.md5(F.col("t")))
-        .withColumn("_keep", F.min("id").over(w))
-    )
-    exact_drops = ex.where(F.col("id") != F.col("_keep")).select(
-        "id", F.lit("exact").alias("tier")
-    )
-    surv1 = (
-        ex.where(F.col("id") == F.col("_keep")).select("id", "t").unionByName(nulls)
-    )
-
-    # tier 2 — near: the pipeline's cluster labels over tier-1 survivors;
-    # label = min string id, so the keeper is the member equal to its label
-    id_type = docs.schema[id_col].dataType
-    clus = text_near_dup_clusters(surv1, "id", "t", cfg)  # -> (id str, cluster_id str)
-    near_drops = (
-        clus.where(F.col("id") != F.col("cluster_id"))
-        .select(F.col("id").cast(id_type).alias("id"), F.lit("near").alias("tier"))
-    )
-
-    # tier 3 — semantic: SemDeDup over the remaining survivors' embeddings
-    surv2 = surv1.select("id").join(near_drops.select("id"), "id", "left_anti")
-    emb2 = (
-        emb.select(F.col(vec_id_col).alias("id"), F.col(vec_col).alias("vec"))
-        .join(surv2, "id", "left_semi")
-    )
-    sem = semdedup_keep(emb2, centroids, threshold=tau, id_col="id", vec_col="vec")
-    sem_drops = sem.where(F.col("is_kept") == 0).select(
-        "id", F.lit("semantic").alias("tier")
-    )
-
-    drops = exact_drops.unionByName(near_drops).unionByName(sem_drops)
-    return (
-        docs.select(F.col(id_col).alias("id"))
-        .join(drops, "id", "left")
-        .select(
-            F.col("id").alias(id_col),
-            F.coalesce(F.col("tier"), F.lit("kept")).alias("tier"),
-            F.col("tier").isNull().cast("int").alias("is_kept"),
-        )
+    return tier_ladder(
+        docs,
+        id_col,
+        text_col,
+        lambda surv: text_near_dup_clusters(surv, id_col, text_col, cfg),
+        emb,
+        centroids,
+        tau,
+        vec_id_col,
+        vec_col,
     )
 
 

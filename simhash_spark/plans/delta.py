@@ -50,9 +50,9 @@ from simhash_spark.operators.candidates import (
     union_candidates,
 )
 from simhash_spark.operators.connected_components import connected_components
+from simhash_spark.operators.dedup import exact_keep, exact_survivors
 from simhash_spark.operators.substring import verify_substring_pairs, winnow_anchor_table
 from simhash_spark.plans.pipeline import (
-    byte_keep_col,
     fingerprint_job,
     singleton_labels,
     substring_tag,
@@ -420,25 +420,20 @@ def run_delta(
         bx_obs = StageObservations()
 
         def _bytes_delta() -> DataFrame:
-            inc_h = bx_src_new.where(F.col("bytes").isNotNull()).select(
-                "image_id", F.unhex(F.md5("bytes")).alias("digest")
-            )
+            # keep_id here is the within-increment min id
+            inc = exact_keep(bx_src_new, "image_id", "bytes")
             # keep_id is constant within a digest group in every chain link,
             # and the guard (below, enforced on every prior link too) makes
             # the EARLIEST link's keeper the min across links — min() picks it
             base_keep = (
-                bx_base.join(inc_h.select("digest").distinct(), "digest", "left_semi")
+                bx_base.join(inc.select("digest").distinct(), "digest", "left_semi")
                 .groupBy("digest")
                 .agg(F.min("keep_id").alias("base_keep_id"))
             )
-            bx = (
-                inc_h.join(base_keep, "digest", "left")
-                .withColumn("inc_min", byte_keep_col("digest"))
-                .select(
-                    "image_id",
-                    "digest",
-                    F.coalesce("base_keep_id", "inc_min").alias("keep_id"),
-                )
+            bx = inc.join(base_keep, "digest", "left").select(
+                "image_id",
+                "digest",
+                F.coalesce("base_keep_id", "keep_id").alias("keep_id"),
             )
             # the manifest records how many increment rows the index
             # suppressed and how many would demote a base keeper, both
@@ -468,11 +463,7 @@ def run_delta(
                 + ", ".join(f"{r['image_id']} < {r['keep_id']}" for r in demoted)
                 + " — out-of-order byte arrivals need a fresh full run"
             )
-        src_new = src_new.join(
-            bx_new.where(F.col("image_id") != F.col("keep_id")).select("image_id"),
-            "image_id",
-            "left_anti",
-        )
+        src_new = exact_survivors(src_new, bx_new, "image_id")
     fp_new = cat.run_stage(
         "01_fingerprints_delta",
         in_fp,

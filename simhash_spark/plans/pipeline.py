@@ -32,8 +32,13 @@ from simhash_spark.operators.candidates import (
     union_candidates,
 )
 from simhash_spark.operators.connected_components import connected_components
+from simhash_spark.operators.dedup import (
+    exact_keep,
+    exact_survivors,
+    tier_drops,
+    tier_ladder,
+)
 from simhash_spark.operators.substring import (
-    substring_pairs,
     substring_stage_summary,
     verify_substring_pairs,
     winnow_anchor_table,
@@ -66,14 +71,6 @@ def candidate_job(
     """E2: fingerprints -> candidate pairs (a, b, src). ``observe`` collects
     the per-source bucket histogram while the pairs are computed."""
     return generate_candidates(fp, cfg, include_phash=include_phash, observe=observe)
-
-
-def substring_job(src: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """E2b one-shot form: captions -> substring pairs (a, b, src='substr').
-    run_pipeline instead splits this into the 02b_anchors checkpoint +
-    verify so the anchor table persists as verification and
-    incremental-maintenance state."""
-    return substring_pairs(src.select("image_id", "caption"), cfg)
 
 
 def verify_job(
@@ -131,42 +128,14 @@ def singleton_labels(labels: DataFrame, vertices: DataFrame) -> DataFrame:
     )
 
 
-def byte_keep_col(digest_col: str) -> "F.Column":
-    """The byte tier's FROZEN keep rule as one shared expression: keeper =
-    lexicographic min image_id per digest group (hex or binary digest — the
-    rule only groups on equality). Every face that byte-dedups (run_pipeline
-    stage 00b, image_tier_labels' exact tier, the semantic-search query
-    face) builds its window from here so the rule cannot fork."""
-    from pyspark.sql import Window
-
-    return F.min("image_id").over(Window.partitionBy(digest_col))
-
-
-def assemble_tiers(corpus_ids: DataFrame, drops: DataFrame) -> DataFrame:
-    """The ladder's FROZEN label assembly, shared by every face that
-    publishes tier attribution (image_tier_labels, run_pipeline
-    --tier-labels, run_delta --tier-labels): left-join the (image_id, tier)
-    drop set onto the corpus ids; unlabeled rows are 'kept' / is_kept=1.
-    Disjointness of the drop tiers is the caller's funnel invariant."""
-    return corpus_ids.join(drops, "image_id", "left").select(
-        "image_id",
-        F.coalesce(F.col("tier"), F.lit("kept")).alias("tier"),
-        F.col("tier").isNull().cast("int").alias("is_kept"),
-    )
-
-
 def run_tier_drops(byte_index: DataFrame, clusters: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(corpus ids, exact ∪ near drops) for assemble_tiers from a byte-exact
     run's own stage outputs: the 00b byte index (image_id, keep_id) and the
     04 labels (image_id, cluster_id). The corpus is every cluster vertex
     (the byte survivors, NULL-bytes rows included) plus the byte tier's
     drops. Shared by run_pipeline and run_delta --tier-labels."""
-    exact = byte_index.where(F.col("image_id") != F.col("keep_id")).select(
-        "image_id", F.lit("exact").alias("tier")
-    )
-    near = clusters.where(F.col("image_id") != F.col("cluster_id")).select(
-        "image_id", F.lit("near").alias("tier")
-    )
+    exact = tier_drops(byte_index, "exact", "keep_id")
+    near = tier_drops(clusters, "near", "cluster_id")
     corpus = clusters.select("image_id").unionByName(exact.select("image_id"))
     return corpus, exact.unionByName(near)
 
@@ -272,85 +241,29 @@ def image_tier_labels(
     centroids=None,
     tau: float = 0.9,
 ) -> DataFrame:
-    """Tiered dedup attribution for the IMAGE axis — the text ladder's
-    (operators/dedup.py::dedup_tier_labels) counterpart over the BASELINE
-    input_hint table: byte-exact (md5 over the binary column — the same
-    file re-uploaded under a new id/caption) -> near (the flagship
-    caption-SimHash + phash-pigeonhole pipeline) on the byte tier's
-    survivors -> optionally semantic (SemDeDup over pixel embeddings, the
-    Abbas'23 LAION regime) on the near tier's survivors, every dropped
-    image labeled with the ONE tier that removed it.
-    Output: (image_id, tier in {'exact','near','semantic','kept'}, is_kept).
+    """The IMAGE face of dedup.tier_ladder over the BASELINE input_hint
+    table: byte-exact (md5 over the binary column — the same file
+    re-uploaded under a new id/caption) -> near (the flagship caption-SimHash
+    + phash-pigeonhole pipeline: cluster_job over fingerprint/candidate/
+    verify of the survivors) -> optionally semantic (SemDeDup over pixel
+    embeddings, the Abbas'23 LAION regime). Output: (image_id, tier in
+    {'exact','near','semantic','kept'}, is_kept).
 
-    FROZEN per-tier rules (each tier's own frozen rule, unchanged):
-    - exact: keeper = lexicographic min image_id per md5(bytes) group;
-      NULL-bytes rows never group (they pass this tier — the absent-content
-      rule shared with the text ladder).
-    - near: cluster_job's min-string-id label over fingerprint/candidate/
-      verify (caption SimHash bands + pigeonhole, OR-phash verify) of the
-      survivors; keeper = the member whose id IS its cluster label.
-    - semantic (only when ``emb`` + ``centroids`` are given): semdedup_keep's
-      lowest-centroid-cosine rule at cosine >= ``tau`` over the embedding
-      rows of the remaining survivors; images with no embedding row (decode
-      quarantine, null bytes) pass this tier. ``emb`` is
-      (image_id, embedding) — operators/multimodal.py::image_embeddings in
-      this container, a CLIP-style encoder in production; ``centroids`` from
-      ann.ivf_fit over the same embeddings.
-
-    Scale shape: tier 1 is one md5-keyed window exchange over (id, 16-byte
-    digest) — bytes themselves never shuffle (md5 computed in the scan
-    projection); tier 2 is the audited one-exchange candidates plan on the
-    (smaller) survivor set; tier 3 is the one-exchange SemDeDup group
-    kernel on the yet-smaller remainder — the funnel ordering exists so the
-    per-pixel-expensive tiers see the fewest rows. Query-face caveat: fp
-    feeds candidate AND verify, so this composed face caches it; production
-    runs materialize tier boundaries through the CheckpointCatalog like
-    run_pipeline.
+    ``emb`` is (image_id, embedding) — operators/multimodal.py::
+    image_embeddings in this container, a CLIP-style encoder in production;
+    ``centroids`` from ann.ivf_fit over the same embeddings. Images with a
+    NULL or no embedding (decode quarantine, null bytes) pass the semantic
+    tier. Query-face caveat: fp feeds candidate AND verify, so this composed
+    face caches it; production runs materialize tier boundaries through the
+    CheckpointCatalog like run_pipeline.
     """
     cfg = cfg or DEFAULT_CONFIG
-    id_c, by_c = F.col("image_id"), F.col("bytes")
-    nulls = src.where(by_c.isNull())
-    # "_md5", not "h" — the input_hint schema already carries h (height)
-    ex = (
-        src.where(by_c.isNotNull())
-        .withColumn("_md5", F.md5(by_c))
-        .withColumn("_keep", byte_keep_col("_md5"))
-    )
-    exact_drops = ex.where(id_c != F.col("_keep")).select(
-        "image_id", F.lit("exact").alias("tier")
-    )
-    surv1 = ex.where(id_c == F.col("_keep")).drop("_md5", "_keep").unionByName(nulls)
 
-    fp = fingerprint_job(spark, surv1, cfg).cache()
-    clus = cluster_job(verify_job(candidate_job(fp, cfg), fp, cfg), fp, cfg)
-    near_drops = clus.where(F.col("image_id") != F.col("cluster_id")).select(
-        "image_id", F.lit("near").alias("tier")
-    )
+    def near_clusters(surv: DataFrame) -> DataFrame:
+        fp = fingerprint_job(spark, surv, cfg).cache()
+        return cluster_job(verify_job(candidate_job(fp, cfg), fp, cfg), fp, cfg)
 
-    drops = exact_drops.unionByName(near_drops)
-
-    if emb is not None:
-        if centroids is None:
-            raise ValueError("semantic tier needs both emb and centroids")
-        from simhash_spark.operators.dedup import semdedup_keep
-
-        surv2 = surv1.select("image_id").join(
-            near_drops.select("image_id"), "image_id", "left_anti"
-        )
-        emb2 = (
-            emb.select("image_id", F.col("embedding").alias("vec"))
-            .where(F.col("vec").isNotNull())
-            .join(surv2, "image_id", "left_semi")
-        )
-        sem = semdedup_keep(
-            emb2, centroids, threshold=tau, id_col="image_id", vec_col="vec"
-        )
-        sem_drops = sem.where(F.col("is_kept") == 0).select(
-            "image_id", F.lit("semantic").alias("tier")
-        )
-        drops = drops.unionByName(sem_drops)
-
-    return assemble_tiers(src.select("image_id"), drops)
+    return tier_ladder(src, "image_id", "bytes", near_clusters, emb, centroids, tau)
 
 
 def stage_fingerprint(
@@ -363,7 +276,7 @@ def stage_fingerprint(
     byte_exact: bool = False,
 ) -> str:
     """Stage checkpoint identity = input content + full config + pipeline
-    flags: a rerun with a different index config (e.g. --n-blocks 8) or
+    flags: a rerun with a different index config (e.g. n_blocks=8) or
     stage set must recompute, never silently resume stages computed under
     the old configuration. The quality-filter flag joins the identity only
     when enabled (``-qf1``) so pre-existing unfiltered checkpoints keep
@@ -471,7 +384,7 @@ def run_pipeline(
         # ladder's first rung as a production stage. The funnel ordering is
         # the scale argument: at 10^12 rows every byte re-upload dropped
         # here never pays the fingerprint UDF, the candidate exchange, or
-        # the verify joins. Frozen rule = image_tier_labels tier 1 (keeper =
+        # the verify joins. Frozen rule = dedup.exact_keep (keeper =
         # lexicographic min image_id per md5 group; NULL-bytes rows pass).
         # The checkpoint stores ONE SLIM ROW PER HASHED INPUT
         # (image_id, digest 16-byte binary, keep_id) — the byte-dedup index
@@ -479,20 +392,8 @@ def run_pipeline(
         # scan projection) and never land in the catalog. Survivors are an
         # anti-join against the drop subset on read.
         bx_src = src
-
-        def _bytes_stage() -> DataFrame:
-            return (
-                bx_src.where(F.col("bytes").isNotNull())
-                .select("image_id", F.unhex(F.md5("bytes")).alias("digest"))
-                .withColumn("keep_id", byte_keep_col("digest"))
-            )
-
-        bx = cat.run_stage("00b_bytes", in_fp, _bytes_stage)
-        src = src.join(
-            bx.where(F.col("image_id") != F.col("keep_id")).select("image_id"),
-            "image_id",
-            "left_anti",
-        )
+        bx = cat.run_stage("00b_bytes", in_fp, lambda: exact_keep(bx_src, "image_id", "bytes"))
+        src = exact_survivors(src, bx, "image_id")
 
     fp = cat.run_stage(
         "01_fingerprints",

@@ -2,15 +2,12 @@
 
 BASELINE.json:6 requires every stage checkpointed "to Iceberg with
 per-partition lineage and metrics for resumability". No Iceberg runtime jar
-ships in this sandbox (verified: none under pyspark/jars, no network), so the
-catalog is an interface with two backends (SURVEY.md §7.6):
-
-- ``parquet``: Parquet per stage + ``_manifest.json`` reproducing the snapshot
-  semantics: stage name, input fingerprint, schema, per-partition rows/bytes,
-  wall time. This is what runs here.
-- ``iceberg``: the production backend — ``df.writeTo(table).createOrReplace()``
-  with Iceberg snapshots supplying lineage. Selected by config when the
-  runtime jar is on the classpath; import-gated.
+ships with the PySpark build (none under pyspark/jars), so the catalog
+writes Parquet per stage + ``_manifest.json`` reproducing the
+snapshot semantics: stage name, input fingerprint, schema, per-partition
+rows/bytes, wall time (SURVEY.md §7.6). An Iceberg binding would implement
+the same interface with ``df.writeTo(table).createOrReplace()`` and let
+snapshots supply lineage; none is built here.
 
 Resume: ``run_stage`` recomputes nothing when a manifest exists whose
 input_fingerprint matches — it reads the checkpoint back (T5 test).
@@ -126,21 +123,8 @@ def _pin_files(
 
 
 class CheckpointCatalog:
-    def __init__(self, spark: SparkSession, base_path: str | pathlib.Path, backend: str = "parquet"):
-        if backend == "iceberg":
-            # production path: requires iceberg-spark-runtime on the classpath
-            jvm_has_iceberg = False
-            try:
-                spark._jvm.java.lang.Class.forName("org.apache.iceberg.Table")  # noqa: SLF001
-                jvm_has_iceberg = True
-            except Exception:
-                pass
-            if not jvm_has_iceberg:
-                raise RuntimeError(
-                    "iceberg backend requested but no Iceberg runtime jar on the classpath"
-                )
+    def __init__(self, spark: SparkSession, base_path: str | pathlib.Path):
         self.spark = spark
-        self.backend = backend
         self.base = pathlib.Path(base_path)
         self.base.mkdir(parents=True, exist_ok=True)
 
@@ -222,7 +206,7 @@ class CheckpointCatalog:
         exchange on this side — at 10^12 rows the fingerprint table is the
         largest intermediate and the verify stage joins it twice, so the
         bucketed write trades one shuffle at write time for zero at every
-        read. The Iceberg production backend expresses the same layout as a
+        read. An Iceberg table would express the same layout as a
         bucket-transform partition spec."""
         d = self._stage_dir(stage)
         data_dir = d / "data"
@@ -263,7 +247,6 @@ class CheckpointCatalog:
         wall_ms = int((time.time() - t0) * 1000)
         manifest = {
             "stage": stage,
-            "backend": self.backend,
             "complete": True,
             "input_fingerprint": input_fingerprint,
             "schema": out.schema.jsonValue(),

@@ -176,16 +176,6 @@ def test_bucketed_fingerprint_checkpoint_joins_without_exchange(spark, fixture_d
     assert plan.count("Exchange") == 2, plan
 
 
-def test_iceberg_backend_gate_raises_without_runtime_jar(spark, tmp_path):
-    """The production-backend selection logic itself (catalog.py): requesting
-    the Iceberg backend in an environment without the runtime jar must fail
-    loudly at construction, not at first write."""
-    from simhash_spark.sources.catalog import CheckpointCatalog
-
-    with pytest.raises(RuntimeError, match="[Ii]ceberg"):
-        CheckpointCatalog(spark, tmp_path / "ice", backend="iceberg")
-
-
 def test_pipeline_quality_filter_stage(spark, fixture_dir, tmp_path):
     """E0 quality filter: (1) the filtered pipeline's clusters are IDENTICAL
     to an unfiltered run over a pre-filtered copy of the input (the stage is
@@ -539,7 +529,6 @@ def test_cli_byte_exact_tier_ladder(spark, tmp_path):
         [
             "--input", str(inp),
             "--output", str(out),
-            "--n-blocks", str(CFG.n_blocks),
             # the operator query face (image_tier_labels) composes
             # fingerprint/candidates/verify/cluster WITHOUT the substring
             # stage — match it for the exact-equality gate
@@ -616,7 +605,6 @@ def test_cli_byte_exact_tier_ladder(spark, tmp_path):
         [
             "--input", str(inp),
             "--output", str(out_b),
-            "--n-blocks", str(CFG.n_blocks),
             "--no-substring",
             "--byte-exact",
             "--tier-labels",
@@ -701,7 +689,6 @@ def test_cli_alignment_filter_output(spark, tmp_path):
         [
             "--input", str(inp),
             "--output", str(out),
-            "--n-blocks", str(CFG.n_blocks),
             "--byte-exact",
             "--alignment-filter",
             "--alignment-tau", "8500",
@@ -773,7 +760,6 @@ def test_cli_above_id_ceiling_matches_broadcast_run(spark, tmp_path, monkeypatch
             [
                 "--input", str(inp),
                 "--output", str(out),
-                "--n-blocks", str(CFG.n_blocks),
                 "--byte-exact",
                 "--tier-labels",
                 "--pixel-embeddings",
@@ -806,10 +792,9 @@ def test_run_pipeline_cli_stats_start_no_count_pass(spark, tmp_path, jobs_starte
 
     from simhash_spark.config import index_config_for
     from simhash_spark.operators.ann import ivf_fit
-    from simhash_spark.operators.dedup import near_dup_keep_list, semdedup_keep
+    from simhash_spark.operators.dedup import assemble_tiers, near_dup_keep_list, semdedup_keep
     from simhash_spark.operators.multimodal import caption_pixel_alignment, image_embeddings
     from simhash_spark.plans.pipeline import (
-        assemble_tiers,
         restrict_to_ids,
         run_tier_drops,
         semantic_keep_list,

@@ -333,21 +333,14 @@ def test_byte_exact_stage_exchange_carries_no_bytes(spark, tmp_path):
     projection — the window's hash exchange ships only (image_id, digest,
     keep-window state), never the bytes column; and the embedding pass
     prunes its scan to exactly (image_id, bytes, fmt)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
+    from simhash_spark.operators.dedup import exact_keep
     from simhash_spark.operators.multimodal import image_embeddings
     from simhash_spark.sources.fixtures import write_images_fixture
 
     d = write_images_fixture(tmp_path / "fx", n_rows=30, seed=5, with_truth=False)
     src = spark.read.parquet(str(d / "images.parquet"))
-    # the exact expression run_pipeline's _bytes_stage builds
-    w = Window.partitionBy("digest")
-    bx = (
-        src.where(F.col("bytes").isNotNull())
-        .select("image_id", F.unhex(F.md5("bytes")).alias("digest"))
-        .withColumn("keep_id", F.min("image_id").over(w))
-    )
+    # what run_pipeline's 00b_bytes stage writes
+    bx = exact_keep(src, "image_id", "bytes")
     offenders = _vector_carrying_hash_exchanges(spark, bx, vec_names=("bytes",))
     assert not offenders, f"bytes ride the 00b hash exchange: {offenders}"
 

@@ -53,6 +53,75 @@ def test_exact_dedup_collapses_planted_copies(spark, docs):
     assert out.where(F.col("doc_id") >= 100000).count() == 0
 
 
+def test_exact_keep_is_the_one_exact_rule(spark):
+    """exact_keep, exact_dedup's survivors and the exact drops of both tier
+    ladders agree with a plain-Python rule (min id per md5 of the content,
+    NULL content never groups) on a planted frame: an md5 group with long
+    ids 9 and 10 (numeric min 9, string min "10"), three NULL-content rows
+    and, under string ids, the same groups ordered lexicographically."""
+    from simhash_spark.config import DEFAULT_CONFIG as CFG
+    from simhash_spark.operators.dedup import dedup_tier_labels, exact_dedup, exact_keep
+    from simhash_spark.plans.pipeline import image_tier_labels
+    from simhash_spark.sources.fixtures import INPUT_HINT_SCHEMA
+
+    rng = np.random.default_rng(11)
+
+    def words():
+        return " ".join(f"w{i}" for i in rng.choice(5000, 12, replace=False))
+
+    dup_a, dup_b = words(), words()
+    rows = [(9, dup_a), (10, dup_a), (7, dup_b), (100, dup_b)]
+    rows += [(30, None), (31, None), (32, None)] + [(i, words()) for i in range(1, 6)]
+
+    def md5(t):
+        return hashlib.md5(t.encode()).digest()
+
+    def py_rule(rows):
+        """(digest -> keeper id, dropped ids): the rule in plain Python."""
+        keep: dict[bytes, object] = {}
+        for i, t in rows:
+            if t is not None:
+                keep[md5(t)] = min(keep.get(md5(t), i), i)
+        return keep, {i for i, t in rows if t is not None and keep[md5(t)] != i}
+
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    keep, drops = py_rule(rows)
+    assert keep[md5(dup_a)] == 9
+    got = exact_keep(docs, "doc_id", "text").collect()
+    assert {(r["doc_id"], bytes(r["digest"]), r["keep_id"]) for r in got} == {
+        (i, md5(t), keep[md5(t)]) for i, t in rows if t is not None
+    }
+    surv = {r["doc_id"] for r in exact_dedup(docs, "doc_id", "text").collect()}
+    assert surv == {i for i, _ in rows} - drops
+    assert {30, 31, 32} <= surv
+    # text ladder; one NULL embedding rides the semantic tier untouched
+    emb = spark.createDataFrame(
+        [(i, None if i == 1 else rng.normal(size=4).tolist()) for i, _ in rows],
+        "vec_id long, embedding array<double>",
+    )
+    tiers = dedup_tier_labels(docs, emb, rng.normal(size=(2, 4)), cfg=CFG, tau=0.9999)
+    assert {r["doc_id"] for r in tiers.collect() if r["tier"] == "exact"} == drops
+
+    # image ladder over the same content as string ids and binary bytes
+    srows = [(str(i), t) for i, t in rows]
+    skeep, sdrops = py_rule(srows)
+    assert skeep[md5(dup_a)] == "10"
+    phash = rng.integers(-(2**62), 2**62, len(srows))
+    src = spark.createDataFrame(
+        [
+            (i, None if t is None else t.encode(), 1, 1, "ppm", words(), int(ph))
+            for (i, t), ph in zip(srows, phash)
+        ],
+        schema=INPUT_HINT_SCHEMA,
+    )
+    got = exact_keep(src, "image_id", "bytes").collect()
+    assert {(r["image_id"], r["keep_id"]) for r in got} == {
+        (i, skeep[md5(t)]) for i, t in srows if t is not None
+    }
+    itiers = image_tier_labels(spark, src, CFG)
+    assert {r["image_id"] for r in itiers.collect() if r["tier"] == "exact"} == sdrops
+
+
 # ------------------------------------------------------------- n-gram jaccard
 
 
