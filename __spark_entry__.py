@@ -36,6 +36,20 @@ def _cents(col) -> F.Column:
     return F.round(col * 100).cast("long")
 
 
+def _images(spark: SparkSession, n: int, with_bytes: bool = False, *plants: str):
+    """The image faces' synthetic corpus of the BASELINE input_hint shape:
+    ``make_images_pdf(n, seed=42)`` with each named ``plant_*`` fixture
+    applied in order -> (src, pdf). The schema is explicit because a
+    with_bytes=False corpus leaves bytes all-None, which schema inference
+    cannot type (the r1 driver failure)."""
+    from simhash_spark.sources import fixtures
+
+    pdf = fixtures.make_images_pdf(n, seed=42, with_bytes=with_bytes)
+    for name in plants:
+        pdf = getattr(fixtures, f"plant_{name}")(pdf)
+    return spark.createDataFrame(pdf, schema=fixtures.INPUT_HINT_SCHEMA), pdf
+
+
 def _expected_values_sql(parquet_name: str, types: dict[str, str]) -> str:
     """Expected-output oracle as a self-contained VALUES query.
 
@@ -830,8 +844,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # north rule's "metrics" face as one driver-checkable table
         # (production reads the same numbers from stage manifests)
         from simhash_spark.operators.dedup import dedup_funnel_report
-        from simhash_spark.plans.pipeline import cluster_job, verify_job
-        from simhash_spark.plans.text_dedup import text_candidates, text_fingerprints
+        from simhash_spark.plans.pipeline import cluster_job, near_dup_pairs
+        from simhash_spark.plans.text_dedup import text_fingerprints
 
         d = spark.read.parquet(_t(sf, "documents"))
         # ONE chain fp -> candidates -> verified -> clusters, each stage
@@ -849,8 +863,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # the gain is not distinguishable from draw luck. Production reads
         # these numbers from stage manifests instead.
         fp = text_fingerprints(d, "doc_id", "text", CFG)
-        cand = text_candidates(fp, CFG)
-        ver = verify_job(cand, fp, CFG, use_phash=False)
+        cand, ver = near_dup_pairs(fp, None, CFG, include_phash=False, enable_substring=False)
         ids = d.select(F.col("doc_id").cast("string").alias("image_id"))
         return dedup_funnel_report(
             d, "doc_id", "text", cand, ver, cluster_job(ver, ids, CFG)
@@ -1010,11 +1023,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def substring_pairs_docs(spark, sf):
         from simhash_spark.operators.substring import substring_pairs
+        from simhash_spark.plans.text_dedup import as_captions
 
-        d = spark.read.parquet(_t(sf, "documents")).select(
-            F.col("doc_id").cast("string").alias("image_id"),
-            F.col("text").alias("caption"),
-        )
+        d = as_captions(spark.read.parquet(_t(sf, "documents")), "doc_id", "text")
         return substring_pairs(d, CFG)
 
     q["substring_pairs_docs"] = substring_pairs_docs
@@ -1024,11 +1035,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # (binary search over the rolling-hash verify); oracle = the numpy
         # mirror's literal window-set computation of the same definition
         from simhash_spark.operators.substring import substring_run_report as op
+        from simhash_spark.plans.text_dedup import as_captions
 
-        d = spark.read.parquet(_t(sf, "documents")).select(
-            F.col("doc_id").cast("string").alias("image_id"),
-            F.col("text").alias("caption"),
-        )
+        d = as_captions(spark.read.parquet(_t(sf, "documents")), "doc_id", "text")
         return op(d, CFG)
 
     q["substring_run_report"] = substring_run_report
@@ -1206,20 +1215,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def image_near_dup_clusters(spark, sf):
         # the flagship image+caption pipeline on a deterministic synthetic
         # corpus of the BASELINE input_hint shape (no external data)
-        from simhash_spark.plans.pipeline import (
-            candidate_job,
-            cluster_job,
-            fingerprint_job,
-            verify_job,
-        )
-        from simhash_spark.sources.fixtures import INPUT_HINT_SCHEMA, make_images_pdf
+        from simhash_spark.plans.pipeline import cluster_job, fingerprint_job, near_dup_pairs
 
-        pdf = make_images_pdf(300, seed=42, with_bytes=False)
-        # explicit schema: with_bytes=False leaves bytes all-None, which
-        # schema inference cannot type (r1 driver failure)
-        src = spark.createDataFrame(pdf, schema=INPUT_HINT_SCHEMA)
+        src, _ = _images(spark, 300)
         fp = fingerprint_job(spark, src, CFG).cache()
-        verified = verify_job(candidate_job(fp, CFG), fp, CFG)
+        _, verified = near_dup_pairs(fp, src, CFG, enable_substring=False)
         return cluster_job(verified, fp, CFG)
 
     q["image_near_dup_clusters"] = image_near_dup_clusters
@@ -1231,19 +1231,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # (tests/mirror.py::image_kernel_mirror), itself asserted equal to
         # the O(n^2) dup-matrix labeling at generation time.
         from simhash_spark.operators.dedup import dedup_funnel_report
-        from simhash_spark.plans.pipeline import (
-            candidate_job,
-            cluster_job,
-            fingerprint_job,
-            verify_job,
-        )
-        from simhash_spark.sources.fixtures import INPUT_HINT_SCHEMA, make_images_pdf
+        from simhash_spark.plans.pipeline import cluster_job, fingerprint_job, near_dup_pairs
 
-        pdf = make_images_pdf(300, seed=42, with_bytes=False)
-        src = spark.createDataFrame(pdf, schema=INPUT_HINT_SCHEMA)
+        src, _ = _images(spark, 300)
         fp = fingerprint_job(spark, src, CFG).cache()
-        cand = candidate_job(fp, CFG)
-        ver = verify_job(cand, fp, CFG)
+        cand, ver = near_dup_pairs(fp, src, CFG, enable_substring=False)
         return dedup_funnel_report(
             src, "image_id", "caption", cand, ver, cluster_job(ver, fp, CFG)
         )
@@ -1259,10 +1251,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # against the O(n^2) dup matrix at generation time.
         from simhash_spark.operators.verify import pair_distance_histogram
         from simhash_spark.plans.pipeline import candidate_job, fingerprint_job
-        from simhash_spark.sources.fixtures import INPUT_HINT_SCHEMA, make_images_pdf
 
-        pdf = make_images_pdf(300, seed=42, with_bytes=False)
-        src = spark.createDataFrame(pdf, schema=INPUT_HINT_SCHEMA)
+        src, _ = _images(spark, 300)
         fp = fingerprint_job(spark, src, CFG).cache()
         return pair_distance_histogram(
             candidate_job(fp, CFG), fp, CFG, col="phash", radius=CFG.phash_radius
@@ -1280,18 +1270,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # (no bytes read), so the only new cost over the cluster job is
         # one slim score join + one cluster_id window exchange.
         from simhash_spark.plans.pipeline import (
-            candidate_job,
             cluster_job,
             fingerprint_job,
             image_keep_list,
-            verify_job,
+            near_dup_pairs,
         )
-        from simhash_spark.sources.fixtures import INPUT_HINT_SCHEMA, make_images_pdf
 
-        pdf = make_images_pdf(300, seed=42, with_bytes=False)
-        src = spark.createDataFrame(pdf, schema=INPUT_HINT_SCHEMA)
+        src, _ = _images(spark, 300)
         fp = fingerprint_job(spark, src, CFG).cache()
-        clusters = cluster_job(verify_job(candidate_job(fp, CFG), fp, CFG), fp, CFG)
+        _, verified = near_dup_pairs(fp, src, CFG, enable_substring=False)
+        clusters = cluster_job(verified, fp, CFG)
         return image_keep_list(clusters, "best-resolution", lambda: src)
 
     q["image_keep_best"] = image_keep_best
@@ -1308,10 +1296,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def image_features(spark, sf):
         from simhash_spark.operators.multimodal import image_features as op
-        from simhash_spark.sources.fixtures import INPUT_HINT_SCHEMA, make_images_pdf
 
-        pdf = make_images_pdf(100, seed=42, with_bytes=True)
-        src = spark.createDataFrame(pdf, schema=INPUT_HINT_SCHEMA)
+        src, _ = _images(spark, 100, True)
         return op(src).select("image_id", "w", "h", "phash_computed", "error")
 
     q["image_features"] = image_features
@@ -1324,14 +1310,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # the BASELINE input_hint. Oracle: hashlib.md5 groups recomputed in
         # plain python over the same planted fixture (tests/gen_expected.py).
         from simhash_spark.operators.dedup import exact_dedup_groups
-        from simhash_spark.sources.fixtures import (
-            INPUT_HINT_SCHEMA,
-            make_images_pdf,
-            plant_byte_reuploads,
-        )
 
-        pdf = plant_byte_reuploads(make_images_pdf(100, seed=42, with_bytes=True))
-        src = spark.createDataFrame(pdf, schema=INPUT_HINT_SCHEMA)
+        src, _ = _images(spark, 100, True, "byte_reuploads")
         return exact_dedup_groups(src, "image_id", "bytes")
 
     q["image_exact_dup_bytes"] = image_exact_dup_bytes
@@ -1344,14 +1324,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # per-tier mirrors composed in the same survivor order (hashlib md5
         # groups, then the independent bucketed numpy image mirror).
         from simhash_spark.plans.pipeline import image_tier_labels as op
-        from simhash_spark.sources.fixtures import (
-            INPUT_HINT_SCHEMA,
-            make_images_pdf,
-            plant_byte_reuploads,
-        )
 
-        pdf = plant_byte_reuploads(make_images_pdf(300, seed=42, with_bytes=True))
-        src = spark.createDataFrame(pdf, schema=INPUT_HINT_SCHEMA)
+        src, _ = _images(spark, 300, True, "byte_reuploads")
         return op(spark, src, CFG)
 
     q["image_tier_labels"] = image_tier_labels
@@ -1371,17 +1345,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from simhash_spark.operators.ann import ivf_fit
         from simhash_spark.operators.multimodal import image_embeddings
         from simhash_spark.plans.pipeline import image_tier_labels as op
-        from simhash_spark.sources.fixtures import (
-            INPUT_HINT_SCHEMA,
-            make_images_pdf,
-            plant_byte_reuploads,
-            plant_semantic_rerenders,
-        )
 
-        pdf = plant_semantic_rerenders(
-            plant_byte_reuploads(make_images_pdf(300, seed=42, with_bytes=True))
-        )
-        src = spark.createDataFrame(pdf, schema=INPUT_HINT_SCHEMA)
+        src, _ = _images(spark, 300, True, "byte_reuploads", "semantic_rerenders")
         emb = (
             image_embeddings(src)
             .where(F.col("error").isNull())
@@ -1415,17 +1380,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from simhash_spark.operators.ann import cosine_topk
         from simhash_spark.operators.dedup import exact_keep, exact_survivors
         from simhash_spark.operators.multimodal import image_embeddings
-        from simhash_spark.sources.fixtures import (
-            INPUT_HINT_SCHEMA,
-            make_images_pdf,
-            plant_byte_reuploads,
-            plant_semantic_rerenders,
-        )
 
-        pdf = plant_semantic_rerenders(
-            plant_byte_reuploads(make_images_pdf(300, seed=42, with_bytes=True))
-        )
-        src = spark.createDataFrame(pdf, schema=INPUT_HINT_SCHEMA)
+        src, _ = _images(spark, 300, True, "byte_reuploads", "semantic_rerenders")
         emb = exact_survivors(
             image_embeddings(src)
             .where(F.col("error").isNull())
@@ -1454,14 +1410,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from simhash_spark.operators.multimodal import image_features
         from simhash_spark.operators.search import phash_search
         from simhash_spark.plans.pipeline import cluster_job
-        from simhash_spark.sources.fixtures import (
-            INPUT_HINT_SCHEMA,
-            make_images_pdf,
-            plant_byte_reuploads,
-        )
 
-        pdf = plant_byte_reuploads(make_images_pdf(100, seed=42, with_bytes=True))
-        src = spark.createDataFrame(pdf, schema=INPUT_HINT_SCHEMA)
+        src, _ = _images(spark, 100, True, "byte_reuploads")
         feats = (
             image_features(src)
             .where(F.col("error").isNull())
@@ -1487,10 +1437,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # probe keys broadcast). Exact by the pigeonhole guarantee, so the
         # oracle is an independent numpy brute force over the same fixture.
         from simhash_spark.operators.search import phash_search
-        from simhash_spark.sources.fixtures import INPUT_HINT_SCHEMA, make_images_pdf
 
-        pdf = make_images_pdf(500, seed=42, with_bytes=False)
-        src = spark.createDataFrame(pdf, schema=INPUT_HINT_SCHEMA)
+        src, _ = _images(spark, 500)
         probes = src.where(F.col("image_id") < "img000000050").select(
             F.col("image_id").alias("probe_id"), "phash"
         )
@@ -1503,10 +1451,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # reason, frozen order); zero-shuffle native projection — bytes
         # never read (with_bytes=False fixture doubles as the pruning proof)
         from simhash_spark.operators.search import image_quality_filter as op
-        from simhash_spark.sources.fixtures import INPUT_HINT_SCHEMA, make_images_pdf
 
-        pdf = make_images_pdf(500, seed=42, with_bytes=False)
-        src = spark.createDataFrame(pdf, schema=INPUT_HINT_SCHEMA)
+        src, _ = _images(spark, 500)
         return op(src).select("image_id", "keep", "reason")
 
     q["image_quality_filter"] = image_quality_filter
@@ -1520,14 +1466,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # independent python mirror of the frozen rules (gen_expected;
         # matched/mismatched margins >= 300 bp around tau asserted there).
         from simhash_spark.operators.multimodal import caption_pixel_alignment
-        from simhash_spark.sources.fixtures import (
-            INPUT_HINT_SCHEMA,
-            make_images_pdf,
-            plant_alignment_tints,
-        )
 
-        pdf = plant_alignment_tints(make_images_pdf(300, seed=42, with_bytes=True))
-        src = spark.createDataFrame(pdf, schema=INPUT_HINT_SCHEMA)
+        src, _ = _images(spark, 300, True, "alignment_tints")
         # driver face: NULL align_bp (absent signal) -> -1 sentinel, keeping
         # the compared table pure non-null ints (a nullable int column rides
         # the comparators as NaN float64, where NaN != NaN breaks hashing)
@@ -1545,27 +1485,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # completeness), so the oracle expects recall_bp = 10000; precision
         # < 10000 only because predicted pairs are the transitive closure
         # while the truth table holds direct edges.
-        from simhash_spark.operators.candidates import union_candidates
         from simhash_spark.operators.dedup import dedup_eval
-        from simhash_spark.operators.substring import substring_pairs
-        from simhash_spark.plans.pipeline import (
-            candidate_job,
-            cluster_job,
-            fingerprint_job,
-            verify_job,
-        )
-        from simhash_spark.sources.fixtures import (
-            INPUT_HINT_SCHEMA,
-            compute_truth,
-            make_images_pdf,
-        )
+        from simhash_spark.plans.pipeline import cluster_job, fingerprint_job, near_dup_pairs
+        from simhash_spark.sources.fixtures import compute_truth
 
-        pdf = make_images_pdf(300, seed=42, with_bytes=False)
-        src = spark.createDataFrame(pdf, schema=INPUT_HINT_SCHEMA)
+        src, pdf = _images(spark, 300)
         fp = fingerprint_job(spark, src, CFG).cache()
-        cand = candidate_job(fp, CFG)
-        all_cand = union_candidates(cand, substring_pairs(src.select("image_id", "caption"), CFG))
-        clusters = cluster_job(verify_job(all_cand, fp, CFG), fp, CFG)
+        _, verified = near_dup_pairs(fp, src, CFG)
+        clusters = cluster_job(verified, fp, CFG)
         truth_pairs, _ = compute_truth(pdf)
         truth = spark.createDataFrame(truth_pairs[["a", "b"]], schema="a string, b string")
         return dedup_eval(clusters, truth)
@@ -1578,23 +1505,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # the fixture, so the report equals the truth-kind histogram —
         # which is the oracle (computed by the independent numpy brute
         # force, not the engine).
-        from simhash_spark.operators.candidates import union_candidates
-        from simhash_spark.operators.substring import substring_pairs
         from simhash_spark.operators.verify import dup_kind_report as op
-        from simhash_spark.plans.pipeline import (
-            candidate_job,
-            fingerprint_job,
-            verify_job,
-        )
-        from simhash_spark.sources.fixtures import INPUT_HINT_SCHEMA, make_images_pdf
+        from simhash_spark.plans.pipeline import fingerprint_job, near_dup_pairs
 
-        pdf = make_images_pdf(300, seed=42, with_bytes=False)
-        src = spark.createDataFrame(pdf, schema=INPUT_HINT_SCHEMA)
+        src, _ = _images(spark, 300)
         fp = fingerprint_job(spark, src, CFG).cache()
-        all_cand = union_candidates(
-            candidate_job(fp, CFG), substring_pairs(src.select("image_id", "caption"), CFG)
-        )
-        return op(verify_job(all_cand, fp, CFG), fp, CFG)
+        return op(near_dup_pairs(fp, src, CFG)[1], fp, CFG)
 
     q["dup_kind_report"] = dup_kind_report
 

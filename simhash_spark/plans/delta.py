@@ -234,7 +234,6 @@ def run_metadata(
     enable_substring: bool,
     include_phash: bool,
     quality_filter: bool,
-    quality_overrides: dict | None,
     byte_exact: bool,
 ) -> dict:
     """The run record a catalog's fingerprint stage writes into its manifest
@@ -248,7 +247,6 @@ def run_metadata(
         "enable_substring": enable_substring,
         "include_phash": include_phash,
         "quality_filter": quality_filter,
-        "quality_overrides": quality_overrides or {},
         "byte_exact": byte_exact,
         "input_path": input_path,
     }
@@ -270,6 +268,12 @@ def chain_run_metadata(spark: SparkSession, ckpt_path: str | pathlib.Path) -> di
             "has: its stages were built by an earlier version of the engine — "
             "rebuild the base with run_pipeline"
         )
+    if root.get("quality_overrides"):
+        raise RuntimeError(
+            f"{chain[0]} was quality-filtered with non-default thresholds "
+            f"{root['quality_overrides']}, which the engine no longer applies: "
+            "rebuild the base with run_pipeline"
+        )
     # a run_pipeline root records one input path; a compacted root records
     # the list of every path its chain folded in
     rp = root["input_path"]
@@ -285,7 +289,6 @@ def chain_run_metadata(spark: SparkSession, ckpt_path: str | pathlib.Path) -> di
         "include_phash": root["include_phash"],
         # pre-quality-filter chains have no key -> False (additive upgrade)
         "quality_filter": root.get("quality_filter", False),
-        "quality_overrides": root.get("quality_overrides", {}),
         "byte_exact": root.get("byte_exact", False),
         "input_paths": paths,
     }
@@ -357,7 +360,6 @@ def run_delta(
     enable_substring = meta["enable_substring"]
     include_phash = meta["include_phash"]
     quality_filter = meta["quality_filter"]
-    quality_overrides = meta["quality_overrides"]
     if enable_substring:
         _require_anchor_contexts(spark, base_checkpoint)
 
@@ -391,7 +393,7 @@ def run_delta(
         from simhash_spark.operators.search import image_quality_filter
 
         src_new = (
-            image_quality_filter(src_new, **quality_overrides)
+            image_quality_filter(src_new)
             .where(F.col("keep") == 1)
             .drop("keep", "reason")
         )
@@ -469,13 +471,7 @@ def run_delta(
         in_fp,
         lambda: fingerprint_job(spark, src_new, cfg),
         extra_metrics=lambda: run_metadata(
-            cfg,
-            increment_path,
-            enable_substring,
-            include_phash,
-            quality_filter,
-            quality_overrides,
-            byte_exact,
+            cfg, increment_path, enable_substring, include_phash, quality_filter, byte_exact
         ),
     )
     fp_base = read_chain_stage(
@@ -575,7 +571,6 @@ def compact_chain(
                 enable_substring,
                 meta["include_phash"],
                 meta["quality_filter"],
-                meta["quality_overrides"],
                 meta["byte_exact"],
             ),
             "compacted_from": chain,

@@ -77,12 +77,80 @@ def verify_job(
     candidates: DataFrame, fp: DataFrame, cfg: PipelineConfig, use_phash: bool = True
 ) -> DataFrame:
     """E3: exact Hamming verification of the unioned candidate set.
-
-    ``use_phash`` must match the run's ``include_phash``: the flag removes
-    the phash AXIS (keys and verify criterion together), the same rule the
-    text and delta paths apply — a phash-only dup verified here but
-    not by a chained delta run would break the delta equality contract."""
+    ``use_phash`` is the run's ``include_phash``: near_dup_pairs holds the
+    rule."""
     return verify_pairs(candidates, fp, cfg, use_phash=use_phash)
+
+
+def near_dup_pairs(
+    fp: DataFrame,
+    src: DataFrame | None,
+    cfg: PipelineConfig,
+    *,
+    include_phash: bool = True,
+    enable_substring: bool = True,
+    stage: Callable[..., DataFrame] | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """E2 -> E3, the one spelling of the near-dup stage order: fingerprints
+    ``fp`` -> candidates -> (∪ substring pairs over ``src``'s (image_id,
+    caption)) -> verified. Returns (index candidates, verified pairs).
+
+    Two rules hold on every path built from here. ``include_phash`` removes
+    the phash AXIS, from the candidate keys and the verify criterion
+    together: a phash-only dup verified by one path but not by a chained
+    delta run would break the delta equality contract. Substring pairs join
+    the candidate set before verify, which passes them unconditionally.
+
+    ``stage(name, compute, extra_metrics=None)`` runs each stage
+    (run_pipeline passes the catalog's run_stage): the candidates and
+    substring stages then observe their manifest accounting off the rows
+    they compute. Without it the stages compose lazily and observe nothing,
+    so the plan carries no CollectMetrics."""
+    observed = stage is not None
+    stage = stage or (lambda name, compute, extra_metrics=None: compute())
+    cand_obs, sub_obs = StageObservations(), StageObservations()
+
+    def cand_metrics() -> dict:
+        # skew/recall accounting: bucket histogram per index + how many hot
+        # buckets were degraded to spanning chains — the "no silent
+        # truncation" rule (SURVEY.md §7.5.3)
+        stats = bucket_stats_from_observed(cand_obs.get())
+        hot = sum(1 for s in stats.values() if (s["max_bucket"] or 0) > cfg.bucket_cap)
+        return {
+            "bucket_stats": stats,
+            "bucket_cap": cfg.bucket_cap,
+            "indexes_with_hot_buckets": hot,
+        }
+
+    cand = stage(
+        "02_candidates",
+        lambda: candidate_job(
+            fp, cfg, include_phash=include_phash, observe=cand_obs.observe if observed else None
+        ),
+        extra_metrics=cand_metrics,
+    )
+    all_cand = cand
+    if enable_substring:
+        # the anchor table is its own stage: the resume point for the
+        # substring stage, the whole of its verification state (each
+        # occurrence carries its context, so no caption is read again) and
+        # the incremental-maintenance state (a delta run semi-joins it
+        # against the increment's anchors instead of re-winnowing the base)
+        anch = stage(
+            "02b_anchors", lambda: winnow_anchor_table(src.select("image_id", "caption"), cfg)
+        )
+        sub = stage(
+            "02b_substr",
+            lambda: verify_substring_pairs(
+                anch, cfg, observe=sub_obs.observe if observed else None
+            ).withColumn("src", F.lit("substr")),
+            extra_metrics=lambda: substring_stage_summary(sub_obs.get()),
+        )
+        all_cand = union_candidates(cand, sub)
+    verified = stage(
+        "03_verified", lambda: verify_job(all_cand, fp, cfg, use_phash=include_phash)
+    )
+    return cand, verified
 
 
 def cluster_job(
@@ -261,7 +329,8 @@ def image_tier_labels(
 
     def near_clusters(surv: DataFrame) -> DataFrame:
         fp = fingerprint_job(spark, surv, cfg).cache()
-        return cluster_job(verify_job(candidate_job(fp, cfg), fp, cfg), fp, cfg)
+        _, verified = near_dup_pairs(fp, surv, cfg, enable_substring=False)
+        return cluster_job(verified, fp, cfg)
 
     return tier_ladder(src, "image_id", "bytes", near_clusters, emb, centroids, tau)
 
@@ -272,30 +341,17 @@ def stage_fingerprint(
     enable_substring: bool,
     include_phash: bool,
     quality_filter: bool = False,
-    quality_overrides: dict | None = None,
     byte_exact: bool = False,
 ) -> str:
     """Stage checkpoint identity = input content + full config + pipeline
     flags: a rerun with a different index config (e.g. n_blocks=8) or
     stage set must recompute, never silently resume stages computed under
-    the old configuration. The quality-filter flag joins the identity only
-    when enabled (``-qf1``) so pre-existing unfiltered checkpoints keep
-    resuming under their original fingerprints."""
+    the old configuration. The quality-filter and byte-exact flags join the
+    identity only when enabled (``-qf1``, ``-bx1``) so pre-existing
+    checkpoints keep resuming under their original fingerprints."""
     from simhash_spark.config import config_fingerprint
 
-    qf = ""
-    if quality_filter:
-        qf = "-qf1"
-        if quality_overrides:
-            # non-default thresholds change the kept set -> new identity
-            import hashlib
-            import json
-
-            qf += hashlib.md5(
-                json.dumps(quality_overrides, sort_keys=True).encode()
-            ).hexdigest()[:8]
-    # like -qf1, the byte-exact flag joins the identity only when enabled so
-    # pre-existing checkpoints keep resuming under their original fingerprints
+    qf = "-qf1" if quality_filter else ""
     bx = "-bx1" if byte_exact else ""
     return (
         f"{input_fingerprint_of(input_path)}-{config_fingerprint(cfg)}"
@@ -328,7 +384,6 @@ def run_pipeline(
     include_phash: bool = True,
     cc_ckpt_every: int = 0,
     quality_filter: bool = False,
-    quality_overrides: dict | None = None,
     byte_exact: bool = False,
 ) -> PipelineResult:
     """The resumable end-to-end run: every stage lands in the catalog with a
@@ -342,21 +397,16 @@ def run_pipeline(
     intermediate. Bucket count follows the session's shuffle
     parallelism (a real deployment sets both to ~2-3x total cores).
 
-    Manifest metrics come from the stages' own writes: the candidates stage
-    observes its bucket histogram off the window that sizes the buckets,
-    the substring verify its pairs examined and hot anchors. The
+    E2 -> E3 is near_dup_pairs with the catalog's run_stage as its stage
+    hook. Manifest metrics come from the stages' own writes: the candidates
+    stage observes its bucket histogram off the window that sizes the
+    buckets, the substring verify its pairs examined and hot anchors. The
     run starts no Spark job beyond the ones that compute and write stages."""
     from simhash_spark.plans.delta import run_metadata
 
     cat = CheckpointCatalog(spark, checkpoint_path)
     in_fp = stage_fingerprint(
-        input_path,
-        cfg,
-        enable_substring,
-        include_phash,
-        quality_filter,
-        quality_overrides,
-        byte_exact,
+        input_path, cfg, enable_substring, include_phash, quality_filter, byte_exact
     )
     src = spark.read.parquet(input_path)
 
@@ -370,12 +420,9 @@ def run_pipeline(
         # predicate is far cheaper than writing a near-copy of the corpus.
         from simhash_spark.operators.search import image_quality_filter
 
-        flt = image_quality_filter(src, **(quality_overrides or {}))
+        flt = image_quality_filter(src)
         cat.run_stage(
-            "00_quality",
-            in_fp,
-            lambda: flt.groupBy("reason").agg(F.count("*").alias("n")),
-            extra_metrics=lambda: {"quality_overrides": quality_overrides or {}},
+            "00_quality", in_fp, lambda: flt.groupBy("reason").agg(F.count("*").alias("n"))
         )
         src = flt.where(F.col("keep") == 1).drop("keep", "reason")
 
@@ -400,67 +447,17 @@ def run_pipeline(
         in_fp,
         lambda: fingerprint_job(spark, src, cfg),
         extra_metrics=lambda: run_metadata(
-            cfg,
-            input_path,
-            enable_substring,
-            include_phash,
-            quality_filter,
-            quality_overrides,
-            byte_exact,
+            cfg, input_path, enable_substring, include_phash, quality_filter, byte_exact
         ),
         bucket_by=(int(spark.conf.get("spark.sql.shuffle.partitions")), ["image_id"]),
     )
-
-    # skew/recall accounting in the stage manifest: bucket histogram per
-    # index + how many hot buckets were degraded to spanning chains — the
-    # "no silent truncation" rule (SURVEY.md §7.5.3)
-    cand_obs = StageObservations()
-
-    def _cand_metrics() -> dict:
-        stats = bucket_stats_from_observed(cand_obs.get())
-        hot = sum(1 for s in stats.values() if (s["max_bucket"] or 0) > cfg.bucket_cap)
-        return {
-            "bucket_stats": stats,
-            "bucket_cap": cfg.bucket_cap,
-            "indexes_with_hot_buckets": hot,
-        }
-
-    cand = cat.run_stage(
-        "02_candidates",
-        in_fp,
-        lambda: candidate_job(fp, cfg, include_phash=include_phash, observe=cand_obs.observe),
-        extra_metrics=_cand_metrics,
-    )
-
-    if enable_substring:
-        # the anchor table is checkpointed as its own stage: it is the
-        # resume point for the substring stage, the whole of its
-        # verification state (each occurrence carries its context, so no
-        # caption is read again) and the incremental-maintenance state (a
-        # delta run semi-joins it against the increment's anchors instead
-        # of re-winnowing the base corpus)
-        anch = cat.run_stage(
-            "02b_anchors",
-            in_fp,
-            lambda: winnow_anchor_table(src.select("image_id", "caption"), cfg),
-        )
-        sub_obs = StageObservations()
-        sub = cat.run_stage(
-            "02b_substr",
-            in_fp,
-            lambda: verify_substring_pairs(anch, cfg, observe=sub_obs.observe).withColumn(
-                "src", F.lit("substr")
-            ),
-            extra_metrics=lambda: substring_stage_summary(sub_obs.get()),
-        )
-        all_cand = union_candidates(cand, sub)
-    else:
-        all_cand = cand
-
-    verified = cat.run_stage(
-        "03_verified",
-        in_fp,
-        lambda: verify_job(all_cand, fp, cfg, use_phash=include_phash),
+    cand, verified = near_dup_pairs(
+        fp,
+        src,
+        cfg,
+        include_phash=include_phash,
+        enable_substring=enable_substring,
+        stage=lambda name, compute, **kw: cat.run_stage(name, in_fp, compute, **kw),
     )
     clusters = cat.run_stage(
         "04_clusters",
@@ -470,4 +467,3 @@ def run_pipeline(
         ),
     )
     return PipelineResult(fp, cand, verified, clusters)
-

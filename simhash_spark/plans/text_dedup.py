@@ -15,27 +15,26 @@ from pyspark.sql import functions as F
 
 from simhash_spark.config import DEFAULT_CONFIG, PipelineConfig
 from simhash_spark.functions.udfs import with_fingerprints
-from simhash_spark.operators.candidates import union_candidates
-from simhash_spark.operators.substring import substring_pairs
-from simhash_spark.plans.pipeline import candidate_job, cluster_job, verify_job
+from simhash_spark.plans.pipeline import candidate_job, cluster_job, near_dup_pairs
 
 
 def text_fingerprints(
     df: DataFrame, id_col: str, text_col: str, cfg: PipelineConfig = DEFAULT_CONFIG
 ) -> DataFrame:
-    """(id, text) -> (image_id, simhash, n_shingles, bands).
-
-    The id is carried under the pipeline's canonical ``image_id`` name so
-    every downstream operator (candidates/verify/CC) applies unchanged.
-    """
+    """(id, text) -> (image_id, simhash, n_shingles, bands)."""
     from simhash_spark.session import spread_small_input
 
-    slim = spread_small_input(
-        df.select(
-            F.col(id_col).cast("string").alias("image_id"), F.col(text_col).alias("caption")
-        )
-    )
+    slim = spread_small_input(as_captions(df, id_col, text_col))
     return with_fingerprints(slim, cfg, emit_minhash=False).drop("caption")
+
+
+def as_captions(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, text) -> (image_id, caption): the id is carried under the
+    pipeline's canonical names so every downstream operator (candidates,
+    substring, verify, CC) applies unchanged."""
+    return df.select(
+        F.col(id_col).cast("string").alias("image_id"), F.col(text_col).alias("caption")
+    )
 
 
 def text_candidates(fp: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
@@ -53,17 +52,11 @@ def text_near_dup_pairs(
 ) -> DataFrame:
     """(id, text) -> verified near-dup pairs (a, b, hamming_caption, src)."""
     fp = text_fingerprints(df, id_col, text_col, cfg)
-    cand = text_candidates(fp, cfg)
-    if enable_substring:
-        sub = substring_pairs(
-            df.select(
-                F.col(id_col).cast("string").alias("image_id"),
-                F.col(text_col).alias("caption"),
-            ),
-            cfg,
-        )
-        cand = union_candidates(cand, sub)
-    return verify_job(cand, fp, cfg, use_phash=False).drop("hamming_phash")
+    docs = as_captions(df, id_col, text_col)
+    _, verified = near_dup_pairs(
+        fp, docs, cfg, include_phash=False, enable_substring=enable_substring
+    )
+    return verified.drop("hamming_phash")
 
 
 def text_near_dup_clusters(

@@ -689,13 +689,16 @@ def test_run_delta_refuses_base_with_retired_config_keys(spark, tmp_path):
     longer has (``salt_buckets``, the fan-out of the retired salted chain)
     is refused with an error that names the rebuild, before anything is
     written: no TypeError from rebuilding the config escapes, neither from
-    run_delta nor from compact_chain."""
+    run_delta nor from compact_chain. So is a base quality-filtered with
+    non-default thresholds (the retired ``quality_overrides``), which an
+    increment filtered by the default rules would not match; a base that
+    recorded empty overrides still extends."""
     import json
     from dataclasses import asdict
 
     import pytest
 
-    from simhash_spark.plans.delta import compact_chain, run_delta
+    from simhash_spark.plans.delta import chain_run_metadata, compact_chain, run_delta
     from simhash_spark.sources.catalog import MANIFEST_NAME
 
     base = tmp_path / "ck_old"
@@ -716,6 +719,18 @@ def test_run_delta_refuses_base_with_retired_config_keys(spark, tmp_path):
         run_delta(spark, str(base), str(tmp_path / "inc.parquet"), str(out))
     assert not out.exists()
     compacted = tmp_path / "ck_compact"
+    with pytest.raises(RuntimeError, match="rebuild the base"):
+        compact_chain(spark, str(base), str(compacted))
+    assert not compacted.exists()
+
+    manifest = base / "01_fingerprints" / MANIFEST_NAME
+    root = {**json.loads(manifest.read_text()), "config": asdict(CFG), "quality_filter": True}
+    manifest.write_text(json.dumps({**root, "quality_overrides": {}}))
+    assert chain_run_metadata(spark, str(base))["quality_filter"] is True
+    manifest.write_text(json.dumps({**root, "quality_overrides": {"min_pixels": 9999}}))
+    with pytest.raises(RuntimeError, match=r"min_pixels.*rebuild the base"):
+        run_delta(spark, str(base), str(tmp_path / "inc.parquet"), str(out))
+    assert not out.exists()
     with pytest.raises(RuntimeError, match="rebuild the base"):
         compact_chain(spark, str(base), str(compacted))
     assert not compacted.exists()

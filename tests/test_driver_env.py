@@ -13,14 +13,15 @@ default confs next to the shared session fixture).
 from __future__ import annotations
 
 import json
+import pathlib
 import subprocess
 import sys
 
-REPO = "/root/repo"
+REPO = str(pathlib.Path(__file__).resolve().parents[1])
 
 _SCRIPT = """
 import json, sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[1])
 from pyspark.sql import SparkSession
 
 import __spark_entry__ as entrymod
@@ -47,7 +48,7 @@ print("RESULT:" + json.dumps(out))
 
 def test_flagship_queries_survive_default_config_session():
     proc = subprocess.run(
-        [sys.executable, "-c", _SCRIPT],
+        [sys.executable, "-c", _SCRIPT, REPO],
         cwd=REPO,
         capture_output=True,
         text=True,

@@ -6,9 +6,11 @@ queries sit inside the budget and nothing silently falls off again.
 
 from __future__ import annotations
 
+import pathlib
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = pathlib.Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 import __spark_entry__ as entrymod
 
@@ -47,10 +49,9 @@ def test_never_driver_checked_queries_sit_inside_budget():
     budget, so it gets its first hard check next round — the self-
     maintaining form of the r4 verdict's rotation rule."""
     import json
-    import pathlib
 
     checked: set[str] = set()
-    for p in sorted(pathlib.Path("/root/repo").glob("CORRECTNESS_r*.json")):
+    for p in sorted(REPO.glob("CORRECTNESS_r*.json")):
         d = json.loads(p.read_text())
         qs = d.get("queries", d)
         if isinstance(qs, dict):

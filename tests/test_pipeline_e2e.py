@@ -68,19 +68,27 @@ def test_pipeline_matches_truth_with_scale_index(spark, fixture_dir, tmp_path):
 
 
 def test_verified_pairs_subset_of_truth(spark, fixture_dir, tmp_path):
-    """Precision: every verified pair satisfies the frozen dup predicate."""
-    res = run_pipeline(
-        spark,
-        str(fixture_dir / "images.parquet"),
-        str(tmp_path / "ckpt2"),
-        CFG,
-    )
+    """Precision: every verified pair satisfies the frozen dup predicate.
+    The checkpointed run and the lazy near_dup_pairs chain (no stage hook)
+    verify the same (a, b, src) rows."""
+    from simhash_spark.plans.pipeline import fingerprint_job, near_dup_pairs
+
+    inp = str(fixture_dir / "images.parquet")
+    res = run_pipeline(spark, inp, str(tmp_path / "ckpt2"), CFG)
     ver = {(r["a"], r["b"]) for r in res.verified.select("a", "b").collect()}
     pdf = pd.read_parquet(fixture_dir / "images.parquet", columns=["image_id", "caption", "phash"])
     truth_pairs, _ = compute_truth(pdf, CFG)
     truth = set(zip(truth_pairs["a"], truth_pairs["b"]))
     extra = ver - truth
     assert not extra, f"{len(extra)} verified pairs outside truth, e.g. {list(extra)[:5]}"
+
+    src = spark.read.parquet(inp)
+    _, lazy = near_dup_pairs(fingerprint_job(spark, src, CFG), src, CFG)
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select("a", "b", "src").collect())
+
+    assert rows(res.verified) == rows(lazy)
 
 
 def test_bytes_pruned_from_fingerprint_plan(spark, fixture_dir):
@@ -213,10 +221,7 @@ def test_pipeline_quality_filter_stage(spark, fixture_dir, tmp_path):
 
     fp_off = stage_fingerprint(inp, CFG, True, True)
     fp_on = stage_fingerprint(inp, CFG, True, True, quality_filter=True)
-    fp_on2 = stage_fingerprint(
-        inp, CFG, True, True, quality_filter=True, quality_overrides={"min_pixels": 9999}
-    )
-    assert len({fp_off, fp_on, fp_on2}) == 3
+    assert fp_off != fp_on
 
 
 def test_cli_keep_rule_best_resolution(spark, fixture_dir, tmp_path):

@@ -213,13 +213,15 @@ def test_candidates_single_key_exchange(spark):
     collected by one CollectMetrics node, on one reader, not once per
     reader of the reused exchange: one for candidates (the bucket
     histogram), three for the substring stage (anchor sizes, cold pairs,
-    chain edges)."""
+    chain edges). The lazy near_dup_pairs chain's verified plan (what the
+    driver faces run) holds the candidates' shape unobserved."""
     import re
     from collections import Counter
     from dataclasses import replace
 
     from simhash_spark.operators.candidates import generate_candidates
     from simhash_spark.operators.substring import verify_substring_pairs
+    from simhash_spark.plans.pipeline import near_dup_pairs
     from simhash_spark.sources.catalog import StageObservations
 
     fp = spark.createDataFrame(
@@ -238,6 +240,7 @@ def test_candidates_single_key_exchange(spark):
         ("anchor", verify_substring_pairs(anchors, sub_cfg), 3, 0),
         ("k", generate_candidates(fp, CFG, observe=StageObservations().observe), 2, 1),
         ("anchor", verify_substring_pairs(anchors, sub_cfg, StageObservations().observe), 3, 3),
+        ("k", near_dup_pairs(fp, None, CFG, enable_substring=False)[1], 2, 0),
     ]
     for key, df, max_sizings, n_observations in cases:
         df.collect()  # finalize the adaptive plan

@@ -1674,7 +1674,7 @@ def test_image_near_dup_from_bytes_composition(spark):
     )
     exp = (
         pd.read_parquet(
-            pathlib.Path("/root/repo/tests/expected/text_kernel_sf001")
+            pathlib.Path(__file__).resolve().parent / "expected" / "text_kernel_sf001"
             / "image_clusters_from_bytes.parquet"
         )
         .sort_values("image_id")
