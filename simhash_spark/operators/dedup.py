@@ -1193,22 +1193,16 @@ def minhash_est_eval(
 
     from simhash_spark.config import DEFAULT_CONFIG
     from simhash_spark.functions.udfs import with_fingerprints
+    from simhash_spark.plans.text_dedup import as_captions, text_candidates
     from simhash_spark.session import spread_small_input
 
     cfg = cfg or DEFAULT_CONFIG
-    slim = spread_small_input(
-        docs.select(
-            F.col(id_col).cast("string").alias("image_id"),
-            F.col(text_col).alias("caption"),
-        )
-    )
+    slim = spread_small_input(as_captions(docs, id_col, text_col))
     fpe = (
         with_fingerprints(slim, cfg, emit_minhash=True, emit_shingle_hashes=True)
         .drop("caption")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    from simhash_spark.plans.text_dedup import text_candidates
-
     cand = text_candidates(fpe.drop("minhash", "shingle_hashes"), cfg)
     pa = fpe.select(
         F.col("image_id").alias("a"),
